@@ -5,19 +5,26 @@ import java.net.{URI, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.{CompletableFuture, LinkedBlockingQueue, RejectedExecutionException,
+  ScheduledThreadPoolExecutor, ThreadFactory, ThreadPoolExecutor, TimeUnit}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.LongAccumulator
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Per-row HTTP enrichment — reference `rest` stage (O14,
   * /root/reference/filters.py:17-89 + /root/reference/filefilter.py:67-81),
   * rebuilt on Spark's execution model: `mapPartitions` with one pooled
-  * java.net.http.HttpClient per partition and bounded intra-partition
-  * concurrency = `filterThreads` (the reference's consumer-pool semantics,
-  * ConsumerManager.py:24-39, collapse into task slots × this pool).
+  * java.net.http.HttpClient per partition (the reference's consumer-pool
+  * semantics, ConsumerManager.py:24-39, collapse into task slots × this
+  * pool):
+  *  - `filterThreads` bounds the requests in flight per partition;
+  *  - a retry's backoff does not hold a request slot: the row waits on a
+  *    timer and re-enters the pool when its attempt is due;
+  *  - rows leave in input order through a window of `filterThreads × 4`
+  *    pending rows, so memory stays flat on huge partitions.
   *
   * Behavior parity (SURVEY §2c):
   *  - `{col}` templates substituted into path/queryParams/postBody from
@@ -31,7 +38,10 @@ import scala.jdk.CollectionConverters._
   *    the body through json.dumps(response.json()) (crashing on non-JSON
   *    200s); we accept the whole 2xx class and append the body verbatim;
   *  - `rest` stages under `reloadConfigEverySeconds` re-read the config
-  *    between waves and resize their pool (O18, filefilter.py:144-171);
+  *    as they refill the window and resize their pool and window (O18,
+  *    filefilter.py:144-171);
+  *  - 5xx and IO errors retry up to `maxRetries` times after
+  *    `retryBackoffMillis × attempt`; 4xx fails fast;
   *  - POST sends a JSON body with Content-Type: application/json — always
   *    (the reference only POSTs when logHttpRequests is on,
   *    filters.py:63-71; that's the documented bug we fix);
@@ -64,9 +74,10 @@ final case class RestConfig(
     logRequests: Boolean = false,
     logResponses: Boolean = false,
     // config hot-reload (O18, filefilter.py:144-171): every
-    // `reloadEverySeconds` the worker pool re-reads `configPath` between
-    // waves and resizes to the stage's current filterThreads — the one
-    // setting the reference's reload actually applies (setNewThreads).
+    // `reloadEverySeconds` the worker pool re-reads `configPath` as it
+    // refills its window and resizes to the stage's current filterThreads
+    // — the one setting the reference's reload actually applies
+    // (setNewThreads).
     // On a cluster the path must be shared storage (executors read it).
     reloadEverySeconds: Int = 0,
     configPath: Option[String] = None)
@@ -145,10 +156,10 @@ object RestStage {
     if (ok) Some(out) else None
   }
 
-  private def toJson(m: Map[String, String]): String =
-    m.map { case (k, v) => "\"" + k.replace("\"", "\\\"") + "\":\"" +
-      v.replace("\\", "\\\\").replace("\"", "\\\"") + "\"" }
-      .mkString("{", ",", "}")
+  // escapes per RFC 8259: quotes, backslashes and control characters
+  private lazy val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def toJson(m: Map[String, String]): String = jsonMapper.writeValueAsString(m.asJava)
 
   /** Build the request URI for a row, or None if templating failed. */
   def buildUri(cfg: RestConfig, rowMap: Map[String, Any]): Option[String] = {
@@ -172,15 +183,25 @@ object RestStage {
       .followRedirects(HttpClient.Redirect.NORMAL)
       .build()
     var threads = math.max(1, cfg.filterThreads)
-    // resizable so config hot-reload can rescale mid-partition (O18)
-    val pool = new java.util.concurrent.ThreadPoolExecutor(
-      threads, threads, 60L, TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable]())
+    // named daemons: a leaked thread shows by name and never pins the JVM
+    def daemons(kind: String): ThreadFactory = { r =>
+      val t = new Thread(r, s"graft-rest-$stageName-$kind"); t.setDaemon(true); t
+    }
+    // the request slots, resizable so config hot-reload can rescale
+    // mid-partition (O18)
+    val pool = new ThreadPoolExecutor(threads, threads, 60L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), daemons("worker"))
+    // waits out retry backoffs, so a backing-off row holds no slot
+    val scheduler = new ScheduledThreadPoolExecutor(1, daemons("retry"))
+    // pending rows in input order (at most threads×4); the head leaves
+    // only once read, so close() reaches every future a reader awaits
+    val window = new LinkedBlockingQueue[CompletableFuture[Option[Row]]]()
     var lastReload = System.currentTimeMillis()
 
-    /** Between waves: re-read the YAML and apply a changed filterThreads
-      * (reference setNewThreads, filefilter.py:144-155). Read errors are
-      * logged and skipped — a broken config mid-run must not kill tasks.
+    /** On every refill of the window: re-read the YAML and apply a
+      * changed filterThreads (reference setNewThreads,
+      * filefilter.py:144-155). Read errors are logged and skipped — a
+      * broken config mid-run must not kill tasks.
       */
     def maybeReload(): Unit =
       if (cfg.reloadEverySeconds > 0 && cfg.configPath.isDefined &&
@@ -199,106 +220,121 @@ object RestStage {
               threads = nt
             }
         } catch {
-          case scala.util.control.NonFatal(e) =>
+          case NonFatal(e) =>
             RestLog.info(s"Config reload failed for filter $stageName: ${e.getMessage}")
         }
       }
-    // the iterator below also shuts the pool down on exhaustion, but a
-    // downstream limit may stop pulling early — tie cleanup to the task
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => pool.shutdownNow()))
 
-    def callOne(row: Row): Option[Row] = {
-      val rowMap = fieldNames.zipWithIndex.map { case (f, i) => f -> row.get(i) }.toMap
+    // runs on exhaustion and, because a downstream limit may stop pulling
+    // early or the task may be killed, when the task completes
+    def close(): Unit = {
+      scheduler.shutdownNow()
+      pool.shutdownNow()
+      // rows still queued or backing off will never run now
+      window.forEach(_.cancel(false))
+      pool.awaitTermination(60, TimeUnit.SECONDS)
+      scheduler.awaitTermination(60, TimeUnit.SECONDS)
+    }
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => close()))
+
+    // every path completes `fut`, a refused execute after close() too, so
+    // the reader's get() cannot hang
+    def onPool(fut: CompletableFuture[Option[Row]])(work: => Unit): Unit =
+      try pool.execute { () =>
+        try work catch { case t: Throwable => fut.completeExceptionally(t) }
+      } catch { case e: RejectedExecutionException => fut.completeExceptionally(e) }
+
+    // the row's request, or None (an error) if templating fails
+    def prepare(rowMap: Map[String, Any]): Option[HttpRequest] =
       buildUri(cfg, rowMap) match {
         case None => ctr.errors.add(1L); None
         case Some(uri) =>
           // URI building can throw on raw substituted values (spaces
           // etc.) — that's a per-row error (drop + count), never a task
           // failure (filefilter.py:110-113 parity)
-          val reqOpt =
-            try {
-              val b = HttpRequest.newBuilder(URI.create(uri))
-                .timeout(Duration.ofMillis(cfg.timeoutMillis))
-              Some(cfg.method.toUpperCase match {
-                case "POST" =>
-                  val body = cfg.postBody.map { case (k, tmpl) =>
-                    k -> substitute(tmpl, rowMap, urlencode = false).getOrElse("")
-                  }
-                  val json = toJson(body)
-                  if (cfg.logRequests)
-                    RestLog.info(s"${cfg.method.toUpperCase} Request: $uri Body: $json")
-                  b.header("Content-Type", "application/json")
-                    .POST(HttpRequest.BodyPublishers.ofString(json)).build()
-                case _ =>
-                  if (cfg.logRequests)
-                    RestLog.info(s"${cfg.method.toUpperCase} Request: $uri")
-                  b.GET().build()
-              })
-            } catch {
-              case scala.util.control.NonFatal(_) => ctr.errors.add(1L); None
-            }
-          if (reqOpt.isEmpty) return None
-          val req = reqOpt.get
-          // retry transient failures (5xx / IO errors) with linear
-          // backoff; 4xx is semantic and fails fast
-          var attempt = 0
-          var result: Option[Row] = None
-          var done = false
-          while (!done) {
-            try {
-              val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-              val sc = resp.statusCode()
-              if (sc < 300) ctr.s20x.add(1L)
-              else if (sc < 400) ctr.s30x.add(1L)
-              else if (sc < 500) ctr.s40x.add(1L)
-              else ctr.s50x.add(1L)
-              if (sc >= 200 && sc < 300) {
-                if (cfg.logResponses) RestLog.info(s"Response: ${resp.body()}")
-                result = Some(new GenericRow((row.toSeq :+ resp.body()).toArray))
-                done = true
-              } else if (sc >= 500 && attempt < cfg.maxRetries) {
-                attempt += 1
-                Thread.sleep(cfg.retryBackoffMillis * attempt)
-              } else done = true // non-2xx → row dropped (filefilter.py:110-113)
-            } catch {
-              case scala.util.control.NonFatal(_) =>
-                if (attempt < cfg.maxRetries) {
-                  attempt += 1
-                  Thread.sleep(cfg.retryBackoffMillis * attempt)
-                } else { ctr.errors.add(1L); done = true }
-            }
+          try {
+            val b = HttpRequest.newBuilder(URI.create(uri))
+              .timeout(Duration.ofMillis(cfg.timeoutMillis))
+            Some(cfg.method.toUpperCase match {
+              case "POST" =>
+                val body = cfg.postBody.map { case (k, tmpl) =>
+                  k -> substitute(tmpl, rowMap, urlencode = false).getOrElse("")
+                }
+                val json = toJson(body)
+                if (cfg.logRequests)
+                  RestLog.info(s"${cfg.method.toUpperCase} Request: $uri Body: $json")
+                b.header("Content-Type", "application/json")
+                  .POST(HttpRequest.BodyPublishers.ofString(json)).build()
+              case _ =>
+                if (cfg.logRequests)
+                  RestLog.info(s"${cfg.method.toUpperCase} Request: $uri")
+                b.GET().build()
+            })
+          } catch {
+            case NonFatal(_) => ctr.errors.add(1L); None
           }
-          result
+      }
+
+    // one attempt on a pool slot: a 5xx or IO error with retries left
+    // frees the slot and re-enters the pool after a linear backoff; 4xx
+    // fails fast; other non-2xx drop the row (filefilter.py:110-113)
+    def send(row: Row, req: HttpRequest, attempt: Int,
+             fut: CompletableFuture[Option[Row]]): Unit = {
+      val retry =
+        try {
+          val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+          val sc = resp.statusCode()
+          if (sc < 300) ctr.s20x.add(1L)
+          else if (sc < 400) ctr.s30x.add(1L)
+          else if (sc < 500) ctr.s40x.add(1L)
+          else ctr.s50x.add(1L)
+          if (sc >= 200 && sc < 300) {
+            if (cfg.logResponses) RestLog.info(s"Response: ${resp.body()}")
+            fut.complete(Some(new GenericRow((row.toSeq :+ resp.body()).toArray)))
+          }
+          sc >= 500 && attempt < cfg.maxRetries
+        } catch {
+          case NonFatal(_) if attempt < cfg.maxRetries => true
+          case NonFatal(_) => ctr.errors.add(1L); false
+        }
+      if (!retry) fut.complete(None) // a no-op after a 2xx
+      else {
+        val again: Runnable = () => onPool(fut)(send(row, req, attempt + 1, fut))
+        try scheduler.schedule(again, cfg.retryBackoffMillis * (attempt + 1), TimeUnit.MILLISECONDS)
+        catch { case e: RejectedExecutionException => fut.completeExceptionally(e) }
       }
     }
 
-    // Bounded concurrency: submit in waves of threads×4 so memory stays
-    // flat on huge partitions while IO overlaps; wave size tracks the
-    // (possibly hot-reloaded) thread count.
-    val out = new Iterator[Seq[Row]] {
-      override def hasNext: Boolean = rows.hasNext
-      override def next(): Seq[Row] = {
-        maybeReload()
-        val batch = {
-          val b = Seq.newBuilder[Row]
-          var i = 0
-          while (i < threads * 4 && rows.hasNext) { b += rows.next(); i += 1 }
-          b.result()
+    def refill(): Unit = {
+      maybeReload()
+      while (window.size < threads * 4 && rows.hasNext) {
+        val row = rows.next()
+        val fut = new CompletableFuture[Option[Row]]()
+        window.add(fut)
+        onPool(fut) {
+          val rowMap = fieldNames.zipWithIndex.map { case (f, i) => f -> row.get(i) }.toMap
+          prepare(rowMap) match {
+            case Some(req) => send(row, req, 0, fut)
+            case None => fut.complete(None)
+          }
         }
-        val futures = batch.map(r => pool.submit(new Callable[Option[Row]] {
-          override def call(): Option[Row] = callOne(r)
-        }))
-        futures.flatMap(_.get())
       }
-    }.flatten
+    }
+
     new Iterator[Row] {
+      private var ready: Option[Row] = None
       override def hasNext: Boolean = {
-        val h = out.hasNext
-        if (!h) { pool.shutdown(); pool.awaitTermination(60, TimeUnit.SECONDS) }
-        h
+        while (ready.isEmpty && { refill(); !window.isEmpty }) {
+          ready = window.peek().get()
+          window.poll()
+        }
+        if (ready.isEmpty) close()
+        ready.isDefined
       }
-      override def next(): Row = out.next()
+      override def next(): Row =
+        if (!hasNext) throw new NoSuchElementException("rest stage exhausted")
+        else try ready.get finally ready = None
     }
   }
 

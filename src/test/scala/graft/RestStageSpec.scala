@@ -4,7 +4,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.operators.{Pipeline, RestConfig, RestCounters, RestStage}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** REST enrichment against an in-JVM stub server — the `countries`
   * fixture (FIXTURES.md §2) without the network.
@@ -16,10 +18,38 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
   private var port: Int = _
   @volatile private var lastPostBody: String = _
   private val nameHits = new java.util.concurrent.atomic.AtomicInteger(0)
+  // requests the stub is serving at once, and the most seen since reset
+  private val inFlight = new AtomicInteger(0)
+  private val maxInFlight = new AtomicInteger(0)
+  private val stubPool = java.util.concurrent.Executors.newCachedThreadPool()
+
+  private def respond(ex: HttpExchange, body: String): Unit = {
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    ex.sendResponseHeaders(200, bytes.length)
+    ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  /** Live threads of a rest stage's pool and retry scheduler. */
+  private def restThreads(stage: String): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
+      .filter(_.startsWith(s"graft-rest-$stage-"))
+
+  /** Polls `cond` for up to 10 s; a thread ends just after its pool does. */
+  private def within10s(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + 10000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    cond
+  }
 
   override def beforeAll(): Unit = {
     server = HttpServer.create(new InetSocketAddress(0), 0)
     port = server.getAddress.getPort
+    // concurrent handlers (the default runs them one at a time), gauged
+    server.setExecutor(r => stubPool.execute { () =>
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try r.run() finally inFlight.decrementAndGet()
+    })
     server.createContext("/v3.1/name/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         nameHits.incrementAndGet()
@@ -45,10 +75,11 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
         ex.close()
       }
     })
+    server.createContext("/busy", (ex: HttpExchange) => { Thread.sleep(30); respond(ex, "{}") })
     server.start()
   }
 
-  override def afterAll(): Unit = server.stop(0)
+  override def afterAll(): Unit = { server.stop(0); stubPool.shutdownNow() }
 
   test("2xx appends response column; non-2xx rows are dropped (§2c)") {
     val df = Seq((1, "spain"), (2, "france"), (3, "atlantis")).toDF("id", "countryName")
@@ -83,6 +114,18 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
     assert(out.length == 1)
     assert(lastPostBody.contains("\"city\":\"madrid\""))
     assert(lastPostBody.contains("\"tag\":\"const\""))
+  }
+
+  test("POST body escapes quotes, backslashes and control characters (RFC 8259)") {
+    val note = "back\\slash \"quoted\"\nnext line\ttab"
+    val df = Seq((1, note)).toDF("id", "note")
+    RestStage("esc", RestConfig(
+      host = s"http://localhost:$port", path = "/echo", method = "POST",
+      postBody = Map("note" -> "{note}", "k\"e\\y" -> "const")),
+      RestCounters(spark, "esc"))(spark, df).collect()
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(lastPostBody)
+    assert(json.get("note").asText == note)
+    assert(json.get("k\"e\\y").asText == "const")
   }
 
   test("urlencodeParams URL-encodes query values (filters.py:25-39)") {
@@ -132,6 +175,70 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
       maxRetries = 5, retryBackoffMillis = 10L), ctr2)
     assert(notFound(spark, df.withColumn("countryName", org.apache.spark.sql.functions.lit("atlantis"))).count() == 0)
     assert(ctr2.s40x.value == 1) // single attempt, no retry storm
+  }
+
+  test("a retry's backoff frees the request slot; rows still leave in input order") {
+    // one slot: A's 503 must not hold it through the 300 ms backoff
+    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[(String, Long)]())
+    server.createContext("/order/", (ex: HttpExchange) => {
+      val key = ex.getRequestURI.getPath.stripPrefix("/order/")
+      seen.add(key -> System.nanoTime())
+      if (key == "A" && seen.asScala.count(_._1 == "A") == 1) {
+        ex.sendResponseHeaders(503, -1); ex.close()
+      } else respond(ex, s"""{"key":"$key"}""")
+    })
+    val df = Seq("A", "B", "C", "D").toDF("k").coalesce(1)
+    val ctr = RestCounters(spark, "order")
+    val out = RestStage("order", RestConfig(
+      host = s"http://localhost:$port", path = "/order/{k}", filterThreads = 1,
+      maxRetries = 1, retryBackoffMillis = 300L), ctr)(spark, df).collect()
+    val calls = seen.asScala.toSeq
+    assert(calls.map(_._1) == Seq("A", "B", "C", "D", "A"))
+    val aAt = calls.filter(_._1 == "A").map(_._2)
+    assert(aAt(1) - aAt(0) >= 300L * 1000000L, s"gap ${(aAt(1) - aAt(0)) / 1000000} ms")
+    assert(out.map(_.getString(0)).toSeq == Seq("A", "B", "C", "D"))
+    assert(ctr.s50x.value == 1 && ctr.s20x.value == 4)
+  }
+
+  test("filterThreads bounds the requests in flight per partition") {
+    maxInFlight.set(0)
+    val df = (1 to 24).map(i => (i, "x")).toDF("id", "v").coalesce(1)
+    val out = RestStage("busy", RestConfig(
+      host = s"http://localhost:$port", path = "/busy", filterThreads = 2),
+      RestCounters(spark, "busy"))(spark, df).collect()
+    assert(out.map(_.getInt(0)).toSeq == (1 to 24))
+    assert(maxInFlight.get() == 2, s"max in flight ${maxInFlight.get()}")
+  }
+
+  test("no rest thread outlives its task: downstream limit, killed attempt") {
+    val df = (1 to 40).map(i => (i, "x")).toDF("id", "v").coalesce(1)
+    val first = RestStage("leaklimit", RestConfig(
+      host = s"http://localhost:$port", path = "/busy", filterThreads = 2),
+      RestCounters(spark, "ll"))(spark, df).limit(1).collect()
+    assert(first.length == 1)
+    assert(within10s(restThreads("leaklimit").isEmpty), restThreads("leaklimit"))
+
+    // kill the task while its only row waits out a 60 s backoff
+    val hit = new java.util.concurrent.CountDownLatch(1)
+    server.createContext("/down", (ex: HttpExchange) => {
+      hit.countDown(); ex.sendResponseHeaders(503, -1); ex.close()
+    })
+    val job = new Thread(() => {
+      spark.sparkContext.setJobGroup("leakkill", "killed in backoff", interruptOnCancel = true)
+      try RestStage("leakkill", RestConfig(
+        host = s"http://localhost:$port", path = "/down", maxRetries = 1,
+        retryBackoffMillis = 60000L), RestCounters(spark, "lk"))(
+        spark, Seq(1).toDF("id").coalesce(1)).collect()
+      catch { case scala.util.control.NonFatal(_) => () } // the cancelled job throws
+    })
+    job.start()
+    assert(hit.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    assert(within10s(restThreads("leakkill").exists(_.endsWith("-retry"))),
+      restThreads("leakkill"))
+    spark.sparkContext.cancelJobGroup("leakkill")
+    job.join(30000)
+    assert(!job.isAlive)
+    assert(within10s(restThreads("leakkill").isEmpty), restThreads("leakkill"))
   }
 
   test("rest stage wired through the YAML pipeline (countries fixture)") {
