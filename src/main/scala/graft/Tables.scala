@@ -14,105 +14,9 @@ import org.apache.spark.sql.types.DecimalType
   * order — a plain double sum would differ in the last ulp.
   */
 object Tables {
-  /** Memoized scan relations, one map per live session (weak-keyed so a
-    * stopped session's entries are collectable). `spark.read.parquet`
-    * builds a fresh FileIndex + reads the parquet footer + analyzes the
-    * relation EVERY call — pure driver-side planning cost that repeats
-    * per query. DataFrames are immutable plan wrappers, so handing the
-    * same instance to every query is safe and lets them share the
-    * already-analyzed scan subtree.
-    */
-  private val relCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  /** Cross-session (path → schema) cache: schema INFERENCE (the parquet
-    * footer read) is a pure function of the immutable file, so only the
-    * first session to touch a path pays it; later sessions build their
-    * relation with the known schema (`read.schema(...)` skips the
-    * footer). This is the session-isolation overhead recovery (VERDICT
-    * r12 #3/"what's wrong" #4): Bench's 10 per-stream sessions keep
-    * their own DataFrames — and with them their own temp-view semantics,
-    * the q131-race fix — while sharing the one cost that made
-    * per-stream sessions expensive. Keyed by path only: every cached
-    * path in this engine is write-once (testdata, the persisted IVF
-    * index, the exact-pairs cache).
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  /** Per-JVM ((path, metadata snapshot) → row count) memo. Used for
-    * the content-keyed persisted-index paths (q104/q168-q170), which
-    * otherwise paid a full count() job on EVERY execution just to
-    * rebuild an unchanging cache key (r18 job shave). The key carries
-    * a file-metadata snapshot (the dc3f8d4 persisted-LM pattern —
-    * VERDICT r18 #4), NOT the bare path: an in-process rewrite of the
-    * parquet changes (length, mtime), so the memo can never serve a
-    * stale count — and with it a stale index key — for a regenerated
-    * corpus. The recompute reads the path FRESH (no relation/schema
-    * memo, which also assume write-once) so the new count really
-    * reflects the rewritten file.
-    */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** File-metadata snapshot id for `path` — zero Spark jobs. A
-    * directory (multi-file parquet) folds its children's (count, total
-    * length, max mtime); a plain file uses (length, mtime). At 100 TB
-    * this slot is the catalog table-version string.
-    */
-  private def metaSnapshot(path: String): String = {
-    val f = new java.io.File(path)
-    if (f.isDirectory) {
-      val fs = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      s"dir|n=${fs.length}|len=${fs.map(_.length()).sum}|" +
-        s"mt=${fs.foldLeft(0L)((m, c) => math.max(m, c.lastModified()))}"
-    } else s"f|len=${f.length()}|mt=${f.lastModified()}"
-  }
-
-  def rowCount(spark: SparkSession, path: String): Long =
-    countCache.computeIfAbsent(s"$path|${metaSnapshot(path)}",
-      _ => spark.read.parquet(path).count()).longValue()
-
-  private def readMemo(spark: SparkSession, path: String): DataFrame = {
-    val known = schemaCache.get(path)
-    if (known != null) spark.read.schema(known).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.putIfAbsent(path, df.schema)
-      df
-    }
-  }
-
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = relCache.synchronized {
-      var m = relCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        relCache.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(s"$dir/$name.parquet", p => readMemo(spark, p))
-  }
-
-  /** Memoized loader for an arbitrary parquet path (same cache as
-    * [[t]]): for relations outside the testdata layout whose contents
-    * are immutable for the life of the session — e.g. the q104
-    * persisted IVF index, whose deterministic build writes once and is
-    * probed every run after. Re-listing files + re-reading footers per
-    * run is pure driver overhead.
-    */
-  def raw(spark: SparkSession, path: String): DataFrame = {
-    val perSession = relCache.synchronized {
-      var m = relCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        relCache.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(path, p => readMemo(spark, p))
-  }
+  /** The memoized relation for table `name` under `dir` ([[Memo.relation]]). */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    Memo.relation(spark, s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")

@@ -238,6 +238,10 @@ object RestStage {
     Option(org.apache.spark.TaskContext.get())
       .foreach(_.addTaskCompletionListener[Unit](_ => close()))
 
+    // pool threads share the task's accumulator copies, whose add is
+    // not atomic
+    def tally(a: LongAccumulator): Unit = a.synchronized(a.add(1L))
+
     // every path completes `fut`, a refused execute after close() too, so
     // the reader's get() cannot hang
     def onPool(fut: CompletableFuture[Option[Row]])(work: => Unit): Unit =
@@ -248,7 +252,7 @@ object RestStage {
     // the row's request, or None (an error) if templating fails
     def prepare(rowMap: Map[String, Any]): Option[HttpRequest] =
       buildUri(cfg, rowMap) match {
-        case None => ctr.errors.add(1L); None
+        case None => tally(ctr.errors); None
         case Some(uri) =>
           // URI building can throw on raw substituted values (spaces
           // etc.) — that's a per-row error (drop + count), never a task
@@ -272,7 +276,7 @@ object RestStage {
                 b.GET().build()
             })
           } catch {
-            case NonFatal(_) => ctr.errors.add(1L); None
+            case NonFatal(_) => tally(ctr.errors); None
           }
       }
 
@@ -285,10 +289,10 @@ object RestStage {
         try {
           val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
           val sc = resp.statusCode()
-          if (sc < 300) ctr.s20x.add(1L)
-          else if (sc < 400) ctr.s30x.add(1L)
-          else if (sc < 500) ctr.s40x.add(1L)
-          else ctr.s50x.add(1L)
+          if (sc < 300) tally(ctr.s20x)
+          else if (sc < 400) tally(ctr.s30x)
+          else if (sc < 500) tally(ctr.s40x)
+          else tally(ctr.s50x)
           if (sc >= 200 && sc < 300) {
             if (cfg.logResponses) RestLog.info(s"Response: ${resp.body()}")
             fut.complete(Some(new GenericRow((row.toSeq :+ resp.body()).toArray)))
@@ -296,7 +300,7 @@ object RestStage {
           sc >= 500 && attempt < cfg.maxRetries
         } catch {
           case NonFatal(_) if attempt < cfg.maxRetries => true
-          case NonFatal(_) => ctr.errors.add(1L); false
+          case NonFatal(_) => tally(ctr.errors); false
         }
       if (!retry) fut.complete(None) // a no-op after a 2xx
       else {

@@ -1051,29 +1051,12 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** Content-keyed tmpdir path for a persisted LM (the q104/q168-q170
-    * index scheme): SF dir + corpus count + training parameters, so
-    * different SFs, regenerated corpora and differently-parameterized
-    * trainers never load each other's model; under tmpdir — never
-    * inside the repo or testdata.
+  /** Persisted-LM key ([[graft.Memo.persisted]]): documents.parquet at
+    * its snapshot (file metadata, zero jobs — VERDICT r15) plus the
+    * training parameters, so a stale model can't serve a new corpus.
     */
-  private def lmPath(kind: String, key: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_${kind}_lm_$tag"
-  }
-
-  /** Snapshot id for the corpus behind `d` — file metadata only (size +
-    * mtime of documents.parquet), zero Spark jobs (VERDICT r15 nit: the
-    * previous `docs.count()` keying paid a full column-pruned scan per
-    * invocation; at 100 TB the snapshot id is the catalog/table-version
-    * string, exactly this role). An in-place rewrite of the parquet
-    * still changes the key, so a stale model can't serve a new corpus.
-    */
-  private def snapshotId(d: String): String = {
-    val f = new java.io.File(s"$d/documents.parquet")
-    s"$d|len=${f.length()}|mt=${f.lastModified()}"
-  }
+  private def lmKey(d: String, params: String): String =
+    s"${graft.Memo.versioned(s"$d/documents.parquet")}|$params"
 
   /** PERSISTED-LM probe (r15, VERDICT r14 #1): the q104/q168-q170
     * amortization applied to the LM family — [[graft.functions.NgramLm
@@ -1092,10 +1075,9 @@ object TextQueries {
   def q179LmPersisted(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val toksCol = split(col("text"), " ")
-    val path = lmPath("quad", s"${snapshotId(d)}|v=24|mc=2|o=4")
-    if (!new java.io.File(s"$path/meta/_SUCCESS").exists())
+    val path = graft.Memo.persisted("quad_lm", lmKey(d, "v=24|mc=2|o=4"), "meta")(
       graft.functions.NgramLm.save(s, graft.functions.NgramLm.trainQuadgramLm(
-        docs, toksCol, maxVocab = 24, minCount = 2), path)
+        docs, toksCol, maxVocab = 24, minCount = 2), _))
     val lm = graft.functions.NgramLm.load(s, path)
     val ppl = graft.functions.NgramLm.perplexity(docs, lm, toksCol,
       lambda = 0.9, lambda3 = 0.5, lambda4 = 0.5)
@@ -1121,11 +1103,10 @@ object TextQueries {
   def q175KnPersisted(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val toksCol = split(col("text"), " ")
-    val path = lmPath("kn", s"${snapshotId(d)}|v=24|mc=2|mb=500|kn")
-    if (!new java.io.File(s"$path/knmeta/_SUCCESS").exists())
+    val path = graft.Memo.persisted("kn_lm", lmKey(d, "v=24|mc=2|mb=500|kn"), "knmeta")(
       graft.functions.NgramLm.saveKn(s, graft.functions.NgramLm.kneserNey(
         graft.functions.NgramLm.trainBigramLm(
-          docs, toksCol, maxVocab = 24, minCount = 2, maxBigrams = 500)), path)
+          docs, toksCol, maxVocab = 24, minCount = 2, maxBigrams = 500)), _))
     val kn = graft.functions.NgramLm.loadKn(s, path)
     val ppl = graft.functions.NgramLm.knPerplexity(docs, kn, toksCol, discount = 0.75)
     docs.select(col("doc_id"), size(toksCol).cast("long").as("n_toks"),

@@ -121,20 +121,10 @@ object VectorQueries {
   def q104IvfPersisted(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val q = emb.filter(col("vec_id") < 10)
-    // keyed by SF dir + corpus row count + BUILD PARAMETERS, so
-    // different SFs, regenerated corpora and differently-parameterized
-    // builders (ScaleProbe auto-sizes nlist) never probe each other's
-    // index; under tmpdir — never inside the repo or testdata
-    val key = s"$d|n=${graft.Tables.rowCount(s, s"$d/embeddings.parquet")}|nlist=16|refine=1"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_$tag"
-    if (!new java.io.File(s"$path/assigned/_SUCCESS").exists())
-      VF.saveIvf(VF.buildIvf(emb, nlist = 16, refine = 1), path)
-    // memoized relations: the index is written once (deterministic
-    // build), so re-listing + footer-reading it every run is overhead
-    val idx = VF.IvfIndex(graft.Tables.raw(s, s"$path/centroids"),
-      graft.Tables.raw(s, s"$path/assigned"))
+    val path = graft.Memo.persisted("ivf_index", indexKey(d, "nlist=16|refine=1"), "assigned")(
+      VF.saveIvf(VF.buildIvf(emb, nlist = 16, refine = 1), _))
+    val idx = VF.IvfIndex(graft.Memo.relation(s, s"$path/centroids"),
+      graft.Memo.relation(s, s"$path/assigned"))
     val probed = VF.ivfProbe(q, idx, k = 5, nprobe = 6)
     VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.60, corpusTag = d)
   }
@@ -439,17 +429,13 @@ object VectorQueries {
     */
   private def localCount(df: DataFrame): Long = df.collect().length.toLong
 
-  /** Content-keyed tmpdir path for a persisted index (the q104
-    * scheme): SF dir + corpus count + build parameters, so different
-    * SFs, regenerated corpora and differently-parameterized builders
-    * never probe each other's index; under tmpdir — never inside the
-    * repo or testdata.
+  /** Persisted-index key ([[graft.Memo.persisted]]): the corpus file at
+    * its snapshot plus the build parameters, so different SFs,
+    * regenerated corpora and differently-parameterized builders never
+    * probe each other's index.
     */
-  private def indexPath(kind: String, key: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_${kind}_index_$tag"
-  }
+  private[graft] def indexKey(d: String, params: String): String =
+    s"${graft.Memo.versioned(s"$d/embeddings.parquet")}|$params"
 
   /** PERSISTED-SQ8 probe (r14, VERDICT r13 #3): the q104 amortization
     * applied to [[graft.functions.VectorFunctions.buildSq]] — the
@@ -466,11 +452,10 @@ object VectorQueries {
   def q168SqPersisted(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val q = emb.filter(col("vec_id") < 10)
-    val path = indexPath("sq", s"$d|n=${graft.Tables.rowCount(s, s"$d/embeddings.parquet")}|sq8")
-    if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
-      VF.saveSq(VF.buildSq(emb), path)
-    val idx = VF.SqIndex(graft.Tables.raw(s, s"$path/params"),
-      graft.Tables.raw(s, s"$path/encoded"))
+    val path = graft.Memo.persisted("sq_index", indexKey(d, "sq8"), "encoded")(
+      VF.saveSq(VF.buildSq(emb), _))
+    val idx = VF.SqIndex(graft.Memo.relation(s, s"$path/params"),
+      graft.Memo.relation(s, s"$path/encoded"))
     val probed = VF.sqProbe(q, idx, emb, k = 5, rerank = 64)
     VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.90, corpusTag = d)
   }
@@ -486,11 +471,10 @@ object VectorQueries {
   def q169PqPersisted(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val q = emb.filter(col("vec_id") < 10)
-    val path = indexPath("pq", s"$d|n=${graft.Tables.rowCount(s, s"$d/embeddings.parquet")}|m=16|ksub=64|iters=1")
-    if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
-      VF.savePq(VF.buildPq(emb, m = 16, ksub = 64, iters = 1), path)
-    val idx = VF.PqIndex(graft.Tables.raw(s, s"$path/codebooks"),
-      graft.Tables.raw(s, s"$path/encoded"))
+    val path = graft.Memo.persisted("pq_index", indexKey(d, "m=16|ksub=64|iters=1"), "encoded")(
+      VF.savePq(VF.buildPq(emb, m = 16, ksub = 64, iters = 1), _))
+    val idx = VF.PqIndex(graft.Memo.relation(s, s"$path/codebooks"),
+      graft.Memo.relation(s, s"$path/encoded"))
     val probed = VF.pqProbe(q, idx, emb, k = 5, rerank = 128)
     VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.80, corpusTag = d)
   }
@@ -506,14 +490,13 @@ object VectorQueries {
   def q170IvfPqPersisted(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val q = emb.filter(col("vec_id") < 10)
-    val path = indexPath("ivfpq",
-      s"$d|n=${graft.Tables.rowCount(s, s"$d/embeddings.parquet")}|nlist=16|refine=1|m=16|ksub=64|iters=1|residual=1")
-    if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
+    val path = graft.Memo.persisted("ivfpq_index",
+      indexKey(d, "nlist=16|refine=1|m=16|ksub=64|iters=1|residual=1"), "encoded")(
       VF.saveIvfPq(VF.buildIvfPq(emb, nlist = 16, refine = 1, m = 16,
-        ksub = 64, iters = 1, residual = true), path)
-    val idx = VF.IvfPqIndex(graft.Tables.raw(s, s"$path/centroids"),
-      graft.Tables.raw(s, s"$path/codebooks"),
-      graft.Tables.raw(s, s"$path/encoded"))
+        ksub = 64, iters = 1, residual = true), _))
+    val idx = VF.IvfPqIndex(graft.Memo.relation(s, s"$path/centroids"),
+      graft.Memo.relation(s, s"$path/codebooks"),
+      graft.Memo.relation(s, s"$path/encoded"))
     val probed = VF.ivfPqProbe(q, idx, emb, k = 5, nprobe = 8, rerank = 128)
     VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.60, corpusTag = d)
   }

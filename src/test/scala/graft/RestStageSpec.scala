@@ -494,4 +494,27 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
     assert(back.select("id").collect().map(_.get(0).toString).distinct.length == 11)
     assert(back.columns.contains("response"))
   }
+
+  test("status counters stay exact with 16 pool threads sharing one task's accumulators") {
+    // one partition, so all 16 threads add to the same accumulator copies
+    val served = new AtomicInteger(0)
+    server.createContext("/mixed/", (ex: HttpExchange) => {
+      served.incrementAndGet()
+      val k = ex.getRequestURI.getPath.stripPrefix("/mixed/").toInt
+      if (k % 10 == 3) { ex.sendResponseHeaders(404, -1); ex.close() }
+      else if (k % 10 == 7) { ex.sendResponseHeaders(503, -1); ex.close() }
+      else respond(ex, "{}")
+    })
+    val n = 400
+    val ctr = RestCounters(spark, "threads16")
+    val out = RestStage("many", RestConfig(
+      host = s"http://localhost:$port", path = "/mixed/{k}", filterThreads = 16,
+      maxRetries = 2, retryBackoffMillis = 1), ctr)(spark, (0 until n).toDF("k").coalesce(1)).collect()
+    // a 503 row is tried 3 times and dropped; a 404 row once
+    assert(out.length == n - n / 5)
+    assert(served.get == n / 10 * 3 + n / 10 + n * 8 / 10)
+    val counted = ctr.s20x.value + ctr.s40x.value + ctr.s50x.value + ctr.errors.value
+    assert(counted == served.get, s"counters saw $counted of ${served.get} requests")
+    assert(ctr.s50x.value == n / 10 * 3 && ctr.errors.value == 0)
+  }
 }

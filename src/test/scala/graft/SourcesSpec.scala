@@ -78,19 +78,4 @@ class SourcesSpec extends SparkSpec {
     assert(files.nonEmpty && files.forall(_.getName.contains(".zstd.")))
     assert(spark.read.parquet(path).count() == Tables.documents(spark, sf).count())
   }
-
-  test("Tables.rowCount keys its memo on the file-metadata snapshot, not the bare path") {
-    // the memo is load-bearing for the persisted-index cache keys
-    // (q104/q168-q170): an in-process rewrite of the parquet MUST
-    // change the key, or a stale count silently keys a stale index
-    // (VERDICT r18 #4 / ADVICE — the dc3f8d4 persisted-LM pattern)
-    val path = tmp("rowcount_rewrite")
-    spark.range(3).toDF("id").repartition(1).write.mode("overwrite").parquet(path)
-    assert(Tables.rowCount(spark, path) == 3L)
-    spark.range(7).toDF("id").repartition(1).write.mode("overwrite").parquet(path)
-    assert(Tables.rowCount(spark, path) == 7L,
-      "rewritten parquet must re-key the memo (stale-count hazard)")
-    // and the memo still memoizes: same snapshot → same cached value
-    assert(Tables.rowCount(spark, path) == 7L)
-  }
 }

@@ -61,6 +61,11 @@ object ScaleProbe {
       // a caller gets by omitting the parameters
       val bits = VF.autoLshBits(nEmb)
       val nlist = VF.autoNlist(nEmb)
+      // a persisted probe's artifact, keyed on its input table's snapshot
+      def probePath(kind: String, table: String, params: String, marker: String)(
+          build: String => Unit): String =
+        graft.Memo.persisted(s"scale_$kind",
+          s"${graft.Memo.versioned(s"$d/$table.parquet")}|$params", marker)(build)
       Seq(
         "q30_dedup_exact" -> (() =>
           graft.queries.TextQueries.q30DedupExact(spark, d).count()),
@@ -117,14 +122,8 @@ object ScaleProbe {
         // persisted-index probe (q104's steady state): build+save once
         // per corpus dir, load+probe timed
         "q104_ivf_probe" -> (() => {
-          // same tag scheme as the q104 gate query: dir + corpus count +
-          // build parameters, so differently-sized builds never collide
-          val key = s"$d|n=$nEmb|nlist=$nlist|refine=1"
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-          val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_$tag"
-          if (!new java.io.File(s"$path/assigned/_SUCCESS").exists())
-            VF.saveIvf(VF.buildIvf(emb, nlist = nlist, refine = 1), path)
+          val path = probePath("ivf", "embeddings", s"nlist=$nlist|refine=1", "assigned")(
+            VF.saveIvf(VF.buildIvf(emb, nlist = nlist, refine = 1), _))
           VF.ivfProbe(emb.filter(col("vec_id") < 10),
             VF.loadIvf(spark, path), k = 5, nprobe = VF.autoNprobe(nlist)).count()
         }),
@@ -249,32 +248,28 @@ object ScaleProbe {
         // probe should scale with the corpus only through the
         // posting-list / encoded-scan side
         "q168_sq_probe" -> (() => {
-          val path = probePath("sq", s"$d|n=$nEmb|sq8")
-          if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
-            VF.saveSq(VF.buildSq(emb), path)
-          val idx = VF.SqIndex(graft.Tables.raw(spark, s"$path/params"),
-            graft.Tables.raw(spark, s"$path/encoded"))
+          val path = probePath("sq", "embeddings", "sq8", "encoded")(VF.saveSq(VF.buildSq(emb), _))
+          val idx = VF.SqIndex(graft.Memo.relation(spark, s"$path/params"),
+            graft.Memo.relation(spark, s"$path/encoded"))
           VF.sqProbe(emb.filter(col("vec_id") < 10), idx, emb,
             k = 5, rerank = 64).count()
         }),
         "q169_pq_probe" -> (() => {
-          val path = probePath("pq", s"$d|n=$nEmb|m=16|ksub=64|iters=1")
-          if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
-            VF.savePq(VF.buildPq(emb, m = 16, ksub = 64, iters = 1), path)
-          val idx = VF.PqIndex(graft.Tables.raw(spark, s"$path/codebooks"),
-            graft.Tables.raw(spark, s"$path/encoded"))
+          val path = probePath("pq", "embeddings", "m=16|ksub=64|iters=1", "encoded")(
+            VF.savePq(VF.buildPq(emb, m = 16, ksub = 64, iters = 1), _))
+          val idx = VF.PqIndex(graft.Memo.relation(spark, s"$path/codebooks"),
+            graft.Memo.relation(spark, s"$path/encoded"))
           VF.pqProbe(emb.filter(col("vec_id") < 10), idx, emb,
             k = 5, rerank = 128).count()
         }),
         "q170_ivfpq_probe" -> (() => {
-          val path = probePath("ivfpq",
-            s"$d|n=$nEmb|nlist=$nlist|refine=1|m=16|ksub=64|iters=1|residual=1")
-          if (!new java.io.File(s"$path/encoded/_SUCCESS").exists())
+          val path = probePath("ivfpq", "embeddings",
+            s"nlist=$nlist|refine=1|m=16|ksub=64|iters=1|residual=1", "encoded")(
             VF.saveIvfPq(VF.buildIvfPq(emb, nlist = nlist, refine = 1,
-              m = 16, ksub = 64, iters = 1, residual = true), path)
-          val idx = VF.IvfPqIndex(graft.Tables.raw(spark, s"$path/centroids"),
-            graft.Tables.raw(spark, s"$path/codebooks"),
-            graft.Tables.raw(spark, s"$path/encoded"))
+              m = 16, ksub = 64, iters = 1, residual = true), _))
+          val idx = VF.IvfPqIndex(graft.Memo.relation(spark, s"$path/centroids"),
+            graft.Memo.relation(spark, s"$path/codebooks"),
+            graft.Memo.relation(spark, s"$path/encoded"))
           VF.ivfPqProbe(emb.filter(col("vec_id") < 10), idx, emb, k = 5,
             nprobe = VF.autoNprobe(nlist), rerank = 128).count()
         }),
@@ -284,24 +279,16 @@ object ScaleProbe {
         // grows with the corpus
         "q179_lm_score" -> (() => {
           val t = split(col("text"), " ")
-          val path = probePath("lm4", s"$d|n=$nDocs|v=65536|mc=2|o=4")
-          if (!new java.io.File(s"$path/meta/_SUCCESS").exists())
+          val path = probePath("lm4", "documents", "v=65536|mc=2|o=4", "meta")(
             graft.functions.NgramLm.save(spark,
               graft.functions.NgramLm.trainQuadgramLm(docs, t,
-                maxVocab = 65536, minCount = 2), path)
+                maxVocab = 65536, minCount = 2), _))
           val lm = graft.functions.NgramLm.load(spark, path)
           docs.select(graft.functions.NgramLm.perplexity(docs, lm, t,
             lambda = 0.9, lambda3 = 0.5, lambda4 = 0.5)
             .as("p")).agg(count(col("p"))).collect()(0).getLong(0)
         }),
       )
-    }
-
-    /** content-keyed tmp path, the q104 gate's tag scheme. */
-    def probePath(kind: String, key: String): String = {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      s"${sys.props("java.io.tmpdir")}/graft_scale_${kind}_$tag"
     }
 
     val results = scala.collection.mutable.LinkedHashMap[String,
