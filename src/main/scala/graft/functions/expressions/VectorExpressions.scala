@@ -329,9 +329,11 @@ object GraftFunctions {
       // strategy recognizing the dialect rewrite's fingerprint. Session-
       // scoped (ExperimentalMethods is per-SessionState), so cloned /
       // newSession() sessions pick it up through their own register call.
-      if (!spark.experimental.extraStrategies.contains(graft.plans.AsofMergeStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.AsofMergeStrategy
+      // Small global sorts plan as one sorted partition (SmallSortStrategy).
+      Seq(graft.plans.AsofMergeStrategy, graft.plans.SmallSortStrategy).foreach { s =>
+        if (!spark.experimental.extraStrategies.contains(s))
+          spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ s
+      }
     }
 }
 

@@ -55,7 +55,13 @@ import scala.util.control.NonFatal
   *
   * Scale note: HTTP side effects re-execute under task retry/speculation;
   * callers should disable speculation for pipelines with rest stages and
-  * keep endpoints idempotent (SURVEY §7 hard part 1).
+  * keep endpoints idempotent (SURVEY §7 hard part 1). A global sort after
+  * a rest stage is one more re-run: above
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` it is Spark's
+  * range sort, whose sampling job computes the rest stage a second time
+  * (at or below it, [[graft.plans.SmallSortStrategy]] plans no sampling
+  * job). Run such pipelines with `checkpointDir`, so the sort reads the
+  * rest stage's parquet checkpoint instead.
   */
 final case class RestConfig(
     host: String,

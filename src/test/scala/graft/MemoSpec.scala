@@ -1,8 +1,6 @@
 package graft
 
 import graft.functions.{VectorFunctions => VF}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** [[Memo]]: relations, fingerprints and persisted artifacts re-key
@@ -20,27 +18,6 @@ class MemoSpec extends SparkSpec {
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("id_a", "id_b").collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-
-  /** Jobs started from this thread while `body` runs. */
-  private def jobsIn(body: => Unit): Int = {
-    val group = s"memo-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "MemoSpec")
-    try {
-      body
-      Thread.sleep(500) // job-start events post async to the listener bus
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   test("Memo.relation and Tables.t serve a rewritten parquet's new schema and rows") {
     val dir = tmpDir("memo_relation")

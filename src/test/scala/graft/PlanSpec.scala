@@ -90,7 +90,7 @@ class PlanSpec extends SparkSpec {
     assert(p137.contains("Union") && !p137.contains("Join"), p137)
     // q133: the comprehension rewrite stays in higher-order functions —
     // ONE scan + project, no Generate/explode blow-up, and the only
-    // exchange is the final ORDER BY's range partitioning
+    // exchange is the final ORDER BY's
     val p133f = formatted(graft.queries.ExtraQueries.q133Comprehension(spark, sf))
     assert(p133f.contains("transform(") && !p133f.contains("Generate"), p133f)
     val p133 = planOf(graft.queries.ExtraQueries.q133Comprehension(spark, sf))
@@ -400,5 +400,75 @@ class PlanSpec extends SparkSpec {
       // +1 for the final collect() above
       assert(jobs.get <= 17, s"jobs=${jobs.get} — CC rounds are paying more than one action")
     } finally s2.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with the range-sort path forced: no child is ≤ 1 byte. */
+  private def rangeSorted[A](body: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try body finally spark.conf.set(key, saved)
+  }
+
+  private def small: DataFrame =
+    spark.range(0, 200, 1, 4).selectExpr("id % 7 AS k", "id")
+
+  test("a small global sort plans one sorted partition: no range sampling job") {
+    val df = small.orderBy("k", "id")
+    val p = planOf(df)
+    assert(p.contains("Exchange SinglePartition") && !p.contains("rangepartitioning"), p)
+    var rows: Array[org.apache.spark.sql.Row] = null
+    // the child's shuffle-map job and the result job; the range path
+    // pays a third, the RangePartitioner's sampling run of the child
+    assert(jobsIn { rows = df.collect() } == 2)
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      (0L until 200L).map(i => (i % 7, i)).sorted)
+    val ranged = small.orderBy("k", "id")
+    rangeSorted {
+      assert(planOf(ranged).contains("rangepartitioning"), planOf(ranged))
+      assert(jobsIn(ranged.collect()) == 3)
+    }
+  }
+
+  test("orderBy + limit keeps TakeOrderedAndProject; AQE off gets the same single partition") {
+    val top = planOf(small.orderBy("k", "id").limit(5))
+    assert(top.contains("TakeOrderedAndProject") && !top.contains("SinglePartition"), top)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    graft.functions.expressions.GraftFunctions.register(s2)
+    val p = s2.range(0, 200, 1, 4).selectExpr("id % 7 AS k", "id")
+      .orderBy("k").queryExecution.executedPlan.toString
+    assert(!p.contains("AdaptiveSparkPlan"), p)
+    assert(p.contains("Exchange SinglePartition") && !p.contains("rangepartitioning"), p)
+  }
+
+  test("a sort whose input is already one partition adds no exchange") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.row_number
+    // the unpartitioned window gathers its input; its sort needs no shuffle
+    val df = small.withColumn("rn", row_number().over(Window.orderBy("id")))
+      .withColumn("r", row_number().over(Window.partitionBy("k").orderBy("id")))
+      .orderBy("k", "id")
+    val p = planOf(df)
+    assert("Exchange".r.findAllIn(p).length == 1 && !p.contains("rangepartitioning"), p)
+    assert(jobsIn(df.collect()) == 2)
+  }
+
+  test("single-partition and range sorts give the same rows in the same order") {
+    import spark.implicits._
+    // ties on a and b, NULLs in both; id is unique, so the order is total
+    val df = (0 until 300).map { i =>
+      (i, if (i % 11 == 0) None else Some(i % 5), if (i % 13 == 0) null else s"s${i % 3}")
+    }.toDF("id", "a", "b").repartition(4)
+    val order = Seq($"a".desc_nulls_last, $"b".asc_nulls_first, $"id".desc)
+    val single = df.orderBy(order: _*)
+    assert(planOf(single).contains("SinglePartition"), planOf(single))
+    val got = single.collect().toSeq
+    val want = rangeSorted {
+      val ranged = df.orderBy(order: _*)
+      assert(planOf(ranged).contains("rangepartitioning"), planOf(ranged))
+      ranged.collect().toSeq
+    }
+    assert(got.length == 300 && got == want)
   }
 }

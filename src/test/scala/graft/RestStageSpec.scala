@@ -517,4 +517,58 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
     assert(counted == served.get, s"counters saw $counted of ${served.get} requests")
     assert(ctr.s50x.value == n / 10 * 3 && ctr.errors.value == 0)
   }
+
+  test("a rest stage before ORDER BY sends each request once (no range-sampling re-run)") {
+    // a range sort samples its child in a job of its own, which re-ran
+    // the rest stage and sent every request twice
+    val served = new AtomicInteger(0)
+    val failedOnce = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    server.createContext("/sorted/", (ex: HttpExchange) => {
+      served.incrementAndGet()
+      val k = ex.getRequestURI.getPath.stripPrefix("/sorted/")
+      val i = k.stripPrefix("k").toInt
+      if (i % 8 == 0) { ex.sendResponseHeaders(404, -1); ex.close() }
+      else if (i % 5 == 1 && failedOnce.add(k)) { ex.sendResponseHeaders(503, -1); ex.close() }
+      else respond(ex, s"""{"key":"$k"}""")
+    })
+    val n = 40
+    val keys = (0 until n).map(i => f"k$i%02d")
+    val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toFile
+    for (part <- 0 until 2) {
+      val w = new java.io.PrintWriter(new java.io.File(dir, s"part-$part.csv"))
+      w.println("id,key")
+      // each file lists its keys in descending order, so the sort has work
+      keys.indices.filter(_ % 2 == part).reverse.foreach(i => w.println(s"$i,${keys(i)}"))
+      w.close()
+    }
+    val cfg = graft.model.ConfigLoader.fromYaml(
+      s"""
+         |filters:
+         |  - name: lookup
+         |    actionType: rest
+         |    filterThreads: 2
+         |    actionConfig:
+         |      host: "http://localhost:$port"
+         |      path: "/sorted/{key}"
+         |      maxRetries: 1
+         |      retryBackoffMillis: 10
+         |  - name: order
+         |    actionType: sql
+         |    code: SELECT id, key, response FROM df ORDER BY key
+         |""".stripMargin)
+    // Pipeline.run's steps, keeping the rest stage's counters in hand
+    val stages = Pipeline.compile(spark, cfg)
+    val ctr = stages.collectFirst { case (_, r: RestStage) => r.counters }.get
+    val df = stages.foldLeft(graft.sources.Sources.load(spark, s"$dir/*.csv")) {
+      case (d, (_, stage)) => stage(spark, d)
+    }
+    val out = new java.io.File(dir, "out").getPath
+    graft.sources.Sources.writeCsv(df, out)
+    val retries = (0 until n).count(i => i % 8 != 0 && i % 5 == 1)
+    assert(served.get == n + retries, s"stub served ${served.get}, due ${n + retries}")
+    val counted = ctr.s20x.value + ctr.s40x.value + ctr.s50x.value + ctr.errors.value
+    assert(counted == served.get, s"counters saw $counted of ${served.get} requests")
+    val back = spark.read.option("header", "true").csv(out).collect().map(_.getAs[String]("key"))
+    assert(back.sorted.toSeq == keys.filterNot(_.stripPrefix("k").toInt % 8 == 0))
+  }
 }
