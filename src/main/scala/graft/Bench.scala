@@ -69,26 +69,16 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val streams = math.max(1, sys.env.getOrElse("GRAFT_BENCH_STREAMS", "10").toInt)
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // With concurrent streams each query needs FEWER shuffle partitions
-      // than cores: the suite keeps all cores busy across queries, while
-      // small per-query task counts keep the single-threaded DAGScheduler
-      // event loop from becoming the bottleneck (32-partition stages of
-      // ~2 ms tasks × 10 streams swamp it).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_BENCH_PARTITIONS", "4"))
+    // With concurrent streams each query needs FEWER shuffle partitions
+    // than cores: the suite keeps all cores busy across queries, while
+    // small per-query task counts keep the single-threaded DAGScheduler
+    // event loop from becoming the bottleneck (32-partition stages of
+    // ~2 ms tasks × 10 streams swamp it).
+    val partitions = sys.env.getOrElse("GRAFT_BENCH_PARTITIONS", "4").toInt
+    var builder = GraftSession.builder(s"local[$cpus]", Some(partitions))
       .config("spark.sql.files.minPartitionNum",
         sys.env.getOrElse("GRAFT_BENCH_SCAN_PARTITIONS", "2"))
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // janino's compiled-class cache defaults to 100 entries; a suite of
-      // ~90 queries x several codegen units each thrashes it, recompiling
-      // every generated class on every pass (r7: sequential Bench wall
-      // 24.4 s -> 16.3 s from this one setting)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.adaptive.enabled", "true")
       // AQE's default 1 MB coalesce floor collapses byte-light but
       // CPU-dense shuffles (LSH candidate joins, CC rounds, DSIR
       // featurization) to ONE task on this box — the work serializes

@@ -1,11 +1,14 @@
 package graft
 
-import graft.functions.expressions.{GraftExtensions, GraftFunctions}
+import graft.functions.expressions.GraftFunctions
 import org.apache.spark.sql.SparkSession
 
-/** One-stop session builder for library users: graft extensions (native
-  * expressions as SQL functions), AQE, UTC, nanos-parquet handling, and
-  * shuffle partitions sized to the cluster instead of the 200 default.
+/** The one session builder: AQE, UTC, nanos-parquet handling, a large
+  * codegen cache, and shuffle partitions sized to the cluster instead
+  * of the 200 default. Callers add only the settings where they differ.
+  * graft's SQL functions and planner strategies come from
+  * [[GraftFunctions.register]], which [[getOrCreate]], the pipeline and
+  * every operator that needs them call on the session.
   */
 object GraftSession {
 
@@ -19,22 +22,15 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's ANSI TIME type ships behind a flag; the dialect's
-      // TIME-typed scalars need it (GraftFunctions.register also sets
-      // it at runtime for sessions built elsewhere)
-      .config("spark.sql.timeType.enabled", "true")
       // janino's compiled-class cache defaults to 100 entries; a suite of
       // ~90 queries x several codegen units each thrashes it, recompiling
       // every generated class on every pass (r7: sequential Bench wall
       // 24.4 s -> 16.3 s from this one setting)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .withExtensions(new GraftExtensions)
   }
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()
-    // also cover the path where an existing session (built elsewhere)
-    // is returned and the extensions didn't apply
     GraftFunctions.register(spark)
     spark
   }

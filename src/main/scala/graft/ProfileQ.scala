@@ -17,12 +17,7 @@ object ProfileQ {
       if (args.nonEmpty && args(0).nonEmpty) args(0).split(",").toSeq
       else Seq("q01_scan_prune", "q02_agg_pricing", "q03_join_revenue_nation", "q13_set_ops")
     val repeats = if (args.length > 1) args(1).toInt else 3
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    var b = GraftSession.builder(s"local[$cpus]", Some(cpus.toInt))
       .config("spark.ui.enabled", "false")
     val confArg = if (args.length > 2) Some(args(2)) else sys.env.get("GRAFT_PROF_CONF")
     confArg.foreach { conf =>

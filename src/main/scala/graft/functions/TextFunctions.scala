@@ -41,8 +41,7 @@ object TextFunctions {
   def fingerprint(text: Column): Column = md5(normalized(text))
 
   /** Native single-pass fingerprint. Requires
-    * `GraftFunctions.register(spark)` (or the GraftExtensions injector)
-    * on the session.
+    * `GraftFunctions.register(spark)` on the session.
     */
   def fingerprintFast(text: Column): Column =
     call_function("norm_fingerprint", text)

@@ -503,8 +503,7 @@ object GraftListSort {
   * Three layers, in order of preference:
   *  1. [[aliases]] — DuckDB function names Spark lacks, built directly as
   *     Catalyst expressions (codegen'd, work in subqueries/CTEs, no
-  *     string munging). Registered by [[GraftFunctions.register]] and
-  *     [[GraftExtensions]].
+  *     string munging). Registered by [[GraftFunctions.register]].
   *  2. parser rewrites ([[graft.operators.GraftSqlParser]]):
   *     `* EXCLUDE(...)` → `* EXCEPT(...)`, `QUALIFY <pred>` → a ranked
   *     subquery (wrap for alias predicates, helper-column injection for
@@ -1150,9 +1149,9 @@ object DuckDialect {
   }
 
   /** DuckDB function names Spark lacks, as direct Catalyst builders.
-    * Registered alongside the graft natives by GraftFunctions/
-    * GraftExtensions, so they resolve in any `sql` stage, subquery or
-    * CTE with zero text rewriting.
+    * Registered alongside the graft natives by GraftFunctions.register,
+    * so they resolve in any `sql` stage, subquery or CTE with zero text
+    * rewriting.
     */
   /** Two-param HOF lambdas: DuckDB's index variable is 1-BASED,
     * Spark's 0-based — rewrite every reference to the second lambda

@@ -1,35 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.{DataType, StructType}
-
-/** Dialect shim as a real parser extension (SURVEY §7 step 3 "v2"):
-  * DuckDB's `SELECT * EXCLUDE(a, b)` star modifier is rewritten to
-  * Spark's native `* EXCEPT (a, b)` before delegating to the stock
-  * parser — so the construct works anywhere in a statement (subqueries,
-  * CTEs), not just at the outer projection like the string shim in
-  * [[SqlStage]]. Installed by [[graft.functions.expressions.GraftExtensions]]
-  * via injectParser.
-  */
-class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
-  private def rewrite(sql: String): String = GraftSqlParser.rewriteAll(sql)
-
-  override def parsePlan(sqlText: String): LogicalPlan =
-    GraftSqlParser.withDialectHint(sqlText)(delegate.parsePlan(rewrite(sqlText)))
-  override def parseQuery(sqlText: String): LogicalPlan =
-    GraftSqlParser.withDialectHint(sqlText)(delegate.parseQuery(rewrite(sqlText)))
-  override def parseExpression(sqlText: String): Expression = delegate.parseExpression(sqlText)
-  override def parseTableIdentifier(sqlText: String): TableIdentifier = delegate.parseTableIdentifier(sqlText)
-  override def parseFunctionIdentifier(sqlText: String): FunctionIdentifier = delegate.parseFunctionIdentifier(sqlText)
-  override def parseMultipartIdentifier(sqlText: String): Seq[String] = delegate.parseMultipartIdentifier(sqlText)
-  override def parseTableSchema(sqlText: String): StructType = delegate.parseTableSchema(sqlText)
-  override def parseDataType(sqlText: String): DataType = delegate.parseDataType(sqlText)
-  override def parseRoutineParam(sqlText: String): StructType = delegate.parseRoutineParam(sqlText)
-}
-
 object GraftSqlParser {
 
   /** All DuckDB-dialect text rewrites in one call, the order chosen so
@@ -4846,8 +4816,8 @@ object GraftSqlParser {
   private val ColumnsRe = raw"(?i)\bCOLUMNS\s*\(".r
 
   /** Expand DuckDB's `COLUMNS(...)` star pattern against a KNOWN schema
-    * — callable only where the input columns are at hand (SqlStage; the
-    * parser extension has no schema and leaves the construct to the
+    * — callable only where the input columns are at hand (SqlStage;
+    * [[rewriteAll]] has no schema and leaves the construct to the
     * guided error). DuckDB (1.x, verified against 1.0.0) semantics: the
     * whole SELECT-LIST ITEM containing COLUMNS(...) is replicated per
     * matched column — any surrounding expression applies per column

@@ -17,12 +17,11 @@ trait Stage extends Serializable {
 
 /** `sql` stage (reference O12, filefilter.py:340-342): the current
   * pipeline state is exposed as view `df`, the user's SQL replaces it.
-  * DuckDB's `SELECT * EXCLUDE(a, b)` star modifier (used by
-  * examples/fullExample/fullExample.yml:100-104) is rewritten to
-  * Spark-native `* EXCEPT (a, b)` — here textually for sessions built
-  * without extensions, and in [[GraftSqlParser]] (injectParser) for
-  * sessions with [[graft.functions.expressions.GraftExtensions]], where
-  * it also covers subqueries/CTEs.
+  * The DuckDB-dialect text (e.g. the `SELECT * EXCLUDE(a, b)` star
+  * modifier of examples/fullExample/fullExample.yml:100-104, rewritten to
+  * Spark-native `* EXCEPT (a, b)`) is rewritten exactly once, here, by
+  * [[GraftSqlParser.rewriteAll]] before `spark.sql`; the session's own
+  * parser is Spark's stock one.
   *
   * Concurrency: `df` (and the read-function / CTAS views this stage
   * registers) live in the SESSION temp-view catalog, so concurrent pipelines must
@@ -35,8 +34,7 @@ trait Stage extends Serializable {
 final case class SqlStage(name: String, code: String) extends Stage {
   override def apply(spark: SparkSession, df: DataFrame): DataFrame = {
     df.createOrReplaceTempView("df")
-    // dialect functions (string_split, strftime, …) for sessions built
-    // without GraftExtensions; idempotent per session
+    // dialect functions (string_split, strftime, …); idempotent per session
     graft.functions.expressions.GraftFunctions.register(spark)
     // Multi-statement batches (DuckDB sql stages carry `CREATE MACRO
     // ...; SELECT ...` through the verbatim passthrough): CREATE MACRO

@@ -309,9 +309,8 @@ class DialectSpec extends SparkSpec {
     assert(e.getCause != null)
   }
 
-  // ---- QUALIFY rewrite (VERDICT r5 #6). The shared test session has no
-  // parser extension, so tests exercise the textual rewrite the same way
-  // SqlStage does (extension sessions get it inside parsePlan).
+  // ---- QUALIFY rewrite (VERDICT r5 #6): tests exercise the textual
+  // rewrite the same way SqlStage does.
   private def qsql(sql: String) = spark.sql(GraftSqlParser.rewriteQualify(sql))
 
   test("QUALIFY over a select-list alias rewrites to a ranked subquery") {

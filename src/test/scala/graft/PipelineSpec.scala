@@ -498,6 +498,38 @@ class PipelineSpec extends SparkSpec {
     assert(out.columns.toSeq == Seq("a"))
   }
 
+  test("graft.Main in its own JVM rewrites a sql stage's dialect once: backslash regexes match DuckDB") {
+    // A child JVM is the only way to get the session Main builds for
+    // itself; in-process, GraftSession.getOrCreate returns TestSpark.
+    // The test JVM's --add-opens flags are build.sbt's list; the JVM
+    // reports each as one `--add-opens=<module/package>=ALL-UNNAMED`.
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString).toSeq
+      .filter(_.startsWith("--add-opens="))
+    assert(opens.nonEmpty)
+    val in = tmpCsv("regex.csv", "s", Seq("ab12cd", "xy7"))
+    val dir = Files.createTempDirectory("graft-main").toFile
+    val yml = new java.io.File(dir, "regex.yml")
+    Files.writeString(yml.toPath,
+      """filters:
+        |  - name: rx
+        |    actionType: sql
+        |    code: |
+        |      SELECT s, regexp_replace(s, '\d+', 'X') AS r, regexp_matches(s, '\d') AS m FROM df
+        |""".stripMargin)
+    val out = new java.io.File(dir, "out").toString
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++ Seq(
+      "-Dspark.master=local[2]", "-Dspark.ui.enabled=false",
+      "-cp", sys.props("java.class.path"), "graft.Main", in, yml.toString, out)
+    val log = new java.io.File(dir, "main.log")
+    val exit = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log).start().waitFor()
+    assert(exit == 0, Files.readString(log.toPath).takeRight(4000))
+    val rows = spark.read.option("header", "true").csv(out).collect()
+      .map(_.mkString(",")).sorted.toSeq
+    assert(rows == Seq("ab12cd,abXcd,true", "xy7,xyX,true"))
+  }
+
   test("per-stage checkpoints write parquet and overwrite on re-run (fixes reference re-run duplication)") {
     val in = tmpCsv("ck.csv", "id", (1 to 10).map(_.toString))
     val ckDir = Files.createTempDirectory("graft-ck").toString

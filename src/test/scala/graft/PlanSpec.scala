@@ -375,8 +375,7 @@ class PlanSpec extends SparkSpec {
     // round. A 200-node path converges in ≤ 12 rounds (~log2(199) +
     // slack + the zero-change confirmation) → ≤ 15 jobs; a
     // two-actions-per-round loop would pay ≥ 3 setup + 2 × rounds
-    // ≈ 20+. Measured 14 on this box pre-input-checkpoint
-    // (graft.tools.CcJobs2), +1 for the input materialization.
+    // ≈ 20+. The `jobs <= 17` assertion below locks the count.
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     s2.conf.set("spark.graft.cc.localEdges", "0") // force the distributed loop

@@ -8,20 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM, forked by sbt). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[4, 4]: 4 threads, task maxFailures 4 — task RETRIES are
-      // live so the side-effect chaos tests (RestStageSpec) exercise
-      // real re-execution; speculation is ON for the same reason (the
-      // raised multiplier keeps spurious speculative duplicates out of
-      // sub-second test tasks)
-      .master("local[4, 4]")
-      .appName("graft-test")
+    // local[4, 4]: 4 threads, task maxFailures 4 — task RETRIES are
+    // live so the side-effect chaos tests (RestStageSpec) exercise
+    // real re-execution; speculation is ON for the same reason (the
+    // raised multiplier keeps spurious speculative duplicates out of
+    // sub-second test tasks)
+    val s = GraftSession.builder("local[4, 4]", Some(4))
       .config("spark.speculation", "true")
       .config("spark.speculation.multiplier", "5")
       .config("spark.speculation.interval", "1s")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables._
 import graft.functions.Dedup
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: print MinHash band-bucket size distribution + candidate
@@ -14,9 +14,7 @@ object BucketProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/scaledata/sf0.5", "/root/repo/scaledata/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder("local[32]", Some(32))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,8 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Decompose the sequential per-query floor (VERDICT r6 #3: ~0.2 s ×
   * 87 queries ≈ 17 s of the 26.9 s sequential wall is NOT data path).
@@ -21,14 +20,9 @@ object FloorProbe {
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("q14_string_funcs", "q21_math_case", "q01_scan_prune",
         "q02_agg_pricing", "q93_token_budget", "q89_dedup_clusters")
-    var b2 = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SEQP", "8"))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("GRAFT_SEQP", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val seqp = sys.env.getOrElse("GRAFT_SEQP", "8")
+    var b2 = GraftSession.builder("local[32]", Some(seqp.toInt))
+      .config("spark.sql.files.minPartitionNum", seqp)
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("GRAFT_AQE", "true"))
       .config("spark.sql.maxPlanStringLength",

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 import scala.util.Random
 
@@ -28,10 +28,7 @@ object FuzzDiff {
     val outDir = args.lift(1).getOrElse("/tmp/graft_fuzz")
     val seed = args.lift(2).map(_.toLong).getOrElse(1L)
     val n = args.lift(3).map(_.toInt).getOrElse(150)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder("local[8]", Some(8))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.expressions.GraftFunctions.register(spark)

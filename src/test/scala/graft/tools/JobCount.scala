@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scratch: jobs/stages per gate query — the fixed per-job driver floor
   * (~50-100 ms on this box) times the job count is most of a small-SF
@@ -15,11 +15,7 @@ object JobCount {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q41_ann_lsh", "q77_ann_ivf", "q104_ivf_persisted",
         "q109_cluster_assign", "q111_semdedup", "q116_semdedup_learned")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local[32]", Some(8))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.expressions.GraftFunctions.register(spark)

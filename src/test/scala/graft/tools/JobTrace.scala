@@ -1,18 +1,15 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scratch: per-job callsite trace for a gate query. */
 object JobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "q154_upsert_statements"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
+    val spark = GraftSession.builder("local[32]", Some(8))
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("JT_AQE", "true"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.expressions.GraftFunctions.register(spark)

@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.functions.Mix
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the mix operators under STRATUM SKEW (VERDICT r5 #1):
@@ -17,9 +18,7 @@ import org.apache.spark.sql.functions._
 object MixSkewProbe {
   def main(args: Array[String]): Unit = {
     val baseN = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder("local[32]", Some(32))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scratch: write every declared query's `.explain("formatted")` to
   * <outDir>/<query>_<tag>.txt — the r18 optimization round's plan
@@ -16,11 +16,7 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("plans/r18")
     val tag = args.lift(2).getOrElse("before")
     val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local[32]", Some(8))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Scratch: median-of-N latency for a handful of gate queries at one
   * SF, uncontended — for before/after comparison of targeted operator
@@ -16,11 +15,7 @@ object QProbe {
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("q40_cosine_topk", "q41_ann_lsh", "q77_ann_ivf",
         "q89_dedup_clusters", "q93_token_budget", "q94_sequence_pack")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local[32]", Some(8))
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()

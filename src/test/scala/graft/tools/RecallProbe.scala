@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables._
 import graft.functions.{VectorFunctions => VF}
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: print the realized (deterministic) recall of the three
@@ -12,10 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val spark = GraftSession.builder("local[16]", Some(8))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -2,7 +2,8 @@ package graft.tools
 
 import graft.Tables._
 import graft.functions.{Dedup, VectorFunctions => VF}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-slope measurement (VERDICT r4 #7): time the scale-path
@@ -26,10 +27,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/scaledata/sf0.5", "/root/repo/scaledata/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val spark = GraftSession.builder("local[32]", Some(32))
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "48g"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scratch: per-stage wall/CPU breakdown of one gate query — find
   * whether a slow query is compute-bound or stage-floor-bound before
@@ -11,11 +11,7 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse("q37_embed_neardup_lsh")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local[32]", Some(8))
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
       .config("spark.sql.files.minPartitionNum",

@@ -1,5 +1,5 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scratch: seventh dialect probe sweep — run every DuckDB-validated
   * scalar call (gen_duck_probes.py → /tmp/duck_probe7.tsv) through
@@ -9,9 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sweep7 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.builder("local[4]", Some(4))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = spark.range(1).toDF("z")
