@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.matching.Regex
+
 object GraftSqlParser {
 
   /** All DuckDB-dialect text rewrites in one call, the order chosen so
@@ -7,22 +9,89 @@ object GraftSqlParser {
     * outer join, ASOF JOIN → validity-interval join, EXCLUDE → EXCEPT,
     * struct_pack named args, DISTINCT ON → QUALIFY (which the next
     * rewrite then lowers), QUALIFY → ranked subquery, USING SAMPLE →
-    * TABLESAMPLE.
+    * TABLESAMPLE. Each pass runs once, as one left-to-right scan
+    * ([[rewriteEach]]); the call-head renames run last but one, after
+    * [[rewriteDotCall]], so the names a dot-call emits (`x.log()` →
+    * `log(x)`) are renamed too. `resolve` (relation → columns,
+    * session-backed where the caller has one) feeds the grouping-alias
+    * shadowing check only.
     */
   def rewriteAll(sql: String,
       resolve: String => Option[Seq[String]] = _ => None): String =
-    // the outer rename wrap re-applies the idempotent fn renames to
-    // text REWRITTEN BY rewriteDotCall (x.log() emits log(x), which the
-    // inner rename pass has already run past). `resolve` (relation →
-    // columns, session-backed where the caller has one) feeds the
-    // grouping-alias shadowing check only.
-    rewriteGroupingAliases(resolve = resolve, depth = 0, sql = rewriteDateDiffFn(rewriteRegexpReplaceFn(rewriteLogFn(
-    rewriteDotCall(rewriteMixedIntervalFrame(rewriteFrameExclude(rewriteNamedWindows(rewriteDateDiffFn(rewriteRegexpReplaceFn(rewriteExtractEpoch(rewriteFormatFn(rewritePrintfFn(rewriteIgnoreNulls(rewriteAggOrderBy(rewriteSample(rewriteQuantified(rewriteQualify(
+    rewriteGroupingAliases(resolve = resolve, sql = rewriteRenames(
+    rewriteDotCall(rewriteMixedIntervalFrame(rewriteFrameExclude(rewriteNamedWindows(rewriteFormatFn(rewritePrintfFn(rewriteIgnoreNulls(rewriteAggOrderBy(rewriteSample(rewriteQuantified(rewriteQualify(
       rewriteDistinctOn(rewriteStructPack(rewriteStructInsert(
         rewriteExclude(rewriteAsof(rewritePositional(rewriteSubscript(rewriteSlice(
-          rewriteGlob(rewriteSimilarTo(rewriteDecimalDivLiterals(rewriteIntDiv(rewritePow(rewriteCaret(rewriteLogFn(rewriteFilterOver(rewriteJsonOps(rewriteJsonExtractFns(rewriteIntegralCastRound(rewriteBlobType(
+          rewriteGlob(rewriteSimilarTo(rewriteDecimalDivLiterals(rewriteIntDiv(rewritePow(rewriteCaret(rewriteFilterOver(rewriteJsonOps(rewriteJsonExtractFns(rewriteIntegralCastRound(rewriteBlobType(
             rewriteListLiteral(rewriteStructLiteral(rewriteComprehension(
-              rewriteFromFirst(rewriteRawLiterals(sql)))))))))))))))))))))))))))))))))))))))))))
+              rewriteFromFirst(rewriteRawLiterals(sql)))))))))))))))))))))))))))))))))))))
+
+  /** What a pass does with one match of its scan (see [[rewriteEach]]). */
+  private sealed trait Step
+  /** Replace text[start, end) with `text`. */
+  private final case class Splice(start: Int, end: Int, text: String) extends Step
+  /** Leave the match; the scan goes on after it. */
+  private case object Skip extends Step
+  /** Leave the match; the scan goes on at `at`. */
+  private final case class SkipTo(at: Int) extends Step
+  /** End the pass with the text as it stands. */
+  private case object Stop extends Step
+
+  /** The scan loop of every pass whose replacements may need rewriting
+    * again (the others are one sweep of disjoint splices, see
+    * [[applySplices]]). It masks `sql` once ([[maskQuotes]]) and walks
+    * `re`'s matches over the mask left to right; `f` gets each match with the current text and mask and
+    * answers with a [[Step]]. A [[Splice]] is applied to the text and
+    * patched into the mask in place — sound because a match starts
+    * outside any literal or comment and every replacement is
+    * quote-balanced — and the scan RESUMES AT THE SPLICE'S START, so a
+    * replacement that is itself an operand is scanned again: `**` and
+    * `^` fold left-associatively, a `.fn()` chain's inner call becomes
+    * the next call's base, and a rewritten construct's nested ones are
+    * rewritten in turn. Text before the resume point is never rescanned,
+    * and the loop's stack depth does not grow with the number of
+    * occurrences.
+    */
+  private def rewriteEach(sql: String, re: Regex)(
+      f: (Regex.Match, String, String) => Step): String = {
+    var text = sql
+    var masked = maskQuotes(sql)
+    val mt = re.pattern.matcher(masked)
+    var from = 0
+    while (from <= masked.length && mt.find(from)) {
+      val m = new Regex.Match(masked, mt, Nil).force
+      f(m, text, masked) match {
+        case Splice(s, e, t) =>
+          text = spliced(text, s, e, t)
+          masked = spliced(masked, s, e, maskQuotes(t))
+          mt.reset(masked)
+          from = s
+        case Skip => from = if (m.end > m.start) m.end else m.end + 1
+        case SkipTo(at) => from = at
+        case Stop => return text
+      }
+    }
+    text
+  }
+
+  /** Apply disjoint (start, end, text) replacements, all indexed into
+    * `sql`, in one copy. Insertions at one position land in reverse
+    * list order, as applying the list right to left would place them.
+    */
+  private def applySplices(sql: String, spans: Seq[(Int, Int, String)]): String =
+    if (spans.isEmpty) sql
+    else {
+      val sb = new java.lang.StringBuilder(sql.length + 64)
+      var last = 0
+      spans.zipWithIndex.sortBy { case ((s, _, _), k) => (s, -k) }.foreach {
+        case ((s, e, t), _) => sb.append(sql, last, s).append(t); last = e
+      }
+      sb.append(sql, last, sql.length).toString
+    }
+
+  private def spliced(s: String, start: Int, end: Int, mid: String): String =
+    new java.lang.StringBuilder(s.length - (end - start) + mid.length)
+      .append(s, 0, start).append(mid).append(s, end, s.length).toString
 
   /** DuckDB single-quoted string literals are RAW — no backslash
     * escapes (`'\d'` is backslash-d) — while Spark's parser unescapes
@@ -116,30 +185,21 @@ object GraftSqlParser {
     * identifiers/qualified names/numbers/function calls/parenthesized
     * expressions — anything else keeps the guided error.
     */
-  def rewriteQuantified(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = QuantOpRe.findAllMatchIn(masked).find { mm =>
-      // require a subquery head inside the paren
-      raw"(?is)^\s*(SELECT|WITH|FROM)\b".r
-        .findFirstIn(masked.substring(mm.end)).isDefined
-    }.getOrElse(return sql)
-    // subquery extent: balance from the open paren at m.end - 1
-    var d = 1
-    var i = m.end
-    while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
+  def rewriteQuantified(sql: String): String =
+    rewriteEach(sql, QuantOpRe) { (m, sql, masked) =>
+      if (matchesAt(SubqueryHeadRe, masked, m.end)) quantified(m, sql, masked) else Skip
     }
-    if (d != 0) return sql
+
+  private val SubqueryHeadRe = raw"(?is)\s*(SELECT|WITH|FROM)\b".r
+
+  private def quantified(m: Regex.Match, sql: String, masked: String): Step = {
+    // subquery extent: balance from the open paren at m.end - 1
+    val i = closeOf(masked, m.end).getOrElse(return Stop)
     val subq = sql.substring(m.end, i - 1).trim
     // left operand extent (backward scan)
     var ls = m.start - 1
     while (ls >= 0 && masked.charAt(ls).isWhitespace) ls -= 1
-    if (ls < 0) return sql
+    if (ls < 0) return Stop
     def identStart(k0: Int): Int = {
       var k = k0
       while (k >= 0 && (masked.charAt(k).isLetterOrDigit ||
@@ -147,22 +207,12 @@ object GraftSqlParser {
       k + 1
     }
     val leftStart: Int =
-      if (masked.charAt(ls) == ')') {
-        var d2 = 1
-        var k = ls - 1
-        while (k >= 0 && d2 > 0) {
-          masked.charAt(k) match {
-            case ')' => d2 += 1
-            case '(' => d2 -= 1
-            case _ =>
-          }
-          if (d2 > 0) k -= 1
-        }
-        if (d2 != 0) return sql
-        identStart(k - 1) // include a function-name chain, if any
-      } else if (masked.charAt(ls).isLetterOrDigit || masked.charAt(ls) == '_') {
+      if (masked.charAt(ls) == ')')
+        // include a function-name chain, if any
+        identStart(openOf(masked, ls).getOrElse(return Stop) - 1)
+      else if (masked.charAt(ls).isLetterOrDigit || masked.charAt(ls) == '_') {
         identStart(ls)
-      } else return sql // unsupported operand shape → guided error stays
+      } else return Stop // unsupported operand shape → guided error stays
     // The backward scan claims ONE term; if the char before it is an
     // expression-continuing operator (`a || b > ALL …`, `a + b > ALL …`)
     // the true left operand is the whole compound and claiming just `b`
@@ -174,7 +224,7 @@ object GraftSqlParser {
       p
     }
     if (beforeLeft >= 0 && "|+-*/%^&<>=!~:".indexOf(masked.charAt(beforeLeft)) >= 0)
-      return sql
+      return Stop
     val x = sql.substring(leftStart, m.start).trim
     val op = m.group(1) match { case "!=" => "<>"; case o => o }
     val isAll = m.group(2).equalsIgnoreCase("ALL")
@@ -237,7 +287,7 @@ object GraftSqlParser {
             s"WHEN $nullCnt > 0 THEN NULL " +
             s"WHEN ($x) IS NULL THEN NULL ELSE FALSE END)"
     }
-    rewriteQuantified(sql.substring(0, leftStart) + replacement + sql.substring(i))
+    Splice(leftStart, i, replacement)
   }
 
   /** Inline NAMED windows that carry a frame-EXCLUDE clause (r14):
@@ -257,111 +307,84 @@ object GraftSqlParser {
     * <extension> )`. Extensions carrying their own parens are not
     * claimed (none of the frame grammar needs them).
     */
-  /** Parse the SELECT-level `WINDOW name AS ( … )[, …]` clause into
-    * (name, spec) pairs — positions-free twin of the EXCLUDE flow's
-    * inline parse, shared by the r16 extension-reference inlining.
+  /** The SELECT-level `WINDOW name AS ( … )[, …]` clause: its start,
+    * the end of its last parsed definition, the (name, spec) pairs, and
+    * whether the whole clause parsed. None when there is no clause or a
+    * definition's parens don't balance.
     */
-  private def namedWindowDefs(sql: String, masked: String): Seq[(String, String)] = {
-    val wm = raw"(?i)\bWINDOW\s+".r.findAllMatchIn(masked).toSeq
-      .find { m =>
-        val before = masked.substring(0, m.start)
-        !raw"(?i)(OVER|AS)\s*$$".r.findFirstIn(before).isDefined
-      }.getOrElse(return Nil)
-    var pos = wm.end
-    val defs = scala.collection.mutable.ArrayBuffer[(String, String)]()
+  private def windowClause(sql: String, masked: String)
+      : Option[(Int, Int, Seq[(String, String)], Boolean)] = {
+    val wm = raw"(?i)\bWINDOW\s+".r.findAllMatchIn(masked).find { m =>
+      // the SELECT-level WINDOW clause, not a function named window
+      !raw"(?i)(OVER|AS)\s*$$".r.findFirstIn(masked.substring(0, m.start)).isDefined
+    }.getOrElse(return None)
     val DefHead = raw"(?is)^([A-Za-z_]\w*)\s+AS\s*\(".r
-    var ok = true
-    while (ok) {
-      DefHead.findFirstMatchIn(masked.substring(pos)) match {
-        case Some(dm) =>
-          var d = 1
-          var i = pos + dm.end
-          while (i < masked.length && d > 0) {
-            masked.charAt(i) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ =>
-            }
-            i += 1
-          }
-          if (d != 0) return Nil
-          defs += ((dm.group(1), sql.substring(pos + dm.end, i - 1).trim))
-          val rest = masked.substring(i)
-          val comma = raw"^\s*,\s*".r.findFirstMatchIn(rest)
-          if (comma.isDefined) pos = i + comma.get.end else ok = false
-        case None => return defs.toSeq
-      }
-    }
-    defs.toSeq
-  }
-
-  def rewriteNamedWindows(sql: String): String = {
-    val masked0 = maskQuotes(sql)
-    // named-window EXTENSION references: inline `OVER ( name ext )`
-    // for every SELECT-level WINDOW definition
-    if (raw"(?i)\bWINDOW\s+[A-Za-z_]\w*\s+AS\s*\(".r.findFirstIn(masked0).isDefined) {
-      namedWindowDefs(sql, masked0).foreach { case (n, s) =>
-        val extRe =
-          (raw"(?is)\bOVER\s*\(\s*" + java.util.regex.Pattern.quote(n) +
-            raw"\s+([^()]*[^()\s])\s*\)").r
-        extRe.findFirstMatchIn(masked0).foreach { em =>
-          val ext = sql.substring(em.start(1), em.end(1))
-          return rewriteNamedWindows(sql.substring(0, em.start) +
-            s"OVER ( $s $ext )" + sql.substring(em.end))
+    val defs = Seq.newBuilder[(String, String)]
+    var pos = wm.end
+    var clauseEnd = pos
+    var complete = false
+    var more = true
+    while (more) {
+      more = false
+      DefHead.findFirstMatchIn(masked.substring(pos)).foreach { dm =>
+        val i = closeOf(masked, pos + dm.end).getOrElse(return None)
+        defs += ((dm.group(1), sql.substring(pos + dm.end, i - 1).trim))
+        clauseEnd = i
+        raw"^\s*,\s*".r.findFirstMatchIn(masked.substring(i)) match {
+          case Some(comma) => pos = i + comma.end; more = true
+          case None => complete = true
         }
       }
     }
-    val masked = masked0
-    if (raw"(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES)\b".r
-        .findFirstIn(masked).isEmpty) return sql
-    val wm = raw"(?i)\bWINDOW\s+".r.findAllMatchIn(masked).toSeq
-      .find { m =>
-        // the SELECT-level WINDOW clause, not a function named window
-        val before = masked.substring(0, m.start)
-        !raw"(?i)(OVER|AS)\s*$$".r.findFirstIn(before).isDefined
-      }.getOrElse(return sql)
-    // parse `name AS ( … ) [, name AS ( … )]*`
-    var pos = wm.end
-    val defs = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val DefHead = raw"(?is)^([A-Za-z_]\w*)\s+AS\s*\(".r
-    var ok = true
-    var clauseEnd = pos
-    while (ok) {
-      DefHead.findFirstMatchIn(masked.substring(pos)) match {
-        case Some(dm) =>
-          var d = 1
-          var i = pos + dm.end
-          while (i < masked.length && d > 0) {
-            masked.charAt(i) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ =>
-            }
-            i += 1
-          }
-          if (d != 0) return sql // unbalanced — leave for Spark's parser
-          defs += ((dm.group(1), sql.substring(pos + dm.end, i - 1).trim))
-          clauseEnd = i
-          val rest = masked.substring(i)
-          val comma = raw"^\s*,\s*".r.findFirstMatchIn(rest)
-          if (comma.isDefined) pos = i + comma.get.end else ok = false
-        case None => return sql
+    Some((wm.start, clauseEnd, defs.result(), complete))
+  }
+
+  def rewriteNamedWindows(sql: String): String = {
+    // one round per SELECT-level WINDOW clause whose EXCLUDE-bearing
+    // definitions get inlined (the clause disappears when all were)
+    var cur = sql
+    var more = true
+    while (more) {
+      // named-window EXTENSION references: inline `OVER ( name ext )`
+      // for every definition of the SELECT-level WINDOW clause
+      windowClause(cur, maskQuotes(cur)).foreach(_._3.foreach { case (n, s) =>
+        val extRe =
+          (raw"(?is)\bOVER\s*\(\s*" + java.util.regex.Pattern.quote(n) +
+            raw"\s+([^()]*[^()\s])\s*\)").r
+        cur = rewriteEach(cur, extRe) { (em, sql, _) =>
+          Splice(em.start, em.end, s"OVER ( $s ${sql.substring(em.start(1), em.end(1))} )")
+        }
+      })
+      inlineExcludeWindows(cur) match {
+        case Some(out) => cur = out
+        case None => more = false
       }
     }
+    cur
+  }
+
+  /** The WINDOW clause's EXCLUDE-bearing definitions inlined into their
+    * `OVER name` uses; None when there are none. */
+  private def inlineExcludeWindows(sql: String): Option[String] = {
+    val masked = maskQuotes(sql)
+    if (raw"(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES)\b".r
+        .findFirstIn(masked).isEmpty) return None
+    val (clauseStart, clauseEnd, defs, _) = windowClause(sql, masked)
+      .filter(_._4).getOrElse(return None) // malformed — leave for Spark's parser
     val (inlined, kept) = defs.partition(d =>
       raw"(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b".r
         .findFirstIn(maskQuotes(d._2)).isDefined)
-    if (inlined.isEmpty) return sql
+    if (inlined.isEmpty) return None
     val newClause =
       if (kept.isEmpty) ""
       else " WINDOW " + kept.map { case (n, s) => s"$n AS ($s)" }.mkString(", ") + " "
-    var out = sql.substring(0, wm.start) + newClause + sql.substring(clauseEnd)
+    var out = sql.substring(0, clauseStart) + newClause + sql.substring(clauseEnd)
     inlined.foreach { case (n, s) =>
       out = raw"(?i)\bOVER\s+${java.util.regex.Pattern.quote(n)}\b".r
         .replaceAllIn(out,
           java.util.regex.Matcher.quoteReplacement(s"OVER ( $s )"))
     }
-    rewriteNamedWindows(out)
+    Some(out)
   }
 
   private val MixedIntervalFrameRe =
@@ -384,9 +407,7 @@ object GraftSqlParser {
     val masked = maskQuotes(sql)
     val daySecs = Map("DAY" -> 86400L, "HOUR" -> 3600L, "MINUTE" -> 60L, "SECOND" -> 1L)
     val ymMonths = Map("YEAR" -> 12L, "MONTH" -> 1L)
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- MixedIntervalFrameRe.findAllMatchIn(masked)) {
+    applySplices(sql, MixedIntervalFrameRe.findAllMatchIn(masked).flatMap { m =>
       val (n1, u1, d1) = (m.group(1).toLong, m.group(2).toUpperCase, m.group(3).toUpperCase)
       val (n2, u2, d2) = (m.group(4).toLong, m.group(5).toUpperCase, m.group(6).toUpperCase)
       val repl: Option[String] =
@@ -398,34 +419,22 @@ object GraftSqlParser {
           Some(s"RANGE BETWEEN INTERVAL '${n1 * ymMonths(u1)}' MONTH $d1 " +
             s"AND INTERVAL '${n2 * ymMonths(u2)}' MONTH $d2")
         else None // class mix — no single Spark bound type; stays loud
-      repl.foreach { r =>
-        sb.append(sql.substring(last, m.start)).append(r)
-        last = m.end
-      }
-    }
-    if (last == 0) sql else { sb.append(sql.substring(last)); sb.toString }
+      repl.map(r => (m.start, m.end, r))
+    }.toSeq)
   }
 
-  def rewriteFrameExclude(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = FrameExcludeRe.findFirstMatchIn(masked).getOrElse(return sql)
+  def rewriteFrameExclude(sql: String): String =
+    rewriteEach(sql, FrameExcludeRe)(frameExclude)
+
+  private def frameExclude(m: Regex.Match, sql: String, masked: String): Step = {
     val mode = m.group(1).toUpperCase.replaceAll(raw"\s+", " ")
+    val dropped = Splice(m.start, m.end, ")")
     if (mode == "NO OTHERS") // the default, in both engines
-      return rewriteFrameExclude(sql.substring(0, m.start) + ")" + sql.substring(m.end))
+      return dropped
     val close = m.end - 1
     // backward to the OVER-paren's open
-    var d = 1
-    var i = close - 1
-    while (i >= 0 && d > 0) {
-      masked.charAt(i) match {
-        case ')' => d += 1
-        case '(' => d -= 1
-        case _ =>
-      }
-      if (d > 0) i -= 1
-    }
-    if (d != 0) frameExcludeFail("unbalanced window parens")
-    val specOpen = i
+    val specOpen = openOf(masked, close)
+      .getOrElse(frameExcludeFail("unbalanced window parens"))
     val spec = sql.substring(specOpen + 1, m.start).trim
     // the word before the open paren must be OVER (named windows keep
     // the guided error — the clause lives in a WINDOW definition there)
@@ -438,17 +447,8 @@ object GraftSqlParser {
     if (j < 0 || masked.charAt(j) != ')')
       frameExcludeFail("no aggregate call before OVER")
     val argsClose = j
-    d = 1; j -= 1
-    while (j >= 0 && d > 0) {
-      masked.charAt(j) match {
-        case ')' => d += 1
-        case '(' => d -= 1
-        case _ =>
-      }
-      if (d > 0) j -= 1
-    }
-    if (d != 0) frameExcludeFail("unbalanced aggregate parens")
-    val argsOpen = j
+    val argsOpen = openOf(masked, argsClose)
+      .getOrElse(frameExcludeFail("unbalanced aggregate parens"))
     val args = sql.substring(argsOpen + 1, argsClose).trim
     var k = argsOpen - 1
     while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
@@ -476,12 +476,11 @@ object GraftSqlParser {
         (start.endsWith("FOLLOWING") && end.endsWith("FOLLOWING") &&
           !start.startsWith("0"))
     }
-    val dropped = sql.substring(0, m.start) + ")" + sql.substring(m.end)
     val nn = s"(CASE WHEN ($args) IS NULL THEN 0 ELSE 1 END)"
     val replacement: String = if (mode == "CURRENT ROW") {
       // both-PRECEDING / both-FOLLOWING frames can't contain the
       // current row — exclusion is a no-op there, probed
-      if (frameM.exists(offsetZeroOutsideFrame)) return rewriteFrameExclude(dropped)
+      if (frameM.exists(offsetZeroOutsideFrame)) return dropped
       fn match {
         case "count" =>
           if (args == "*") s"(count(*) OVER ($spec) - 1)"
@@ -504,7 +503,7 @@ object GraftSqlParser {
         case "RANGE" =>
           // peers sit at value-offset 0: outside a both-PRECEDING /
           // both-FOLLOWING RANGE frame the exclusion is a no-op
-          if (offsetZeroOutsideFrame(fm)) return rewriteFrameExclude(dropped)
+          if (offsetZeroOutsideFrame(fm)) return dropped
           true
         case "ROWS" => // only unbounded-both contains the peer group
           start == "UNBOUNDED PRECEDING" && end == "UNBOUNDED FOLLOWING"
@@ -535,24 +534,47 @@ object GraftSqlParser {
         case other => frameExcludeFail(s"aggregate '$other'")
       }
     }
-    rewriteFrameExclude(sql.substring(0, fnStart) + replacement + sql.substring(close + 1))
+    Splice(fnStart, close + 1, replacement)
   }
 
-  private val DateDiffFnRe = raw"(?i)(?<![\w.])(date_diff|datediff)\s*\(\s*'".r
-
-  /** DuckDB's `date_diff('part', a, b)` carries the datepart as a
-    * QUOTED string — Spark's PARSER special-cases these names and
-    * demands an unquoted unit keyword, so the call never reaches the
-    * function registry. Rename quoted-part calls to the registered
-    * `graft_date_diff` (DuckDB's boundary-crossing semantics); Spark's
-    * own unquoted forms (`date_diff(DAY, a, b)`) pass through native.
+  /** Call heads swapped for a registered native, by lower-cased head.
+    * `date_diff('part', a, b)` / `datediff('part', …)`: DuckDB carries
+    * the datepart as a QUOTED string, and Spark's PARSER special-cases
+    * these names and demands an unquoted unit keyword, so the call
+    * never reaches the function registry; the quoted-part calls go to
+    * `graft_date_diff` (DuckDB's boundary-crossing semantics) while
+    * Spark's own unquoted forms (`date_diff(DAY, a, b)`) pass through.
+    * `regexp_replace`: DuckDB replaces the FIRST match only unless the
+    * options string carries 'g' — Spark's builtin always replaces all
+    * (and its 4th arg is a position int, not options) — so EVERY call
+    * goes to `duck_regexp_replace`
+    * ([[graft.functions.expressions.DuckRegexpReplace]]).
+    * `EXTRACT(epoch FROM x)`: Spark's parser rejects the field
+    * (INVALID_EXTRACT_FIELD) before any registry lookup; the head
+    * becomes the registered `epoch(` (DOUBLE seconds, DuckDB's type),
+    * operand and closing paren left in place. `log(x)`: DuckDB's 1-arg
+    * log is LOG BASE 10 where Spark's is ln (probed: `log(100)` = 2.0
+    * vs 4.6); `duck_log` takes 1 arg → log10, 2 args → log(base, x),
+    * which the engines already agree on. Renames, not registry
+    * overrides: Spark 4's Scala `functions` API resolves through the
+    * registry too, and internal operators (quality filters, DSIR,
+    * TF-IDF, Gumbel keys) want Spark's semantics.
     */
-  def rewriteDateDiffFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = DateDiffFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteDateDiffFn(sql.substring(0, m.start(1)) + "graft_date_diff" +
-      sql.substring(m.end(1)))
-  }
+  private val Renames = Map(
+    "date_diff" -> "graft_date_diff", "datediff" -> "graft_date_diff",
+    "regexp_replace" -> "duck_regexp_replace(", "extract" -> "epoch(",
+    "log" -> "duck_log(")
+
+  private val RenameRe = ("(?i)(?<![\\w.])(?:(date_diff|datediff)(?=\\s*\\(\\s*')|" +
+    "(regexp_replace|log)\\s*\\(|(EXTRACT)\\s*\\(\\s*EPOCH\\s+FROM\\b)").r
+
+  /** Every [[Renames]] head in one pass. A rename never creates a
+    * match for another, so one sweep over the mask suffices.
+    */
+  def rewriteRenames(sql: String): String =
+    applySplices(sql, RenameRe.findAllMatchIn(maskQuotes(sql)).map { m =>
+      (m.start, m.end, Renames((1 to 3).map(m.group).find(_ != null).get.toLowerCase))
+    }.toSeq)
 
   private val DotCallRe = raw"\.\s*([A-Za-z_]\w*)\s*\(".r
 
@@ -560,80 +582,28 @@ object GraftSqlParser {
     * (function chaining, probed: `('  a ').trim().len()` → 1). Claims a
     * dot followed by `ident(` whose base is a claimable primary — a
     * paren/bracket group, string literal, or (possibly qualified)
-    * identifier; leftmost-first rescan makes chains compose (the inner
-    * call becomes the next base). A qualified FUNCTION name
-    * (`schema.fn(x)`) is indistinguishable at text level and would be
-    * claimed as a dot-call — DuckDB has the same ambiguity and our
-    * dialect surface has no qualified function calls (macros register
-    * bare names); documented edge.
+    * identifier; chains compose because the scan resumes at the
+    * rewritten call, which becomes the next call's base. A qualified
+    * FUNCTION name (`schema.fn(x)`) is indistinguishable at text level
+    * and would be claimed as a dot-call — DuckDB has the same
+    * ambiguity and our dialect surface has no qualified function calls
+    * (macros register bare names); documented edge.
     */
-  def rewriteDotCall(sql: String): String = {
-    val masked = maskQuotes(sql)
-    DotCallRe.findAllMatchIn(masked).foreach { m =>
-      sliceBaseStart(masked, m.start).foreach { bs =>
-        // a bare-identifier base that is PART of the dotted name
-        // (x.y.fn()) claims the whole qualified chain via the base
-        // scan, so nothing special needed; but skip when the "base"
-        // IS a keyword-ish token that can't be an expression head
-        // (e.g. `OVER (...)`, handled by requiring the char before
-        // '(' to be the match's ident, which it is by construction)
-        val base = sql.substring(bs, m.start).trim
-        if (base.nonEmpty) {
-          val fn = m.group(1)
-          // find the call's matching close paren
-          var d = 1
-          var j = m.end
-          while (j < masked.length && d > 0) {
-            masked.charAt(j) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ =>
-            }
-            if (d > 0) j += 1
-          }
-          if (d == 0) {
-            val args = sql.substring(m.end, j).trim
-            val call =
-              if (args.isEmpty) s"$fn($base)" else s"$fn($base, $args)"
-            return rewriteDotCall(sql.substring(0, bs) + call + sql.substring(j + 1))
-          }
-        }
-      }
+  def rewriteDotCall(sql: String): String =
+    rewriteEach(sql, DotCallRe) { (m, sql, masked) =>
+      // the base is whatever primary chain ends at the dot (a qualified
+      // name x.y.fn() claims its whole chain), the call runs to its
+      // matching close paren
+      (for {
+        bs <- sliceBaseStart(masked, m.start)
+        base = sql.substring(bs, m.start).trim if base.nonEmpty
+        close <- closeOf(masked, m.end)
+      } yield {
+        val fn = m.group(1)
+        val args = sql.substring(m.end, close - 1).trim
+        Splice(bs, close, if (args.isEmpty) s"$fn($base)" else s"$fn($base, $args)")
+      }).getOrElse(Skip)
     }
-    sql
-  }
-
-  private val RegexpReplaceFnRe = raw"(?i)(?<![\w.])regexp_replace\s*\(".r
-
-  /** DuckDB's regexp_replace replaces the FIRST match only unless the
-    * options string carries 'g' — Spark's builtin always replaces all
-    * (and its 4th arg is a position int, not options), a silent-wrong
-    * divergence for any multi-match input. Rename EVERY call in the
-    * dialect surface to the registered `duck_regexp_replace` native
-    * ([[graft.functions.expressions.DuckRegexpReplace]]). A rename,
-    * not a registry override: Spark 4's Scala `functions` API resolves
-    * through the registry too, so overriding the name would change
-    * semantics under every internal quality operator.
-    */
-  def rewriteRegexpReplaceFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = RegexpReplaceFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteRegexpReplaceFn(sql.substring(0, m.start) + "duck_regexp_replace(" +
-      sql.substring(m.end))
-  }
-
-  private val ExtractEpochRe = raw"(?i)(?<![\w.])EXTRACT\s*\(\s*EPOCH\s+FROM\b".r
-
-  /** `EXTRACT(epoch FROM x)` — Spark's parser rejects the field
-    * (INVALID_EXTRACT_FIELD) before any registry lookup; rewrite the
-    * head to the registered `epoch(` (DOUBLE seconds, DuckDB's type),
-    * leaving the operand and closing paren in place.
-    */
-  def rewriteExtractEpoch(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = ExtractEpochRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteExtractEpoch(sql.substring(0, m.start) + "epoch(" + sql.substring(m.end))
-  }
 
   private val IgnoreNullsInsideRe = raw"(?is)\b(IGNORE|RESPECT)\s+NULLS\s*\)".r
 
@@ -644,22 +614,17 @@ object GraftSqlParser {
     * a non-window position is left alone (Spark fails loudly there,
     * same as DuckDB outside window functions).
     */
-  def rewriteIgnoreNulls(sql: String): String = {
-    val masked = maskQuotes(sql)
-    IgnoreNullsInsideRe.findAllMatchIn(masked).foreach { m =>
-      val close = m.end - 1 // position of ')'
-      var a = close + 1
+  def rewriteIgnoreNulls(sql: String): String =
+    rewriteEach(sql, IgnoreNullsInsideRe) { (m, sql, masked) =>
+      var a = m.end // just past the ')'
       while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
       if (a < masked.length && masked.charAt(a).isLetter &&
         wordStartingAt(masked, a).equalsIgnoreCase("OVER")) {
         val modifier = sql.substring(m.start(1), m.end(1)).toUpperCase + " NULLS"
-        val rewritten = sql.substring(0, m.start).stripSuffix(" ") +
-          ") " + modifier + " " + sql.substring(m.end)
-        return rewriteIgnoreNulls(rewritten)
-      }
+        val start = if (m.start > 0 && sql.charAt(m.start - 1) == ' ') m.start - 1 else m.start
+        Splice(start, m.end, s") $modifier ")
+      } else Skip
     }
-    sql
-  }
 
   private val FormatFnRe = raw"(?i)(?<![\w.])format\s*\(".r
 
@@ -685,10 +650,10 @@ object GraftSqlParser {
     * cast ('1e+16' vs '1.0E16'). Dynamic `{:{}}` width and computed
     * format strings still fail with guidance to printf.
     */
-  def rewriteFormatFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = FormatFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val close = closeOf(masked, m.end).getOrElse(return sql)
+  def rewriteFormatFn(sql: String): String = rewriteEach(sql, FormatFnRe)(formatCall)
+
+  private def formatCall(m: Regex.Match, sql: String, masked: String): Step = {
+    val close = closeOf(masked, m.end).getOrElse(return Stop)
     val inner = sql.substring(m.end, close - 1)
     val innerMasked = masked.substring(m.end, close - 1)
     val args = splitTopLevel(inner, innerMasked).map(_.trim)
@@ -737,7 +702,7 @@ object GraftSqlParser {
     val replacement =
       if (parts.result().isEmpty) "''"
       else s"concat(${parts.result().mkString(", ")})"
-    rewriteFormatFn(sql.substring(0, m.start) + replacement + sql.substring(close))
+    Splice(m.start, close, replacement)
   }
 
   private val PrintfFnRe = raw"(?i)(?<![\w.])printf\s*\(".r
@@ -770,10 +735,10 @@ object GraftSqlParser {
     * raises DuckDB's own "cannot switch from manual to automatic
     * argument indexing".
     */
-  def rewritePrintfFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = PrintfFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val close = closeOf(masked, m.end).getOrElse(return sql)
+  def rewritePrintfFn(sql: String): String = rewriteEach(sql, PrintfFnRe)(printfCall)
+
+  private def printfCall(m: Regex.Match, sql: String, masked: String): Step = {
+    val close = closeOf(masked, m.end).getOrElse(return Stop)
     val inner = sql.substring(m.end, close - 1)
     val innerMasked = masked.substring(m.end, close - 1)
     val args = splitTopLevel(inner, innerMasked).map(_.trim)
@@ -909,7 +874,7 @@ object GraftSqlParser {
     val replacement =
       if (parts.result().isEmpty) "''"
       else s"concat(${parts.result().mkString(", ")})"
-    rewritePrintfFn(sql.substring(0, m.start) + replacement + sql.substring(close))
+    Splice(m.start, close, replacement)
   }
 
   private val AggOrderByFnRe =
@@ -939,115 +904,106 @@ object GraftSqlParser {
     * Ties are engine order in BOTH engines (hash aggregation) — gates
     * must order by total keys, same as any oracle.
     */
-  def rewriteAggOrderBy(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val hit = AggOrderByFnRe.findAllMatchIn(masked).flatMap { m =>
-      closeOf(masked, m.end).flatMap { close =>
-        val innerMasked = masked.substring(m.end, close - 1)
+  def rewriteAggOrderBy(sql: String): String =
+    rewriteEach(sql, AggOrderByFnRe) { (m, sql, masked) =>
+      closeOf(masked, m.end).map { close =>
         // depth-0 ORDER BY inside the call arguments
-        var d = 0; var at = -1; var k = 0
-        while (k < innerMasked.length && at < 0) {
-          val c = innerMasked.charAt(k)
-          if (c == '(') { d += 1; k += 1 }
-          else if (c == ')') { d -= 1; k += 1 }
-          else if (d == 0 && (c == 'O' || c == 'o') &&
-            (k == 0 || (!innerMasked.charAt(k - 1).isLetterOrDigit && innerMasked.charAt(k - 1) != '_')) &&
-            raw"(?is)^ORDER\s+BY\b".r.findFirstIn(innerMasked.substring(k)).isDefined) at = k
-          else k += 1
+        val at = depth0IndexWhere(masked, m.end, close - 1) { k =>
+          wordAt(masked, k) == "ORDER" && matchesAt(OrderByRe, masked, k)
         }
-        if (at < 0) None else Some((m, close, at))
-      }
-    }.toSeq.headOption
-    hit match {
-      case None => sql
-      case Some((m, close, obAt)) =>
-        val fn = sql.substring(m.start(1), m.end(1)).toLowerCase
-        val inner = sql.substring(m.end, close - 1)
-        val innerMasked = masked.substring(m.end, close - 1)
-        // Window (OVER) use is a TERMINAL disposition, not a parity
-        // gap: DuckDB 1.0.0 itself rejects the form ("Parser Error:
-        // ORDER BY is not implemented for window functions!", probed
-        // r17 for first/last/string_agg/array_agg with and without a
-        // window-spec ORDER BY) — both engines refuse loudly.
-        var a = close
-        while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
-        if (a < masked.length && masked.charAt(a).isLetter &&
-          wordStartingAt(masked, a).equalsIgnoreCase("OVER"))
-          aggOrderByFail(fn, "window (OVER) use — DuckDB rejects this too " +
-            "(its parser: ORDER BY is not implemented for window functions); " +
-            "order inside the window spec")
-        var argsPart = inner.substring(0, obAt).trim
-        val orderPart = inner.substring(obAt).replaceFirst(raw"(?is)^ORDER\s+BY\s*", "")
-        var distinct = false
-        raw"(?is)^DISTINCT\s+".r.findFirstMatchIn(argsPart).foreach { dm =>
-          distinct = true; argsPart = argsPart.substring(dm.end)
-        }
-        // per-key (expr, desc, nullsFirst) with DuckDB's NULLS LAST default
-        val keys = splitTopLevel(orderPart, maskQuotes(orderPart)).map { it0 =>
-          var e = it0.trim; var desc = false; var nullsFirst = false
-          raw"(?is)\s+NULLS\s+(FIRST|LAST)\s*$$".r.findFirstMatchIn(e).foreach { nm =>
-            nullsFirst = nm.group(1).equalsIgnoreCase("FIRST")
-            e = e.substring(0, nm.start)
-          }
-          raw"(?is)\s+(ASC|DESC)\s*$$".r.findFirstMatchIn(e).foreach { am =>
-            desc = am.group(1).equalsIgnoreCase("DESC")
-            e = e.substring(0, am.start)
-          }
-          if (e.trim.isEmpty) aggOrderByFail(fn, "empty ORDER BY key")
-          (e.trim, desc, nullsFirst)
-        }
-        def sortedStruct(value: String, dist: Boolean = false,
-                         castStr: Boolean = false): String = {
-          val fields = keys.zipWithIndex.map { case ((e, _, _), i) =>
-            s"'__o${i + 1}', ($e)" }.mkString(", ")
-          val cmp = keys.zipWithIndex.map { case ((_, desc, nullsFirst), i) =>
-            val f = s"__o${i + 1}"
-            s"WHEN l.$f IS NULL AND r.$f IS NOT NULL THEN ${if (nullsFirst) -1 else 1} " +
-              s"WHEN l.$f IS NOT NULL AND r.$f IS NULL THEN ${if (nullsFirst) 1 else -1} " +
-              s"WHEN l.$f < r.$f THEN ${if (desc) 1 else -1} " +
-              s"WHEN l.$f > r.$f THEN ${if (desc) -1 else 1}"
-          }.mkString(" ")
-          val v = if (castStr) "CAST(s.__v AS STRING)" else "s.__v"
-          s"transform(array_sort(array_agg(${if (dist) "DISTINCT " else ""}" +
-            s"named_struct($fields, '__v', ($value)))" +
-            s", (l, r) -> CASE $cmp ELSE 0 END), s -> $v)"
-        }
-        val args = splitTopLevel(argsPart, maskQuotes(argsPart))
-        val nArgs = args.size
-        val replacement = fn match {
-          case "string_agg" | "group_concat" =>
-            if (distinct) {
-              // Spark's listagg DISTINCT demands order expr == input
-              // expr (pre-cast), which DuckDB's implicit string cast
-              // breaks — the sorted-struct path sidesteps it; DuckDB
-              // itself requires DISTINCT order keys to appear in the
-              // argument list, so distinct (keys, value) pairs are
-              // distinct values
-              if (nArgs > 2) aggOrderByFail(fn, s"expected ≤ 2 arguments, got $nArgs")
-              val sep = if (nArgs == 2) args(1).trim else "','"
-              s"array_join(${sortedStruct(args.head.trim, dist = true, castStr = true)}, $sep)"
-            } else {
-              val a = if (nArgs == 1) s"$argsPart, ','" else argsPart
-              s"listagg($a) WITHIN GROUP (ORDER BY $orderPart)"
-            }
-          case "array_agg" | "list" =>
-            if (distinct) aggOrderByFail(fn,
-              "DISTINCT with ORDER BY — dedup first (a subquery/GROUP BY)")
-            if (nArgs != 1) aggOrderByFail(fn, s"expected 1 argument, got $nArgs")
-            sortedStruct(argsPart)
-          case _ => // first | last
-            if (distinct) aggOrderByFail(fn, "DISTINCT with ORDER BY")
-            if (nArgs != 1) aggOrderByFail(fn, s"expected 1 argument, got $nArgs")
-            val isFirst = fn == "first"
-            if (keys.size == 1 && !keys.head._3) {
-              val (k0, desc, _) = keys.head
-              val pick = if (isFirst != desc) "min_by" else "max_by"
-              s"$pick(($argsPart), ($k0))"
-            } else
-              s"element_at(${sortedStruct(argsPart)}, ${if (isFirst) 1 else -1})"
-        }
-        rewriteAggOrderBy(sql.substring(0, m.start) + replacement + sql.substring(close))
+        if (at < 0) Skip else aggOrderBy(m, close, at - m.end, sql, masked)
+      }.getOrElse(Skip)
     }
+
+  private val OrderByRe = raw"(?is)ORDER\s+BY\b".r
+
+  private def aggOrderBy(m: Regex.Match, close: Int, obAt: Int,
+      sql: String, masked: String): Step = {
+    val fn = sql.substring(m.start(1), m.end(1)).toLowerCase
+    val inner = sql.substring(m.end, close - 1)
+    // Window (OVER) use is a TERMINAL disposition, not a parity
+    // gap: DuckDB 1.0.0 itself rejects the form ("Parser Error:
+    // ORDER BY is not implemented for window functions!", probed
+    // r17 for first/last/string_agg/array_agg with and without a
+    // window-spec ORDER BY) — both engines refuse loudly.
+    var a = close
+    while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
+    if (a < masked.length && masked.charAt(a).isLetter &&
+      wordStartingAt(masked, a).equalsIgnoreCase("OVER"))
+      aggOrderByFail(fn, "window (OVER) use — DuckDB rejects this too " +
+        "(its parser: ORDER BY is not implemented for window functions); " +
+        "order inside the window spec")
+    var argsPart = inner.substring(0, obAt).trim
+    val orderPart = inner.substring(obAt).replaceFirst(raw"(?is)^ORDER\s+BY\s*", "")
+    var distinct = false
+    raw"(?is)^DISTINCT\s+".r.findFirstMatchIn(argsPart).foreach { dm =>
+      distinct = true; argsPart = argsPart.substring(dm.end)
+    }
+    // per-key (expr, desc, nullsFirst) with DuckDB's NULLS LAST default
+    val keys = splitTopLevel(orderPart, maskQuotes(orderPart)).map { it0 =>
+      var e = it0.trim; var desc = false; var nullsFirst = false
+      raw"(?is)\s+NULLS\s+(FIRST|LAST)\s*$$".r.findFirstMatchIn(e).foreach { nm =>
+        nullsFirst = nm.group(1).equalsIgnoreCase("FIRST")
+        e = e.substring(0, nm.start)
+      }
+      raw"(?is)\s+(ASC|DESC)\s*$$".r.findFirstMatchIn(e).foreach { am =>
+        desc = am.group(1).equalsIgnoreCase("DESC")
+        e = e.substring(0, am.start)
+      }
+      if (e.trim.isEmpty) aggOrderByFail(fn, "empty ORDER BY key")
+      (e.trim, desc, nullsFirst)
+    }
+    def sortedStruct(value: String, dist: Boolean = false,
+                     castStr: Boolean = false): String = {
+      val fields = keys.zipWithIndex.map { case ((e, _, _), i) =>
+        s"'__o${i + 1}', ($e)" }.mkString(", ")
+      val cmp = keys.zipWithIndex.map { case ((_, desc, nullsFirst), i) =>
+        val f = s"__o${i + 1}"
+        s"WHEN l.$f IS NULL AND r.$f IS NOT NULL THEN ${if (nullsFirst) -1 else 1} " +
+          s"WHEN l.$f IS NOT NULL AND r.$f IS NULL THEN ${if (nullsFirst) 1 else -1} " +
+          s"WHEN l.$f < r.$f THEN ${if (desc) 1 else -1} " +
+          s"WHEN l.$f > r.$f THEN ${if (desc) -1 else 1}"
+      }.mkString(" ")
+      val v = if (castStr) "CAST(s.__v AS STRING)" else "s.__v"
+      s"transform(array_sort(array_agg(${if (dist) "DISTINCT " else ""}" +
+        s"named_struct($fields, '__v', ($value)))" +
+        s", (l, r) -> CASE $cmp ELSE 0 END), s -> $v)"
+    }
+    val args = splitTopLevel(argsPart, maskQuotes(argsPart))
+    val nArgs = args.size
+    val replacement = fn match {
+      case "string_agg" | "group_concat" =>
+        if (distinct) {
+          // Spark's listagg DISTINCT demands order expr == input
+          // expr (pre-cast), which DuckDB's implicit string cast
+          // breaks — the sorted-struct path sidesteps it; DuckDB
+          // itself requires DISTINCT order keys to appear in the
+          // argument list, so distinct (keys, value) pairs are
+          // distinct values
+          if (nArgs > 2) aggOrderByFail(fn, s"expected ≤ 2 arguments, got $nArgs")
+          val sep = if (nArgs == 2) args(1).trim else "','"
+          s"array_join(${sortedStruct(args.head.trim, dist = true, castStr = true)}, $sep)"
+        } else {
+          val a = if (nArgs == 1) s"$argsPart, ','" else argsPart
+          s"listagg($a) WITHIN GROUP (ORDER BY $orderPart)"
+        }
+      case "array_agg" | "list" =>
+        if (distinct) aggOrderByFail(fn,
+          "DISTINCT with ORDER BY — dedup first (a subquery/GROUP BY)")
+        if (nArgs != 1) aggOrderByFail(fn, s"expected 1 argument, got $nArgs")
+        sortedStruct(argsPart)
+      case _ => // first | last
+        if (distinct) aggOrderByFail(fn, "DISTINCT with ORDER BY")
+        if (nArgs != 1) aggOrderByFail(fn, s"expected 1 argument, got $nArgs")
+        val isFirst = fn == "first"
+        if (keys.size == 1 && !keys.head._3) {
+          val (k0, desc, _) = keys.head
+          val pick = if (isFirst != desc) "min_by" else "max_by"
+          s"$pick(($argsPart), ($k0))"
+        } else
+          s"element_at(${sortedStruct(argsPart)}, ${if (isFirst) 1 else -1})"
+    }
+    Splice(m.start, close, replacement)
   }
 
   /** Words that can legally precede a LITERAL-position bracket — i.e.
@@ -1076,7 +1032,7 @@ object GraftSqlParser {
     * (also what keeps Spark's ANSI `element_at` from throwing on a
     * miss); subscripts on anything OTHER than an adjacent map literal
     * keep Spark's native scalar semantics, the documented divergence
-    * for plain `l[i]`. Values rewrite recursively via the rescan, so
+    * for plain `l[i]`. The scan resumes inside each replacement, so
     * nested structs/lists/maps/comprehensions compose. Braces inside a
     * `read_*` call's argument list are NEVER claimed — `columns = {'k':
     * 'TYPE'}` belongs to [[rewriteReadFns]]' option grammar (which
@@ -1084,105 +1040,82 @@ object GraftSqlParser {
     * an identity on that text in any call order).
     */
   def rewriteStructLiteral(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val readSpans = ReadFnRe.findAllMatchIn(masked)
-      .flatMap(mm => closeOf(masked, mm.end).map(c => (mm.start, c))).toSeq
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '{' && !readSpans.exists(s => i > s._1 && i < s._2)) {
-        var p = i
-        while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
-        val isMap = p >= 3 && masked.substring(0, p).toUpperCase.endsWith("MAP")
-        // a standalone MAP word (not an identifier merely ENDING in
-        // "map", e.g. `heatmap {…}` — that shape stays a guided error)
-        val isMapWord = isMap && (p == 3 || {
-          val ch = masked.charAt(p - 4)
-          !ch.isLetterOrDigit && ch != '_' && ch != '.' && ch != '"' && ch != '`'
-        })
-        var j = i + 1
-        var depth = 1
-        while (j < masked.length && depth > 0) {
-          masked.charAt(j) match {
-            case '{' => depth += 1
-            case '}' => depth -= 1
-            case _ =>
-          }
-          if (depth > 0) j += 1
-        }
-        if (depth == 0 && !isMap) {
-          val bodyRaw = sql.substring(i + 1, j)
-          val bodyMasked = masked.substring(i + 1, j)
-          val items = splitReadArgs(bodyRaw, bodyMasked)
-          val ItemRe = raw"(?s)^\s*'((?:[^']|'')*)'\s*:\s*(\S.*)$$".r
-          val pairs = items.map { it =>
-            ItemRe.findFirstMatchIn(it).map(im =>
-              (im.group(1).replace("''", "'"), im.group(2).trim))
-          }
-          if (items.nonEmpty && pairs.forall(_.isDefined)) {
-            val args = pairs.flatten
-              .map { case (k, v) => s"'${k.replace("'", "''")}', $v" }
-              .mkString(", ")
-            return rewriteStructLiteral(sql.substring(0, i) +
-              s"named_struct($args)" + sql.substring(j + 1))
-          }
-        }
-        if (depth == 0 && isMapWord) {
-          val bodyRaw = sql.substring(i + 1, j)
-          val bodyMasked = masked.substring(i + 1, j)
-          val mapExprOpt: Option[String] =
-            if (bodyRaw.trim.isEmpty) Some("map()")
-            else splitMapPairs(bodyRaw, bodyMasked).map { prs =>
-              "map(" + prs.map { case (k, v) => s"$k, $v" }.mkString(", ") + ")"
-            }
-          mapExprOpt match {
-            case Some(mapExpr) =>
-              val wordStart = p - 3
-              // immediate index subscript (no top-level slice colon)?
-              var q = j + 1
-              while (q < masked.length && masked.charAt(q).isWhitespace) q += 1
-              val sub: Option[(Int, Int)] =
-                if (q < masked.length && masked.charAt(q) == '[') {
-                  var m = q + 1
-                  var dd = 0
-                  var colon = false
-                  var close = -1
-                  while (m < masked.length && close < 0) {
-                    masked.charAt(m) match {
-                      case '[' | '(' | '{' => dd += 1
-                      case ']' if dd > 0 => dd -= 1
-                      case ')' | '}' => dd -= 1
-                      case ']' => close = m
-                      case ':' if dd == 0 =>
-                        val isCast =
-                          (m + 1 < masked.length && masked.charAt(m + 1) == ':') ||
-                            masked.charAt(m - 1) == ':'
-                        if (!isCast) colon = true
-                      case _ =>
-                    }
-                    m += 1
-                  }
-                  if (close >= 0 && !colon &&
-                    sql.substring(q + 1, close).trim.nonEmpty) Some((q, close))
-                  else None
-                } else None
-              val (endPos, newText) = sub match {
-                case Some((open, close)) =>
-                  val key = sql.substring(open + 1, close).trim
-                  (close, s"(CASE WHEN map_contains_key($mapExpr, $key) " +
-                    s"THEN array(element_at($mapExpr, $key)) ELSE array() END)")
-                case None => (j, mapExpr)
-              }
-              return rewriteStructLiteral(sql.substring(0, wordStart) +
-                newText + sql.substring(endPos + 1))
-            case None => // malformed body → guided error
-          }
-        }
-        if (depth == 0) i = j // skip the unclaimed group
-      }
-      i += 1
+    val hasReadFn = ReadFnRe.findFirstIn(maskQuotes(sql)).isDefined
+    rewriteEach(sql, BraceRe) { (m, sql, masked) =>
+      val i = m.start
+      val inReadFn = hasReadFn && ReadFnRe.findAllMatchIn(masked)
+        .exists(mm => mm.start < i && closeOf(masked, mm.end).exists(_ > i))
+      if (inReadFn) Skip
+      else closeOf(masked, i + 1, '{', '}')
+        .map(c => braceLiteral(i, c - 1, sql, masked)).getOrElse(Skip)
     }
-    sql
   }
+
+  private val BraceRe = raw"\{".r
+  private val StructItemRe = raw"(?s)^\s*'((?:[^']|'')*)'\s*:\s*(\S.*)$$".r
+
+  /** The struct or MAP literal whose braces sit at `i` and `j`; an
+    * unclaimed group is skipped whole.
+    */
+  private def braceLiteral(i: Int, j: Int, sql: String, masked: String): Step = {
+    val p = wsBefore(masked, i)
+    val isMap = p >= 3 && masked.regionMatches(true, p - 3, "MAP", 0, 3)
+    // a standalone MAP word (not an identifier merely ENDING in
+    // "map", e.g. `heatmap {…}` — that shape stays a guided error)
+    val isMapWord = isMap && (p == 3 || {
+      val ch = masked.charAt(p - 4)
+      !ch.isLetterOrDigit && ch != '_' && ch != '.' && ch != '"' && ch != '`'
+    })
+    val bodyRaw = sql.substring(i + 1, j)
+    val bodyMasked = masked.substring(i + 1, j)
+    if (!isMap) {
+      val items = splitReadArgs(bodyRaw, bodyMasked)
+      val pairs = items.map { it =>
+        StructItemRe.findFirstMatchIn(it).map(im =>
+          (im.group(1).replace("''", "'"), im.group(2).trim))
+      }
+      if (items.nonEmpty && pairs.forall(_.isDefined)) {
+        val args = pairs.flatten
+          .map { case (k, v) => s"'${k.replace("'", "''")}', $v" }
+          .mkString(", ")
+        return Splice(i, j + 1, s"named_struct($args)")
+      }
+    }
+    if (isMapWord) {
+      val mapExprOpt: Option[String] =
+        if (bodyRaw.trim.isEmpty) Some("map()")
+        else splitMapPairs(bodyRaw, bodyMasked).map { prs =>
+          "map(" + prs.map { case (k, v) => s"$k, $v" }.mkString(", ") + ")"
+        }
+      mapExprOpt.foreach { mapExpr =>
+        val wordStart = p - 3
+        // immediate index subscript (no top-level slice colon)?
+        var q = j + 1
+        while (q < masked.length && masked.charAt(q).isWhitespace) q += 1
+        val sub: Option[Int] =
+          if (q < masked.length && masked.charAt(q) == '[')
+            closeOf(masked, q + 1, '[', ']').map(_ - 1).filter { close =>
+              depth0IndexWhere(masked, q + 1, close, "()[]{}") { k =>
+                masked.charAt(k) == ':' && !castColon(masked, k)
+              } < 0 && sql.substring(q + 1, close).trim.nonEmpty
+            }
+          else None
+        return sub match {
+          case Some(close) =>
+            val key = sql.substring(q + 1, close).trim
+            Splice(wordStart, close + 1, s"(CASE WHEN map_contains_key($mapExpr, $key) " +
+              s"THEN array(element_at($mapExpr, $key)) ELSE array() END)")
+          case None => Splice(wordStart, j + 1, mapExpr)
+        }
+      } // malformed body → guided error
+    }
+    SkipTo(j + 1)
+  }
+
+  /** Is the ':' at `k` half of a `::` cast? */
+  private def castColon(masked: String, k: Int): Boolean =
+    (k + 1 < masked.length && masked.charAt(k + 1) == ':') ||
+      (k > 0 && masked.charAt(k - 1) == ':')
 
   /** Split a MAP-literal body into (key, value) expression pairs: items
     * at top-level commas, each item at its FIRST top-level `:` (a `::`
@@ -1192,35 +1125,9 @@ object GraftSqlParser {
     * 'x'}`), so no quoting is imposed here.
     */
   private def splitMapPairs(raw: String, masked: String): Option[Seq[(String, String)]] = {
-    val spans = Seq.newBuilder[(Int, Int)]
-    var d = 0
-    var last = 0
-    var k = 0
-    while (k < masked.length) {
-      masked.charAt(k) match {
-        case '(' | '{' | '[' => d += 1
-        case ')' | '}' | ']' => d -= 1
-        case ',' if d == 0 => spans += ((last, k)); last = k + 1
-        case _ =>
-      }
-      k += 1
-    }
-    spans += ((last, masked.length))
-    val pairs = spans.result().map { case (s, e) =>
-      var c = -1
-      var dd = 0
-      var m = s
-      while (m < e) {
-        masked.charAt(m) match {
-          case '(' | '{' | '[' => dd += 1
-          case ')' | '}' | ']' => dd -= 1
-          case ':' if dd == 0 && c < 0 =>
-            val isCast = (m + 1 < e && masked.charAt(m + 1) == ':') ||
-              (m > s && masked.charAt(m - 1) == ':')
-            if (!isCast) c = m
-          case _ =>
-        }
-        m += 1
+    val pairs = topLevelSpans(masked, "()[]{}").map { case (s, e) =>
+      val c = depth0IndexWhere(masked, s, e, "()[]{}") { k =>
+        masked.charAt(k) == ':' && !castColon(masked, k)
       }
       if (c < 0) None
       else {
@@ -1240,58 +1147,36 @@ object GraftSqlParser {
     * keep [[rewriteSlice]]'s treatment), and only when its body carries
     * no top-level ':' (a struct-ish shape with no faithful rewrite) and
     * no FOR (comprehensions rewrite FIRST in the chain). Empty `[]`
-    * becomes `array()`; nesting handles by rescan.
+    * becomes `array()`; nested lists are reached when the scan resumes
+    * inside the replacement.
     */
-  def rewriteListLiteral(sql: String): String = {
-    val masked = maskQuotes(sql)
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        // literal position?
-        var p = i
-        while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
-        val literalPos =
-          if (p == 0) true
-          else {
-            val c = masked.charAt(p - 1)
-            if (c == ')' || c == ']' || c == '\'' || c == '`' || c == '.') false
-            else if (c.isLetterOrDigit || c == '_' || c == '$') {
-              var w = p - 1
-              while (w > 0 && { val x = masked.charAt(w - 1)
-                x.isLetterOrDigit || x == '_' || x == '$' }) w -= 1
-              PreLiteralKeywords.contains(masked.substring(w, p).toUpperCase)
-            } else true // operator / '(' / ',' / etc.
-          }
-        if (literalPos) {
-          // matching ']' by bracket depth
-          var j = i + 1
-          var depth = 1
-          while (j < masked.length && depth > 0) {
-            masked.charAt(j) match {
-              case '[' => depth += 1
-              case ']' => depth -= 1
-              case _ =>
-            }
-            if (depth > 0) j += 1
-          }
-          if (depth == 0) {
-            val body = masked.substring(i + 1, j)
-            def topLevelHas(re: scala.util.matching.Regex): Boolean =
-              re.findAllMatchIn(body).exists { m =>
-                val pre = body.substring(0, m.start)
-                pre.count(_ == '(') == pre.count(_ == ')') &&
-                  pre.count(_ == '[') == pre.count(_ == ']')
-              }
-            if (!topLevelHas(raw":".r) && !topLevelHas(raw"(?i)\bFOR\b".r))
-              return rewriteListLiteral(sql.substring(0, i) +
-                "array(" + sql.substring(i + 1, j) + ")" + sql.substring(j + 1))
-          }
+  def rewriteListLiteral(sql: String): String =
+    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+      val i = m.start
+      // literal position?
+      val p = wsBefore(masked, i)
+      val literalPos =
+        if (p == 0) true
+        else {
+          val c = masked.charAt(p - 1)
+          if (c == ')' || c == ']' || c == '\'' || c == '`' || c == '.') false
+          else if (c.isLetterOrDigit || c == '_' || c == '$') {
+            var w = p - 1
+            while (w > 0 && { val x = masked.charAt(w - 1)
+              x.isLetterOrDigit || x == '_' || x == '$' }) w -= 1
+            PreLiteralKeywords.contains(masked.substring(w, p).toUpperCase)
+          } else true // operator / '(' / ',' / etc.
         }
-      }
-      i += 1
+      if (!literalPos) Skip
+      else closeOf(masked, i + 1, '[', ']').map(_ - 1).filter { j =>
+        depth0IndexWhere(masked, i + 1, j, "()[]") { k =>
+          masked.charAt(k) == ':' || wordAt(masked, k) == "FOR"
+        } < 0
+      }.map(j => Splice(i, j + 1, "array(" + sql.substring(i + 1, j) + ")"))
+        .getOrElse(Skip)
     }
-    sql
-  }
+
+  private val BracketRe = raw"\[".r
 
   /** End (exclusive) of the primary expression starting at/after `from`
     * in masked text: optional unary +/-, then a literal / (possibly
@@ -1337,19 +1222,7 @@ object GraftSqlParser {
     while (scanning && i < masked.length) {
       masked.charAt(i) match {
         case '(' => i = closeOf(masked, i + 1).getOrElse(return None)
-        case '[' =>
-          var d = 1
-          var b = i + 1
-          while (b < masked.length && d > 0) {
-            masked.charAt(b) match {
-              case '[' => d += 1
-              case ']' => d -= 1
-              case _ =>
-            }
-            b += 1
-          }
-          if (d > 0) return None
-          i = b
+        case '[' => i = closeOf(masked, i + 1, '[', ']').getOrElse(return None)
         case '.' if i + 1 < masked.length && {
           val n = masked.charAt(i + 1)
           n.isLetter || n == '_' || n == '`'
@@ -1373,11 +1246,9 @@ object GraftSqlParser {
     */
   private def primaryStartWithSign(masked: String, pos: Int): Option[Int] = {
     val j = sliceBaseStart(masked, pos).getOrElse(return None)
-    var k = j
-    while (k > 0 && masked.charAt(k - 1).isWhitespace) k -= 1
+    val k = wsBefore(masked, j)
     if (k > 0 && (masked.charAt(k - 1) == '-' || masked.charAt(k - 1) == '+')) {
-      var p = k - 1
-      while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
+      val p = wsBefore(masked, k - 1)
       val unary = p == 0 || {
         val prev = masked.charAt(p - 1)
         "(,*/%+-<>=|&".contains(prev) || {
@@ -1465,21 +1336,12 @@ object GraftSqlParser {
     // `::TYPE` spellings: BLOB family → BINARY, VARCHAR family → STRING
     // (r15; the parameterized VARCHAR(n) form is Spark's own and stays)
     val re = raw"(?i)::\s*(BLOB|BYTEA|VARBINARY|VARCHAR|BPCHAR)\b(?!\s*\()".r
-    val ms = re.findAllMatchIn(masked).toSeq
-    val step1 = if (ms.isEmpty) sql else {
-      val sb = new StringBuilder
-      var pos = 0
-      ms.foreach { m =>
-        val to = m.group(1).toUpperCase match {
-          case "VARCHAR" | "BPCHAR" => "STRING"
-          case _ => "BINARY"
-        }
-        sb.append(sql.substring(pos, m.start)).append("::").append(to)
-        pos = m.end
-      }
-      sb.append(sql.substring(pos)).toString
-    }
-    rewriteCastTypeNames(step1)
+    rewriteCastTypeNames(applySplices(sql, re.findAllMatchIn(masked).map { m =>
+      (m.start, m.end, m.group(1).toUpperCase match {
+        case "VARCHAR" | "BPCHAR" => "::STRING"
+        case _ => "::BINARY"
+      })
+    }.toSeq))
   }
 
   /** `CAST(expr AS <ducktype>)` with a DuckDB-only type name (r15):
@@ -1504,34 +1366,29 @@ object GraftSqlParser {
     "INT1", "INT2", "INT4", "INT8", "SIGNED", "LOGICAL",
     "FLOAT4", "FLOAT8", "DATETIME")
 
+  private val CastRe = raw"(?i)\b(?:TRY_)?CAST\s*\(".r
+
+  /** Index of the last depth-0 `AS` word in masked[from, until) that
+    * has a character after it — a CAST body's type separator — or -1.
+    */
+  private def lastTopLevelAs(masked: String, from: Int, until: Int): Int = {
+    var asAt = -1
+    depth0IndexWhere(masked, from, until, "()[]") { i =>
+      if (i + 2 < until && wordAt(masked, i) == "AS") asAt = i
+      false
+    }
+    asAt
+  }
+
   private def rewriteCastTypeNames(sql: String): String = {
     val masked = maskQuotes(sql)
-    val CastRe = raw"(?i)\b(?:TRY_)?CAST\s*\(".r
     // (typeStart, closeParen, replacement)
     val repls = Seq.newBuilder[(Int, Int, String)]
     CastRe.findAllMatchIn(masked).foreach { m =>
       closeOf(masked, m.end).foreach { close =>
-        val bodyMasked = masked.substring(m.end, close - 1)
-        // last top-level ' AS ' of this cast's body
-        var depth = 0
-        var asPos = -1
-        var i = 0
-        while (i < bodyMasked.length) {
-          bodyMasked.charAt(i) match {
-            case '(' | '[' => depth += 1
-            case ')' | ']' => depth -= 1
-            case c if depth == 0 && (c == 'A' || c == 'a') &&
-              i + 2 < bodyMasked.length &&
-              (i == 0 || (!bodyMasked.charAt(i - 1).isLetterOrDigit && bodyMasked.charAt(i - 1) != '_')) &&
-              bodyMasked.regionMatches(true, i, "AS", 0, 2) &&
-              !bodyMasked.charAt(i + 2).isLetterOrDigit && bodyMasked.charAt(i + 2) != '_' =>
-              asPos = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (asPos >= 0) {
-          val typeStart = m.end + asPos + 2
+        val asAt = lastTopLevelAs(masked, m.end, close - 1)
+        if (asAt >= 0) {
+          val typeStart = asAt + 2
           val typeText = sql.substring(typeStart, close - 1).trim
           if (duckOnlyCastTypes.contains(typeText.toUpperCase)) {
             val mapped = try Some(duckTypeToSpark(typeText))
@@ -1543,11 +1400,7 @@ object GraftSqlParser {
         }
       }
     }
-    val rs = repls.result()
-    if (rs.isEmpty) sql
-    else rs.sortBy(-_._1).foldLeft(sql) { case (acc, (a, b, t)) =>
-      acc.substring(0, a) + t + acc.substring(b)
-    }
+    applySplices(sql, repls.result())
   }
 
   /** Integral-cast target type names (Spark's and DuckDB's spellings —
@@ -1570,33 +1423,15 @@ object GraftSqlParser {
     */
   def rewriteIntegralCastRound(sql: String): String = {
     val masked = maskQuotes(sql)
-    val CastRe = raw"(?i)\b(?:TRY_)?CAST\s*\(".r
     val inserts = Seq.newBuilder[(Int, String)]
     CastRe.findAllMatchIn(masked).foreach { m =>
       closeOf(masked, m.end).foreach { close =>
-        val bodyMasked = masked.substring(m.end, close - 1)
-        var depth = 0
-        var asPos = -1
-        var i = 0
-        while (i < bodyMasked.length) {
-          bodyMasked.charAt(i) match {
-            case '(' | '[' => depth += 1
-            case ')' | ']' => depth -= 1
-            case c if depth == 0 && (c == 'A' || c == 'a') &&
-              i + 2 < bodyMasked.length &&
-              (i == 0 || (!bodyMasked.charAt(i - 1).isLetterOrDigit && bodyMasked.charAt(i - 1) != '_')) &&
-              bodyMasked.regionMatches(true, i, "AS", 0, 2) &&
-              !bodyMasked.charAt(i + 2).isLetterOrDigit && bodyMasked.charAt(i + 2) != '_' =>
-              asPos = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (asPos >= 0) {
-          val typeText = sql.substring(m.end + asPos + 2, close - 1).trim
+        val asAt = lastTopLevelAs(masked, m.end, close - 1)
+        if (asAt >= 0) {
+          val typeText = sql.substring(asAt + 2, close - 1).trim
           // idempotency: an expr that is ALREADY exactly one
           // duck_iround(...) call (a prior pass's wrap) skips
-          val exprMasked = bodyMasked.substring(0, asPos)
+          val exprMasked = masked.substring(m.end, asAt)
           val alreadyWrapped =
             raw"(?is)^\s*duck_iround\s*\(".r.findFirstMatchIn(exprMasked) match {
               case Some(wm) =>
@@ -1606,18 +1441,13 @@ object GraftSqlParser {
             }
           if (integralCastTypes.contains(typeText.toUpperCase) && !alreadyWrapped) {
             inserts += ((m.end, "duck_iround("))
-            inserts += ((m.end + asPos, ") "))
+            inserts += ((asAt, ") "))
           }
         }
       }
     }
-    val ins = inserts.result()
-    val step1 =
-      if (ins.isEmpty) sql
-      else ins.sortBy(-_._1).foldLeft(sql) { case (acc, (p, t)) =>
-        acc.substring(0, p) + t + acc.substring(p)
-      }
-    rewriteIntegralDoubleColon(step1)
+    rewriteIntegralDoubleColon(
+      applySplices(sql, inserts.result().map { case (p, t) => (p, p, t) }))
   }
 
   /** The `expr::BIGINT` spelling of the same rounding divergence: wrap
@@ -1646,14 +1476,7 @@ object GraftSqlParser {
           if (masked.charAt(e) == ')' || masked.charAt(e) == ']') {
             val closer = masked.charAt(e)
             val opener = if (closer == ')') '(' else '['
-            var d = 1
-            var k = e - 1
-            while (k >= 0 && d > 0) {
-              val c = masked.charAt(k)
-              if (c == closer) d += 1 else if (c == opener) d -= 1
-              if (d > 0) k -= 1
-            }
-            if (d != 0) -1 else identStart(k - 1)
+            openOf(masked, e, opener, closer).map(k => identStart(k - 1)).getOrElse(-1)
           } else if (masked.charAt(e).isLetterOrDigit || masked.charAt(e) == '_')
             identStart(e)
           else -1
@@ -1668,11 +1491,7 @@ object GraftSqlParser {
         }
       }
     }
-    val ins = inserts.result()
-    if (ins.isEmpty) sql
-    else ins.sortBy(-_._1).foldLeft(sql) { case (acc, (p, t)) =>
-      acc.substring(0, p) + t + acc.substring(p)
-    }
+    applySplices(sql, inserts.result().map { case (p, t) => (p, p, t) })
   }
 
   private val JsonExtractFnRe =
@@ -1688,13 +1507,14 @@ object GraftSqlParser {
     * an integer (array index), and a LITERAL LIST of paths (a list of
     * per-path extractions). Non-literal paths stay unresolved (loud).
     */
-  def rewriteJsonExtractFns(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = JsonExtractFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val close = closeOf(masked, m.end).getOrElse(return sql)
+  def rewriteJsonExtractFns(sql: String): String =
+    rewriteEach(sql, JsonExtractFnRe)(jsonExtract)
+
+  private def jsonExtract(m: Regex.Match, sql: String, masked: String): Step = {
+    val close = closeOf(masked, m.end).getOrElse(return Stop)
     val argsRaw = sql.substring(m.end, close - 1)
     val args = splitReadArgs(argsRaw, masked.substring(m.end, close - 1))
-    if (args.length != 2) return sql
+    if (args.length != 2) return Stop
     val fn = m.group(1).toLowerCase
     val textual = fn == "json_extract_string" || fn == "json_extract_path_text"
     val base = args(0).trim
@@ -1744,121 +1564,100 @@ object GraftSqlParser {
         else Some(all.flatten.map(chain).mkString("array(", ", ", ")"))
       case None => pathSteps(pathArg).map(chain)
     }
-    replOpt match {
-      case Some(repl) =>
-        rewriteJsonExtractFns(sql.substring(0, m.start) + repl + sql.substring(close))
-      case None => sql
-    }
+    replOpt.map(Splice(m.start, close, _)).getOrElse(Stop)
   }
 
-  def rewriteJsonOps(sql: String): String = {
-    val masked = maskQuotes(sql)
+  def rewriteJsonOps(sql: String): String = rewriteEach(sql, ArrowRe)(jsonChain)
+
+  private val ArrowRe = raw"->>?".r
+
+  private def jsonChain(m: Regex.Match, sql: String, masked: String): Step = {
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"a ->> JSON chain couldn't be rewritten ($why) — use " +
           "get_json_object(col, '$.path') directly (Spark's JSON path form)")
-    val ArrowRe = raw"->>?".r
-    var searchFrom = 0
-    while (searchFrom < masked.length) {
-      val m = ArrowRe.findFirstMatchIn(masked.substring(searchFrom))
-        .getOrElse(return sql)
-      val first = searchFrom + m.start
-      // base primary ends just before the first arrow
-      var be = first
-      while (be > 0 && masked.charAt(be - 1).isWhitespace) be -= 1
-      val bs = primaryStartWithSign(masked, be)
-      // walk the whole chain: (arrow, arg)*
-      var pos = first
-      var ops = List.empty[(String, Int, Int)] // (op, argStart, argEnd)
-      var chaining = true
-      while (chaining) {
-        val op = if (masked.startsWith("->>", pos)) "->>" else "->"
-        val argStart = pos + op.length
-        primaryEnd(masked, argStart) match {
-          case Some(ae) =>
-            ops :+= ((op, argStart, ae))
-            var k = ae
-            while (k < masked.length && masked.charAt(k).isWhitespace) k += 1
-            if (k < masked.length - 1 && masked.charAt(k) == '-' &&
-              masked.charAt(k + 1) == '>') pos = k
-            else chaining = false
-          case None =>
-            // no parseable right operand (e.g. `x -> (expr)` lambda
-            // bodies DO parse — but `->` with nothing after is garbage)
-            chaining = false
-            if (ops.isEmpty) ops :+= ((op, argStart, argStart))
-        }
+    val first = m.start
+    // base primary ends just before the first arrow
+    val be = wsBefore(masked, first)
+    val bs = primaryStartWithSign(masked, be)
+    // walk the whole chain: (arrow, arg)*
+    var pos = first
+    var ops = List.empty[(String, Int, Int)] // (op, argStart, argEnd)
+    var chaining = true
+    while (chaining) {
+      val op = if (masked.startsWith("->>", pos)) "->>" else "->"
+      val argStart = pos + op.length
+      primaryEnd(masked, argStart) match {
+        case Some(ae) =>
+          ops :+= ((op, argStart, ae))
+          var k = ae
+          while (k < masked.length && masked.charAt(k).isWhitespace) k += 1
+          if (k < masked.length - 1 && masked.charAt(k) == '-' &&
+            masked.charAt(k + 1) == '>') pos = k
+          else chaining = false
+        case None =>
+          // no parseable right operand (e.g. `x -> (expr)` lambda
+          // bodies DO parse — but `->` with nothing after is garbage)
+          chaining = false
+          if (ops.isEmpty) ops :+= ((op, argStart, argStart))
       }
-      val hasShovel = ops.exists(_._1 == "->>")
-      // every chain argument a string literal / integer? (bare-`->`
-      // chains rewrite only then — a lambda body is an expression)
-      val argsLiteral = ops.forall { case (_, s0, e0) =>
-        val raw0 = sql.substring(s0, e0).trim
-        raw0.matches("\\d+") ||
-          (raw0.length >= 2 && raw0.head == '\'' && raw0.last == '\'')
-      }
-      // is the word ending just before '(' at index `paren` a known HOF?
-      def hofOwns(paren: Int): Boolean = {
-        var k = paren - 1
-        while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-        val e0 = k + 1
-        while (k >= 0 && (masked.charAt(k).isLetterOrDigit || masked.charAt(k) == '_')) k -= 1
-        k + 1 < e0 && lambdaHofs.contains(masked.substring(k + 1, e0).toLowerCase)
-      }
-      // lambda position: base starts an argument of a HOF call —
-      // `transform(l, x -> 'a')` is a constant-valued lambda, not JSON
-      val lambdaContext = bs.exists { b0 =>
-        var k = b0 - 1
-        while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-        if (k < 0) false
-        else masked.charAt(k) match {
-          case '(' => hofOwns(k)
-          case ',' =>
-            var depth = 0
-            var q = k - 1
-            var open = -1
-            while (open < 0 && q >= 0) {
-              masked.charAt(q) match {
-                case ')' => depth += 1
-                case '(' => if (depth == 0) open = q else depth -= 1
-                case _ =>
-              }
-              q -= 1
-            }
-            open >= 0 && hofOwns(open)
-          case _ => false
-        }
-      }
-      if (hasShovel || (argsLiteral && !lambdaContext)) {
-        val base = bs.getOrElse(fail("the left operand couldn't be claimed"))
-        val path = ops.map { case (_, s0, e0) =>
-          val raw0 = sql.substring(s0, e0).trim
-          if (raw0.matches("\\d+")) s"[$raw0]"
-          else if (raw0.length >= 2 && raw0.head == '\'' && raw0.last == '\'') {
-            val key = raw0.substring(1, raw0.length - 1)
-            if (!key.matches("\\w+"))
-              fail(s"key '$key' isn't a plain word — Spark JSON paths " +
-                "can't quote arbitrary keys")
-            s".$key"
-          } else fail(s"argument '$raw0' isn't a string literal or integer")
-        }.mkString
-        val baseTxt = sql.substring(base, be).trim
-        val repl =
-          if (ops.last._1 == "->>") s"get_json_object($baseTxt, '$$$path')"
-          else {
-            // terminal `->`: JSON-typed result (see scaladoc)
-            val p = s"'$$$path'"
-            s"nullif(CASE WHEN left(to_json(variant_get(parse_json($baseTxt), $p)), 1) IN ('{', '[') " +
-              s"THEN get_json_object($baseTxt, $p) " +
-              s"ELSE to_json(variant_get(parse_json($baseTxt), $p)) END, 'null')"
-          }
-        return rewriteJsonOps(sql.substring(0, base) + repl +
-          sql.substring(ops.last._3))
-      }
-      // a bare `->` lambda (or non-literal args): leave it for Spark
-      searchFrom = ops.lastOption.map(_._2).getOrElse(first + 2)
     }
-    sql
+    val hasShovel = ops.exists(_._1 == "->>")
+    // every chain argument a string literal / integer? (bare-`->`
+    // chains rewrite only then — a lambda body is an expression)
+    val argsLiteral = ops.forall { case (_, s0, e0) =>
+      val raw0 = sql.substring(s0, e0).trim
+      raw0.matches("\\d+") ||
+        (raw0.length >= 2 && raw0.head == '\'' && raw0.last == '\'')
+    }
+    // is the word ending just before '(' at index `paren` a known HOF?
+    def hofOwns(paren: Int): Boolean = {
+      var k = paren - 1
+      while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
+      val e0 = k + 1
+      while (k >= 0 && (masked.charAt(k).isLetterOrDigit || masked.charAt(k) == '_')) k -= 1
+      k + 1 < e0 && lambdaHofs.contains(masked.substring(k + 1, e0).toLowerCase)
+    }
+    // lambda position: base starts an argument of a HOF call —
+    // `transform(l, x -> 'a')` is a constant-valued lambda, not JSON
+    lazy val lambdaContext = bs.exists { b0 =>
+      var k = b0 - 1
+      while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
+      if (k < 0) false
+      else masked.charAt(k) match {
+        case '(' => hofOwns(k)
+        case ',' =>
+          val open = enclosingOpen(masked, k)
+          open >= 0 && hofOwns(open)
+        case _ => false
+      }
+    }
+    if (hasShovel || (argsLiteral && !lambdaContext)) {
+      val base = bs.getOrElse(fail("the left operand couldn't be claimed"))
+      val path = ops.map { case (_, s0, e0) =>
+        val raw0 = sql.substring(s0, e0).trim
+        if (raw0.matches("\\d+")) s"[$raw0]"
+        else if (raw0.length >= 2 && raw0.head == '\'' && raw0.last == '\'') {
+          val key = raw0.substring(1, raw0.length - 1)
+          if (!key.matches("\\w+"))
+            fail(s"key '$key' isn't a plain word — Spark JSON paths " +
+              "can't quote arbitrary keys")
+          s".$key"
+        } else fail(s"argument '$raw0' isn't a string literal or integer")
+      }.mkString
+      val baseTxt = sql.substring(base, be).trim
+      val repl =
+        if (ops.last._1 == "->>") s"get_json_object($baseTxt, '$$$path')"
+        else {
+          // terminal `->`: JSON-typed result (see scaladoc)
+          val p = s"'$$$path'"
+          s"nullif(CASE WHEN left(to_json(variant_get(parse_json($baseTxt), $p)), 1) IN ('{', '[') " +
+            s"THEN get_json_object($baseTxt, $p) " +
+            s"ELSE to_json(variant_get(parse_json($baseTxt), $p)) END, 'null')"
+        }
+      Splice(base, ops.last._3, repl)
+    } else // a bare `->` lambda (or non-literal args): leave it for Spark
+      SkipTo(ops.lastOption.map(_._2).getOrElse(first + 2))
   }
 
   /** Convert a glob pattern to an anchored Java/RE2 regex — `*` → `.*`,
@@ -1903,22 +1702,24 @@ object GraftSqlParser {
     * ADVICE: previously any bare GLOB token was claimed and a
     * non-literal pattern failed valid identifier SQL).
     */
-  def rewriteGlob(sql: String): String = {
-    val masked = maskQuotes(sql)
-    // only claim GLOB when a string literal follows: `glob` is NOT a
-    // reserved word in Spark, so `SELECT glob FROM files` must keep
-    // parsing as an identifier (ADVICE r10)
-    val m = raw"(?i)\b(NOT\s+)?GLOB\b".r.findAllMatchIn(masked).find { cand =>
-      var j = cand.end
+  def rewriteGlob(sql: String): String =
+    rewriteEach(sql, GlobRe) { (m, sql, masked) =>
+      // only claim GLOB when a string literal follows: `glob` is NOT a
+      // reserved word in Spark, so `SELECT glob FROM files` must keep
+      // parsing as an identifier (ADVICE r10)
+      var j = m.end
       while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-      j < masked.length && masked.charAt(j) == '\''
-    }.getOrElse(return sql)
+      if (j < masked.length && masked.charAt(j) == '\'') glob(m, sql, masked) else Skip
+    }
+
+  private val GlobRe = raw"(?i)\b(NOT\s+)?GLOB\b".r
+
+  private def glob(m: Regex.Match, sql: String, masked: String): Step = {
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"a GLOB couldn't be rewritten ($why) — convert the glob to a regex " +
           "and use RLIKE '^...$' (star → .*, ? → ., [...] classes verbatim)")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
+    val lpos = wsBefore(masked, m.start)
     val ls = primaryStartWithSign(masked, lpos).getOrElse(fail("left operand unclaimed"))
     val re = primaryEnd(masked, m.end).getOrElse(fail("no pattern operand"))
     val patRaw = sql.substring(m.end, re).trim
@@ -1931,7 +1732,7 @@ object GraftSqlParser {
     val rx = globToRegex(pat).replace("\\", "\\\\").replace("'", "''")
     val neg = if (m.group(1) != null) "NOT " else ""
     val left = sql.substring(ls, lpos).trim
-    rewriteGlob(sql.substring(0, ls) + s"$left ${neg}RLIKE '$rx'" + sql.substring(re))
+    Splice(ls, re, s"$left ${neg}RLIKE '$rx'")
   }
 
   /** DuckDB `expr [NOT] SIMILAR TO pattern` (r13 — previously a raw
@@ -1943,16 +1744,16 @@ object GraftSqlParser {
     * patterns get their backslashes doubled (Spark's string literals
     * unescape `\x`, DuckDB's don't); computed patterns pass through.
     */
-  def rewriteSimilarTo(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"(?i)\b(NOT\s+)?SIMILAR\s+TO\b".r.findFirstMatchIn(masked)
-      .getOrElse(return sql)
+  def rewriteSimilarTo(sql: String): String = rewriteEach(sql, SimilarToRe)(similarTo)
+
+  private val SimilarToRe = raw"(?i)\b(NOT\s+)?SIMILAR\s+TO\b".r
+
+  private def similarTo(m: Regex.Match, sql: String, masked: String): Step = {
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"a SIMILAR TO couldn't be rewritten ($why) — use " +
           "regexp_full_match(expr, pattern) directly")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
+    val lpos = wsBefore(masked, m.start)
     val ls = primaryStartWithSign(masked, lpos).getOrElse(fail("left operand unclaimed"))
     val re = primaryEnd(masked, m.end).getOrElse(fail("no pattern operand"))
     // the pattern text moves VERBATIM — rewriteRawLiterals already ran,
@@ -1960,8 +1761,7 @@ object GraftSqlParser {
     val pat = sql.substring(m.end, re).trim
     val neg = if (m.group(1) != null) "NOT " else ""
     val left = sql.substring(ls, lpos).trim
-    rewriteSimilarTo(sql.substring(0, ls) +
-      s"(${neg}regexp_full_match($left, $pat))" + sql.substring(re))
+    Splice(ls, re, s"(${neg}regexp_full_match($left, $pat))")
   }
 
   /** DuckDB `**` exponentiation (r10 — previously a guided error):
@@ -1969,25 +1769,15 @@ object GraftSqlParser {
     * DuckDB's `**` result type). Semantics probed on duckdb 1.0.0:
     * LEFT-associative (`2 ** 3 ** 2` = 64), binds tighter than `*`/`/`
     * (`3 * 2 ** 2` = 12) and looser than unary minus (`-2 ** 2` = 4 —
-    * the sign is part of the left operand). Leftmost-first rescan gives
-    * the left associativity; operands are single primaries with the
-    * sign attached. An occurrence whose operands can't be claimed
+    * the sign is part of the left operand). The scan resumes at each
+    * `power(…)` it writes, which is then the next `**`'s left operand —
+    * that gives the left associativity; operands are single primaries
+    * with the sign attached. An occurrence whose operands can't be claimed
     * raises a guided error rather than mangling the statement.
     */
-  def rewritePow(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"\*\*".r.findFirstMatchIn(masked).getOrElse(return sql)
-    def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(
-      "a ** exponent operand couldn't be claimed — write power(a, b) directly " +
-        "(Spark's ^ is bitwise XOR, not exponent)")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
-    val ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
-    val re = primaryEnd(masked, m.end).getOrElse(fail())
-    val l = sql.substring(ls, lpos).trim
-    val r = sql.substring(m.end, re).trim
-    rewritePow(sql.substring(0, ls) + s"power($l, $r)" + sql.substring(re))
-  }
+  def rewritePow(sql: String): String = rewritePower(sql, PowRe,
+    "a ** exponent operand couldn't be claimed — write power(a, b) directly " +
+      "(Spark's ^ is bitwise XOR, not exponent)")
 
   /** DuckDB `^` is EXPONENTIATION — Spark's `^` is bitwise XOR, the
     * worst kind of silent divergence (`2 ^ 3` = 8.0 vs 1). Probed
@@ -1996,35 +1786,25 @@ object GraftSqlParser {
     * — identical to `**`, so the rewrite mirrors [[rewritePow]].
     * DuckDB's `xor(a, b)` function covers the bitwise meaning.
     */
-  def rewriteCaret(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"\^".r.findFirstMatchIn(masked).getOrElse(return sql)
-    def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(
-      "a ^ exponent operand couldn't be claimed — write power(a, b) " +
-        "(DuckDB's ^ is exponent; for bitwise XOR use xor(a, b))")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
-    val ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
-    val re = primaryEnd(masked, m.end).getOrElse(fail())
-    val l = sql.substring(ls, lpos).trim
-    val r = sql.substring(m.end, re).trim
-    rewriteCaret(sql.substring(0, ls) + s"power($l, $r)" + sql.substring(re))
-  }
+  def rewriteCaret(sql: String): String = rewritePower(sql, CaretRe,
+    "a ^ exponent operand couldn't be claimed — write power(a, b) " +
+      "(DuckDB's ^ is exponent; for bitwise XOR use xor(a, b))")
 
-  private val LogFnRe = raw"(?i)(?<![\w.])log\s*\(".r
+  private val PowRe = raw"\*\*".r
+  private val CaretRe = raw"\^".r
 
-  /** DuckDB's 1-arg `log(x)` is LOG BASE 10 — Spark's is ln, another
-    * silent divergence (probed: `log(100)` = 2.0 vs 4.6). Renamed to
-    * the registered `duck_log` (1 arg → log10, 2 args → log(base, x),
-    * which the engines already agree on). A rename, not an override:
-    * the Scala functions API resolves `log` through the registry too,
-    * and internal operators (DSIR, TF-IDF, Gumbel keys) want ln.
+  /** `l op r` → `power(l, r)` for each `op`, operands single primaries
+    * with the sign attached; an unclaimable operand raises `failMsg`.
     */
-  def rewriteLogFn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = LogFnRe.findFirstMatchIn(masked).getOrElse(return sql)
-    rewriteLogFn(sql.substring(0, m.start) + "duck_log(" + sql.substring(m.end))
-  }
+  private def rewritePower(sql: String, op: Regex, failMsg: String): String =
+    rewriteEach(sql, op) { (m, sql, masked) =>
+      def fail(): Nothing =
+        throw new graft.functions.expressions.DuckDialectException(failMsg)
+      val lpos = wsBefore(masked, m.start)
+      val ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
+      val re = primaryEnd(masked, m.end).getOrElse(fail())
+      Splice(ls, re, s"power(${sql.substring(ls, lpos).trim}, ${sql.substring(m.end, re).trim})")
+    }
 
   private val FilterOverRe = raw"(?is)\bFILTER\s*\(\s*WHERE\b".r
 
@@ -2037,68 +1817,37 @@ object GraftSqlParser {
     * Spark supports it. Multi-argument aggregates keep a guided error
     * (the CASE wrap covers one argument).
     */
-  def rewriteFilterOver(sql: String): String = {
-    val masked = maskQuotes(sql)
-    FilterOverRe.findAllMatchIn(masked).foreach { m =>
-      // find the FILTER(...) close
-      var d = 1
-      var i = masked.indexOf('(', m.start) + 1
-      while (i < masked.length && d > 0) {
-        masked.charAt(i) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        if (d > 0) i += 1
-      }
-      if (d == 0) {
-        val filterClose = i
+  def rewriteFilterOver(sql: String): String =
+    rewriteEach(sql, FilterOverRe) { (m, sql, masked) =>
+      val open = masked.indexOf('(', m.start)
+      closeOf(masked, open + 1).map(_ - 1).filter { filterClose =>
         var j = filterClose + 1
         while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-        if (j < masked.length && masked.charAt(j).isLetter &&
-          wordStartingAt(masked, j).equalsIgnoreCase("OVER")) {
-          def fail(why: String): Nothing =
-            throw new graft.functions.expressions.DuckDialectException(
-              s"FILTER over a window function couldn't be rewritten ($why) — " +
-                "inline the predicate: agg(CASE WHEN pred THEN expr END) OVER (...)")
-          val pred = sql.substring(masked.indexOf('(', m.start) + 1, filterClose)
-            .replaceAll(raw"(?is)^\s*WHERE\b", "").trim
-          // backward: the aggregate call directly before FILTER
-          var k = m.start - 1
-          while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-          if (k < 0 || masked.charAt(k) != ')') fail("no aggregate call before FILTER")
-          val argsClose = k
-          d = 1; k -= 1
-          while (k >= 0 && d > 0) {
-            masked.charAt(k) match {
-              case ')' => d += 1
-              case '(' => d -= 1
-              case _ =>
-            }
-            if (d > 0) k -= 1
-          }
-          if (d != 0) fail("unbalanced aggregate parens")
-          val argsOpen = k
-          val args = sql.substring(argsOpen + 1, argsClose).trim
-          val argsMasked = masked.substring(argsOpen + 1, argsClose)
-          // single argument only (no depth-0 comma)
-          var dd = 0
-          argsMasked.foreach {
-            case '(' => dd += 1
-            case ')' => dd -= 1
-            case ',' if dd == 0 => fail("multi-argument aggregate")
-            case _ =>
-          }
-          val wrapped =
-            if (args == "*") s"(CASE WHEN ($pred) THEN 1 END)"
-            else s"(CASE WHEN ($pred) THEN ($args) END)"
-          return rewriteFilterOver(sql.substring(0, argsOpen + 1) + wrapped +
-            ")" + sql.substring(filterClose + 1))
-        }
-      }
+        j < masked.length && masked.charAt(j).isLetter &&
+          wordStartingAt(masked, j).equalsIgnoreCase("OVER")
+      }.map { filterClose =>
+        def fail(why: String): Nothing =
+          throw new graft.functions.expressions.DuckDialectException(
+            s"FILTER over a window function couldn't be rewritten ($why) — " +
+              "inline the predicate: agg(CASE WHEN pred THEN expr END) OVER (...)")
+        val pred = sql.substring(open + 1, filterClose)
+          .replaceAll(raw"(?is)^\s*WHERE\b", "").trim
+        // backward: the aggregate call directly before FILTER
+        var k = m.start - 1
+        while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
+        if (k < 0 || masked.charAt(k) != ')') fail("no aggregate call before FILTER")
+        val argsClose = k
+        val argsOpen = openOf(masked, argsClose).getOrElse(fail("unbalanced aggregate parens"))
+        val args = sql.substring(argsOpen + 1, argsClose).trim
+        // single argument only (no depth-0 comma)
+        if (depth0IndexWhere(masked, argsOpen + 1, argsClose)(masked.charAt(_) == ',') >= 0)
+          fail("multi-argument aggregate")
+        val wrapped =
+          if (args == "*") s"(CASE WHEN ($pred) THEN 1 END)"
+          else s"(CASE WHEN ($pred) THEN ($args) END)"
+        Splice(argsOpen + 1, filterClose + 1, wrapped + ")")
+      }.getOrElse(Skip)
     }
-    sql
-  }
 
   /** DuckDB `//` division (r10 — previously a guided error): rewrites
     * each occurrence to the native [[graft.functions.expressions
@@ -2136,40 +1885,32 @@ object GraftSqlParser {
           p < 0 || { val c = masked.charAt(p)
             !(c.isLetterOrDigit || c == '_' || c == '.' || c == '$') }
         }
-        .map(m => (m.start(1), m.end(1)))).toSeq.distinct.sortBy(-_._1)
-    spans.foldLeft(sql) { case (acc, (s, e)) =>
-      acc.substring(0, s) + s"CAST(${acc.substring(s, e)} AS DOUBLE)" + acc.substring(e)
-    }
+        .map(m => (m.start(1), m.end(1)))).toSeq.distinct
+    applySplices(sql, spans.map { case (s, e) => (s, e, s"CAST(${sql.substring(s, e)} AS DOUBLE)") })
   }
 
-  def rewriteIntDiv(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = raw"//".r.findFirstMatchIn(masked).getOrElse(return sql)
+  private val IntDivRe = raw"//".r
+
+  def rewriteIntDiv(sql: String): String = rewriteEach(sql, IntDivRe) { (m, sql, masked) =>
     def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(
       "a // division operand couldn't be claimed — write a div b (integer " +
         "truncating division) or floor(a / b) directly")
-    var lpos = m.start
-    while (lpos > 0 && masked.charAt(lpos - 1).isWhitespace) lpos -= 1
+    val lpos = wsBefore(masked, m.start)
     // left operand: the whole preceding multiplicative chain
     var ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
     var chaining = true
     while (chaining) {
-      var k = ls
-      while (k > 0 && masked.charAt(k - 1).isWhitespace) k -= 1
+      val k = wsBefore(masked, ls)
       if (k > 0 && "*/%".contains(masked.charAt(k - 1)) &&
         !(k > 1 && masked.charAt(k - 2) == '/')) {
-        var q = k - 1
-        while (q > 0 && masked.charAt(q - 1).isWhitespace) q -= 1
-        primaryStartWithSign(masked, q) match {
+        primaryStartWithSign(masked, wsBefore(masked, k - 1)) match {
           case Some(s) => ls = s
           case None => chaining = false
         }
       } else chaining = false
     }
     val re = primaryEnd(masked, m.end).getOrElse(fail())
-    val l = sql.substring(ls, lpos).trim
-    val r = sql.substring(m.end, re).trim
-    rewriteIntDiv(sql.substring(0, ls) + s"graft_ddiv($l, $r)" + sql.substring(re))
+    Splice(ls, re, s"graft_ddiv(${sql.substring(ls, lpos).trim}, ${sql.substring(m.end, re).trim})")
   }
 
   /** Rewrite DuckDB list comprehensions (r10 — previously a guided
@@ -2178,82 +1919,39 @@ object GraftSqlParser {
     * `list_transform(list_filter(list, v -> cond), v -> expr)` —
     * DuckDB's own desugaring (filter first, then transform), expressed
     * in the list_* aliases the dialect layer already maps to Spark's
-    * codegen'd higher-order functions. Pieces are rewritten recursively
-    * so nested comprehensions and comprehensions inside the source list
-    * compose; scanning is masked-text (brackets in strings are inert)
+    * codegen'd higher-order functions. The scan resumes inside each
+    * replacement, so nested comprehensions and comprehensions inside the
+    * source list compose; scanning is masked-text (brackets in strings are inert)
     * and the FOR/IN/IF keywords must sit at TOP level of the bracket
     * body (a nested `[... FOR ...]` inside a plain list literal doesn't
     * claim the outer bracket). Plain list literals `[1, 2]`, indexing
     * `l[i]` and slices `l[a:b]` never match — no top-level FOR.
     */
-  def rewriteComprehension(sql: String): String = {
-    val masked = maskQuotes(sql)
-    // find the FIRST '[' whose body carries a top-level FOR
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        // matching ']' by bracket depth ('(' depth tracked so a bracket
-        // inside a nested call still counts — both are balanced)
-        var j = i + 1
-        var depth = 1
-        while (j < masked.length && depth > 0) {
-          masked.charAt(j) match {
-            case '[' => depth += 1
-            case ']' => depth -= 1
-            case _ =>
-          }
-          if (depth > 0) j += 1
-        }
-        if (depth == 0) {
-          val body = masked.substring(i + 1, j)
-          // top-level keyword positions inside the body
-          def topLevel(re: scala.util.matching.Regex): List[Int] =
-            re.findAllMatchIn(body).filter { m =>
-              val pre = body.substring(0, m.start)
-              pre.count(_ == '(') == pre.count(_ == ')') &&
-                pre.count(_ == '[') == pre.count(_ == ']')
-            }.map(_.start).toList
-          topLevel(raw"(?i)\bFOR\b".r) match {
-            case forPos :: _ =>
-              val exprRaw = sql.substring(i + 1, i + 1 + forPos).trim
-              val afterFor = body.substring(forPos + 3)
-              val inM = raw"(?is)^\s*([A-Za-z_]\w*)\s+IN\b".r
-                .findFirstMatchIn(afterFor).getOrElse(
-                  throw new graft.functions.expressions.DuckDialectException(
-                    "list comprehension couldn't be parsed — expected " +
-                      "[expr FOR var IN list [IF cond]]"))
-              val v = inM.group(1)
-              val restStart = forPos + 3 + inM.end
-              val rest = body.substring(restStart) // masked
-              val restRaw = sql.substring(i + 1 + restStart, j)
-              val ifPos = raw"(?i)\bIF\b".r.findAllMatchIn(rest).find { m =>
-                val pre = rest.substring(0, m.start)
-                pre.count(_ == '(') == pre.count(_ == ')') &&
-                  pre.count(_ == '[') == pre.count(_ == ']')
-              }.map(_.start)
-              val (listRaw, condRaw) = ifPos match {
-                case Some(pos) =>
-                  (restRaw.substring(0, pos).trim, Some(restRaw.substring(pos + 2).trim))
-                case None => (restRaw.trim, None)
-              }
-              val expr = rewriteComprehension(exprRaw)
-              val lst = rewriteComprehension(listRaw)
-              val src = condRaw match {
-                case Some(c) =>
-                  s"list_filter($lst, $v -> ${rewriteComprehension(c)})"
-                case None => lst
-              }
-              val replacement = s"list_transform($src, $v -> $expr)"
-              return rewriteComprehension(
-                sql.substring(0, i) + replacement + sql.substring(j + 1))
-            case Nil =>
-          }
-        }
-      }
-      i += 1
+  def rewriteComprehension(sql: String): String =
+    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+      val i = m.start
+      (for {
+        close <- closeOf(masked, i + 1, '[', ']')
+        j = close - 1
+        forAt = depth0IndexWhere(masked, i + 1, j, "()[]")(wordAt(masked, _) == "FOR")
+        if forAt >= 0
+      } yield {
+        val exprRaw = sql.substring(i + 1, forAt).trim
+        val inM = raw"(?is)^\s*([A-Za-z_]\w*)\s+IN\b".r
+          .findFirstMatchIn(masked.substring(forAt + 3, j)).getOrElse(
+            throw new graft.functions.expressions.DuckDialectException(
+              "list comprehension couldn't be parsed — expected " +
+                "[expr FOR var IN list [IF cond]]"))
+        val v = inM.group(1)
+        val restStart = forAt + 3 + inM.end
+        val ifAt = depth0IndexWhere(masked, restStart, j, "()[]")(wordAt(masked, _) == "IF")
+        val (lst, cond) =
+          if (ifAt < 0) (sql.substring(restStart, j).trim, None)
+          else (sql.substring(restStart, ifAt).trim, Some(sql.substring(ifAt + 2, j).trim))
+        val src = cond.map(c => s"list_filter($lst, $v -> $c)").getOrElse(lst)
+        Splice(i, j + 1, s"list_transform($src, $v -> $exprRaw)")
+      }).getOrElse(Skip)
     }
-    sql
-  }
 
   private val ClauseKwRe =
     raw"(?i)\b(WHERE|GROUP|HAVING|QUALIFY|WINDOW|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT)\b".r
@@ -2270,34 +1968,17 @@ object GraftSqlParser {
     val masked = maskQuotes(sql)
     val head = raw"(?is)^\s*FROM\s".r.findFirstMatchIn(masked).getOrElse(return sql)
     // depth-0 SELECT ends the table expression (if present)
-    var selPos = -1
-    var d = 0
-    val SelectRe = raw"(?i)\bSELECT\b".r
-    SelectRe.findAllMatchIn(masked).foreach { m =>
-      if (selPos < 0) {
-        d = masked.substring(0, m.start).count(_ == '(') -
-          masked.substring(0, m.start).count(_ == ')')
-        if (d == 0) selPos = m.start
-      }
-    }
-    if (selPos < 0) return "SELECT * " + sql.substring(head.start)
+    val selPos = depth0Find(masked, raw"(?i)\bSELECT\b".r, 0, masked.length)
+      .getOrElse(return "SELECT * " + sql.substring(head.start))
     val tableExpr = sql.substring(head.end - 1, selPos).trim
-    val after = sql.substring(selPos + "SELECT".length)
-    val afterMasked = masked.substring(selPos + "SELECT".length)
+    val listStart = selPos + "SELECT".length
     // select list ends at the first depth-0 clause keyword
-    var cut = -1
-    ClauseKwRe.findAllMatchIn(afterMasked).foreach { m =>
-      if (cut < 0) {
-        val dd = afterMasked.substring(0, m.start).count(_ == '(') -
-          afterMasked.substring(0, m.start).count(_ == ')')
-        if (dd == 0) cut = m.start
-      }
-    }
-    val (selectList, tail) =
-      if (cut < 0) (after.trim, "")
-      else (after.substring(0, cut).trim, after.substring(cut).trim)
+    val cut = depth0Find(masked, ClauseKwRe, listStart, masked.length).getOrElse(masked.length)
+    val selectList = sql.substring(listStart, cut).trim
+    val tail = sql.substring(cut).trim
     s"SELECT $selectList FROM $tableExpr" + (if (tail.nonEmpty) s" $tail" else "")
   }
+
 
   /** Rewrite DuckDB's bracket slicing `expr[begin:end]` (1-based
     * inclusive, open ends, negatives, strings too — exact semantics in
@@ -2313,31 +1994,20 @@ object GraftSqlParser {
     * top-level colon (`l[i]`, `m['k']`), casts (`x::INT`) and brackets
     * whose base the scan cannot claim are left alone (→ guided error).
     */
-  def rewriteSlice(sql: String): String = {
-    val masked = maskQuotes(sql)
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        sliceSpan(masked, i) match {
-          case Some((colon, close)) =>
-            sliceBaseStart(masked, i) match {
-              case Some(bs) =>
-                val base = sql.substring(bs, i)
-                val bTxt = sql.substring(i + 1, colon).trim
-                val eTxt = sql.substring(colon + 1, close).trim
-                val b = if (bTxt.isEmpty) "NULL" else bTxt
-                val e = if (eTxt.isEmpty) "NULL" else eTxt
-                return rewriteSlice(sql.substring(0, bs) +
-                  s"graft_bracket_slice($base, $b, $e)" + sql.substring(close + 1))
-              case None => // unclaimable base → leave for the guided error
-            }
-          case None =>
-        }
-      }
-      i += 1
+  def rewriteSlice(sql: String): String =
+    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+      val i = m.start
+      (for {
+        (colon, close) <- sliceSpan(masked, i)
+        bs <- sliceBaseStart(masked, i) // unclaimable base → the guided error
+      } yield {
+        val bTxt = sql.substring(i + 1, colon).trim
+        val eTxt = sql.substring(colon + 1, close).trim
+        val b = if (bTxt.isEmpty) "NULL" else bTxt
+        val e = if (eTxt.isEmpty) "NULL" else eTxt
+        Splice(bs, close + 1, s"graft_bracket_slice(${sql.substring(bs, i)}, $b, $e)")
+      }).getOrElse(Skip)
     }
-    sql
-  }
 
   /** Rewrite DuckDB's scalar subscript `base[i]` / `m['k']` (r13 —
     * previously left to Spark's native subscript, whose 0-BASED array
@@ -2353,32 +2023,26 @@ object GraftSqlParser {
     * `x::INT[3]` keep their bare-identifier base when preceded by
     * `AS`/`::` (DuckDB array-type syntax, not a subscript).
     */
-  def rewriteSubscript(sql: String): String = {
-    val masked = maskQuotes(sql)
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        val span = sliceSpan(masked, i) // colon inside → slice (handled)
-        if (span.isEmpty) subscriptClose(masked, i).foreach { close =>
-          val body = sql.substring(i + 1, close).trim
-          if (body.nonEmpty) sliceBaseStart(masked, i).foreach { bs =>
-            // skip type positions: `:: TYPE [n]` and `AS TYPE [n]`
-            var p = bs
-            while (p > 0 && masked.charAt(p - 1).isWhitespace) p -= 1
-            val isCastType = (p >= 2 && masked.charAt(p - 1) == ':' &&
-              masked.charAt(p - 2) == ':') ||
-              (p >= 2 && wordEndingAt(masked, p - 1).equalsIgnoreCase("AS"))
-            if (!isCastType) {
-              val base = sql.substring(bs, i)
-              return rewriteSubscript(sql.substring(0, bs) +
-                s"graft_bracket_get($base, $body)" + sql.substring(close + 1))
-            }
-          }
-        }
-      }
-      i += 1
+  def rewriteSubscript(sql: String): String =
+    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+      val i = m.start
+      (for {
+        close <- subscriptClose(masked, i) if sliceSpan(masked, i).isEmpty // a colon → slice
+        body = sql.substring(i + 1, close).trim if body.nonEmpty
+        bs <- sliceBaseStart(masked, i)
+        // skip type positions: `:: TYPE [n]` and `AS TYPE [n]`
+        p = wsBefore(masked, bs)
+        if !((p >= 2 && masked.charAt(p - 1) == ':' && masked.charAt(p - 2) == ':') ||
+          (p >= 2 && wordEndingAt(masked, p - 1).equalsIgnoreCase("AS")))
+      } yield Splice(bs, close + 1, s"graft_bracket_get(${sql.substring(bs, i)}, $body)"))
+        .getOrElse(Skip)
     }
-    sql
+
+  /** `i` moved back over the whitespace that precedes it. */
+  private def wsBefore(s: String, i: Int): Int = {
+    var p = i
+    while (p > 0 && s.charAt(p - 1).isWhitespace) p -= 1
+    p
   }
 
   /** Matching `]` of a bracket opened at `open` (no colon requirement). */
@@ -2464,14 +2128,7 @@ object GraftSqlParser {
         j = b; any = true; bareIdentOnly = false; scanning = false
       } else if (c == ')' || c == ']') {
         val openCh = if (c == ')') '(' else '['
-        var d = 1
-        var b = j - 2
-        while (b >= 0 && d > 0) {
-          val cc = masked.charAt(b)
-          if (cc == c) d += 1 else if (cc == openCh) d -= 1
-          b -= 1
-        }
-        if (d > 0) return None
+        val b = openOf(masked, j - 1, openCh, c).getOrElse(return None) - 1
         // a ']' group is only claimable when its '[' is a SUBSCRIPT on
         // a preceding expression — a bare `[1,2,3]` is a DuckDB list
         // LITERAL, which has no Spark rewrite: leave it unclaimed so
@@ -2500,21 +2157,10 @@ object GraftSqlParser {
     * (A `)` inside a quoted column name within the EXCLUDE list remains
     * unsupported — document as a dialect edge.)
     */
-  def rewriteExclude(sql: String): String = {
-    val ms = ExcludeRe.findAllMatchIn(maskQuotes(sql)).toList
-    if (ms.isEmpty) sql
-    else {
-      val sb = new StringBuilder
-      var last = 0
-      for (m <- ms) {
-        sb.append(sql.substring(last, m.start))
-        sb.append("* EXCEPT (").append(sql.substring(m.start(1), m.end(1))).append(")")
-        last = m.end
-      }
-      sb.append(sql.substring(last))
-      sb.toString
-    }
-  }
+  def rewriteExclude(sql: String): String =
+    applySplices(sql, ExcludeRe.findAllMatchIn(maskQuotes(sql)).map { m =>
+      (m.start, m.end, s"* EXCEPT (${sql.substring(m.start(1), m.end(1))})")
+    }.toSeq)
 
   private val QualifyRe = raw"(?i)\bQUALIFY\b".r
 
@@ -2539,14 +2185,11 @@ object GraftSqlParser {
     * input), and a predicate referencing columns the SELECT list drops
     * fails analysis as unresolved.
     */
-  def rewriteQualify(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val m = QualifyRe.findAllMatchIn(masked).find(m => isQualifyClause(masked, m.start, m.end))
-    m match {
-      case None => sql
-      case Some(q) => rewriteQualify(rewriteOneQualify(sql, masked, q.start, q.end))
+  def rewriteQualify(sql: String): String =
+    rewriteEach(sql, QualifyRe) { (m, sql, masked) =>
+      if (isQualifyClause(masked, m.start, m.end)) qualify(sql, masked, m.start, m.end)
+      else Skip
     }
-  }
 
   /** Heuristic: a QUALIFY token in identifier position (right after
     * SELECT/comma/operator, or followed by an operator/comma/close)
@@ -2584,37 +2227,11 @@ object GraftSqlParser {
     s.substring(first, e).toUpperCase
   }
 
-  private def rewriteOneQualify(sql: String, masked: String, qStart: Int, qEnd: Int): String = {
-    // block start = position after the '(' enclosing the QUALIFY (or 0)
-    val stack = scala.collection.mutable.Stack[Int]()
-    var i = 0
-    while (i < qStart) {
-      masked.charAt(i) match {
-        case '(' => stack.push(i + 1)
-        case ')' => if (stack.nonEmpty) stack.pop()
-        case _ =>
-      }
-      i += 1
-    }
-    val blockStart = if (stack.isEmpty) 0 else stack.top
+  private def qualify(sql: String, masked: String, qStart: Int, qEnd: Int): Step = {
+    val blockStart = enclosingOpen(masked, qStart) + 1
     // predicate runs to the next same-depth clause terminator / ')'
-    val terminators = Set("ORDER", "LIMIT", "OFFSET", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS")
-    var predEnd = masked.length
-    var dd = 0
-    i = qEnd
-    var scanning = true
-    while (i < masked.length && scanning) {
-      val c = masked.charAt(i)
-      if (c == '(') { dd += 1; i += 1 }
-      else if (c == ')') {
-        if (dd == 0) { predEnd = i; scanning = false } else { dd -= 1; i += 1 }
-      } else if (dd == 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (terminators.contains(w)) { predEnd = i; scanning = false }
-        else i += math.max(w.length, 1)
-      } else i += 1
-    }
+    val predEnd = clauseEnd(masked, qEnd)(Set("ORDER", "LIMIT", "OFFSET", "WINDOW",
+      "UNION", "INTERSECT", "EXCEPT", "MINUS"))
     val pred = sql.substring(qEnd, predEnd).trim
     val head = sql.substring(blockStart, qStart).trim
     if (pred.isEmpty)
@@ -2632,21 +2249,7 @@ object GraftSqlParser {
               "rewrite (the window must run before DISTINCT) — compute the window " +
               "column in a subquery, filter, then SELECT DISTINCT outside")
         // inject the predicate as a column before the block's own FROM
-        var j = blockStart
-        var df = 0
-        var fromPos = -1
-        while (j < qStart && fromPos < 0) {
-          val c = masked.charAt(j)
-          if (c == '(') df += 1
-          else if (c == ')') df -= 1
-          else if (df == 0 && c.isLetter &&
-            (j == 0 || (!masked.charAt(j - 1).isLetterOrDigit && masked.charAt(j - 1) != '_'))) {
-            val w = wordStartingAt(masked, j)
-            if (w == "FROM") fromPos = j
-            else j += math.max(w.length, 1) - 1
-          }
-          j += 1
-        }
+        val fromPos = depth0IndexWhere(masked, blockStart, qStart)(wordAt(masked, _) == "FROM")
         if (fromPos < 0)
           throw new graft.functions.expressions.DuckDialectException(
             "QUALIFY: could not locate the block's FROM clause for the window rewrite")
@@ -2654,7 +2257,7 @@ object GraftSqlParser {
           s", ( $pred ) AS __graft_qualify " + sql.substring(fromPos, qStart)
         s"SELECT * EXCEPT (__graft_qualify) FROM ( $head2 ) WHERE __graft_qualify "
       }
-    sql.substring(0, blockStart) + replacement + sql.substring(predEnd)
+    Splice(blockStart, predEnd, replacement)
   }
 
   private val DistinctOnRe = raw"(?is)\bSELECT\s+DISTINCT\s+ON\s*\(".r
@@ -2708,21 +2311,19 @@ object GraftSqlParser {
     * identifier scan never matches them, so nothing mis-rewrites; they
     * simply keep Spark's loud GROUPING_COLUMN_MISMATCH).
     */
-  def rewriteGroupingAliases(sql: String, depth: Int = 0,
+  def rewriteGroupingAliases(sql: String,
       resolve: String => Option[Seq[String]] = _ => None): String = {
-    // depth caps pathological alias cycles (`SELECT b AS a, a AS b ...
-    // ROLLUP (a)` would ping-pong forever); real queries settle in 1-2
-    if (depth > 8) return sql
-    val masked = maskQuotes(sql)
-    // try each construct left-to-right; the first that yields a change
-    // wins and the result recurses (so every block eventually settles)
-    for (m <- GroupingConstructRe.findAllMatchIn(masked)) {
-      rewriteOneGroupingConstruct(sql, masked, m, resolve) match {
-        case Some(out) => return rewriteGroupingAliases(out, depth + 1, resolve)
-        case None =>
+    // the rewrite cap stops pathological alias cycles (`SELECT b AS a,
+    // a AS b ... ROLLUP (a)` would ping-pong forever); real queries
+    // settle in 1-2
+    var rewrites = 0
+    rewriteEach(sql, GroupingConstructRe) { (m, sql, masked) =>
+      if (rewrites > 8) Stop
+      else groupingConstruct(sql, masked, m, resolve) match {
+        case Some(splice) => rewrites += 1; splice
+        case None => Skip
       }
     }
-    sql
   }
 
   /** One ROLLUP/CUBE/GROUPING SETS occurrence: None when nothing to
@@ -2731,51 +2332,22 @@ object GraftSqlParser {
     * quote-masked text (literal content is underscores there) and
     * replacements splice into the raw text by position.
     */
-  private def rewriteOneGroupingConstruct(
+  private def groupingConstruct(
       sql: String, masked: String,
-      m: scala.util.matching.Regex.Match,
-      resolve: String => Option[Seq[String]]): Option[String] = {
+      m: Regex.Match,
+      resolve: String => Option[Seq[String]]): Option[Splice] = {
     // balanced construct span
     val open = m.end - 1
-    var i = m.end
-    var d = 1
-    while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (d != 0) return None
-    val close = i // index AFTER the ')'
-    // enclosing SELECT: scan backward from the match at depth 0
-    var j = m.start - 1
-    var bd = 0
+    val close = closeOf(masked, m.end).getOrElse(return None) // index AFTER the ')'
+    // the construct's own SELECT: the last depth-0 one of its block
     var selPos = -1
-    while (j >= 0 && selPos < 0) {
-      val c = masked.charAt(j)
-      if (c == ')') bd += 1
-      else if (c == '(') bd -= 1
-      else if (bd == 0 && c.isLetter && wordStartingAt(masked, j) == "SELECT" &&
-        (j == 0 || (!masked.charAt(j - 1).isLetterOrDigit && masked.charAt(j - 1) != '_')))
-        selPos = j
-      j -= 1
+    depth0IndexWhere(masked, enclosingOpen(masked, m.start) + 1, m.start) { j =>
+      if (wordAt(masked, j) == "SELECT") selPos = j
+      false
     }
     if (selPos < 0) return None
     // select list = SELECT .. FROM at the same depth
-    var k = selPos + 6
-    var fd = 0
-    var fromPos = -1
-    while (k < m.start && fromPos < 0) {
-      val c = masked.charAt(k)
-      if (c == '(') fd += 1
-      else if (c == ')') fd -= 1
-      else if (fd == 0 && c.isLetter &&
-        (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_') &&
-        wordStartingAt(masked, k) == "FROM") fromPos = k
-      k += 1
-    }
+    val fromPos = depth0IndexWhere(masked, selPos + 6, m.start)(wordAt(masked, _) == "FROM")
     if (fromPos < 0) return None
     val selText = sql.substring(selPos + 6, fromPos)
     val aliasRe = raw"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)$$".r
@@ -2861,16 +2433,7 @@ object GraftSqlParser {
     val newSpan = sb.toString
     // grouping()/grouping_id() args over the replaced aliases — block
     // scope: the enclosing SELECT to the end of its balanced region
-    var blockEnd = close
-    var ed = 0
-    while (blockEnd < masked.length && ed >= 0) {
-      masked.charAt(blockEnd) match {
-        case '(' => ed += 1
-        case ')' => ed -= 1
-        case _ =>
-      }
-      if (ed >= 0) blockEnd += 1
-    }
+    val blockEnd = clauseEnd(masked, close)(_ => false)
     val grRe = raw"(?i)\b(grouping|grouping_id)\s*\(([^()]*)\)".r
     def fixGrouping(raw0: String): String = {
       val msk = maskQuotes(raw0)
@@ -2887,11 +2450,9 @@ object GraftSqlParser {
       b.append(raw0.substring(p))
       b.toString
     }
-    val head = sql.substring(0, selPos)
     val mid0 = sql.substring(selPos, open + 1) + newSpan + sql.substring(close - 1, close)
     val tail0 = sql.substring(close, blockEnd)
-    val tailAfter = sql.substring(blockEnd)
-    Some(head + fixGrouping(mid0) + fixGrouping(tail0) + tailAfter)
+    Some(Splice(selPos, blockEnd, fixGrouping(mid0) + fixGrouping(tail0)))
   }
 
   /** Empty-input grouping-sets parity handle (r17 — closes the r16
@@ -2953,18 +2514,7 @@ object GraftSqlParser {
     val cm = GroupingConstructRe.findFirstMatchIn(masked.substring(gbPos))
       .filter(_.start == 0).getOrElse(return None)
     val open = gbPos + cm.end - 1
-    var i = open + 1
-    var d = 1
-    while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (d != 0) return None
-    val close = i // index AFTER ')'
+    val close = closeOf(masked, open + 1).getOrElse(return None) // index AFTER ')'
     val kind = cm.group(1).toUpperCase.replaceAll(raw"\s+", " ")
     val interior = sql.substring(open + 1, close - 1)
     // grand-total multiplicity: ROLLUP/CUBE always contain the empty
@@ -3129,146 +2679,89 @@ object GraftSqlParser {
     }
   }
 
-  def rewriteDistinctOn(sql: String): String = {
-    val masked = maskQuotes(sql)
-    DistinctOnRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        val keysOpen = m.end - 1
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
+  def rewriteDistinctOn(sql: String): String = rewriteEach(sql, DistinctOnRe)(distinctOn)
+
+  private def distinctOn(m: Regex.Match, sql: String, masked: String): Step = {
+    val keysOpen = m.end - 1
+    // unbalanced — let the parser report it
+    val keysClose = closeOf(masked, m.end).getOrElse(return Stop) - 1
+    val keys = sql.substring(keysOpen + 1, keysClose).trim
+    if (keys.isEmpty)
+      throw new graft.functions.expressions.DuckDialectException(
+        "DISTINCT ON with an empty key list")
+    // scan this block for its top-level ORDER BY; stop at the
+    // enclosing ')' or a same-depth set operation
+    val setOps = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
+    val hit = clauseEnd(masked, keysClose + 1)(w => w == "ORDER" || setOps(w))
+    val hitWord = if (hit < masked.length) wordAt(masked, hit) else ""
+    if (setOps(hitWord))
+      throw new graft.functions.expressions.DuckDialectException(
+        "DISTINCT ON combined with a set operation has no mechanical " +
+          "rewrite (the ORDER BY orders the combined result, not the " +
+          "DISTINCT ON pick) — wrap the DISTINCT ON SELECT in a subquery " +
+          "with its own ORDER BY")
+    if (hitWord != "ORDER")
+      throw new graft.functions.expressions.DuckDialectException(
+        "DISTINCT ON without ORDER BY picks an arbitrary row per key — " +
+          "not reproducible on a distributed engine. Add ORDER BY <keys>, " +
+          "<tiebreak> to pin which row survives")
+    val orderPos = hit
+    // ORDER BY list extent: to the next same-depth LIMIT/OFFSET, the
+    // enclosing ')', or end of text
+    val byM = raw"(?is)\AORDER\s+BY\b".r.findFirstMatchIn(masked.substring(orderPos))
+      .getOrElse(throw new graft.functions.expressions.DuckDialectException(
+        "DISTINCT ON: malformed ORDER BY clause"))
+    val listStart = orderPos + byM.end
+    val listEnd = clauseEnd(masked, listStart)(w => w == "LIMIT" || w == "OFFSET")
+    val orderList = sql.substring(listStart, listEnd).trim
+    if (orderList.isEmpty)
+      throw new graft.functions.expressions.DuckDialectException(
+        "DISTINCT ON: empty ORDER BY list")
+    val ordinal = raw"(?is)^\d+(\s+(ASC|DESC))?(\s+NULLS\s+(FIRST|LAST))?$$".r
+    if (splitTopLevel(orderList, maskQuotes(orderList))
+        .exists(item => ordinal.findFirstIn(item.trim).isDefined))
+      throw new graft.functions.expressions.DuckDialectException(
+        "DISTINCT ON with ordinal ORDER BY items (ORDER BY 1) isn't " +
+          "rewritable — inside the generated OVER clause an integer is a " +
+          "constant, not a column position. Name the columns")
+    val qualify = s" QUALIFY row_number() OVER (PARTITION BY $keys " +
+      s"ORDER BY $orderList) = 1 "
+    // The OUTER ORDER BY resolves against the rewritten subquery's
+    // OUTPUT (the aliased select list), while DuckDB also accepts
+    // the pre-projection input names (r16, found by FuzzDiff:
+    // `DISTINCT ON (c) c AS g ... ORDER BY c` works in DuckDB but
+    // `c` no longer exists after projection here) — map each outer
+    // ORDER BY item whose text matches an aliased select expression
+    // onto its alias. The OVER clause keeps the original names: it
+    // evaluates in the pre-projection scope.
+    val outerOrder = {
+      def canon(s: String): String = s.trim.toLowerCase.replaceAll("\\s+", " ")
+      // select list = text between the key list and the block's FROM
+      val fromPos2 = depth0IndexWhere(masked, keysClose + 1, orderPos)(wordAt(masked, _) == "FROM")
+      val aliasRe = raw"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)$$".r
+      val aliasMap: Map[String, String] =
+        if (fromPos2 < 0) Map.empty
+        else {
+          val selText = sql.substring(keysClose + 1, fromPos2)
+          splitTopLevel(selText, maskQuotes(selText)).flatMap(_.trim match {
+            case aliasRe(e, a) => Some(canon(e) -> a)
+            case _ => None
+          }).toMap
         }
-        if (d > 0) return sql // unbalanced — let the parser report it
-        val keysClose = i - 1
-        val keys = sql.substring(keysOpen + 1, keysClose).trim
-        if (keys.isEmpty)
-          throw new graft.functions.expressions.DuckDialectException(
-            "DISTINCT ON with an empty key list")
-        // scan this block for its top-level ORDER BY; stop at the
-        // enclosing ')' or a same-depth set operation
-        val setOps = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
-        var j = keysClose + 1
-        var depth = 0
-        var orderPos = -1
-        var scanning = true
-        while (j < masked.length && scanning) {
-          val c = masked.charAt(j)
-          if (c == '(') { depth += 1; j += 1 }
-          else if (c == ')') {
-            if (depth == 0) scanning = false else { depth -= 1; j += 1 }
-          } else if (depth == 0 && c.isLetter &&
-            (j == 0 || (!masked.charAt(j - 1).isLetterOrDigit && masked.charAt(j - 1) != '_'))) {
-            val w = wordStartingAt(masked, j)
-            if (w == "ORDER") { orderPos = j; scanning = false }
-            else if (setOps.contains(w))
-              throw new graft.functions.expressions.DuckDialectException(
-                "DISTINCT ON combined with a set operation has no mechanical " +
-                  "rewrite (the ORDER BY orders the combined result, not the " +
-                  "DISTINCT ON pick) — wrap the DISTINCT ON SELECT in a subquery " +
-                  "with its own ORDER BY")
-            else j += math.max(w.length, 1)
-          } else j += 1
+      val itemRe =
+        raw"(?is)^(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?$$".r
+      splitTopLevel(orderList, maskQuotes(orderList)).map { item =>
+        item.trim match {
+          case itemRe(core, dir, nulls) =>
+            aliasMap.get(canon(core)).map(_ +
+              Option(dir).getOrElse("") + Option(nulls).getOrElse(""))
+              .getOrElse(item.trim)
+          case other => other
         }
-        if (orderPos < 0)
-          throw new graft.functions.expressions.DuckDialectException(
-            "DISTINCT ON without ORDER BY picks an arbitrary row per key — " +
-              "not reproducible on a distributed engine. Add ORDER BY <keys>, " +
-              "<tiebreak> to pin which row survives")
-        // ORDER BY list extent: to the next same-depth LIMIT/OFFSET, the
-        // enclosing ')', or end of text
-        val byM = raw"(?is)\AORDER\s+BY\b".r.findFirstMatchIn(masked.substring(orderPos))
-          .getOrElse(throw new graft.functions.expressions.DuckDialectException(
-            "DISTINCT ON: malformed ORDER BY clause"))
-        val listStart = orderPos + byM.end
-        var k = listStart
-        depth = 0
-        var listEnd = masked.length
-        var scanning2 = true
-        while (k < masked.length && scanning2) {
-          val c = masked.charAt(k)
-          if (c == '(') { depth += 1; k += 1 }
-          else if (c == ')') {
-            if (depth == 0) { listEnd = k; scanning2 = false } else { depth -= 1; k += 1 }
-          } else if (depth == 0 && c.isLetter &&
-            (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_')) {
-            val w = wordStartingAt(masked, k)
-            if (w == "LIMIT" || w == "OFFSET") { listEnd = k; scanning2 = false }
-            else k += math.max(w.length, 1)
-          } else k += 1
-        }
-        val orderList = sql.substring(listStart, listEnd).trim
-        if (orderList.isEmpty)
-          throw new graft.functions.expressions.DuckDialectException(
-            "DISTINCT ON: empty ORDER BY list")
-        val ordinal = raw"(?is)^\d+(\s+(ASC|DESC))?(\s+NULLS\s+(FIRST|LAST))?$$".r
-        if (splitTopLevel(orderList, maskQuotes(orderList))
-            .exists(item => ordinal.findFirstIn(item.trim).isDefined))
-          throw new graft.functions.expressions.DuckDialectException(
-            "DISTINCT ON with ordinal ORDER BY items (ORDER BY 1) isn't " +
-              "rewritable — inside the generated OVER clause an integer is a " +
-              "constant, not a column position. Name the columns")
-        val qualify = s" QUALIFY row_number() OVER (PARTITION BY $keys " +
-          s"ORDER BY $orderList) = 1 "
-        // The OUTER ORDER BY resolves against the rewritten subquery's
-        // OUTPUT (the aliased select list), while DuckDB also accepts
-        // the pre-projection input names (r16, found by FuzzDiff:
-        // `DISTINCT ON (c) c AS g ... ORDER BY c` works in DuckDB but
-        // `c` no longer exists after projection here) — map each outer
-        // ORDER BY item whose text matches an aliased select expression
-        // onto its alias. The OVER clause keeps the original names: it
-        // evaluates in the pre-projection scope.
-        val outerOrder = {
-          def canon(s: String): String = s.trim.toLowerCase.replaceAll("\\s+", " ")
-          // select list = text between the key list and the block's FROM
-          var j2 = keysClose + 1
-          var df2 = 0
-          var fromPos2 = -1
-          while (j2 < orderPos && fromPos2 < 0) {
-            val c = masked.charAt(j2)
-            if (c == '(') df2 += 1
-            else if (c == ')') df2 -= 1
-            else if (df2 == 0 && c.isLetter &&
-              (!masked.charAt(j2 - 1).isLetterOrDigit && masked.charAt(j2 - 1) != '_')) {
-              val w = wordStartingAt(masked, j2)
-              if (w == "FROM") fromPos2 = j2
-              else j2 += math.max(w.length, 1) - 1
-            }
-            j2 += 1
-          }
-          val aliasRe = raw"(?is)^(.*\S)\s+AS\s+([A-Za-z_]\w*)$$".r
-          val aliasMap: Map[String, String] =
-            if (fromPos2 < 0) Map.empty
-            else {
-              val selText = sql.substring(keysClose + 1, fromPos2)
-              splitTopLevel(selText, maskQuotes(selText)).flatMap(_.trim match {
-                case aliasRe(e, a) => Some(canon(e) -> a)
-                case _ => None
-              }).toMap
-            }
-          val itemRe =
-            raw"(?is)^(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?$$".r
-          splitTopLevel(orderList, maskQuotes(orderList)).map { item =>
-            item.trim match {
-              case itemRe(core, dir, nulls) =>
-                aliasMap.get(canon(core)).map(_ +
-                  Option(dir).getOrElse("") + Option(nulls).getOrElse(""))
-                  .getOrElse(item.trim)
-              case other => other
-            }
-          }.mkString(", ")
-        }
-        val rewritten = sql.substring(0, m.start) + "SELECT " +
-          sql.substring(keysClose + 1, orderPos) + qualify +
-          "ORDER BY " + outerOrder + " " + sql.substring(listEnd)
-        rewriteDistinctOn(rewritten)
+      }.mkString(", ")
     }
+    Splice(m.start, listEnd, "SELECT " + sql.substring(keysClose + 1, orderPos) + qualify +
+      "ORDER BY " + outerOrder + " ")
   }
 
   private val StructPackRe = raw"(?i)\bstruct_pack\s*\(".r
@@ -3280,47 +2773,8 @@ object GraftSqlParser {
     * the literal-masked copy), so `:=` anywhere else still raises the
     * guided named-argument error instead of being silently mangled.
     */
-  def rewriteStructPack(sql: String): String = {
-    val masked = maskQuotes(sql)
-    StructPackRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        // matching close paren of the argument list
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (d != 0) sql // unbalanced — leave for the parser to report
-        else {
-          val inner = sql.substring(m.end, i - 1)
-          val innerMasked = masked.substring(m.end, i - 1)
-          // replace ident := at THIS call's top level only (depth 0 in
-          // the span) — a nested struct_pack is handled by recursion
-          val argRe = raw"(?s)([A-Za-z_][A-Za-z_0-9]*)\s*:=".r
-          val sb = new StringBuilder
-          var last = 0
-          for (am <- argRe.findAllMatchIn(innerMasked)) {
-            val depth = innerMasked.substring(0, am.start)
-              .count(_ == '(') - innerMasked.substring(0, am.start).count(_ == ')')
-            if (depth == 0) {
-              sb.append(inner.substring(last, am.start))
-              sb.append("'").append(am.group(1)).append("',")
-              last = am.end
-            }
-          }
-          sb.append(inner.substring(last))
-          val rewritten = sql.substring(0, m.start) + "named_struct(" +
-            sb.toString + sql.substring(i - 1)
-          rewriteStructPack(rewritten)
-        }
-    }
-  }
+  def rewriteStructPack(sql: String): String =
+    rewriteNamedArgs(sql, StructPackRe, "named_struct(")
 
   private val StructInsertRe = raw"(?i)\bstruct_insert\s*\(".r
 
@@ -3330,44 +2784,29 @@ object GraftSqlParser {
     * hood — appends/overwrites fields on the struct, probed
     * `{'a': 1, 'b': 2}`).
     */
-  def rewriteStructInsert(sql: String): String = {
-    val masked = maskQuotes(sql)
-    StructInsertRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
+  def rewriteStructInsert(sql: String): String =
+    rewriteNamedArgs(sql, StructInsertRe, "graft_struct_insert(")
+
+  private val NamedArgRe = raw"(?s)([A-Za-z_][A-Za-z_0-9]*)\s*:=".r
+
+  /** `head(` + args for each `fn(` match of `re`, with every `ident :=`
+    * at the call's own top level (a nested call keeps its own, rewritten
+    * when the scan reaches it) turned into `'ident',`.
+    */
+  private def rewriteNamedArgs(sql: String, re: Regex, head: String): String =
+    rewriteEach(sql, re) { (m, sql, masked) =>
+      closeOf(masked, m.end).map { close =>
+        val inner = masked.substring(m.end, close - 1)
+        val hits = NamedArgRe.findAllMatchIn(inner).map(am => (am.start, am)).toMap
+        val args = Seq.newBuilder[(Int, Int, String)]
+        depth0IndexWhere(inner) { k =>
+          hits.get(k).foreach(am => args += ((k, am.end, s"'${am.group(1)}',")))
+          false
         }
-        if (d != 0) sql
-        else {
-          val inner = sql.substring(m.end, i - 1)
-          val innerMasked = masked.substring(m.end, i - 1)
-          val argRe = raw"(?s)([A-Za-z_][A-Za-z_0-9]*)\s*:=".r
-          val sb = new StringBuilder
-          var last = 0
-          for (am <- argRe.findAllMatchIn(innerMasked)) {
-            val depth = innerMasked.substring(0, am.start)
-              .count(_ == '(') - innerMasked.substring(0, am.start).count(_ == ')')
-            if (depth == 0) {
-              sb.append(inner.substring(last, am.start))
-              sb.append("'").append(am.group(1)).append("',")
-              last = am.end
-            }
-          }
-          sb.append(inner.substring(last))
-          val rewritten = sql.substring(0, m.start) + "graft_struct_insert(" +
-            sb.toString + sql.substring(i - 1)
-          rewriteStructInsert(rewritten)
-        }
+        Splice(m.start, close - 1,
+          head + applySplices(sql.substring(m.end, close - 1), args.result()))
+      }.getOrElse(Stop) // unbalanced — leave for the parser to report
     }
-  }
 
   private val SampleRe =
     raw"(?i)\bUSING\s+SAMPLE\s+(\d+(?:\.\d+)?)\s*(%|PERCENT\b|ROWS\b)?".r
@@ -3432,8 +2871,9 @@ object GraftSqlParser {
       subDepth(i) = stack.count(identity)
       maskedHead.charAt(i) match {
         case '(' =>
-          val rest = maskedHead.substring(i + 1).dropWhile(_.isWhitespace)
-          stack.push(rest.regionMatches(true, 0, "SELECT", 0, 6))
+          var r = i + 1
+          while (r < maskedHead.length && maskedHead.charAt(r).isWhitespace) r += 1
+          stack.push(maskedHead.regionMatches(true, r, "SELECT", 0, 6))
         case ')' => if (stack.nonEmpty) stack.pop()
         case _ =>
       }
@@ -3444,19 +2884,7 @@ object GraftSqlParser {
         .exists(m => subDepth(m.start) == 0 && !insideParens(m.start))
     // plain paren depth (for GROUP BY: must be this block's clause, not
     // a parenthesized expression's text)
-    def insideParens(pos: Int): Boolean = {
-      var d = 0
-      var j = 0
-      while (j < pos) {
-        maskedHead.charAt(j) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        j += 1
-      }
-      d > 0
-    }
+    def insideParens(pos: Int): Boolean = enclosingOpen(maskedHead, pos) >= 0
     val grouped = topLevel(raw"(?i)\b(GROUP\s+BY|HAVING)\b".r, maskedHead.length)
     // DISTINCT at the block's own select (subquery-depth 0 — a leading
     // WITH clause must not hide it; CTE-internal DISTINCTs sit at
@@ -3507,24 +2935,11 @@ object GraftSqlParser {
   /** First depth-0 occurrence of `re` in masked[from, until) — paren
     * depth measured relative to `from` (a block's own parens balance).
     */
-  private def depth0Find(masked: String, re: scala.util.matching.Regex,
+  private def depth0Find(masked: String, re: Regex,
                          from: Int, until: Int): Option[Int] = {
-    var d = 0
-    var i = from
-    val hits = re.findAllMatchIn(masked.substring(from, until))
-      .map(_.start + from).toList
-    if (hits.isEmpty) return None
-    val depths = new Array[Int](until - from)
-    while (i < until) {
-      depths(i - from) = d
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    hits.find(p => depths(p - from) == 0)
+    val hits = re.findAllMatchIn(masked.substring(from, until)).map(_.start + from).toSet
+    if (hits.isEmpty) None
+    else Some(depth0IndexWhere(masked, from, until)(hits)).filter(_ >= 0)
   }
 
   /** Split a sample-carrying block at its top-level FROM/WHERE (r16):
@@ -3629,17 +3044,7 @@ object GraftSqlParser {
         case Some(mm) =>
           val pct = mm.group(1).toDouble
           val seedOpt = Option(mm.group(2))
-          val stack = scala.collection.mutable.Stack[Int]()
-          var i = 0
-          while (i < mm.start) {
-            masked.charAt(i) match {
-              case '(' => stack.push(i + 1)
-              case ')' => if (stack.nonEmpty) stack.pop()
-              case _ =>
-            }
-            i += 1
-          }
-          val blockStart = if (stack.isEmpty) 0 else stack.top
+          val blockStart = enclosingOpen(masked, mm.start) + 1
           val fromIdx = depth0Find(masked, raw"(?i)\bFROM\b".r, blockStart, mm.start)
             .getOrElse(throw new graft.functions.expressions.DuckDialectException(
               "reservoir(n%) without a FROM relation has no cardinality to count"))
@@ -3692,134 +3097,103 @@ object GraftSqlParser {
   }
 
   def rewriteSample(sql: String): String = {
-    val masked = maskQuotes(sql)
-    FnSampleRe.findFirstMatchIn(masked).foreach { fm =>
+    val fnForm = rewriteEach(sql, FnSampleRe) { (fm, sql, _) =>
       val seed = Option(fm.group(4)).map(s => s", $s").getOrElse("")
-      return rewriteSample(sql.substring(0, fm.start) +
-        s"USING SAMPLE ${fm.group(2)}${fm.group(3)} (${fm.group(1)}$seed)" +
-        sql.substring(fm.end))
+      Splice(fm.start, fm.end, s"USING SAMPLE ${fm.group(2)}${fm.group(3)} (${fm.group(1)}$seed)")
     }
     // size-first reservoir spelling → function form, then one rewriter
-    RsvSizeRe.findFirstMatchIn(masked).foreach { rm =>
+    val rsvForm = rewriteEach(fnForm, RsvSizeRe) { (rm, sql, _) =>
       val rep = Option(rm.group(2)).map(s => s" REPEATABLE ($s)").getOrElse("")
-      return rewriteSample(sql.substring(0, rm.start) +
-        s"USING SAMPLE reservoir(${rm.group(1)} ROWS)$rep" +
-        sql.substring(rm.end))
+      Splice(rm.start, rm.end, s"USING SAMPLE reservoir(${rm.group(1)} ROWS)$rep")
     }
-    RsvFnRe.findFirstMatchIn(masked).foreach { rm =>
-      val n = rm.group(1)
-      // unseeded reservoir is random in DuckDB; graft is deterministic
-      // either way (documented) — a fixed default seed keeps repeated
-      // runs stable, the property DuckDB's REPEATABLE promises
-      val seed = Option(rm.group(2)).getOrElse("8675309")
-      // helper name keyed on the MATCH OFFSET, not a counter: the
-      // rewrite must be a pure function of its input (the oracle-corpus
-      // idempotency pin) and offsets are unique per sibling sample
-      val h = s"__graft_rsv_${rm.start}"
-      // block start (same scan as the percentage path below)
-      val stack = scala.collection.mutable.Stack[Int]()
-      var i = 0
-      while (i < rm.start) {
-        masked.charAt(i) match {
-          case '(' => stack.push(i + 1)
-          case ')' => if (stack.nonEmpty) stack.pop()
-          case _ =>
-        }
-        i += 1
-      }
-      val blockStart = if (stack.isEmpty) 0 else stack.top
-      // a depth-0 WHERE before the sample: DuckDB 1.0.0 draws the n
-      // rows from the base FROM relation BEFORE the filter (probed —
-      // `WHERE p USING SAMPLE reservoir(10 ROWS) REPEATABLE (42)`
-      // returns a deterministic ≤ 10, not 10), so attach the hash-top-n
-      // to the relation and leave the WHERE above it; aggregation /
-      // DISTINCT in the select list is then DuckDB-correct too (it
-      // evaluates over the filtered sample), so the wrap guard is
-      // bypassed on this path
-      sampleSplit(sql, masked, blockStart, rm.start).foreach {
+    rewriteEach(rewriteEach(rsvForm, RsvFnRe)(reservoirSample), SampleRe)(tableSample)
+  }
+
+  private def reservoirSample(rm: Regex.Match, sql: String, masked: String): Step = {
+    val n = rm.group(1)
+    // unseeded reservoir is random in DuckDB; graft is deterministic
+    // either way (documented) — a fixed default seed keeps repeated
+    // runs stable, the property DuckDB's REPEATABLE promises
+    val seed = Option(rm.group(2)).getOrElse("8675309")
+    // helper name keyed on the MATCH OFFSET, not a counter: the
+    // rewrite must be a pure function of its input (the oracle-corpus
+    // idempotency pin) and offsets are unique per sibling sample
+    val h = s"__graft_rsv_${rm.start}"
+    val blockStart = enclosingOpen(masked, rm.start) + 1
+    // a depth-0 WHERE before the sample: DuckDB 1.0.0 draws the n
+    // rows from the base FROM relation BEFORE the filter (probed —
+    // `WHERE p USING SAMPLE reservoir(10 ROWS) REPEATABLE (42)`
+    // returns a deterministic ≤ 10, not 10), so attach the hash-top-n
+    // to the relation and leave the WHERE above it; aggregation /
+    // DISTINCT in the select list is then DuckDB-correct too (it
+    // evaluates over the filtered sample), so the wrap guard is
+    // bypassed on this path
+    sampleSplit(sql, masked, blockStart, rm.start).foreach {
+      case (fromEnd, whereIdx, fromPart, alias) =>
+        val rel = s"( SELECT * EXCEPT ($h) FROM (SELECT *, " +
+          s"xxhash64(struct(*), $seed) AS $h FROM ( SELECT * FROM $fromPart ) " +
+          s"ORDER BY $h LIMIT $n) ) $alias"
+        return Splice(fromEnd, rm.end, s" $rel " + sql.substring(whereIdx, rm.start))
+    }
+    val head = sql.substring(blockStart, rm.start).trim
+    guardAggregatedSample(masked.substring(blockStart, rm.start).trim)
+    Splice(blockStart, rm.end, s"SELECT * EXCEPT ($h) FROM (SELECT *, " +
+      s"xxhash64(struct(*), $seed) AS $h FROM ( $head ) ORDER BY $h LIMIT $n)")
+  }
+
+  private def tableSample(m: Regex.Match, sql: String, masked: String): Step = {
+    // percentage methods are claimable, seeded or not (r14: the
+    // seed rides through as Spark's REPEATABLE clause); anything
+    // else parenthesized ('reservoir(...)') → not rewritten
+    val wsLen = masked.substring(m.end).takeWhile(_.isWhitespace).length
+    val after = masked.substring(m.end + wsLen)
+    val method = raw"(?i)^\(\s*(bernoulli|system)\s*(?:,\s*(\d+))?\s*\)".r
+      .findFirstMatchIn(after)
+    val consumedMethod = method.map(mm => wsLen + mm.end).getOrElse(0)
+    // optional `REPEATABLE (seed)` suffix (DuckDB's function-style
+    // seed spelling) after the method parens or the bare size spec
+    val afterMethod = masked.substring(m.end + consumedMethod)
+    val wsLen2 = afterMethod.takeWhile(_.isWhitespace).length
+    val rep = raw"(?i)^REPEATABLE\s*\(\s*(\d+)\s*\)".r
+      .findFirstMatchIn(afterMethod.substring(wsLen2))
+    val consumed = consumedMethod + rep.map(r => wsLen2 + r.end).getOrElse(0)
+    val seed: Option[String] =
+      method.flatMap(mm => Option(mm.group(2))).orElse(rep.map(_.group(1)))
+    val isPercent = m.group(2) != null &&
+      (m.group(2) == "%" || m.group(2).equalsIgnoreCase("percent"))
+    if (method.isDefined && !isPercent) return Stop // reservoir-ROWS territory
+    // a seeded ROWS sample is DuckDB's exact-n seeded reservoir;
+    // Spark's `n ROWS` takes the first n — silently different, so
+    // the guided error stands
+    if (seed.isDefined && !isPercent) return Stop
+    if (method.isEmpty &&
+      (after.startsWith("(") || raw"(?i)^[a-z_]+\s*\(".r.findFirstIn(after).isDefined))
+      return Stop
+    val spec = m.group(2) match {
+      case s if s != null && (s == "%" || s.equalsIgnoreCase("percent")) =>
+        s"${m.group(1)} PERCENT"
+      case _ => s"${m.group(1)} ROWS"
+    }
+    val repeatable = seed.map(sd => s"REPEATABLE ($sd) ").getOrElse("")
+    val blockStart = enclosingOpen(masked, m.start) + 1
+    // exact-n (ROWS) with a depth-0 WHERE: DuckDB 1.0.0 samples the
+    // base relation BEFORE the filter (probed; see sampleSplit) —
+    // attach the TABLESAMPLE to the relation instead of wrapping
+    // the filtered block, which would always return exactly n.
+    // Percentage forms COMMUTE with row-independent filters (the
+    // per-row inclusion decision doesn't depend on other rows), so
+    // the wrap stays for them — cross-engine row sets differ by RNG
+    // either way, and the count distribution is identical.
+    if (!isPercent)
+      sampleSplit(sql, masked, blockStart, m.start).foreach {
         case (fromEnd, whereIdx, fromPart, alias) =>
-          val rel = s"( SELECT * EXCEPT ($h) FROM (SELECT *, " +
-            s"xxhash64(struct(*), $seed) AS $h FROM ( SELECT * FROM $fromPart ) " +
-            s"ORDER BY $h LIMIT $n) ) $alias"
-          return rewriteSample(sql.substring(0, fromEnd) + s" $rel " +
-            sql.substring(whereIdx, rm.start) + sql.substring(rm.end))
+          val rel = s"( SELECT * FROM $fromPart ) TABLESAMPLE ($spec) $repeatable $alias"
+          return Splice(fromEnd, m.end + consumed, s" $rel " + sql.substring(whereIdx, m.start))
       }
-      val head = sql.substring(blockStart, rm.start).trim
-      guardAggregatedSample(masked.substring(blockStart, rm.start).trim)
-      return rewriteSample(sql.substring(0, blockStart) +
-        s"SELECT * EXCEPT ($h) FROM (SELECT *, xxhash64(struct(*), $seed) " +
-        s"AS $h FROM ( $head ) ORDER BY $h LIMIT $n)" +
-        sql.substring(rm.end))
-    }
-    SampleRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        // percentage methods are claimable, seeded or not (r14: the
-        // seed rides through as Spark's REPEATABLE clause); anything
-        // else parenthesized ('reservoir(...)') → not rewritten
-        val wsLen = masked.substring(m.end).takeWhile(_.isWhitespace).length
-        val after = masked.substring(m.end + wsLen)
-        val method = raw"(?i)^\(\s*(bernoulli|system)\s*(?:,\s*(\d+))?\s*\)".r
-          .findFirstMatchIn(after)
-        val consumedMethod = method.map(mm => wsLen + mm.end).getOrElse(0)
-        // optional `REPEATABLE (seed)` suffix (DuckDB's function-style
-        // seed spelling) after the method parens or the bare size spec
-        val afterMethod = masked.substring(m.end + consumedMethod)
-        val wsLen2 = afterMethod.takeWhile(_.isWhitespace).length
-        val rep = raw"(?i)^REPEATABLE\s*\(\s*(\d+)\s*\)".r
-          .findFirstMatchIn(afterMethod.substring(wsLen2))
-        val consumed = consumedMethod + rep.map(r => wsLen2 + r.end).getOrElse(0)
-        val seed: Option[String] =
-          method.flatMap(mm => Option(mm.group(2))).orElse(rep.map(_.group(1)))
-        val isPercent = m.group(2) != null &&
-          (m.group(2) == "%" || m.group(2).equalsIgnoreCase("percent"))
-        if (method.isDefined && !isPercent) return sql // reservoir-ROWS territory
-        // a seeded ROWS sample is DuckDB's exact-n seeded reservoir;
-        // Spark's `n ROWS` takes the first n — silently different, so
-        // the guided error stands
-        if (seed.isDefined && !isPercent) return sql
-        if (method.isEmpty &&
-          (after.startsWith("(") || raw"(?i)^[a-z_]+\s*\(".r.findFirstIn(after).isDefined))
-          return sql
-        val spec = m.group(2) match {
-          case s if s != null && (s == "%" || s.equalsIgnoreCase("percent")) =>
-            s"${m.group(1)} PERCENT"
-          case _ => s"${m.group(1)} ROWS"
-        }
-        val repeatable = seed.map(sd => s"REPEATABLE ($sd) ").getOrElse("")
-        // block start (same scan as QUALIFY)
-        val stack = scala.collection.mutable.Stack[Int]()
-        var i = 0
-        while (i < m.start) {
-          masked.charAt(i) match {
-            case '(' => stack.push(i + 1)
-            case ')' => if (stack.nonEmpty) stack.pop()
-            case _ =>
-          }
-          i += 1
-        }
-        val blockStart = if (stack.isEmpty) 0 else stack.top
-        // exact-n (ROWS) with a depth-0 WHERE: DuckDB 1.0.0 samples the
-        // base relation BEFORE the filter (probed; see sampleSplit) —
-        // attach the TABLESAMPLE to the relation instead of wrapping
-        // the filtered block, which would always return exactly n.
-        // Percentage forms COMMUTE with row-independent filters (the
-        // per-row inclusion decision doesn't depend on other rows), so
-        // the wrap stays for them — cross-engine row sets differ by RNG
-        // either way, and the count distribution is identical.
-        if (!isPercent)
-          sampleSplit(sql, masked, blockStart, m.start).foreach {
-            case (fromEnd, whereIdx, fromPart, alias) =>
-              val rel = s"( SELECT * FROM $fromPart ) TABLESAMPLE ($spec) $repeatable $alias"
-              return rewriteSample(sql.substring(0, fromEnd) + s" $rel " +
-                sql.substring(whereIdx, m.start) + sql.substring(m.end + consumed))
-          }
-        val head = sql.substring(blockStart, m.start).trim
-        guardAggregatedSample(masked.substring(blockStart, m.start).trim)
-        rewriteSample(sql.substring(0, blockStart) +
-          s"SELECT * FROM ( $head ) TABLESAMPLE ($spec) $repeatable" +
-          sql.substring(m.end + consumed))
-    }
+    val head = sql.substring(blockStart, m.start).trim
+    guardAggregatedSample(masked.substring(blockStart, m.start).trim)
+    Splice(blockStart, m.end + consumed,
+      s"SELECT * FROM ( $head ) TABLESAMPLE ($spec) $repeatable")
   }
 
   private val AsofRe = raw"(?i)\bASOF\s+(LEFT\s+)?JOIN\b".r
@@ -3861,16 +3235,9 @@ object GraftSqlParser {
     * naming the fix rather than silently misparsing (bare Spark would
     * read `t ASOF JOIN u` as table t aliased "ASOF" + inner join).
     */
-  def rewriteAsof(sql: String): String = {
-    val masked = maskQuotes(sql)
-    AsofRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) => rewriteAsof(rewriteOneAsof(sql, masked, m))
-    }
-  }
+  def rewriteAsof(sql: String): String = rewriteEach(sql, AsofRe)(asof)
 
-  private def rewriteOneAsof(sql: String, masked: String,
-                             m: scala.util.matching.Regex.Match): String = {
+  private def asof(m: Regex.Match, sql: String, masked: String): Step = {
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"ASOF JOIN couldn't be auto-rewritten ($why) — use " +
@@ -3886,18 +3253,9 @@ object GraftSqlParser {
     if (i >= masked.length) fail("no right-side relation")
     val relStart = i
     val isSubquery = masked.charAt(i) == '('
-    if (isSubquery) {
-      var d = 1; i += 1
-      while (i < masked.length && d > 0) {
-        masked.charAt(i) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (d != 0) fail("unbalanced parens in the right-side subquery")
-    } else {
+    if (isSubquery)
+      i = closeOf(masked, i + 1).getOrElse(fail("unbalanced parens in the right-side subquery"))
+    else {
       while (i < masked.length && (masked.charAt(i).isLetterOrDigit ||
         masked.charAt(i) == '_' || masked.charAt(i) == '.')) i += 1
       if (i == relStart) fail("unrecognized right-side relation")
@@ -3930,39 +3288,17 @@ object GraftSqlParser {
       "OFFSET", "WINDOW", "QUALIFY", "UNION", "INTERSECT", "EXCEPT", "MINUS",
       "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "ASOF", "SEMI",
       "ANTI", "NATURAL", "LATERAL")
-    var condEnd = masked.length
-    var dd = 0
-    var scanning = true
-    while (i < masked.length && scanning) {
-      val c = masked.charAt(i)
-      if (c == '(') { dd += 1; i += 1 }
-      else if (c == ')') {
-        if (dd == 0) { condEnd = i; scanning = false } else { dd -= 1; i += 1 }
-      } else if (dd == 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (condTerminators.contains(w)) { condEnd = i; scanning = false }
-        else i += math.max(w.length, 1)
-      } else i += 1
-    }
+    val condEnd = clauseEnd(masked, condStart)(condTerminators)
     val condText = sql.substring(condStart, condEnd).trim
     val condMasked = masked.substring(condStart, condEnd)
     // ---- split the condition at top-level AND; reject OR/NOT/BETWEEN/IN
     val splits = scala.collection.mutable.ArrayBuffer[Int]()
-    var j = 0
-    var d2 = 0
-    while (j < condMasked.length) {
-      val c = condMasked.charAt(j)
-      if (c == '(') { d2 += 1; j += 1 }
-      else if (c == ')') { d2 -= 1; j += 1 }
-      else if (d2 == 0 && c.isLetter &&
-        (j == 0 || (!condMasked.charAt(j - 1).isLetterOrDigit && condMasked.charAt(j - 1) != '_'))) {
-        val w = wordStartingAt(condMasked, j)
-        if (w == "AND") { splits += j; j += 3 }
-        else if (Set("OR", "NOT", "BETWEEN", "IN", "CASE").contains(w))
-          fail(s"$w at the top level of the ON condition")
-        else j += math.max(w.length, 1)
-      } else j += 1
+    depth0IndexWhere(condMasked) { j =>
+      val w = wordAt(condMasked, j)
+      if (w == "AND") splits += j
+      else if (Set("OR", "NOT", "BETWEEN", "IN", "CASE").contains(w))
+        fail(s"$w at the top level of the ON condition")
+      false
     }
     val ranges = {
       val starts = 0 +: splits.map(_ + 3)
@@ -4060,87 +3396,41 @@ object GraftSqlParser {
       s"( $leftExpr ) $boundOp $alias.$helper )"
     val replacement = s"$joinKw $newRel ON $newCond "
     // ---- block bounds, for the star-leak wrap
-    val stack = scala.collection.mutable.Stack[Int]()
-    var p = 0
-    while (p < m.start) {
-      masked.charAt(p) match {
-        case '(' => stack.push(p + 1)
-        case ')' => if (stack.nonEmpty) stack.pop()
-        case _ =>
-      }
-      p += 1
-    }
-    val blockStart = if (stack.isEmpty) 0 else stack.top
-    val needsWrap = {
-      // FROM position at block depth 0 bounds the select list
-      var k = blockStart; var d4 = 0; var fromPos = m.start
-      var looking = true
-      while (k < m.start && looking) {
-        val c = masked.charAt(k)
-        if (c == '(') d4 += 1
-        else if (c == ')') d4 -= 1
-        else if (d4 == 0 && c.isLetter &&
-          (k == 0 || (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_'))) {
-          val w = wordStartingAt(masked, k)
-          if (w == "FROM") { fromPos = k; looking = false }
-          else k += math.max(w.length, 1) - 1
-        }
-        k += 1
-      }
-      selectListHasStar(masked, blockStart, fromPos)
-    }
-    if (!needsWrap)
-      sql.substring(0, m.start) + replacement + sql.substring(condEnd)
+    val blockStart = enclosingOpen(masked, m.start) + 1
+    // FROM position at block depth 0 bounds the select list
+    val fromPos = depth0IndexWhere(masked, blockStart, m.start)(wordAt(masked, _) == "FROM")
+    if (starQualifiers(masked, sql, blockStart, if (fromPos < 0) m.start else fromPos).isEmpty)
+      Splice(m.start, condEnd, replacement)
     else {
       // block end: the wrap swallows trailing ORDER BY / LIMIT too (they
       // may reference table aliases invisible outside the subquery; an
       // inner Sort under a bare Project survives and Project preserves
       // order) — only a set-op branch boundary or ')' ends the block
-      val tailTerminators = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
-      var q = condEnd
-      var d5 = 0
-      var blockEnd = masked.length
-      var scan2 = true
-      while (q < masked.length && scan2) {
-        val c = masked.charAt(q)
-        if (c == '(') { d5 += 1; q += 1 }
-        else if (c == ')') {
-          if (d5 == 0) { blockEnd = q; scan2 = false } else { d5 -= 1; q += 1 }
-        } else if (d5 == 0 && c.isLetter &&
-          (q == 0 || (!masked.charAt(q - 1).isLetterOrDigit && masked.charAt(q - 1) != '_'))) {
-          val w = wordStartingAt(masked, q)
-          if (tailTerminators.contains(w)) { blockEnd = q; scan2 = false }
-          else q += math.max(w.length, 1)
-        } else q += 1
-      }
+      val blockEnd = clauseEnd(masked, condEnd)(Set("UNION", "INTERSECT", "EXCEPT", "MINUS"))
       val block = sql.substring(blockStart, m.start) + replacement +
         sql.substring(condEnd, blockEnd)
-      sql.substring(0, blockStart) +
-        s"SELECT * EXCEPT ($helper) FROM ( $block ) " + sql.substring(blockEnd)
+      Splice(blockStart, blockEnd, s"SELECT * EXCEPT ($helper) FROM ( $block ) ")
     }
   }
 
   private val PivotStmtRe = raw"(?is)^\s*PIVOT\s".r
   private val UnpivotStmtRe = raw"(?is)^\s*UNPIVOT\s".r
 
-  /** Split `s` on depth-0 commas (parens tracked; `s` must already be
-    * quote-masked-aligned with the raw text it indexes into).
+  /** Split `s` on depth-0 commas (`pairs` groups skipped; `s` must
+    * already be quote-masked-aligned with the raw text it indexes into).
     */
-  private def splitTopLevel(raw: String, masked: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var d = 0
+  private def splitTopLevel(raw: String, masked: String, pairs: String = "()"): Seq[String] =
+    topLevelSpans(masked, pairs).map { case (s, e) => raw.substring(s, e) }
+
+  /** The [start, end) spans between `masked`'s depth-0 commas. */
+  private def topLevelSpans(masked: String, pairs: String): Seq[(Int, Int)] = {
+    val out = Seq.newBuilder[(Int, Int)]
     var last = 0
-    var k = 0
-    while (k < masked.length) {
-      masked.charAt(k) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ',' if d == 0 => out += raw.substring(last, k); last = k + 1
-        case _ =>
-      }
-      k += 1
+    depth0IndexWhere(masked, 0, masked.length, pairs) { k =>
+      if (masked.charAt(k) == ',') { out += ((last, k)); last = k + 1 }
+      false
     }
-    out += raw.substring(last)
+    out += ((last, masked.length))
     out.result()
   }
 
@@ -4173,20 +3463,8 @@ object GraftSqlParser {
           "(agg(expr) FOR col IN ('v1', 'v2'))")
     var i = m.end - 1
     def skipWs(): Unit = while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
-    def balanced(open: Int): Int = { // index after the matching ')'
-      var d = 1
-      var k = open + 1
-      while (k < masked.length && d > 0) {
-        masked.charAt(k) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        k += 1
-      }
-      if (d != 0) fail("unbalanced parens")
-      k
-    }
+    def balanced(open: Int): Int = // index after the matching ')'
+      closeOf(masked, open + 1).getOrElse(fail("unbalanced parens"))
     skipWs()
     val relStart = i
     if (i < masked.length && masked.charAt(i) == '(') i = balanced(i)
@@ -4266,19 +3544,7 @@ object GraftSqlParser {
       if (!wordStartingAt(masked, i).equalsIgnoreCase("BY")) fail("GROUP without BY")
       i += 2
       val g0 = i
-      var d = 0
-      var scanning = true
-      while (i < masked.length && scanning) {
-        val c = masked.charAt(i)
-        if (c == '(') { d += 1; i += 1 }
-        else if (c == ')') { d -= 1; i += 1 }
-        else if (d == 0 && c.isLetter &&
-          (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_')) {
-          val w = wordStartingAt(masked, i)
-          if (Set("ORDER", "LIMIT", "OFFSET").contains(w.toUpperCase)) scanning = false
-          else i += math.max(w.length, 1)
-        } else i += 1
-      }
+      i = clauseEnd(masked, g0)(Set("ORDER", "LIMIT", "OFFSET"))
       groupCols = Some(sql.substring(g0, i).trim)
     }
     val tail = sql.substring(i)
@@ -4449,18 +3715,9 @@ object GraftSqlParser {
     def skipWs(): Unit = while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
     skipWs()
     val relStart = i
-    if (i < masked.length && masked.charAt(i) == '(') {
-      var d = 1; i += 1
-      while (i < masked.length && d > 0) {
-        masked.charAt(i) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (d != 0) fail("unbalanced parens in the relation")
-    } else {
+    if (i < masked.length && masked.charAt(i) == '(')
+      i = closeOf(masked, i + 1).getOrElse(fail("unbalanced parens in the relation"))
+    else {
       while (i < masked.length && (masked.charAt(i).isLetterOrDigit ||
         masked.charAt(i) == '.' || masked.charAt(i) == '_')) i += 1
       if (i == relStart) fail("missing relation")
@@ -4474,19 +3731,7 @@ object GraftSqlParser {
     i += 2
     // column list runs to INTO / ORDER / LIMIT / end at depth 0
     val c0 = i
-    var d = 0
-    var scanning = true
-    while (i < masked.length && scanning) {
-      val c = masked.charAt(i)
-      if (c == '(') { d += 1; i += 1 }
-      else if (c == ')') { d -= 1; i += 1 }
-      else if (d == 0 && c.isLetter &&
-        (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_')) {
-        val w = wordStartingAt(masked, i)
-        if (Set("INTO", "ORDER", "LIMIT", "OFFSET").contains(w.toUpperCase)) scanning = false
-        else i += math.max(w.length, 1)
-      } else i += 1
-    }
+    i = clauseEnd(masked, c0)(Set("INTO", "ORDER", "LIMIT", "OFFSET"))
     val colList = sql.substring(c0, i).trim
     if (colList.isEmpty) fail("ON lists no columns")
     var nameCol = "name"
@@ -4534,16 +3779,9 @@ object GraftSqlParser {
     * this is a dialect-compat/verification path; at scale express the
     * pairing through real join keys.
     */
-  def rewritePositional(sql: String): String = {
-    val masked = maskQuotes(sql)
-    PositionalRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) => rewritePositional(rewriteOnePositional(sql, masked, m))
-    }
-  }
+  def rewritePositional(sql: String): String = rewriteEach(sql, PositionalRe)(positional)
 
-  private def rewriteOnePositional(sql: String, masked: String,
-                                   m: scala.util.matching.Regex.Match): String = {
+  private def positional(m: Regex.Match, sql: String, masked: String): Step = {
     def fail(why: String): Nothing =
       throw new graft.functions.expressions.DuckDialectException(
         s"POSITIONAL JOIN couldn't be auto-rewritten ($why) — a distributed " +
@@ -4578,18 +3816,7 @@ object GraftSqlParser {
     if (i < 0 || masked.charAt(i) != ')')
       fail("the left side is not a parenthesized subquery")
     val lEnd = i
-    var d = 1
-    i -= 1
-    while (i >= 0 && d > 0) {
-      masked.charAt(i) match {
-        case ')' => d += 1
-        case '(' => d -= 1
-        case _ =>
-      }
-      if (d > 0) i -= 1
-    }
-    if (d != 0) fail("unbalanced parens on the left side")
-    val lStart = i
+    val lStart = openOf(masked, lEnd).getOrElse(fail("unbalanced parens on the left side"))
     // ---- right side (forward): ( subquery ) [AS] [alias]
     var j = m.end
     def skipWs(): Unit = while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
@@ -4597,17 +3824,7 @@ object GraftSqlParser {
     if (j >= masked.length || masked.charAt(j) != '(')
       fail("the right side is not a parenthesized subquery")
     val rStart = j
-    var d2 = 1
-    j += 1
-    while (j < masked.length && d2 > 0) {
-      masked.charAt(j) match {
-        case '(' => d2 += 1
-        case ')' => d2 -= 1
-        case _ =>
-      }
-      j += 1
-    }
-    if (d2 != 0) fail("unbalanced parens on the right side")
+    j = closeOf(masked, j + 1).getOrElse(fail("unbalanced parens on the right side"))
     val rEnd = j - 1
     skipWs()
     var rightAlias: String = null
@@ -4629,19 +3846,10 @@ object GraftSqlParser {
     // ---- each side's top-level trailing ORDER BY supplies the keys
     def orderKeys(start: Int, end: Int, side: String): String = {
       val inner = masked.substring(start + 1, end)
-      var k = 0
-      var dd = 0
       var obPos = -1
-      while (k < inner.length) {
-        val c = inner.charAt(k)
-        if (c == '(') { dd += 1; k += 1 }
-        else if (c == ')') { dd -= 1; k += 1 }
-        else if (dd == 0 && c.isLetter &&
-          (k == 0 || (!inner.charAt(k - 1).isLetterOrDigit && inner.charAt(k - 1) != '_'))) {
-          val w = wordStartingAt(inner, k)
-          if (w.equalsIgnoreCase("ORDER")) obPos = k
-          k += math.max(w.length, 1)
-        } else k += 1
+      depth0IndexWhere(inner) { k =>
+        if (wordAt(inner, k) == "ORDER") obPos = k
+        false
       }
       if (obPos < 0) fail(s"the $side side has no top-level ORDER BY")
       var p = obPos + 5
@@ -4649,22 +3857,7 @@ object GraftSqlParser {
       if (!wordStartingAt(inner, p).equalsIgnoreCase("BY")) fail(s"the $side side has no top-level ORDER BY")
       p += 2
       // keys run to a depth-0 LIMIT/OFFSET or the subquery end
-      var q = p
-      var d3 = 0
-      var keysEnd = inner.length
-      var scan = true
-      while (q < inner.length && scan) {
-        val c = inner.charAt(q)
-        if (c == '(') { d3 += 1; q += 1 }
-        else if (c == ')') { d3 -= 1; q += 1 }
-        else if (d3 == 0 && c.isLetter &&
-          (!inner.charAt(q - 1).isLetterOrDigit && inner.charAt(q - 1) != '_')) {
-          val w = wordStartingAt(inner, q)
-          if (w.equalsIgnoreCase("LIMIT") || w.equalsIgnoreCase("OFFSET")) {
-            keysEnd = q; scan = false
-          } else q += math.max(w.length, 1)
-        } else q += 1
-      }
+      val keysEnd = clauseEnd(inner, p)(w => w == "LIMIT" || w == "OFFSET")
       val keys = sql.substring(start + 1 + p, start + 1 + keysEnd).trim
       if (keys.isEmpty) fail(s"the $side side's ORDER BY lists no keys")
       // ordinals (ORDER BY 1) would be CONSTANTS inside a window frame
@@ -4685,35 +3878,13 @@ object GraftSqlParser {
       s"FROM ${sql.substring(rStart, rEnd + 1)} __graft_prs$n ) $ra"
     val replacement = s"$newLeft FULL OUTER JOIN $newRight ON $la.$lh = $ra.$rh "
     // ---- star-leak wrap, as in the ASOF rewrite
-    val stack = scala.collection.mutable.Stack[Int]()
-    var p = 0
-    while (p < lStart) {
-      masked.charAt(p) match {
-        case '(' => stack.push(p + 1)
-        case ')' => if (stack.nonEmpty) stack.pop()
-        case _ =>
-      }
-      p += 1
-    }
-    val blockStart = if (stack.isEmpty) 0 else stack.top
+    val blockStart = enclosingOpen(masked, lStart) + 1
     // which helper indexes leak into the output? a bare `*` leaks both;
     // a one-sided `alias.*` leaks only that side's (wrapping EXCEPT with
     // a helper the projection doesn't carry would be an analysis error)
     val leakedHelpers: Seq[String] = {
-      var k = blockStart; var d4 = 0; var fromPos = lStart; var looking = true
-      while (k < lStart && looking) {
-        val c = masked.charAt(k)
-        if (c == '(') d4 += 1
-        else if (c == ')') d4 -= 1
-        else if (d4 == 0 && c.isLetter &&
-          (k == 0 || (!masked.charAt(k - 1).isLetterOrDigit && masked.charAt(k - 1) != '_'))) {
-          val w = wordStartingAt(masked, k)
-          if (w == "FROM") { fromPos = k; looking = false }
-          else k += math.max(w.length, 1) - 1
-        }
-        k += 1
-      }
-      starQualifiers(masked, sql, blockStart, fromPos).flatMap {
+      val fromPos = depth0IndexWhere(masked, blockStart, lStart)(wordAt(masked, _) == "FROM")
+      starQualifiers(masked, sql, blockStart, if (fromPos < 0) lStart else fromPos).flatMap {
         case None => Seq(lh, rh)
         case Some(q) if q.equalsIgnoreCase(la) => Seq(lh)
         case Some(q) if q.equalsIgnoreCase(ra) => Seq(rh)
@@ -4721,96 +3892,44 @@ object GraftSqlParser {
       }.distinct
     }
     if (leakedHelpers.isEmpty)
-      sql.substring(0, lStart) + replacement + sql.substring(tailEnd)
+      Splice(lStart, tailEnd, replacement)
     else {
-      val tailTerminators = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
-      var q = tailEnd
-      var d5 = 0
-      var blockEnd = masked.length
-      var scan2 = true
-      while (q < masked.length && scan2) {
-        val c = masked.charAt(q)
-        if (c == '(') { d5 += 1; q += 1 }
-        else if (c == ')') {
-          if (d5 == 0) { blockEnd = q; scan2 = false } else { d5 -= 1; q += 1 }
-        } else if (d5 == 0 && c.isLetter &&
-          (q == 0 || (!masked.charAt(q - 1).isLetterOrDigit && masked.charAt(q - 1) != '_'))) {
-          val w = wordStartingAt(masked, q)
-          if (tailTerminators.contains(w)) { blockEnd = q; scan2 = false }
-          else q += math.max(w.length, 1)
-        } else q += 1
-      }
+      val blockEnd = clauseEnd(masked, tailEnd)(Set("UNION", "INTERSECT", "EXCEPT", "MINUS"))
       val block = sql.substring(blockStart, lStart) + replacement +
         sql.substring(tailEnd, blockEnd)
-      sql.substring(0, blockStart) +
-        s"SELECT * EXCEPT (${leakedHelpers.mkString(", ")}) FROM ( $block ) " +
-        sql.substring(blockEnd)
+      Splice(blockStart, blockEnd,
+        s"SELECT * EXCEPT (${leakedHelpers.mkString(", ")}) FROM ( $block ) ")
     }
   }
 
-  /** Star qualifiers at depth 0 of the select list: `None` for a bare
-    * `*`, `Some(t)` for `t.*`. (The boolean [[selectListHasStar]] stays
-    * for rewrites whose wrap is side-agnostic.)
+  /** Projection stars at depth 0 of the select list: `None` for a bare
+    * `*`, `Some(t)` for `t.*`. Distinguished from multiplication by the
+    * preceding token: a comma, a dot, or the SELECT/DISTINCT/ALL
+    * keyword means star.
     */
   private def starQualifiers(masked: String, sql: String, blockStart: Int,
                              fromPos: Int): Seq[Option[String]] = {
     val out = Seq.newBuilder[Option[String]]
-    var k = blockStart
-    var d = 0
-    while (k < fromPos) {
-      val c = masked.charAt(k)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && c == '*') {
-        val prevIdx = (k - 1 to blockStart by -1).find(x => !masked.charAt(x).isWhitespace)
-        prevIdx match {
-          case None => out += None
-          case Some(x) =>
-            val pc = masked.charAt(x)
-            if (pc == ',') out += None
-            else if (pc == '.') {
-              var b = x - 1
-              while (b >= blockStart && (masked.charAt(b).isLetterOrDigit ||
-                masked.charAt(b) == '_')) b -= 1
-              val q = sql.substring(b + 1, x)
-              if (q.nonEmpty) out += Some(q)
-            } else if ((pc.isLetterOrDigit || pc == '_') &&
-              Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, x)))
-              out += None
+    depth0IndexWhere(masked, blockStart, fromPos) { k =>
+      if (masked.charAt(k) == '*') {
+        val x = wsBefore(masked, k) - 1
+        if (x < blockStart) out += None
+        else {
+          val pc = masked.charAt(x)
+          if (pc == ',') out += None
+          else if (pc == '.') {
+            var b = x - 1
+            while (b >= blockStart && (masked.charAt(b).isLetterOrDigit ||
+              masked.charAt(b) == '_')) b -= 1
+            out += Some(sql.substring(b + 1, x))
+          } else if ((pc.isLetterOrDigit || pc == '_') &&
+            Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, x)))
+            out += None
         }
       }
-      k += 1
+      false
     }
     out.result()
-  }
-
-  /** Is there a projection star (`*`, `t.*`) at depth 0 of the select
-    * list? Distinguished from multiplication by the preceding token:
-    * a comma, a dot, or the SELECT/DISTINCT/ALL keyword means star.
-    */
-  private def selectListHasStar(masked: String, blockStart: Int, fromPos: Int): Boolean = {
-    var k = blockStart
-    var d = 0
-    while (k < fromPos) {
-      val c = masked.charAt(k)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && c == '*') {
-        val prevIdx = (k - 1 to blockStart by -1).find(x => !masked.charAt(x).isWhitespace)
-        val isProj = prevIdx match {
-          case None => true
-          case Some(x) =>
-            val pc = masked.charAt(x)
-            if (pc == ',' || pc == '.') true
-            else if (pc.isLetterOrDigit || pc == '_')
-              Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, x))
-            else false
-        }
-        if (isProj) return true
-      }
-      k += 1
-    }
-    false
   }
 
   private val ColumnsRe = raw"(?i)\bCOLUMNS\s*\(".r
@@ -4841,189 +3960,234 @@ object GraftSqlParser {
     * expansions only).
     */
   def rewriteColumns(sql: String, cols: Seq[String],
-      resolve: String => Option[Seq[String]] = _ => None): String = {
-    val masked = maskQuotes(sql)
-    ColumnsRe.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        val i = closeOf(masked, m.end) match {
-          case Some(e) => e
-          case None => return sql // unbalanced — let the parser report it
-        }
-        val argRaw = sql.substring(m.end, i - 1).trim
-        // expand against the ACTUAL source relation's schema when the
-        // block reads one resolvable table (r16, the rewriteReplace
-        // treatment) — the stage `df` contract stays the fallback
-        val srcCols = {
-          val stk = scala.collection.mutable.Stack[Int]()
-          var bj = 0
-          while (bj < m.start) {
-            masked.charAt(bj) match {
-              case '(' => stk.push(bj + 1)
-              case ')' => if (stk.nonEmpty) stk.pop()
-              case _ =>
-            }
-            bj += 1
-          }
-          val blockStart = if (stk.isEmpty) 0 else stk.top
-          blockFromRelation(sql, masked, blockStart).flatMap(resolve).getOrElse(cols)
-        }
-        val matched = matchedColumns(argRaw, srcCols) match {
-          case Some(ms) => ms
-          case None => return sql // unsupported arg form → guided error
-        }
-        if (matched.isEmpty)
-          throw new graft.functions.expressions.DuckDialectException(
-            s"COLUMNS($argRaw) matches no column of [${srcCols.mkString(", ")}]")
-        val (itemStart, itemEnd) = itemSpanContaining(masked, m.start) match {
-          case Some(s) if raw"(?i)\bSELECT\b".r
-              .findFirstMatchIn(masked.substring(s._1, m.start)).isDefined =>
-            // an intervening SELECT between the item start and the
-            // COLUMNS occurrence means COLUMNS sits in a NESTED
-            // subquery clause (e.g. a scalar subquery's WHERE) that no
-            // select list of its own claims — DuckDB binds COLUMNS
-            // against the INNER query's schema, so replicating the
-            // OUTER item against the stage schema would silently
-            // diverge (ADVICE r8 #3): keep the guided error instead
-            return sql
-          case Some(s) => s
-          case None =>
-            // WHERE-clause COLUMNS: DuckDB replicates the ENTIRE
-            // predicate per matched column and ANDs the replicas
-            // (`WHERE COLUMNS('a.*') > 0 OR b = 'y'` keeps rows where
-            // every column satisfies the full disjunction — verified
-            // against duckdb 1.0.0)
-            whereSpanContaining(masked, m.start) match {
-              case None => return sql // other clause → guided error
-              case Some((ws, we)) =>
-                val occs = ColumnsRe.findAllMatchIn(masked)
-                  .filter(o => o.start >= ws && o.start < we).toList
-                  .flatMap(o => closeOf(masked, o.end)
-                    .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
-                if (occs.exists(_._3 != argRaw))
-                  throw new graft.functions.expressions.DuckDialectException(
-                    "two COLUMNS(...) with different patterns in one predicate " +
-                      "have no sound expansion — DuckDB zips IDENTICAL expansions only")
-                val clause = sql.substring(ws, we)
-                val rel = occs.map { case (s, e, _) => (s - ws, e - ws) }
-                  .sortBy(-_._1)
-                val expansion = matched.map { c =>
-                  "(" + rel.foldLeft(clause) { case (acc, (s, e)) =>
-                    acc.substring(0, s) + s"`$c`" + acc.substring(e)
-                  }.trim + ")"
-                }.mkString(" AND ")
-                return rewriteColumns(sql.substring(0, ws) + " " + expansion +
-                  " " + sql.substring(we), cols, resolve)
-            }
-        }
-        // every COLUMNS inside the item must carry the SAME pattern
-        val occs = ColumnsRe.findAllMatchIn(masked)
-          .filter(o => o.start >= itemStart && o.start < itemEnd).toList
-          .flatMap(o => closeOf(masked, o.end)
-            .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
-        if (occs.exists(_._3 != argRaw))
-          throw new graft.functions.expressions.DuckDialectException(
-            "two COLUMNS(...) with different patterns in one select-list item " +
-              "have no sound expansion — DuckDB zips IDENTICAL expansions only")
-        // optional top-level trailing alias — DuckDB applies it to
-        // EVERY expansion. Forms: `AS ident`, `AS "quoted"`/`` `q` ``,
-        // and the IMPLICIT `expr ident` (no AS) — the last is detected
-        // only for a bare trailing identifier that can't be part of an
-        // expression (not a literal/keyword/interval unit; CAST(x AS t)
-        // never matches: its AS sits inside parens).
-        val itemMasked = masked.substring(itemStart, itemEnd)
-        def topLevel(end: Int): Boolean = {
-          val prefix = itemMasked.substring(0, end)
-          prefix.count(_ == '(') == prefix.count(_ == ')')
-        }
-        val asM = raw"""(?is)\s+AS\s+(?:([A-Za-z_]\w*)|"([^"]+)"|`([^`]+)`)\s*$$""".r
-          .findFirstMatchIn(itemMasked).filter(a => topLevel(a.start))
-        val implicitM =
-          if (asM.isDefined) None
-          else raw"""(?is)(\S)\s+(?:([A-Za-z_]\w*)|"([^"]+)"|`([^`]+)`)\s*$$""".r
-            .findFirstMatchIn(itemMasked)
-            .filter { a =>
-              val bare = a.group(2) != null
-              val w = if (bare) a.group(2).toUpperCase else ""
-              // words that legally END a select item without being an
-              // alias (literals, CASE END, interval units, null-order
-              // modifiers)
-              val nonAlias = Set("NULL", "NULLS", "TRUE", "FALSE", "END",
-                "UNKNOWN",
-                "YEAR", "YEARS", "MONTH", "MONTHS", "WEEK", "WEEKS",
-                "DAY", "DAYS", "HOUR", "HOURS", "MINUTE", "MINUTES",
-                "SECOND", "SECONDS", "MILLISECOND", "MILLISECONDS",
-                "MICROSECOND", "MICROSECONDS")
-              // the token BEFORE the candidate alias must END an
-              // expression: ')', quote/backtick, or a word that is not
-              // a word-operator / clause keyword (AND flag, THEN x,
-              // OVER w, AT TIME ZONE tz, x COLLATE c are expressions)
-              val prevEnd = a.end(1) - 1
-              val prevOk = {
-                val c = itemMasked.charAt(prevEnd)
-                if (c.isLetterOrDigit || c == '_') {
-                  val pw = wordEndingAt(itemMasked, prevEnd)
-                  !Set("AND", "OR", "NOT", "IN", "IS", "LIKE", "ILIKE",
-                    "RLIKE", "DIV", "MOD", "BETWEEN", "THEN", "WHEN",
-                    "ELSE", "ESCAPE", "DISTINCT", "ALL", "OVER",
-                    "COLLATE", "ZONE", "TIME", "AT", "INTERVAL",
-                    "IGNORE", "RESPECT").contains(pw)
-                } else ")'`\"".contains(c)
-              }
-              val gi = if (bare) 2 else if (a.group(3) != null) 3 else 4
-              topLevel(a.start(gi)) && (!bare || !nonAlias.contains(w)) && prevOk
-            }
-        def implicitGroup(a: scala.util.matching.Regex.Match): Int =
-          if (a.group(2) != null) 2 else if (a.group(3) != null) 3 else 4
-        // implicit-alias expr ends right after the last expression char
-        // (group 1) — works for bare and quoted alias tails alike
-        val exprLen = asM.map(_.start)
-          .orElse(implicitM.map(_.end(1)))
-          .getOrElse(itemMasked.length)
-        val alias = asM.map { a =>
-          val g = (1 to 3).find(i => a.group(i) != null).get
-          sql.substring(itemStart + a.start(g), itemStart + a.end(g))
-        }.orElse(implicitM.map { a =>
-          val g = implicitGroup(a)
-          sql.substring(itemStart + a.start(g), itemStart + a.end(g))
-        })
-        val exprSql = sql.substring(itemStart, itemStart + exprLen)
-        val relOccs = occs.map { case (s, e, _) => (s - itemStart, e - itemStart) }
-          .sortBy(-_._1)
-        val expansion = matched.map { c =>
-          val rep = relOccs.foldLeft(exprSql) { case (acc, (s, e)) =>
-            acc.substring(0, s) + s"`$c`" + acc.substring(e)
-          }.trim
-          alias match {
-            case Some(a) => s"$rep AS `$a`"
-            case None if rep == s"`$c`" => rep // bare form keeps the name
-            case None => s"$rep AS `$c`"
-          }
-        }.mkString(", ")
-        // the item span swallows its surrounding whitespace (itemStart
-        // abuts SELECT/',', itemEnd abuts FROM/','): re-pad
-        rewriteColumns(
-          sql.substring(0, itemStart) + " " + expansion + " " +
-            sql.substring(itemEnd), cols, resolve)
+      resolve: String => Option[Seq[String]] = _ => None): String =
+    rewriteEach(sql, ColumnsRe)(columnsItem(cols, resolve))
+
+  private def columnsItem(cols: Seq[String], resolve: String => Option[Seq[String]])(
+      m: Regex.Match, sql: String, masked: String): Step = {
+    // unbalanced — let the parser report it
+    val i = closeOf(masked, m.end).getOrElse(return Stop)
+    val argRaw = sql.substring(m.end, i - 1).trim
+    // expand against the ACTUAL source relation's schema when the
+    // block reads one resolvable table (r16, the rewriteReplace
+    // treatment) — the stage `df` contract stays the fallback
+    val srcCols = blockFromRelation(sql, masked, enclosingOpen(masked, m.start) + 1)
+      .flatMap(resolve).getOrElse(cols)
+    val matched = matchedColumns(argRaw, srcCols) match {
+      case Some(ms) => ms
+      case None => return Stop // unsupported arg form → guided error
     }
+    if (matched.isEmpty)
+      throw new graft.functions.expressions.DuckDialectException(
+        s"COLUMNS($argRaw) matches no column of [${srcCols.mkString(", ")}]")
+    val (itemStart, itemEnd) = itemSpanContaining(masked, m.start) match {
+      case Some(s) if raw"(?i)\bSELECT\b".r
+          .findFirstMatchIn(masked.substring(s._1, m.start)).isDefined =>
+        // an intervening SELECT between the item start and the
+        // COLUMNS occurrence means COLUMNS sits in a NESTED
+        // subquery clause (e.g. a scalar subquery's WHERE) that no
+        // select list of its own claims — DuckDB binds COLUMNS
+        // against the INNER query's schema, so replicating the
+        // OUTER item against the stage schema would silently
+        // diverge (ADVICE r8 #3): keep the guided error instead
+        return Stop
+      case Some(s) => s
+      case None =>
+        // WHERE-clause COLUMNS: DuckDB replicates the ENTIRE
+        // predicate per matched column and ANDs the replicas
+        // (`WHERE COLUMNS('a.*') > 0 OR b = 'y'` keeps rows where
+        // every column satisfies the full disjunction — verified
+        // against duckdb 1.0.0)
+        whereSpanContaining(masked, m.start) match {
+          case None => return Stop // other clause → guided error
+          case Some((ws, we)) =>
+            val occs = ColumnsRe.findAllMatchIn(masked)
+              .filter(o => o.start >= ws && o.start < we).toList
+              .flatMap(o => closeOf(masked, o.end)
+                .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
+            if (occs.exists(_._3 != argRaw))
+              throw new graft.functions.expressions.DuckDialectException(
+                "two COLUMNS(...) with different patterns in one predicate " +
+                  "have no sound expansion — DuckDB zips IDENTICAL expansions only")
+            val clause = sql.substring(ws, we)
+            val expansion = matched.map { c =>
+              "(" + applySplices(clause,
+                occs.map { case (s, e, _) => (s - ws, e - ws, s"`$c`") }).trim + ")"
+            }.mkString(" AND ")
+            return Splice(ws, we, " " + expansion + " ")
+        }
+    }
+    // every COLUMNS inside the item must carry the SAME pattern
+    val occs = ColumnsRe.findAllMatchIn(masked)
+      .filter(o => o.start >= itemStart && o.start < itemEnd).toList
+      .flatMap(o => closeOf(masked, o.end)
+        .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
+    if (occs.exists(_._3 != argRaw))
+      throw new graft.functions.expressions.DuckDialectException(
+        "two COLUMNS(...) with different patterns in one select-list item " +
+          "have no sound expansion — DuckDB zips IDENTICAL expansions only")
+    // optional top-level trailing alias — DuckDB applies it to
+    // EVERY expansion. Forms: `AS ident`, `AS "quoted"`/`` `q` ``,
+    // and the IMPLICIT `expr ident` (no AS) — the last is detected
+    // only for a bare trailing identifier that can't be part of an
+    // expression (not a literal/keyword/interval unit; CAST(x AS t)
+    // never matches: its AS sits inside parens).
+    val itemMasked = masked.substring(itemStart, itemEnd)
+    def topLevel(end: Int): Boolean = enclosingOpen(itemMasked, end) < 0
+    val asM = raw"""(?is)\s+AS\s+(?:([A-Za-z_]\w*)|"([^"]+)"|`([^`]+)`)\s*$$""".r
+      .findFirstMatchIn(itemMasked).filter(a => topLevel(a.start))
+    val implicitM =
+      if (asM.isDefined) None
+      else raw"""(?is)(\S)\s+(?:([A-Za-z_]\w*)|"([^"]+)"|`([^`]+)`)\s*$$""".r
+        .findFirstMatchIn(itemMasked)
+        .filter { a =>
+          val bare = a.group(2) != null
+          val w = if (bare) a.group(2).toUpperCase else ""
+          // words that legally END a select item without being an
+          // alias (literals, CASE END, interval units, null-order
+          // modifiers)
+          val nonAlias = Set("NULL", "NULLS", "TRUE", "FALSE", "END",
+            "UNKNOWN",
+            "YEAR", "YEARS", "MONTH", "MONTHS", "WEEK", "WEEKS",
+            "DAY", "DAYS", "HOUR", "HOURS", "MINUTE", "MINUTES",
+            "SECOND", "SECONDS", "MILLISECOND", "MILLISECONDS",
+            "MICROSECOND", "MICROSECONDS")
+          // the token BEFORE the candidate alias must END an
+          // expression: ')', quote/backtick, or a word that is not
+          // a word-operator / clause keyword (AND flag, THEN x,
+          // OVER w, AT TIME ZONE tz, x COLLATE c are expressions)
+          val prevEnd = a.end(1) - 1
+          val prevOk = {
+            val c = itemMasked.charAt(prevEnd)
+            if (c.isLetterOrDigit || c == '_') {
+              val pw = wordEndingAt(itemMasked, prevEnd)
+              !Set("AND", "OR", "NOT", "IN", "IS", "LIKE", "ILIKE",
+                "RLIKE", "DIV", "MOD", "BETWEEN", "THEN", "WHEN",
+                "ELSE", "ESCAPE", "DISTINCT", "ALL", "OVER",
+                "COLLATE", "ZONE", "TIME", "AT", "INTERVAL",
+                "IGNORE", "RESPECT").contains(pw)
+            } else ")'`\"".contains(c)
+          }
+          val gi = if (bare) 2 else if (a.group(3) != null) 3 else 4
+          topLevel(a.start(gi)) && (!bare || !nonAlias.contains(w)) && prevOk
+        }
+    def implicitGroup(a: scala.util.matching.Regex.Match): Int =
+      if (a.group(2) != null) 2 else if (a.group(3) != null) 3 else 4
+    // implicit-alias expr ends right after the last expression char
+    // (group 1) — works for bare and quoted alias tails alike
+    val exprLen = asM.map(_.start)
+      .orElse(implicitM.map(_.end(1)))
+      .getOrElse(itemMasked.length)
+    val alias = asM.map { a =>
+      val g = (1 to 3).find(i => a.group(i) != null).get
+      sql.substring(itemStart + a.start(g), itemStart + a.end(g))
+    }.orElse(implicitM.map { a =>
+      val g = implicitGroup(a)
+      sql.substring(itemStart + a.start(g), itemStart + a.end(g))
+    })
+    val exprSql = sql.substring(itemStart, itemStart + exprLen)
+    val expansion = matched.map { c =>
+      val rep = applySplices(exprSql,
+        occs.map { case (s, e, _) => (s - itemStart, e - itemStart, s"`$c`") }).trim
+      alias match {
+        case Some(a) => s"$rep AS `$a`"
+        case None if rep == s"`$c`" => rep // bare form keeps the name
+        case None => s"$rep AS `$c`"
+      }
+    }.mkString(", ")
+    // the item span swallows its surrounding whitespace (itemStart
+    // abuts SELECT/',', itemEnd abuts FROM/','): re-pad
+    Splice(itemStart, itemEnd, " " + expansion + " ")
   }
 
-  /** Index just past the ')' matching the '(' that `afterOpen` follows;
-    * None when unbalanced.
+  /** Index just past the `close` matching the `open` that `afterOpen`
+    * follows; None when unbalanced. Only the one bracket pair counts.
     */
-  private def closeOf(masked: String, afterOpen: Int): Option[Int] = {
+  private def closeOf(masked: String, afterOpen: Int,
+      open: Char = '(', close: Char = ')'): Option[Int] = {
     var i = afterOpen
     var d = 1
     while (i < masked.length && d > 0) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
+      val c = masked.charAt(i)
+      if (c == open) d += 1 else if (c == close) d -= 1
       i += 1
     }
     if (d == 0) Some(i) else None
   }
+
+  /** Index of the `open` matching the `close` at `closeAt` (the
+    * backward twin of [[closeOf]]); None when unbalanced.
+    */
+  private def openOf(masked: String, closeAt: Int,
+      open: Char = '(', close: Char = ')'): Option[Int] = {
+    var i = closeAt - 1
+    var d = 1
+    while (i >= 0) {
+      val c = masked.charAt(i)
+      if (c == close) d += 1
+      else if (c == open) { d -= 1; if (d == 0) return Some(i) }
+      i -= 1
+    }
+    None
+  }
+
+  /** Index of the innermost `(` still open at `pos`, or -1 at the top
+    * level; so `enclosingOpen(masked, pos) + 1` is where `pos`'s block
+    * starts.
+    */
+  private def enclosingOpen(masked: String, pos: Int): Int = {
+    var i = pos - 1
+    while (i >= 0 && masked.charAt(i) != '(')
+      i = if (masked.charAt(i) == ')') openOf(masked, i).getOrElse(0) - 1 else i - 1
+    i
+  }
+
+  /** First index in masked[from, until) at nesting depth 0 — relative
+    * to `from` — where `p` holds, or -1. Groups of the bracket pairs in
+    * `pairs` are skipped whole via [[closeOf]] (`p` still sees each
+    * opener); an unbalanced opener, or a closer that opens no group
+    * here (once `p` has seen it), ends the search.
+    */
+  private def depth0IndexWhere(masked: String, from: Int = 0, until: Int = -1,
+      pairs: String = "()")(p: Int => Boolean): Int = {
+    val end = if (until < 0) masked.length else until
+    var i = from
+    while (i < end) {
+      if (p(i)) return i
+      val k = pairs.indexOf(masked.charAt(i))
+      if (k % 2 == 1) return -1
+      i = if (k >= 0) closeOf(masked, i + 1, pairs(k), pairs(k + 1)).getOrElse(end) else i + 1
+    }
+    -1
+  }
+
+  /** The depth-0 index at or after `from` of the `)` that closes the
+    * enclosing group or of the first word in `stop`, whichever comes
+    * first; `until` (default: the end) when neither occurs.
+    */
+  private def clauseEnd(masked: String, from: Int, until: Int = -1)(
+      stop: String => Boolean): Int = {
+    val end = if (until < 0) masked.length else until
+    val i = depth0IndexWhere(masked, from, end) { k =>
+      masked.charAt(k) == ')' || stop(wordAt(masked, k))
+    }
+    if (i < 0) end else i
+  }
+
+  /** The upper-cased word starting at `i` when a word starts there
+    * (a letter not preceded by an identifier character), else "".
+    */
+  private def wordAt(masked: String, i: Int): String =
+    if (masked.charAt(i).isLetter &&
+      (i == 0 || !(masked.charAt(i - 1).isLetterOrDigit || masked.charAt(i - 1) == '_')))
+      wordStartingAt(masked, i)
+    else ""
+
+  /** Does `re` match `s` starting exactly at `at` (lookbehinds see the
+    * text before `at`)?
+    */
+  private def matchesAt(re: Regex, s: String, at: Int): Boolean =
+    re.pattern.matcher(s).region(at, s.length).useTransparentBounds(true).lookingAt()
 
   /** Column set matched by a COLUMNS(...) argument; None when the form
     * isn't supported (→ guided error).
@@ -5449,20 +4613,7 @@ object GraftSqlParser {
       "WINDOW", "UNION", "INTERSECT", "EXCEPT")
     var best: Option[(Int, Int)] = None
     for (wm <- WhereRe.findAllMatchIn(masked) if wm.end <= p) {
-      var j = wm.end
-      var depth = 0
-      var scanning = true
-      while (scanning && j < masked.length) {
-        val c = masked.charAt(j)
-        if (c == '(') { depth += 1; j += 1 }
-        else if (c == ')') {
-          if (depth == 0) scanning = false else { depth -= 1; j += 1 }
-        } else if (depth == 0 && (c.isLetter || c == '_')) {
-          val w = wordStartingAt(masked, j)
-          if (enders.contains(w)) scanning = false
-          else j += math.max(1, w.length)
-        } else j += 1
-      }
+      val j = clauseEnd(masked, wm.end)(enders)
       if (wm.end <= p && p < j) best = Some((wm.end, j))
     }
     best
@@ -5477,34 +4628,21 @@ object GraftSqlParser {
     val SelectRe = raw"(?i)\bSELECT\b".r
     var best: Option[(Int, Int)] = None
     for (sm <- SelectRe.findAllMatchIn(masked) if sm.end <= p) {
-      var j = sm.end
-      var depth = 0
-      var itemStart = j
-      var scanning = true
-      while (scanning && j < masked.length) {
-        val c = masked.charAt(j)
-        if (c == '(') { depth += 1; j += 1 }
-        else if (c == ')') {
-          if (depth == 0) { // the paren enclosing this SELECT closes
-            if (itemStart <= p && p < j) best = Some((itemStart, j))
-            scanning = false
-          } else { depth -= 1; j += 1 }
-        } else if (c == ',' && depth == 0) {
-          if (itemStart <= p && p < j) { best = Some((itemStart, j)); scanning = false }
-          else { j += 1; itemStart = j }
-        } else if (depth == 0 && (c.isLetter || c == '_')) {
-          val w = wordStartingAt(masked, j)
-          if (w == "FROM") {
-            if (itemStart <= p && p < j) best = Some((itemStart, j))
-            scanning = false
-          } else if ((w == "DISTINCT" || w == "ALL") &&
-              masked.substring(itemStart, j).trim.isEmpty) {
-            j += w.length; itemStart = j
-          } else j += math.max(1, w.length)
-        } else j += 1
+      var itemStart = sm.end
+      // the list ends at FROM or at the paren enclosing this SELECT;
+      // the item holding `p` ends at its comma
+      val j = depth0IndexWhere(masked, sm.end) { j =>
+        val w = wordAt(masked, j)
+        if ((w == "DISTINCT" || w == "ALL") && masked.substring(itemStart, j).trim.isEmpty)
+          itemStart = j + w.length
+        val ends = masked.charAt(j) == ')' || w == "FROM" ||
+          (masked.charAt(j) == ',' && itemStart <= p && p < j)
+        if (masked.charAt(j) == ',' && !ends) itemStart = j + 1
+        ends
       }
-      if (scanning && itemStart <= p && p <= j) // list ran to string end
-        best = Some((itemStart, j))
+      if (j >= 0 && itemStart <= p && p < j) best = Some((itemStart, j))
+      else if (j < 0 && itemStart <= p && p <= masked.length) // list ran to string end
+        best = Some((itemStart, masked.length))
     }
     best
   }
@@ -5592,22 +4730,8 @@ object GraftSqlParser {
     * the replaced name wasn't a stage-input column).
     */
   private def blockFromRelation(sql: String, masked: String, pos: Int): Option[String] = {
-    var i = pos
-    var d = 0
-    var fromAt = -1
-    var blockEnd = masked.length
-    while (i < masked.length && blockEnd == masked.length) {
-      val c = masked.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d < 0) blockEnd = i }
-      else if (d == 0 && fromAt < 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (w == "FROM") fromAt = i
-        else i += math.max(w.length, 1) - 1
-      }
-      i += 1
-    }
+    val blockEnd = clauseEnd(masked, pos)(_ => false)
+    val fromAt = depth0IndexWhere(masked, pos, blockEnd)(wordAt(masked, _) == "FROM")
     if (fromAt < 0) return None
     val fromEnd = depth0Find(masked,
       raw"(?i)\b(WHERE|GROUP|ORDER|LIMIT|HAVING|QUALIFY|WINDOW|UNION|INTERSECT|EXCEPT|USING|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|SEMI|ANTI)\b|,".r,
@@ -5645,112 +4769,100 @@ object GraftSqlParser {
     }
 
   def rewriteReplace(sql: String, cols: Seq[String],
-      resolve: String => Option[Seq[String]] = _ => None): String = {
-    val masked = maskQuotes(sql)
-    // `replace(...)` is also the string function and `*` is also
-    // multiplication (`a * replace(b, 'x', 'y')`), so a match only counts
-    // when the star sits in select-item position: start of text, after
-    // `,`/`(`, after SELECT/DISTINCT/ALL, or after `.` (qualified star —
-    // star context, but guided-error below).
-    val m0 = StarReplaceRe.findAllMatchIn(masked).find { m =>
-      (m.start - 1 to 0 by -1).find(j => !masked.charAt(j).isWhitespace) match {
-        case None => true
-        case Some(j) =>
-          val c = masked.charAt(j)
-          c == ',' || c == '(' || c == '.' ||
-            Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, j))
-      }
+      resolve: String => Option[Seq[String]] = _ => None): String =
+    rewriteEach(sql, StarReplaceRe) { (m, sql, masked) =>
+      // `replace(...)` is also the string function and `*` is also
+      // multiplication (`a * replace(b, 'x', 'y')`), so a match only
+      // counts when the star sits in select-item position: start of
+      // text, after `,`/`(`, after SELECT/DISTINCT/ALL, or after `.`
+      // (qualified star — star context, but guided-error below).
+      val j = wsBefore(masked, m.start) - 1
+      if (j < 0 || { val c = masked.charAt(j)
+        c == ',' || c == '(' || c == '.' ||
+          Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, j)) })
+        starReplace(cols, resolve)(m, sql, masked)
+      else Skip
     }
-    m0 match {
-      case None => sql
-      case Some(m) =>
-        // qualified star (t.* REPLACE): claimable when the block reads a
-        // single resolvable relation whose name/alias matches the
-        // qualifier (r16 — DuckDB supports the form; single-relation
-        // blocks make the qualifier redundant, so the bare expansion is
-        // exact); anything else keeps the guided error
-        val qual: Option[(String, Int)] =
-          (m.start - 1 to 0 by -1).find(j => !masked.charAt(j).isWhitespace)
-            .filter(j => masked.charAt(j) == '.')
-            .map { j =>
-              val w = wordEndingAt(masked, j - 1)
-              if (w.isEmpty)
-                throw new graft.functions.expressions.DuckDialectException(
-                  "qualified-star REPLACE: could not read the qualifier — " +
-                    "list the columns explicitly")
-              (w, j - w.length)
-            }
-        var i = m.end
-        var d = 1
-        while (i < masked.length && d > 0) {
-          masked.charAt(i) match {
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (d > 0) return sql // unbalanced — let the parser report it
-        val close = i - 1
-        // prefer the ACTUAL source relation's schema (r16): a star over
-        // `FROM <table>` expands against that table; the stage `df`
-        // contract stays the fallback for df-sourced and complex FROMs
-        val relParts = blockFromRelationParts(sql, masked, close + 1)
-        val resolved = relParts.map(_._1).flatMap(resolve)
-        val srcCols = resolved.getOrElse(cols)
-        qual.foreach { case (q, _) =>
-          val matches = relParts.exists { case (nm, al) =>
-            q.equalsIgnoreCase(nm) || q.equalsIgnoreCase(nm.split('.').last) ||
-              al.exists(_.equalsIgnoreCase(q))
-          }
-          if (!matches || (resolved.isEmpty && !q.equalsIgnoreCase("df")))
+
+  private def starReplace(cols: Seq[String], resolve: String => Option[Seq[String]])(
+      m: Regex.Match, sql: String, masked: String): Step = {
+    // qualified star (t.* REPLACE): claimable when the block reads a
+    // single resolvable relation whose name/alias matches the
+    // qualifier (r16 — DuckDB supports the form; single-relation
+    // blocks make the qualifier redundant, so the bare expansion is
+    // exact); anything else keeps the guided error
+    val qual: Option[(String, Int)] =
+      (m.start - 1 to 0 by -1).find(j => !masked.charAt(j).isWhitespace)
+        .filter(j => masked.charAt(j) == '.')
+        .map { j =>
+          val w = wordEndingAt(masked, j - 1)
+          if (w.isEmpty)
             throw new graft.functions.expressions.DuckDialectException(
-              s"qualified-star REPLACE ($q.* REPLACE (...)) expands only when " +
-                "the block reads a single resolvable relation named/aliased " +
-                s"like the qualifier — list the columns explicitly")
+              "qualified-star REPLACE: could not read the qualifier — " +
+                "list the columns explicitly")
+          (w, j - w.length)
         }
-        val byLower = srcCols.map(c => c.toLowerCase -> c).toMap
-        val itemRe = raw"(?is)^(.*\S)\s+AS\s+(`[^`]+`|\x22[^\x22]+\x22|[A-Za-z_]\w*)\s*$$".r
-        val repl: Map[String, String] =
-          splitTopLevel(sql.substring(m.end, close), masked.substring(m.end, close))
-            .map { item =>
-              item.trim match {
-                case itemRe(expr, name0) =>
-                  val name = name0.stripPrefix("`").stripSuffix("`")
-                    .stripPrefix("\"").stripSuffix("\"").toLowerCase
-                  if (!byLower.contains(name))
-                    throw new graft.functions.expressions.DuckDialectException(
-                      s"* REPLACE targets `$name`, not a column of " +
-                        s"[${srcCols.mkString(", ")}]")
-                  name -> expr.trim
-                case other =>
-                  throw new graft.functions.expressions.DuckDialectException(
-                    s"* REPLACE item `$other` — each item must be `expr AS column`")
-              }
-            }.toMap
-        val excluded: Set[String] = Option(m.group(1)) match {
-          case None => Set.empty
-          case Some(list) => list.split(',').iterator.map(_.trim)
-            .filter(_.nonEmpty)
-            .map(_.stripPrefix("`").stripSuffix("`")
-              .stripPrefix("\"").stripSuffix("\"").toLowerCase).toSet
-        }
-        val expansion = srcCols
-          .filterNot(c => excluded.contains(c.toLowerCase))
-          .map { c =>
-            repl.get(c.toLowerCase) match {
-              case Some(expr) => s"$expr AS `$c`"
-              case None => s"`$c`"
-            }
-          }.mkString(", ")
-        if (expansion.isEmpty)
-          throw new graft.functions.expressions.DuckDialectException(
-            "* EXCLUDE ... REPLACE excluded every column of the stage schema")
-        // a matched qualifier is consumed with the star (the expansion's
-        // bare names resolve in the single-relation block)
-        val expStart = qual.map(_._2).getOrElse(m.start)
-        rewriteReplace(sql.substring(0, expStart) + expansion + sql.substring(i), cols, resolve)
+    // unbalanced — let the parser report it
+    val i = closeOf(masked, m.end).getOrElse(return Stop)
+    val close = i - 1
+    // prefer the ACTUAL source relation's schema (r16): a star over
+    // `FROM <table>` expands against that table; the stage `df`
+    // contract stays the fallback for df-sourced and complex FROMs
+    val relParts = blockFromRelationParts(sql, masked, close + 1)
+    val resolved = relParts.map(_._1).flatMap(resolve)
+    val srcCols = resolved.getOrElse(cols)
+    qual.foreach { case (q, _) =>
+      val matches = relParts.exists { case (nm, al) =>
+        q.equalsIgnoreCase(nm) || q.equalsIgnoreCase(nm.split('.').last) ||
+          al.exists(_.equalsIgnoreCase(q))
+      }
+      if (!matches || (resolved.isEmpty && !q.equalsIgnoreCase("df")))
+        throw new graft.functions.expressions.DuckDialectException(
+          s"qualified-star REPLACE ($q.* REPLACE (...)) expands only when " +
+            "the block reads a single resolvable relation named/aliased " +
+            s"like the qualifier — list the columns explicitly")
     }
+    val byLower = srcCols.map(c => c.toLowerCase -> c).toMap
+    val itemRe = raw"(?is)^(.*\S)\s+AS\s+(`[^`]+`|\x22[^\x22]+\x22|[A-Za-z_]\w*)\s*$$".r
+    val repl: Map[String, String] =
+      splitTopLevel(sql.substring(m.end, close), masked.substring(m.end, close))
+        .map { item =>
+          item.trim match {
+            case itemRe(expr, name0) =>
+              val name = name0.stripPrefix("`").stripSuffix("`")
+                .stripPrefix("\"").stripSuffix("\"").toLowerCase
+              if (!byLower.contains(name))
+                throw new graft.functions.expressions.DuckDialectException(
+                  s"* REPLACE targets `$name`, not a column of " +
+                    s"[${srcCols.mkString(", ")}]")
+              name -> expr.trim
+            case other =>
+              throw new graft.functions.expressions.DuckDialectException(
+                s"* REPLACE item `$other` — each item must be `expr AS column`")
+          }
+        }.toMap
+    val excluded: Set[String] = Option(m.group(1)) match {
+      case None => Set.empty
+      case Some(list) => list.split(',').iterator.map(_.trim)
+        .filter(_.nonEmpty)
+        .map(_.stripPrefix("`").stripSuffix("`")
+          .stripPrefix("\"").stripSuffix("\"").toLowerCase).toSet
+    }
+    val expansion = srcCols
+      .filterNot(c => excluded.contains(c.toLowerCase))
+      .map { c =>
+        repl.get(c.toLowerCase) match {
+          case Some(expr) => s"$expr AS `$c`"
+          case None => s"`$c`"
+        }
+      }.mkString(", ")
+    if (expansion.isEmpty)
+      throw new graft.functions.expressions.DuckDialectException(
+        "* EXCLUDE ... REPLACE excluded every column of the stage schema")
+    // a matched qualifier is consumed with the star (the expansion's
+    // bare names resolve in the single-relation block)
+    val expStart = qual.map(_._2).getOrElse(m.start)
+    Splice(expStart, i, expansion)
   }
 
   /** `SUMMARIZE <target>` statement detection: Some(target text) when
@@ -6009,10 +5121,10 @@ object GraftSqlParser {
     val reg = macrosIfAny(spark).getOrElse(return sql)
     val CallRe = raw"(?i)(?<![\w.`])([A-Za-z_]\w*)\s*\(".r
     var cur = sql
-    var depth = 0
+    var rounds = 0
     var changed = true
     while (changed) {
-      if (depth > 10)
+      if (rounds > 10)
         throw new graft.functions.expressions.DuckDialectException(
           "macro expansion exceeded depth 10 — recursive macro? DuckDB macros " +
             "cannot recurse; unroll the recursion or use an iterative operator")
@@ -6034,7 +5146,7 @@ object GraftSqlParser {
       }
       sb.append(cur.substring(pos))
       cur = sb.toString
-      depth += 1
+      rounds += 1
     }
     cur
   }
@@ -6136,23 +5248,8 @@ object GraftSqlParser {
     * (the `columns={'a':'T','b':'U'}` struct literal carries commas
     * that [[splitTopLevel]]'s paren-only depth would split on).
     */
-  private def splitReadArgs(raw: String, masked: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var d = 0
-    var last = 0
-    var k = 0
-    while (k < masked.length) {
-      masked.charAt(k) match {
-        case '(' | '{' | '[' => d += 1
-        case ')' | '}' | ']' => d -= 1
-        case ',' if d == 0 => out += raw.substring(last, k); last = k + 1
-        case _ =>
-      }
-      k += 1
-    }
-    out += raw.substring(last)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  private def splitReadArgs(raw: String, masked: String): Seq[String] =
+    splitTopLevel(raw, masked, "(){}[]").map(_.trim).filter(_.nonEmpty)
 
   /** Rewrite DuckDB's `read_csv_auto('p') / read_csv / read_parquet /
     * read_json_auto / read_json` TABLE functions (FROM-position file
@@ -6732,26 +5829,13 @@ object GraftSqlParser {
     val masked = maskQuotes(sql)
     if (raw"(?is)^\s*(INSERT|UPDATE|DELETE)\b".r.findFirstIn(masked).isEmpty)
       return (sql, None)
-    var d = 0
-    var i = 0
-    while (i < masked.length) {
-      val c = masked.charAt(i)
-      if (c == '(') { d += 1; i += 1 }
-      else if (c == ')') { d -= 1; i += 1 }
-      else if (d == 0 && c.isLetter &&
-        (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit && masked.charAt(i - 1) != '_'))) {
-        val w = wordStartingAt(masked, i)
-        if (w.equalsIgnoreCase("RETURNING")) {
-          val proj = sql.substring(i + w.length).replaceAll(";\\s*$", "").trim
-          if (proj.isEmpty)
-            throw new graft.functions.expressions.DuckDialectException(
-              "RETURNING needs a projection list (columns, expressions, or *)")
-          return (sql.substring(0, i), Some(proj))
-        }
-        i += math.max(w.length, 1)
-      } else i += 1
-    }
-    (sql, None)
+    val i = depth0IndexWhere(masked)(wordAt(masked, _) == "RETURNING")
+    if (i < 0) return (sql, None)
+    val proj = sql.substring(i + "RETURNING".length).replaceAll(";\\s*$", "").trim
+    if (proj.isEmpty)
+      throw new graft.functions.expressions.DuckDialectException(
+        "RETURNING needs a projection list (columns, expressions, or *)")
+    (sql.substring(0, i), Some(proj))
   }
 
   /** A parsed `UPDATE table SET col = expr[, ...] [FROM tables]
@@ -6778,22 +5862,9 @@ object GraftSqlParser {
     val restMasked = maskQuotes(rest)
     // depth-0 keyword scan: FROM (joined update) and WHERE end the SET
     // list, WHERE ends the FROM list
-    var d = 0
-    var whereAt = -1
-    var fromAt = -1
-    var k = 0
-    while (k < restMasked.length && whereAt < 0) {
-      val c = restMasked.charAt(k)
-      if (c == '(') { d += 1; k += 1 }
-      else if (c == ')') { d -= 1; k += 1 }
-      else if (d == 0 && c.isLetter &&
-        (k == 0 || (!restMasked.charAt(k - 1).isLetterOrDigit && restMasked.charAt(k - 1) != '_'))) {
-        val w = wordStartingAt(restMasked, k)
-        if (w == "WHERE") whereAt = k
-        else if (w == "FROM" && fromAt < 0) fromAt = k
-        k += math.max(w.length, 1)
-      } else k += 1
-    }
+    val whereAt = depth0IndexWhere(restMasked)(wordAt(restMasked, _) == "WHERE")
+    val fromAt = depth0IndexWhere(restMasked, 0, if (whereAt < 0) restMasked.length else whereAt)(
+      wordAt(restMasked, _) == "FROM")
     val setEnd = if (fromAt >= 0) fromAt else if (whereAt >= 0) whereAt else rest.length
     val setPart = rest.substring(0, setEnd)
     val fromPart =
@@ -7536,18 +6607,8 @@ object GraftSqlParser {
       }
     }
     // depth-0 scan for the ON CONFLICT clause
-    var d = 0
-    var confAt = -1
-    var k = 0
-    while (k < restMasked.length && confAt < 0) {
-      val c = restMasked.charAt(k)
-      if (c == '(') { d += 1; k += 1 }
-      else if (c == ')') { d -= 1; k += 1 }
-      else if (d == 0 && (c == 'O' || c == 'o') &&
-        (k == 0 || (!restMasked.charAt(k - 1).isLetterOrDigit && restMasked.charAt(k - 1) != '_')) &&
-        raw"(?is)^ON\s+CONFLICT\b".r.findFirstIn(restMasked.substring(k)).isDefined) {
-        confAt = k
-      } else k += 1
+    val confAt = depth0IndexWhere(restMasked) { k =>
+      wordAt(restMasked, k) == "ON" && matchesAt(raw"(?is)ON\s+CONFLICT\b".r, restMasked, k)
     }
     if (confAt < 0) {
       if (rest.trim.isEmpty) insertFail(table, "missing source query")
@@ -7656,12 +6717,13 @@ object GraftSqlParser {
     */
   def unionByNameTarget(sql: String): Option[UnionByNameSpec] = {
     val masked = maskQuotes(sql)
-    def depth0(p: Int): Boolean = {
-      val pre = masked.substring(0, p)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }
-    val bounds = raw"(?i)\bUNION\s+(ALL\s+)?BY\s+NAME\b".r
-      .findAllMatchIn(masked).filter(m => depth0(m.start)).toList
+    val all = raw"(?i)\bUNION\s+(ALL\s+)?BY\s+NAME\b".r.findAllMatchIn(masked).toList
+    if (all.isEmpty) return None
+    val starts = all.map(_.start).toSet
+    val top = Set.newBuilder[Int]
+    depth0IndexWhere(masked) { k => if (starts(k)) top += k; false }
+    val atTop = top.result()
+    val bounds = all.filter(m => atTop(m.start))
     if (bounds.isEmpty) return None
     // leading CTE prefix: everything before the first depth-0 SELECT
     // (or FROM-first FROM) — replicated onto every side
@@ -7669,8 +6731,7 @@ object GraftSqlParser {
     // FROM-first FROM) marks where the union's first side begins
     val bodyStart =
       if (raw"(?is)^\s*WITH\b".r.findFirstIn(masked).isDefined)
-        raw"(?i)\bSELECT\b|\bFROM\b".r.findAllMatchIn(masked)
-          .find(m => depth0(m.start)).map(_.start).getOrElse(0)
+        depth0Find(masked, raw"(?i)\bSELECT\b|\bFROM\b".r, 0, masked.length).getOrElse(0)
       else 0
     val prefix = sql.substring(0, bodyStart)
     val cuts = bounds.map(m => (m.start, m.end, m.group(1) != null))
@@ -7681,13 +6742,8 @@ object GraftSqlParser {
       last = e0
     }
     // the LAST side may carry whole-union ORDER BY / LIMIT / OFFSET
-    val lastMasked = masked.substring(last)
-    val tailPos = raw"(?i)\bORDER\s+BY\b|\bLIMIT\b|\bOFFSET\b".r
-      .findAllMatchIn(lastMasked)
-      .find(m => {
-        val pre = lastMasked.substring(0, m.start)
-        pre.count(_ == '(') == pre.count(_ == ')')
-      }).map(_.start)
+    val tailPos = depth0Find(masked, raw"(?i)\bORDER\s+BY\b|\bLIMIT\b|\bOFFSET\b".r,
+      last, masked.length).map(_ - last)
     val (lastSide, tail) = tailPos match {
       case Some(tp) => (sql.substring(last, last + tp), sql.substring(last + tp))
       case None => (sql.substring(last), "")

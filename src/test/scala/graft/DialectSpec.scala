@@ -3397,6 +3397,37 @@ class DialectSpec extends SparkSpec {
     // divide = the // operator as a function (probed 3 and 3.75)
     assert(one("SELECT divide(7, 2) AS m").getAs[Number](0).longValue == 3L)
     assert(one("SELECT divide(7.5, 2) AS m").getDouble(0) == 3.75)
+    // a dot-call that emits a renamed head still gets the native
+    // (probed duckdb 1.0.0: 2.0 and 'aXb2', first match only; DuckDB
+    // rejects the bare-literal receiver `'day'.date_diff(...)`)
+    assert(one("SELECT (100).log() AS m").getDouble(0) == 2.0)
+    assert(one("SELECT ('a1b2').regexp_replace('\\d', 'X') AS m").getString(0) == "aXb2")
+  }
+
+  test("rewrite passes are loops: thousands of occurrences neither overflow nor rescan") {
+    // one statement of 4000 copies per unit, rewritten on a thread with
+    // the JVM-default 1 MB stack whatever the runner's -Xss; each copy
+    // must come out rewritten exactly once
+    val units = Seq(
+      "s.trim()" -> "trim(", "c ** 2" -> "power(", "c ^ 2" -> "power(",
+      "c // 2" -> "graft_ddiv(", "j->>'k'" -> "get_json_object(",
+      "format('{} x', c)" -> "graft_fmt_spec(", "log(c)" -> "duck_log(",
+      "{'k': c}" -> "named_struct(", "datediff('day', d, e)" -> "graft_date_diff(")
+    val n = 4000
+    @volatile var failure: Throwable = null
+    val body: Runnable = () =>
+      try units.foreach { case (unit, head) =>
+        val out = GraftSqlParser.rewriteAll(Seq.fill(n)(unit).mkString("SELECT ", ", ", " FROM t"))
+        assert(out.sliding(head.length).count(_ == head) == n, s"unit $unit")
+      } catch { case e: Throwable => failure = e }
+    val t = new Thread(null, body, "rewrite-wide", 1L << 20)
+    t.start()
+    t.join()
+    failure match {
+      case null =>
+      case e: org.scalatest.exceptions.TestFailedException => throw e
+      case e => fail(s"rewriteAll threw $e", e)
+    }
   }
 
   test("UPDATE ... FROM and RETURNING execute with DuckDB semantics (r13)") {
