@@ -631,7 +631,7 @@ object VectorFunctions {
         k = 1, tieHigh = true))
     // index → cent_id map straight from the already-collected ordering
     // (a LocalRelation — the previous nlist-row window re-planned a
-    // sort+exchange job per call, r9 JobCount)
+    // sort+exchange job per call, r9 job count)
     val centIdx = localCentIdx(spark, ordered, cents.schema("cent_id").dataType)
     candidates
       .withColumn("__graft_cidx", get(nearest, lit(0)))
@@ -860,7 +860,7 @@ object VectorFunctions {
     // assignment and every probe's centroid ranking read local rows —
     // an eager localCheckpoint did the same materialization but left
     // downstream consumers re-planning checkpoint scans (one extra job
-    // each, r9 JobCount); collecting in cent_id order means the
+    // each, r9 job count); collecting in cent_id order means the
     // consumers' own orderBy(cent_id).collect() re-sorts identically.
     val refined = lloydRefine(train, seeds, refine)
     val centRows = collectSortedByLong(refined, 0)

@@ -541,7 +541,9 @@ object GraftSqlParser {
     * `date_diff('part', a, b)` / `datediff('part', …)`: DuckDB carries
     * the datepart as a QUOTED string, and Spark's PARSER special-cases
     * these names and demands an unquoted unit keyword, so the call
-    * never reaches the function registry; the quoted-part calls go to
+    * never reaches the function registry; the quoted-part calls (the
+    * quote may sit in paren groups, as in the dot-call's
+    * `date_diff(('day'), …)`) go to
     * `graft_date_diff` (DuckDB's boundary-crossing semantics) while
     * Spark's own unquoted forms (`date_diff(DAY, a, b)`) pass through.
     * `regexp_replace`: DuckDB replaces the FIRST match only unless the
@@ -565,7 +567,7 @@ object GraftSqlParser {
     "regexp_replace" -> "duck_regexp_replace(", "extract" -> "epoch(",
     "log" -> "duck_log(")
 
-  private val RenameRe = ("(?i)(?<![\\w.])(?:(date_diff|datediff)(?=\\s*\\(\\s*')|" +
+  private val RenameRe = ("(?i)(?<![\\w.])(?:(date_diff|datediff)(?=(?:\\s*\\()+\\s*')|" +
     "(regexp_replace|log)\\s*\\(|(EXTRACT)\\s*\\(\\s*EPOCH\\s+FROM\\b)").r
 
   /** Every [[Renames]] head in one pass. A rename never creates a

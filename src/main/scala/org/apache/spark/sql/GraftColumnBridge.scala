@@ -21,4 +21,9 @@ object GraftColumnBridge {
     * that piggyback convergence counters on checkpoint actions.
     */
   def observedOrEmpty(o: Observation): Map[String, Any] = o.getOrEmpty
+
+  /** Blocks until every listener has handled the events posted so far
+    * (`listenerBus` is `private[spark]`), for a reader of listener data.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -3398,10 +3398,14 @@ class DialectSpec extends SparkSpec {
     assert(one("SELECT divide(7, 2) AS m").getAs[Number](0).longValue == 3L)
     assert(one("SELECT divide(7.5, 2) AS m").getDouble(0) == 3.75)
     // a dot-call that emits a renamed head still gets the native
-    // (probed duckdb 1.0.0: 2.0 and 'aXb2', first match only; DuckDB
-    // rejects the bare-literal receiver `'day'.date_diff(...)`)
+    // (probed duckdb 1.0.0: 2.0, 'aXb2' (first match only) and 2; DuckDB
+    // rejects the bare-literal receiver `'day'.date_diff(...)`, and the
+    // parenthesized one leaves its part in a paren group:
+    // date_diff(('day'), …))
     assert(one("SELECT (100).log() AS m").getDouble(0) == 2.0)
     assert(one("SELECT ('a1b2').regexp_replace('\\d', 'X') AS m").getString(0) == "aXb2")
+    assert(one("SELECT ('day').date_diff(DATE '2024-01-01', DATE '2024-01-03') AS m")
+      .getLong(0) == 2L)
   }
 
   test("rewrite passes are loops: thousands of occurrences neither overflow nor rescan") {
