@@ -289,20 +289,8 @@ object Bench {
           // duckbase reads <dir>/oracle_sql.json — dump the CURRENT
           // oracle set (the exact SQL the correctness gate replays)
           val dir = java.nio.file.Files.createTempDirectory("graft_duckbase")
-          def esc(s: String): String = s.flatMap {
-            case '"' => "\\\""
-            case '\\' => "\\\\"
-            case '\n' => "\\n"
-            case '\r' => "\\r"
-            case '\t' => "\\t"
-            case c if c < ' ' => f"\\u${c.toInt}%04x"
-            case c => c.toString
-          }
-          val oracleJson = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-            .map { case (k, v) => "\"" + esc(k) + "\": \"" + esc(v) + "\"" }
-            .mkString("{", ", ", "}")
-          java.nio.file.Files.write(dir.resolve("oracle_sql.json"),
-            oracleJson.getBytes("UTF-8"))
+          Verify.writeJson(dir.resolve("oracle_sql.json"),
+            SparkEntry.oracleSql.toSeq.sortBy(_._1))
           val passes = sys.env.getOrElse("GRAFT_BENCH_DUCKDB_PASSES", "3")
           val pb = new ProcessBuilder("python3", script.getPath,
             sfDir, dir.toString, passes)

@@ -61,30 +61,14 @@ object Verify {
         .sortBy(_.getFileName.toString)
         .map(p => p.getFileName.toString -> Files.readString(p))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson(Paths.get(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql.toSeq)
     // A thrown query must never become a silent omission from the
     // correctness report: record it as an explicit artifact AND exit
     // non-zero so the driver treats the round as failed, not green.
     // `failed` includes markers left by PREVIOUS runs whose queries this
     // run didn't re-execute — their stale parquet must not read green.
     if (failed.nonEmpty) {
-      val fj = failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/failed.json"), fj)
+      writeJson(Paths.get(s"$outDir/failed.json"), failed)
       System.err.println(s"[verify] ${failed.size} queries FAILED: " +
         failed.map(_._1).mkString(", "))
       spark.stop()
@@ -92,5 +76,15 @@ object Verify {
     }
     Files.deleteIfExists(Paths.get(s"$outDir/failed.json"))
     spark.stop()
+  }
+
+  /** Write `entries` as one JSON object of strings, keys in the given
+    * order (Jackson escapes every control char, so SQL with a tab or CR
+    * still loads).
+    */
+  private[graft] def writeJson(path: java.nio.file.Path, entries: Seq[(String, String)]): Unit = {
+    val obj = new java.util.LinkedHashMap[String, String]
+    entries.foreach { case (k, v) => obj.put(k, v) }
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValue(path.toFile, obj)
   }
 }

@@ -2660,26 +2660,26 @@ object GraftSqlParser {
     out.result()
   }
 
-  /** CTE-scoped sites of the empty-input grouping-sets parity (r18 —
-    * fuzz template 63 found the WITH-wrapped form of the r17
-    * divergence: DuckDB's grand-total row materializes inside a CTE
-    * too, so `WITH g AS (SELECT ... GROUP BY GROUPING SETS (..., ()))
-    * SELECT ... OVER ... FROM g` returns one row over an empty input
-    * where plain Spark returns none). Each top-level CTE body that
-    * matches [[emptyGroupingSetsSpec]] yields a (bodyStart, bodyEnd,
-    * spec) site; [[graft.operators.SqlStage]] probes each and splices
-    * an aligned arm view over the span when the body's input is
+  /** Sites of the empty-input grouping-sets parity: (start, end, spec)
+    * spans that match [[emptyGroupingSetsSpec]]. The whole statement is
+    * one site, `(0, sql.length, spec)`, when it matches; otherwise each
+    * top-level CTE body that matches is one (r18 — fuzz template 63
+    * found the WITH-wrapped form of the r17 divergence: DuckDB's
+    * grand-total row materializes inside a CTE too, so `WITH g AS
+    * (SELECT ... GROUP BY GROUPING SETS (..., ())) SELECT ... OVER ...
+    * FROM g` returns one row over an empty input where plain Spark
+    * returns none). [[graft.operators.SqlStage]] probes each site and
+    * splices an aligned arm view over the span when the site's input is
     * provably empty. The OUTER query's shape is unconstrained (windows
     * over the CTE are fine — parity is restored before it runs); a
     * body referencing an earlier same-statement CTE fails its probe's
     * analysis and falls back to plain Spark behavior.
     */
-  def emptyGroupingSetsCteSites(sql: String): Seq[(Int, Int, EmptyGroupingSpec)] = {
-    val masked = maskQuotes(sql)
-    cteBodySpans(masked).flatMap { case (bs, be) =>
-      emptyGroupingSetsSpec(sql.substring(bs, be)).map(spec => (bs, be, spec))
-    }
-  }
+  def emptyGroupingSetsCteSites(sql: String): Seq[(Int, Int, EmptyGroupingSpec)] =
+    emptyGroupingSetsSpec(sql).map(spec => Seq((0, sql.length, spec))).getOrElse(
+      cteBodySpans(maskQuotes(sql)).flatMap { case (bs, be) =>
+        emptyGroupingSetsSpec(sql.substring(bs, be)).map(spec => (bs, be, spec))
+      })
 
   def rewriteDistinctOn(sql: String): String = rewriteEach(sql, DistinctOnRe)(distinctOn)
 

@@ -3,6 +3,7 @@ package graft.operators
 import graft.model.StageConfig
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 import scala.jdk.CollectionConverters._
 
@@ -46,16 +47,14 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // share intermediate results via CREATE TEMP TABLE AS instead) —
     // and the stage's output is the LAST such statement's result,
     // DuckDB's last-statement rule.
-    val stmts = GraftSqlParser.splitStatements(code)
-    if (stmts.lengthCompare(1) > 0) {
-      var out = df
-      stmts.foreach { st =>
-        if (GraftSqlParser.isCreateMacroStatement(st))
-          GraftSqlParser.registerMacro(spark, st)
-        else out = SqlStage(name, st).apply(spark, df)
-      }
-      return out
+    def runBatch(stmts: Seq[String]): DataFrame = stmts.foldLeft(df) { (out, st) =>
+      if (GraftSqlParser.isCreateMacroStatement(st)) {
+        GraftSqlParser.registerMacro(spark, st)
+        out
+      } else SqlStage(name, st).apply(spark, df)
     }
+    val stmts = GraftSqlParser.splitStatements(code)
+    if (stmts.lengthCompare(1) > 0) return runBatch(stmts)
     // single statement: use the comment-stripped form splitStatements
     // produced, so a leading `--`/`/* */` comment can't defeat the
     // head-anchored detectors below (r12 fuzz; Spark itself accepts
@@ -108,6 +107,15 @@ final case class SqlStage(name: String, code: String) extends Stage {
       spark.catalog.tableExists(t) &&
         scala.util.Try(spark.catalog.getTable(t)).toOption
           .exists(_.tableType == "TEMPORARY")
+    // the session temp table `t` names; None for a REAL catalog table,
+    // which each statement leaves to Spark or refuses in its own words
+    def tempTable(verb: String, t: String): Option[DataFrame] = {
+      if (!spark.catalog.tableExists(t))
+        throw new graft.functions.expressions.DuckDialectException(
+          s"sql stage '$name': $verb unknown table '$t' — create it first " +
+            "with CREATE TEMP TABLE ... AS in an earlier statement/stage")
+      if (isTempView(t)) Some(spark.table(t)) else None
+    }
     // DuckDB `RETURNING` (r13): split the projection off the DML text —
     // the statement then returns the AFFECTED rows (post-assignment for
     // UPDATE, old values for DELETE) instead of the Count relation
@@ -124,21 +132,13 @@ final case class SqlStage(name: String, code: String) extends Stage {
       out
     }
     GraftSqlParser.insertSpec(dmlCode).foreach { spec =>
-      val tname = spec.table
-      val exists = spark.catalog.tableExists(tname)
-      if (!exists || isTempView(tname)) {
-        if (!exists)
-          throw new graft.functions.expressions.DuckDialectException(
-            s"sql stage '$name': INSERT INTO unknown table '$tname' — create it " +
-              "first with CREATE TEMP TABLE ... AS in an earlier statement/stage " +
-              "(catalog tables are the Sources.writeBucketed route)")
+      if (tempTable("INSERT INTO", spec.table).isDefined)
         return executeInsert(spark, df, spec, returning, returningRelation)
-      }
       // real catalog table: Spark's native INSERT INTO handles the plain
       // positional form below; the DuckDB extras have no native shape
       if (spec.cols.isDefined || spec.action.isDefined || spec.byName)
         throw new graft.functions.expressions.DuckDialectException(
-          s"sql stage '$name': INSERT INTO catalog table '$tname' with BY NAME / " +
+          s"sql stage '$name': INSERT INTO catalog table '${spec.table}' with BY NAME / " +
             "a column list / ON CONFLICT is not claimed — Spark's file-backed " +
             "INSERT has no upsert; route through a temp table and rewrite the " +
             "catalog table from it")
@@ -155,49 +155,32 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // they keep the full dialect layer. A REAL catalog table gets a
     // guided error: Spark has no in-place DML for file-backed tables —
     // rebuild via CTAS + Sources sinks instead.
-    def mutableTempTable(verb: String, t: String): DataFrame = {
-      if (!spark.catalog.tableExists(t))
-        throw new graft.functions.expressions.DuckDialectException(
-          s"sql stage '$name': $verb unknown table '$t' — create it first " +
-            "with CREATE TEMP TABLE ... AS in an earlier statement/stage")
-      if (!isTempView(t))
+    def mutableTempTable(verb: String, t: String): DataFrame =
+      tempTable(verb, t).getOrElse(
         throw new graft.functions.expressions.DuckDialectException(
           s"sql stage '$name': $verb targets catalog table '$t' — Spark has " +
             "no in-place DML for file-backed tables; rebuild it (CREATE TEMP " +
-            "TABLE AS / Sources sinks) or run the mutation before the write")
-      spark.table(t)
-    }
+            "TABLE AS / Sources sinks) or run the mutation before the write"))
+    // The predicate evaluates EXACTLY ONCE, onto a snapshotted match flag
+    // `m` (ADVICE r13): a non-deterministic predicate (rand(), uuid())
+    // must not let the count, the RETURNING set and the surviving view
+    // disagree — all three derive from one snapshot.
+    def matchSnapshot(t: String, cur: DataFrame, pred: Option[String],
+                      m: String): SqlStage.Snapshot =
+      new SqlStage.Snapshot(spark, pred match {
+        case Some(p) =>
+          SqlStage(name, s"SELECT *, COALESCE(($p), FALSE) AS $m FROM $t").apply(spark, df)
+        case None => cur.withColumn(m, lit(true))
+      }, m)
     GraftSqlParser.deleteTarget(dmlCode).foreach { case (t, predOpt) =>
       val cur = mutableTempTable("DELETE FROM", t)
-      // The predicate evaluates EXACTLY ONCE, onto a checkpointed match
-      // flag (ADVICE r13): a non-deterministic predicate (rand(),
-      // uuid()) must not let the count, the RETURNING set, and the
-      // surviving view disagree — all three derive from one snapshot.
       val m = s"__graft_m_${SqlStage.dmlSeq.incrementAndGet()}"
-      // one-shot snapshot (r14 job-floor shave): small tables collect
-      // into a LocalRelation (later scans/broadcasts are driver-side,
-      // job-free), big ones lazily checkpoint — either way the
-      // predicate evaluates exactly once for count, RETURNING, and the
-      // surviving view alike
-      val taggedPlan = predOpt match {
-        case Some(p) =>
-          SqlStage(name, s"SELECT *, COALESCE(($p), FALSE) AS $m FROM $t")
-            .apply(spark, df)
-        case None => cur.withColumn(m, lit(true))
-      }
-      val taggedE = SqlStage.snapshot(spark, taggedPlan)
-      val tagged = SqlStage.snapshotDf(spark, taggedE, taggedPlan.schema)
+      val tagged = matchSnapshot(t, cur, predOpt, m)
       // RETURNING for DELETE carries the OLD rows (probed)
-      val affected = returning.map(_ => tagged.where(col(m)).drop(m))
-      val kept = tagged.where(!col(m)).drop(m)
-      SqlStage.registerRebuilt(spark, t, kept)
+      val affected = returning.map(_ => tagged.df.where(col(m)).drop(m))
+      SqlStage.registerRebuilt(spark, t, tagged.df.where(!col(m)).drop(m))
       returning.foreach(exprs => return returningRelation(affected.get, exprs))
-      val mi = taggedPlan.schema.fieldIndex(m)
-      val n = taggedE match {
-        case Left(rows) => rows.count(r => !r.isNullAt(mi) && r.getBoolean(mi)).toLong
-        case Right(d) => d.where(col(m)).count()
-      }
-      return GraftSqlParser.countRelation(spark, n)
+      return GraftSqlParser.countRelation(spark, tagged.matched)
     }
     GraftSqlParser.updateTarget(dmlCode).foreach { spec =>
       val cur = mutableTempTable("UPDATE", spec.table)
@@ -212,22 +195,10 @@ final case class SqlStage(name: String, code: String) extends Stage {
         return executeUpdateFrom(spark, df, cur, spec, fromList, returning,
           returningRelation)
       }
-      // Snapshot 1 (ADVICE r13): the WHERE predicate evaluates EXACTLY
-      // ONCE onto a checkpoint-materialized match flag, so the count,
-      // RETURNING set, and surviving view agree under a
-      // non-deterministic predicate.
+      // Snapshot 1: the WHERE predicate's match flag
       val seqNo = SqlStage.dmlSeq.incrementAndGet()
       val m = s"__graft_m_$seqNo"
-      val taggedPlan = spec.where match {
-        case Some(p) =>
-          SqlStage(name, s"SELECT *, COALESCE(($p), FALSE) AS $m FROM ${spec.table}")
-            .apply(spark, df)
-        case None => cur.withColumn(m, lit(true))
-      }
-      // one-shot snapshot (r14): LocalRelation when small, lazy
-      // checkpoint otherwise — see the DELETE arm
-      val tagged = SqlStage.snapshotDf(spark,
-        SqlStage.snapshot(spark, taggedPlan), taggedPlan.schema)
+      val tagged = matchSnapshot(spec.table, cur, spec.where, m).df
       // Snapshot 2: every assignment RHS evaluates once per row, guarded
       // by the MATERIALIZED flag (an RHS that would error on
       // non-matching rows never sees them — DuckDB's behavior), then
@@ -241,10 +212,9 @@ final case class SqlStage(name: String, code: String) extends Stage {
       val rhsItems = assignsIdx.map { case ((_, e), i) =>
         s"CASE WHEN $m THEN ($e) END AS __graft_u_${i}_$seqNo"
       }
-      val snapPlan = SqlStage(name,
-        s"SELECT *, ${rhsItems.mkString(", ")} FROM $tv").apply(spark, df)
-      val snapE = SqlStage.snapshot(spark, snapPlan)
-      val snap = SqlStage.snapshotDf(spark, snapE, snapPlan.schema)
+      val snapshot = new SqlStage.Snapshot(spark, SqlStage(name,
+        s"SELECT *, ${rhsItems.mkString(", ")} FROM $tv").apply(spark, df), m)
+      val snap = snapshot.df
       spark.catalog.dropTempView(tv)
       val idxByLower = assignsIdx.map { case ((ce, i)) => ce._1.toLowerCase -> i }.toMap
       def uCol(i: Int): Column = col(s"__graft_u_${i}_$seqNo")
@@ -267,11 +237,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
         }
         recastTo(cur, snap.where(col(m)).select(cols.toIndexedSeq: _*))
       }
-      val mi2 = snapPlan.schema.fieldIndex(m)
-      val n = snapE match {
-        case Left(rows) => rows.count(r => !r.isNullAt(mi2) && r.getBoolean(mi2)).toLong
-        case Right(d) => d.where(col(m)).count()
-      }
+      val n = snapshot.matched
       SqlStage.registerRebuilt(spark, spec.table, updated)
       returning.foreach(exprs => return returningRelation(affected.get, exprs))
       return GraftSqlParser.countRelation(spark, n)
@@ -315,19 +281,16 @@ final case class SqlStage(name: String, code: String) extends Stage {
               "directory must come from EXPORT DATABASE)")
         new String(java.nio.file.Files.readAllBytes(fp), "UTF-8")
       }
-      var out = df
-      (GraftSqlParser.splitStatements(readSql("schema.sql")) ++
-        GraftSqlParser.splitStatements(readSql("load.sql"))).foreach { st0 =>
-        // DuckDB's load.sql records ABSOLUTE source paths — remap onto
-        // the import directory so a moved/copied export still loads
-        // (r15; the attach route shares the helper)
-        val st = GraftSqlParser.remapCopySourceToDir(st0
+      // DuckDB's load.sql records ABSOLUTE source paths — remap onto
+      // the import directory so a moved/copied export still loads (r15;
+      // the attach route shares the helper). DuckDB returns the LAST
+      // load statement's Count relation: the batch rule.
+      return runBatch((GraftSqlParser.splitStatements(readSql("schema.sql")) ++
+        GraftSqlParser.splitStatements(readSql("load.sql"))).map { st =>
+        GraftSqlParser.remapCopySourceToDir(st
           .replaceAll("(?is)^\\s*CREATE\\s+TABLE\\b", "CREATE TEMP TABLE")
           .replaceAll("(?is)^\\s*CREATE\\s+VIEW\\b", "CREATE TEMP VIEW"), dir)
-        if (st.trim.nonEmpty) out = SqlStage(name, st).apply(spark, df)
-      }
-      // DuckDB returns the LAST load statement's Count relation
-      return out
+      }.filter(_.trim.nonEmpty))
     }
     if (GraftSqlParser.isCheckpointStatement(code2))
       return GraftSqlParser.successRelation(spark)
@@ -336,7 +299,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // temp-view case and leave real catalog tables to Spark's native
     // DROP TABLE below
     GraftSqlParser.dropTableTarget(code2).foreach { case (_, t) =>
-      if (spark.catalog.tableExists(t) && isTempView(t)) {
+      if (isTempView(t)) {
         spark.catalog.dropTempView(t)
         GraftSqlParser.dropTableMeta(spark, t)
         GraftSqlParser.dropSessionTable(spark, t)
@@ -350,22 +313,16 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // through this stage, so they keep the full dialect layer; DuckDB
     // type names map via duckTypeToSpark, and fractional → integral
     // retypes ROUND like DuckDB's cast (the UPDATE treatment).
-    GraftSqlParser.alterTarget(code2).foreach { case (atbl, specOpt) =>
-      // only session TEMP views are claimed — a real catalog table
-      // falls through to Spark's own ALTER TABLE untouched
-      if (!spark.catalog.tableExists(atbl) || !isTempView(atbl)) {
-        if (!spark.catalog.tableExists(atbl))
-          throw new graft.functions.expressions.DuckDialectException(
-            s"sql stage '$name': ALTER TABLE unknown table '$atbl' — create it " +
-              "first with CREATE TEMP TABLE ... AS in an earlier statement/stage")
-      } else {
+    // Only session TEMP views are claimed — a real catalog table falls
+    // through to Spark's own ALTER TABLE untouched.
+    for ((atbl, specOpt) <- GraftSqlParser.alterTarget(code2);
+         cur <- tempTable("ALTER TABLE", atbl)) {
       val spec = specOpt.getOrElse(
         throw new graft.functions.expressions.DuckDialectException(
           s"sql stage '$name': ALTER TABLE $atbl: unclaimed alteration — claimed " +
             "forms: RENAME [COLUMN] a TO b, RENAME TO t, ADD [COLUMN] c type " +
             "[DEFAULT lit], DROP [COLUMN] c, ALTER [COLUMN] c [SET DATA] TYPE t " +
             "[USING expr]; rebuild via CREATE OR REPLACE TEMP TABLE for the rest"))
-      val cur = spark.table(atbl)
       val cols = cur.columns
       def requireCol(c: String): Unit =
         if (!cols.exists(_.equalsIgnoreCase(c)))
@@ -377,15 +334,6 @@ final case class SqlStage(name: String, code: String) extends Stage {
           throw new graft.functions.expressions.DuckDialectException(
             s"sql stage '$name': ALTER TABLE ${spec.table}: column '$c' already " +
               "exists (DuckDB errors here too)")
-      import org.apache.spark.sql.types._
-      def targetType(tn: String): DataType =
-        StructType.fromDDL(s"x ${GraftSqlParser.duckTypeToSpark(tn)}").head.dataType
-      def roundCast(c: org.apache.spark.sql.Column, from: DataType, to: DataType) = {
-        val needsRound = (from == DoubleType || from == FloatType ||
-          from.isInstanceOf[DecimalType]) &&
-          (to == LongType || to == IntegerType || to == ShortType || to == ByteType)
-        (if (needsRound) round(c) else c).cast(to)
-      }
       val meta = GraftSqlParser.tableMeta(spark, atbl)
       spec match {
         case GraftSqlParser.AlterRenameColumn(t, from, to) =>
@@ -400,12 +348,12 @@ final case class SqlStage(name: String, code: String) extends Stage {
           }
         case GraftSqlParser.AlterAddColumn(t, c, ty, dOpt) =>
           requireFree(c)
-          val tt = targetType(ty)
+          val tt = SqlStage.sparkType(ty)
           val added = dOpt match {
             case Some(d) =>
               val withD = SqlStage(name, s"SELECT *, ($d) AS $c FROM $t")
                 .apply(spark, df)
-              withD.withColumn(c, roundCast(col(c), withD.schema(c).dataType, tt))
+              withD.withColumn(c, SqlStage.roundingCast(col(c), withD.schema(c).dataType, tt))
             case None => cur.withColumn(c, lit(null).cast(tt))
           }
           added.createOrReplaceTempView(t)
@@ -438,69 +386,64 @@ final case class SqlStage(name: String, code: String) extends Stage {
           GraftSqlParser.renameSessionTable(spark, t, to)
         case GraftSqlParser.AlterSetType(t, c, ty, usingOpt) =>
           requireCol(c)
-          val tt = targetType(ty)
+          val tt = SqlStage.sparkType(ty)
           val items = cols.map { cc =>
             if (cc.equalsIgnoreCase(c)) s"(${usingOpt.getOrElse(cc)}) AS $cc" else cc
           }
           val projected = SqlStage(name,
             s"SELECT ${items.mkString(", ")} FROM $t").apply(spark, df)
           projected.withColumn(cols.find(_.equalsIgnoreCase(c)).get,
-              roundCast(col(c), projected.schema(c).dataType, tt))
+              SqlStage.roundingCast(col(c), projected.schema(c).dataType, tt))
             .createOrReplaceTempView(t)
       }
       return df
-      }
     }
-    GraftSqlParser.ctasTarget(code2).foreach { case (orReplace, ifNotExists, tname, q) =>
-      if (spark.catalog.tableExists(tname) && !isTempView(tname))
+    // CREATE TEMP TABLE, as a query (CTAS) or typed: register the view
+    // unless IF NOT EXISTS finds the name taken, then record its
+    // constraints (`meta`; None drops a replaced typed table's old ones)
+    def createTempTable(t: String, orReplace: Boolean, ifNotExists: Boolean,
+                        meta: Option[GraftSqlParser.TableMeta])(view: => DataFrame): DataFrame = {
+      val exists = spark.catalog.tableExists(t)
+      if (exists && !isTempView(t))
         throw new graft.functions.expressions.DuckDialectException(
-          s"sql stage '$name': CREATE TEMP TABLE '$tname' collides with a REAL " +
+          s"sql stage '$name': CREATE TEMP TABLE '$t' collides with a REAL " +
             "catalog table of that name — a temp view would shadow it; pick " +
             "another name or drop the table")
-      val exists = spark.catalog.tableExists(tname)
       if (!orReplace && !ifNotExists && exists)
         throw new graft.functions.expressions.DuckDialectException(
-          s"sql stage '$name': temp table '$tname' already exists in this session " +
+          s"sql stage '$name': temp table '$t' already exists in this session " +
             "— use CREATE OR REPLACE TEMP TABLE, or CREATE TEMP TABLE IF NOT EXISTS")
       if (!(ifNotExists && exists)) {
-        SqlStage(name, q).apply(spark, df).createOrReplaceTempView(tname)
-        // a CTAS table declares no constraints — a replaced typed table
-        // loses its old PRIMARY KEY/DEFAULT/NOT NULL metadata
-        GraftSqlParser.dropTableMeta(spark, tname)
-        GraftSqlParser.registerSessionTable(spark, tname)
+        view.createOrReplaceTempView(t)
+        meta match {
+          case Some(mm) => GraftSqlParser.putTableMeta(spark, t, mm)
+          case None => GraftSqlParser.dropTableMeta(spark, t)
+        }
+        GraftSqlParser.registerSessionTable(spark, t)
       }
-      return df
+      df
     }
-    // typed CREATE TEMP TABLE (column definitions, r13): register an
-    // EMPTY view with the declared schema and keep the constraint
-    // metadata (PRIMARY KEY, DEFAULT, NOT NULL) for later INSERTs —
-    // DuckDB's upsert surface resolves ON CONFLICT against it
+    // a CTAS table declares no constraints; the query keeps the full
+    // dialect layer
+    GraftSqlParser.ctasTarget(code2).foreach { case (orReplace, ifNotExists, tname, q) =>
+      return createTempTable(tname, orReplace, ifNotExists, None)(
+        SqlStage(name, q).apply(spark, df))
+    }
+    // typed CREATE TEMP TABLE (column definitions, r13): an EMPTY view
+    // with the declared schema, whose constraint metadata (PRIMARY KEY,
+    // DEFAULT, NOT NULL) later INSERTs check — DuckDB's upsert surface
+    // resolves ON CONFLICT against it
     GraftSqlParser.createTableDefTarget(code2).foreach { ct =>
-      if (spark.catalog.tableExists(ct.name) && !isTempView(ct.name))
-        throw new graft.functions.expressions.DuckDialectException(
-          s"sql stage '$name': CREATE TEMP TABLE '${ct.name}' collides with a REAL " +
-            "catalog table of that name — a temp view would shadow it; pick " +
-            "another name or drop the table")
-      val exists = spark.catalog.tableExists(ct.name)
-      if (!ct.orReplace && !ct.ifNotExists && exists)
-        throw new graft.functions.expressions.DuckDialectException(
-          s"sql stage '$name': temp table '${ct.name}' already exists in this " +
-            "session — use CREATE OR REPLACE TEMP TABLE, or IF NOT EXISTS")
-      if (!(ct.ifNotExists && exists)) {
-        import org.apache.spark.sql.types._
-        val schema = StructType(ct.cols.map(c => StructField(c.name,
-          StructType.fromDDL(s"x ${GraftSqlParser.duckTypeToSpark(c.typeName)}")
-            .head.dataType)))
+      val meta = GraftSqlParser.TableMeta(
+        ct.pk,
+        ct.cols.collect { case c if c.default.isDefined =>
+          c.name.toLowerCase -> c.default.get }.toMap,
+        ct.cols.collect { case c if c.notNull => c.name.toLowerCase }.toSet)
+      return createTempTable(ct.name, ct.orReplace, ct.ifNotExists, Some(meta)) {
+        val schema = StructType(ct.cols.map(c =>
+          StructField(c.name, SqlStage.sparkType(c.typeName))))
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-          .createOrReplaceTempView(ct.name)
-        GraftSqlParser.putTableMeta(spark, ct.name, GraftSqlParser.TableMeta(
-          ct.pk,
-          ct.cols.collect { case c if c.default.isDefined =>
-            c.name.toLowerCase -> c.default.get }.toMap,
-          ct.cols.collect { case c if c.notNull => c.name.toLowerCase }.toSet))
-        GraftSqlParser.registerSessionTable(spark, ct.name)
       }
-      return df
     }
     // UNION [ALL] BY NAME (r10): run each side through this stage (full
     // dialect layer, `df` = the stage input), merge with Dataset
@@ -531,28 +474,23 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // chain so a dialect-bearing pivot source still works
     // SUMMARIZE statement: produce the per-column stats relation
     // directly (one single-pass aggregate over the target — no SQL
-    // equivalent to splice). `SUMMARIZE SELECT ...` recurses through
-    // this stage so the inner query keeps the full dialect layer.
+    // equivalent to splice). A bare target names `df` (the default) or
+    // a table; a query target (`SUMMARIZE SELECT ...`) recurses through
+    // this stage so it keeps the full dialect layer.
+    def describedRelation(target: String): DataFrame =
+      if (target.isEmpty || target.equalsIgnoreCase("df")) df
+      else if (raw"(?is)^\s*(SELECT|WITH|FROM)\b".r.findFirstIn(target).isDefined)
+        SqlStage(name, target).apply(spark, df)
+      else spark.table(target)
     GraftSqlParser.summarizeTarget(code2).foreach { target =>
-      val inner =
-        if (target.isEmpty || target.equalsIgnoreCase("df")) df
-        else if (raw"(?is)^\s*(SELECT|WITH|FROM)\b".r.findFirstIn(target).isDefined)
-          SqlStage(name, target).apply(spark, df)
-        else spark.table(target)
-      return GraftSqlParser.summarize(inner)
+      return GraftSqlParser.summarize(describedRelation(target))
     }
     // DESCRIBE/SHOW statement: DuckDB's six-column schema relation
-    // (pure driver-side metadata — zero jobs). `DESCRIBE SELECT ...`
-    // recurses through this stage so the inner query keeps the full
-    // dialect layer; Spark's own DESCRIBE TABLE / SHOW TABLES forms
-    // never match (describeTarget) and keep their native shape.
+    // (pure driver-side metadata — zero jobs) over the same targets;
+    // Spark's own DESCRIBE TABLE / SHOW TABLES forms never match
+    // (describeTarget) and keep their native shape.
     GraftSqlParser.describeTarget(code2).foreach { target =>
-      val inner =
-        if (target.isEmpty || target.equalsIgnoreCase("df")) df
-        else if (raw"(?is)^\s*(SELECT|WITH|FROM)\b".r.findFirstIn(target).isDefined)
-          SqlStage(name, target).apply(spark, df)
-        else spark.table(target)
-      return GraftSqlParser.describe(inner)
+      return GraftSqlParser.describe(describedRelation(target))
     }
     // percentage reservoir resolves here (needs the session to count
     // the base relation — r16); the spec then collapses to the exact-n
@@ -569,67 +507,41 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // schema (its FROM spelling is the literal name `df`)
     val grpResolve: String => Option[Seq[String]] = t =>
       if (t.equalsIgnoreCase("df")) Some(df.columns.toSeq) else resolveRel(t)
-    val stmt = GraftSqlParser.rewritePivotStatement(spark,
-      GraftSqlParser.rewriteUnpivotStatement(code3),
-      s => GraftSqlParser.rewriteAll(
-        GraftSqlParser.rewriteColumns(
-          GraftSqlParser.rewriteReplace(s, df.columns.toSeq, resolveRel),
-          df.columns.toSeq, resolveRel), grpResolve))
-    val rewritten = GraftSqlParser.rewriteSeededRandom(spark,
-      GraftSqlParser.rewriteAll(
-        GraftSqlParser.rewriteColumns(
-          GraftSqlParser.rewriteReplace(stmt, df.columns.toSeq, resolveRel),
-          df.columns.toSeq, resolveRel), grpResolve))
+    val dfCols = df.columns.toSeq
+    val rewriteDialect: String => String = s => GraftSqlParser.rewriteAll(
+      GraftSqlParser.rewriteColumns(
+        GraftSqlParser.rewriteReplace(s, dfCols, resolveRel), dfCols, resolveRel),
+      grpResolve)
+    val rewritten = GraftSqlParser.rewriteSeededRandom(spark, rewriteDialect(
+      GraftSqlParser.rewritePivotStatement(spark,
+        GraftSqlParser.rewriteUnpivotStatement(code3), rewriteDialect)))
     graft.functions.expressions.DuckDialect.rejectSilentTraps(
       GraftSqlParser.maskQuotes(rewritten))
     // deep/unbounded WITH RECURSIVE: warn about the one-job-per-level
     // cost model and name the iterative operators — never blocks
     GraftSqlParser.warnDeepRecursion(rewritten)
-    // empty-input grouping-sets parity (r17): DuckDB emits grand-total
-    // row(s) even over an empty input where Spark emits none. One
-    // LIMIT-1 probe decides (early-exit — near-free on non-empty
-    // inputs, the only case at scale); a provably-empty input swaps in
-    // the typed-NULL global-aggregate arm, renamed+cast to the plain
-    // statement's exact schema. Any failure falls back silently to the
-    // plain statement (the pre-r17 Spark behavior).
-    GraftSqlParser.emptyGroupingSetsSpec(rewritten).foreach { spec =>
-      scala.util.Try {
-        val plain = GraftSqlParser.withDialectHint(code)(spark.sql(rewritten))
-        if (spark.sql(spec.probeSql).isEmpty) {
-          val types = spec.groupingExprs.map(e =>
-            e -> spark.sql(spec.typeProbe(e)).schema.head.dataType.sql).toMap
-          val arm = spark.sql(spec.buildArm(types))
-          Some(arm.select(arm.columns.zip(plain.schema.fields).map {
-            case (c, f) =>
-              org.apache.spark.sql.functions.col(s"`${c.replace("`", "``")}`")
-                .cast(f.dataType).as(f.name)
-          }.toSeq: _*))
-        } else None
-      } match {
-        case scala.util.Success(Some(armDf)) => return armDf
-        case _ =>
-      }
-    }
-    // the CTE-scoped form of the same parity (r18 — fuzz template 63):
-    // probe each matching CTE body independently; bodies over empty
-    // inputs get the aligned arm registered as a temp view and the
-    // body span spliced to read it. Any failure anywhere falls back to
-    // the plain statement.
-    val cteSites = GraftSqlParser.emptyGroupingSetsCteSites(rewritten)
-    if (cteSites.nonEmpty) {
+    // empty-input grouping-sets parity (r17; CTE bodies r18, fuzz
+    // template 63): DuckDB emits grand-total row(s) even over an empty
+    // input where Spark emits none. A site is the whole statement or a
+    // top-level CTE body. One LIMIT-1 probe per site decides
+    // (early-exit — near-free on non-empty inputs, the only case at
+    // scale); a provably-empty input gets the typed-NULL
+    // global-aggregate arm, renamed+cast to the plain site's exact
+    // schema, registered as a temp view and spliced over the site's
+    // span. Any failure anywhere falls back silently to the plain
+    // statement (the pre-r17 Spark behavior).
+    val sites = GraftSqlParser.emptyGroupingSetsCteSites(rewritten)
+    if (sites.nonEmpty) {
       val views = scala.collection.mutable.ListBuffer.empty[String]
       scala.util.Try {
-        val repls = cteSites.flatMap { case (bs, be, spec) =>
-          val body = rewritten.substring(bs, be)
-          val plain = spark.sql(body)
+        val repls = sites.flatMap { case (bs, be, spec) =>
+          val plain = spark.sql(rewritten.substring(bs, be))
           if (spark.sql(spec.probeSql).isEmpty) {
             val types = spec.groupingExprs.map(e =>
               e -> spark.sql(spec.typeProbe(e)).schema.head.dataType.sql).toMap
             val arm = spark.sql(spec.buildArm(types))
             val aligned = arm.select(arm.columns.zip(plain.schema.fields).map {
-              case (c, f) =>
-                org.apache.spark.sql.functions.col(s"`${c.replace("`", "``")}`")
-                  .cast(f.dataType).as(f.name)
+              case (c, f) => col(s"`${c.replace("`", "``")}`").cast(f.dataType).as(f.name)
             }.toSeq: _*)
             val vn = "graft_empty_gs_" +
               java.util.UUID.randomUUID().toString.replace("-", "")
@@ -672,21 +584,12 @@ final case class SqlStage(name: String, code: String) extends Stage {
     * fractional → integral like DuckDB's cast (the UPDATE treatment;
     * Spark's cast truncates).
     */
-  private def recastTo(target: DataFrame, out: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
+  private def recastTo(target: DataFrame, out: DataFrame): DataFrame =
     target.schema.fields.foldLeft(out) { (acc, f) =>
       val nt = acc.schema(f.name).dataType
       if (nt == f.dataType) acc
-      else {
-        val needsRound = (nt == DoubleType || nt == FloatType ||
-          nt.isInstanceOf[DecimalType]) &&
-          (f.dataType == LongType || f.dataType == IntegerType ||
-            f.dataType == ShortType || f.dataType == ByteType)
-        val base = if (needsRound) round(col(f.name)) else col(f.name)
-        acc.withColumn(f.name, base.cast(f.dataType))
-      }
+      else acc.withColumn(f.name, SqlStage.roundingCast(col(f.name), nt, f.dataType))
     }
-  }
 
   /** Execute a joined `UPDATE t SET ... FROM tables WHERE cond` (r13)
     * against a session TEMP table. The Spark re-expression: tag the
@@ -1007,12 +910,7 @@ object SqlStage {
     */
   private[operators] def registerRebuilt(spark: SparkSession, t: String,
                                          df: DataFrame): Unit =
-    snapshot(spark, df) match {
-      case Left(rows) =>
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-          .createOrReplaceTempView(t)
-      case Right(cp) => cp.createOrReplaceTempView(t)
-    }
+    snapshotDf(spark, snapshot(spark, df), df.schema).createOrReplaceTempView(t)
 
   /** Materialize a DML snapshot EXACTLY ONCE: the driver-side row array
     * when it fits [[LocalizeRows]] (probed via a pushed-down limit),
@@ -1033,10 +931,39 @@ object SqlStage {
     */
   private[operators] def snapshotDf(spark: SparkSession,
       e: Either[Array[Row], DataFrame],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = e match {
+      schema: StructType): DataFrame = e match {
     case Left(rows) =>
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     case Right(d) => d
+  }
+
+  /** One DML snapshot of `plan` ([[snapshot]]) and the number of its
+    * rows whose boolean flag column `m` is TRUE — counted driver-side
+    * for the row-array arm, by one job otherwise, and only when asked.
+    */
+  private[operators] final class Snapshot(spark: SparkSession, plan: DataFrame, m: String) {
+    private val e = snapshot(spark, plan)
+    val df: DataFrame = snapshotDf(spark, e, plan.schema)
+    lazy val matched: Long = e match {
+      case Left(rows) =>
+        val mi = plan.schema.fieldIndex(m)
+        rows.count(r => !r.isNullAt(mi) && r.getBoolean(mi)).toLong
+      case Right(d) => d.where(col(m)).count()
+    }
+  }
+
+  /** The Spark type of a DuckDB type name. */
+  private[operators] def sparkType(duckType: String): DataType =
+    StructType.fromDDL(s"x ${GraftSqlParser.duckTypeToSpark(duckType)}").head.dataType
+
+  /** Cast `c` from `from` to `to`, ROUNDING fractional → integral like
+    * DuckDB's cast (2.7 → 3, probed; Spark's cast truncates).
+    */
+  private[operators] def roundingCast(c: Column, from: DataType, to: DataType): Column = {
+    val needsRound = (from == DoubleType || from == FloatType ||
+      from.isInstanceOf[DecimalType]) &&
+      (to == LongType || to == IntegerType || to == ShortType || to == ByteType)
+    (if (needsRound) round(c) else c).cast(to)
   }
 
   /** True when the view's optimized plan is already a LocalRelation —
@@ -1105,7 +1032,8 @@ object DeriveStage {
         m.asInstanceOf[java.util.Map[String, Any]].asScala.toSeq.map { case (k, v) => (k, v.toString) }
       case _ => Nil
     }
-    DeriveStage(cfg.name, cols, ac.get("filter").map(_.toString), drops, renames)
+    DeriveStage(cfg.name, cols, ac.get("filter").flatMap(Option(_)).map(_.toString),
+      drops, renames)
   }
 }
 
@@ -1416,8 +1344,8 @@ object SplitStage {
         s"split stage '${cfg.name}': actionConfig.weights {label: sixteenths} required")
     }
     SplitStage(cfg.name,
-      ac.get("id").map(_.toString).getOrElse("doc_id"),
-      ac.get("column").map(_.toString).getOrElse("split"), weights)
+      ac.get("id").flatMap(Option(_)).map(_.toString).getOrElse("doc_id"),
+      ac.get("column").flatMap(Option(_)).map(_.toString).getOrElse("split"), weights)
   }
 }
 

@@ -13,8 +13,10 @@ import scala.jdk.CollectionConverters._
 
 /** Where a gate's time goes, layer by layer.
   *
-  * Each selected gate runs once untimed, then `reps` timed
-  * runs of `count()` over its DataFrame. One table row reports the
+  * Each selected gate runs once untimed, then `reps` timed runs
+  * that write its DataFrame to the `noop` sink, so every output column
+  * is computed (a `count()` lets Catalyst prune the outputs it does not
+  * need, aggregates and all). One table row reports the
   * median-wall run: DataFrame construction, Catalyst analysis,
   * optimization and planning, jobs / completed stages / tasks, task
   * CPU, run and GC time, the scheduling split (job submit → first task
@@ -149,7 +151,8 @@ object Profile {
     private def gate(name: String, sfDir: String, reps: Int, warmups: Int,
                      out: Option[Path]): Row = {
       val fn = SparkEntry.queries(name)
-      (1 to warmups).foreach(_ => fn(spark, sfDir).count())
+      def action(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+      (1 to warmups).foreach(_ => action(fn(spark, sfDir)))
       var df: DataFrame = null
       val runs = (1 to reps).map { _ =>
         drain()
@@ -157,7 +160,7 @@ object Profile {
         val t0 = System.nanoTime()
         df = fn(spark, sfDir)
         val t1 = System.nanoTime()
-        df.count()
+        action(df)
         val t2 = System.nanoTime()
         drain()
         meter.row(name, (t2 - t0) / 1e6, (t1 - t0) / 1e6)

@@ -66,6 +66,26 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.filters.head.filterThreads == 1)
   }
 
+  test("blank split id:/column: and derive filter: keys fall back to defaults instead of NPE") {
+    val stages = ConfigLoader.fromYaml(
+      """filters:
+        |  - name: s
+        |    actionType: split
+        |    actionConfig:
+        |      weights: {train: 16}
+        |      id:
+        |      column:
+        |  - name: d
+        |    actionType: derive
+        |    actionConfig:
+        |      filter:
+        |""".stripMargin).filters
+    val split = graft.operators.SplitStage.fromConfig(stages.head)
+    assert(split.idCol == "doc_id")
+    assert(split.outCol == "split")
+    assert(graft.operators.DeriveStage.fromConfig(stages(1)).filterExpr.isEmpty)
+  }
+
   test("reloadConfigEvery (the key the reference examples use) aliases reloadConfigEverySeconds") {
     val cfg = graft.model.ConfigLoader.fromYaml(
       "reloadConfigEvery: 7\nfilters: []\n")

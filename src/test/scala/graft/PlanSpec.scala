@@ -470,4 +470,29 @@ class PlanSpec extends SparkSpec {
     }
     assert(got.length == 300 && got == want)
   }
+
+  test("DML over small session temp tables keeps its job floor") {
+    import graft.operators.SqlStage
+    val df = spark.range(1).toDF("z")
+    def run(sql: String) = SqlStage("s", sql).apply(spark, df).collect()
+    // a fresh typed table (small, so every snapshot is driver-side) and
+    // a CTAS source before each statement
+    def jobs(sql: String, count: Long): Int = {
+      run("CREATE OR REPLACE TEMP TABLE pj_t (k INT PRIMARY KEY, v INT)")
+      run("INSERT INTO pj_t VALUES (1, 10), (2, 20), (3, 30)")
+      run("CREATE OR REPLACE TEMP TABLE pj_s AS SELECT * FROM (VALUES (1, 100), (3, 300)) s(k, y)")
+      var rows: Array[org.apache.spark.sql.Row] = null
+      val n = jobsIn { rows = run(sql) }
+      assert(rows.head.getLong(0) == count, sql)
+      n
+    }
+    // driver-side snapshots make the single-table forms job-free; the
+    // joined forms pay for their joins over the checkpointed target
+    val got = Seq(
+      jobs("DELETE FROM pj_t WHERE v > 15", 2),
+      jobs("UPDATE pj_t SET v = v + 1 WHERE k <> 2", 2),
+      jobs("UPDATE pj_t SET v = pj_s.y FROM pj_s WHERE pj_t.k = pj_s.k", 2),
+      jobs("INSERT INTO pj_t VALUES (3, 33), (4, 40) ON CONFLICT DO UPDATE SET v = excluded.v", 2))
+    assert(got == Seq(0, 0, 9, 3))
+  }
 }
