@@ -289,26 +289,32 @@ object Bench {
           // duckbase reads <dir>/oracle_sql.json — dump the CURRENT
           // oracle set (the exact SQL the correctness gate replays)
           val dir = java.nio.file.Files.createTempDirectory("graft_duckbase")
-          Verify.writeJson(dir.resolve("oracle_sql.json"),
-            SparkEntry.oracleSql.toSeq.sortBy(_._1))
-          val passes = sys.env.getOrElse("GRAFT_BENCH_DUCKDB_PASSES", "3")
-          val pb = new ProcessBuilder("python3", script.getPath,
-            sfDir, dir.toString, passes)
-          // Redirect both streams to files so no pipe buffer can fill and
-          // block either the child (stderr) or this read (stdout) — the
-          // 900 s waitFor below is then guaranteed to fire even if the
-          // child hangs without closing its streams.
-          val outFile = dir.resolve("duckbase_out.txt").toFile
-          pb.redirectOutput(java.lang.ProcessBuilder.Redirect.to(outFile))
-          pb.redirectError(java.lang.ProcessBuilder.Redirect.DISCARD)
-          val proc = pb.start()
-          val done = proc.waitFor(900, java.util.concurrent.TimeUnit.SECONDS)
-          if (!done) proc.destroyForcibly()
-          val out =
-            if (outFile.isFile)
-              new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
-            else ""
-          val ok = done && proc.exitValue == 0
+          val (ok, out) = try {
+            Verify.writeJson(dir.resolve("oracle_sql.json"),
+              SparkEntry.oracleSql.toSeq.sortBy(_._1))
+            val passes = sys.env.getOrElse("GRAFT_BENCH_DUCKDB_PASSES", "3")
+            val pb = new ProcessBuilder("python3", script.getPath,
+              sfDir, dir.toString, passes)
+            // Redirect both streams to files so no pipe buffer can fill and
+            // block either the child (stderr) or this read (stdout) — the
+            // 900 s waitFor below is then guaranteed to fire even if the
+            // child hangs without closing its streams.
+            val outFile = dir.resolve("duckbase_out.txt").toFile
+            pb.redirectOutput(java.lang.ProcessBuilder.Redirect.to(outFile))
+            pb.redirectError(java.lang.ProcessBuilder.Redirect.DISCARD)
+            val proc = pb.start()
+            val done = proc.waitFor(900, java.util.concurrent.TimeUnit.SECONDS)
+            if (!done) proc.destroyForcibly()
+            (done && proc.exitValue == 0,
+              if (outFile.isFile)
+                new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
+              else "")
+          } finally {
+            // the inputs and output are read: nothing here outlives the run
+            import scala.jdk.CollectionConverters._
+            java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverseIterator
+              .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          }
           def field(name: String): Option[Double] =
             (s""""$name":\\s*([0-9.]+)""").r.findFirstMatchIn(out)
               .map(_.group(1).toDouble)

@@ -663,20 +663,14 @@ object Dedup {
       // changed-count rides the checkpoint materialization as an
       // observed metric — ONE action per round instead of two (the
       // count()-after-checkpoint job was pure scheduling overhead: the
-      // data is already in memory when the metric is collected). The
-      // fallback count() fires only if the checkpoint path ever stops
-      // reporting observed metrics — correctness never depends on it.
-      val obs = org.apache.spark.sql.Observation()
-      val next = labels.join(nbrMin.select(col("x").as("node"), col("nc")), "node")
+      // data is already in memory when the metric is collected). A
+      // pruned metrics node re-counts over the checkpointed `next`.
+      val obs = graft.Observed(count(when(col("comp") =!= col("prev"), 1)).as("changed"))
+      val next = obs.on(labels.join(nbrMin.select(col("x").as("node"), col("nc")), "node")
         .select(col("node"), least(col("comp"), col("nc")).as("comp"),
-          col("comp").as("prev"))
-        .observe(obs, count(when(col("comp") =!= col("prev"), 1)).as("changed"))
+          col("comp").as("prev")))
         .localCheckpoint(true)
-      changed = org.apache.spark.sql.GraftColumnBridge.observedOrEmpty(obs)
-          .get("changed") match {
-        case Some(n: Number) => n.longValue()
-        case _ => next.filter(col("comp") =!= col("prev")).count()
-      }
+      changed = obs.read(next)("changed").asInstanceOf[Number].longValue()
       labels = next.select(col("node"), col("comp"))
       iter += 1
     }

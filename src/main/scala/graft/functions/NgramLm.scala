@@ -125,8 +125,8 @@ object NgramLm {
     // aggregate output row anyway, so the old separate sum() pass (and
     // the persist that existed only to share rawUni between the two
     // actions) bought nothing (r18 job shave; exact Long sum either way)
-    val nObs = org.apache.spark.sql.Observation()
-    val vocabRows = rawUni.observe(nObs, sum(col("c")).cast("long").as("n"))
+    val nObs = graft.Observed(sum(col("c")).cast("long").as("n"))
+    val vocabRows = nObs.on(rawUni)
       .orderBy(col("c").desc, col("w")).limit(maxVocab).collect()
     val uni = new java.util.HashMap[String, Long]()
     var vocabTokens = 0L
@@ -134,18 +134,12 @@ object NgramLm {
       uni.put(r.getString(0), r.getLong(1))
       vocabTokens += r.getLong(1)
     }
-    // getOrEmpty + count fallback (the Dedup/executeCopy pattern): if a
-    // future Spark elides the CollectMetrics node (e.g. empty-relation
-    // propagation) the training degrades to one extra bounded sum()
-    // instead of blocking forever on nObs.get (ADVICE r18)
-    val nTokens =
-      org.apache.spark.sql.GraftColumnBridge.observedOrEmpty(nObs).get("n") match {
-        case Some(v: java.lang.Long) => v.longValue()
-        case Some(v: Number) => v.longValue()
-        case _ =>
-          val s = rawUni.agg(sum(col("c")).cast("long")).head()
-          if (s.isNullAt(0)) 0L else s.getLong(0)
-      }
+    // a pruned metrics node costs one bounded sum() over rawUni; an
+    // empty corpus reports a null sum, which is 0 tokens
+    val nTokens = nObs.read(rawUni)("n") match {
+      case v: Number => v.longValue()
+      case _ => 0L
+    }
     val unkCount = nTokens - vocabTokens
     if (unkCount > 0) uni.put(unk, unkCount)
     val vocabDf = spark.createDataFrame(

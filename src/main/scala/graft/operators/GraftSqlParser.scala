@@ -5765,17 +5765,11 @@ object GraftSqlParser {
     // checkpoint already pins one materialization, so a separate
     // count() job over the checkpointed blocks bought nothing but a
     // ~30 ms scheduling floor per COPY statement (r18; the observed
-    // count equals the written rows by construction). The fallback
-    // count() fires only if the write path ever stops reporting
-    // observed metrics.
-    val nObs = org.apache.spark.sql.Observation()
-    val pinned = pinned0.observe(nObs, org.apache.spark.sql.functions
+    // count equals the written rows by construction). A pruned metrics
+    // node re-counts over the checkpointed `pinned0`.
+    val nObs = graft.Observed(org.apache.spark.sql.functions
       .count(org.apache.spark.sql.functions.lit(1)).as("n"))
-    def writtenCount(): Long =
-      org.apache.spark.sql.GraftColumnBridge.observedOrEmpty(nObs).get("n") match {
-        case Some(v: Number) => v.longValue()
-        case _ => pinned0.count()
-      }
+    val pinned = nObs.on(pinned0)
     if (spec.partitionBy.nonEmpty) {
       // PARTITION_BY: hive-style col=value directory tree (DuckDB's
       // exact layout) — the parallel write path, no coalesce, no move
@@ -5812,7 +5806,7 @@ object GraftSqlParser {
           .foreach(p => Files.deleteIfExists(p))
       }
     }
-    countRelation(spark, writtenCount())
+    countRelation(spark, nObs.read(pinned0)("n").asInstanceOf[Number].longValue())
   }
 
   private val UpdateStmtRe =

@@ -540,9 +540,11 @@ final case class SqlStage(name: String, code: String) extends Stage {
             val types = spec.groupingExprs.map(e =>
               e -> spark.sql(spec.typeProbe(e)).schema.head.dataType.sql).toMap
             val arm = spark.sql(spec.buildArm(types))
-            val aligned = arm.select(arm.columns.zip(plain.schema.fields).map {
-              case (c, f) => col(s"`${c.replace("`", "``")}`").cast(f.dataType).as(f.name)
-            }.toSeq: _*)
+            // by position: output names may repeat (`SELECT g, g, …`)
+            val aligned = arm.toDF(arm.columns.indices.map(i => s"_$i"): _*)
+              .select(plain.schema.fields.zipWithIndex.map {
+                case (f, i) => col(s"_$i").cast(f.dataType).as(f.name)
+              }.toSeq: _*)
             val vn = "graft_empty_gs_" +
               java.util.UUID.randomUUID().toString.replace("-", "")
             aligned.createOrReplaceTempView(vn)

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables._
 import graft.functions.{VectorFunctions => VF}
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import graft.Observed
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StructField, StructType}
 
@@ -156,25 +157,17 @@ object VectorQueries {
     // very conservation n_assigned pins), so the value is the one the
     // old separate emb-scan aggregate produced. n_centroids folds over
     // the driver-built centroid relation.
-    val obs = Observation()
-    val assignedObs = idx.assigned.observe(obs,
-      count(lit(1)).as("n_assigned"),
+    val obs = Observed(count(lit(1)).as("n_assigned"),
       sum(when(pmod(xxhash64(col("vec_id")), lit(1000000L)) < 500000L, 1L)
         .otherwise(0L)).as("n_half"))
-    val probed = VF.ivfProbe(q, VF.IvfIndex(idx.centroids, assignedObs),
+    val probed = VF.ivfProbe(q, VF.IvfIndex(idx.centroids, obs.on(idx.assigned)),
       k = 5, nprobe = 6)
     val audit = VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.50, corpusTag = d)
-    auditWithConservation(audit, obs,
+    auditWithConservation(audit, obs.read(idx.assigned),
       Seq("n_assigned" -> LongType, "n_centroids" -> LongType,
         "sampled_smaller" -> BooleanType),
       m => Seq(obsLong(m, "n_assigned"), localCount(idx.centroids),
-        obsLong(m, "n_half") < obsLong(m, "n_assigned")),
-      () => {
-        val r = idx.assigned.agg(count(lit(1)).as("n_assigned"),
-          (sum(when(pmod(xxhash64(col("vec_id")), lit(1000000L)) < 500000L, 1L)
-            .otherwise(0L)) < count(lit(1))).as("sampled_smaller")).head()
-        Seq(r.getLong(0), localCount(idx.centroids), r.getBoolean(1))
-      })
+        obsLong(m, "n_half") < obsLong(m, "n_assigned")))
   }
 
   /** Product-quantized ANN (r13): [[graft.functions.VectorFunctions
@@ -202,30 +195,14 @@ object VectorQueries {
     // conservation rides the probe's full encoded scan as an observed
     // metric; n_codebook folds over the driver-built codebook relation
     // (r19 fusion — see auditWithConservation)
-    val obs = Observation()
-    val encObs = idx.encoded.observe(obs,
-      count(lit(1)).as("n_encoded"),
-      min(size(col("codes"))).as("min_w"), max(size(col("codes"))).as("max_w"),
-      min(array_min(col("codes"))).as("min_c"),
-      max(array_max(col("codes"))).as("max_c"))
-    val probed = VF.pqProbe(q, VF.PqIndex(idx.codebooks, encObs), emb,
+    val obs = Observed(pqCodeMetrics: _*)
+    val probed = VF.pqProbe(q, VF.PqIndex(idx.codebooks, obs.on(idx.encoded)), emb,
       k = 5, rerank = 128)
     val audit = VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.80, corpusTag = d)
-    auditWithConservation(audit, obs,
+    auditWithConservation(audit, obs.read(idx.encoded),
       Seq("n_encoded" -> LongType, "codes_ok" -> BooleanType,
         "n_codebook" -> LongType),
-      m => Seq(obsLong(m, "n_encoded"),
-        obsLong(m, "min_w") == 16 && obsLong(m, "max_w") == 16 &&
-          obsLong(m, "min_c") >= 0 && obsLong(m, "max_c") < 64,
-        localCount(idx.codebooks)),
-      () => {
-        val r = idx.encoded.agg(
-          count(lit(1)).as("n_encoded"),
-          (min(size(col("codes"))) === 16 && max(size(col("codes"))) === 16 &&
-            min(array_min(col("codes"))) >= 0 &&
-            max(array_max(col("codes"))) < 64).as("codes_ok")).head()
-        Seq(r.getLong(0), r.getBoolean(1), localCount(idx.codebooks))
-      })
+      m => Seq(obsLong(m, "n_encoded"), pqCodesOk(m), localCount(idx.codebooks)))
   }
 
   /** IVFADC (r13): [[graft.functions.VectorFunctions.buildIvfPq]]
@@ -249,31 +226,15 @@ object VectorQueries {
     val idx = VF.buildIvfPq(emb, nlist = 16, refine = 1, m = 16, ksub = 64,
       iters = 1)
     // conservation rides the probe's posting-list scan (r19 fusion)
-    val obs = Observation()
-    val encObs = idx.encoded.observe(obs,
-      count(lit(1)).as("n_encoded"),
-      min(size(col("codes"))).as("min_w"), max(size(col("codes"))).as("max_w"),
-      min(array_min(col("codes"))).as("min_c"),
-      max(array_max(col("codes"))).as("max_c"))
+    val obs = Observed(pqCodeMetrics: _*)
     val probed = VF.ivfPqProbe(q, VF.IvfPqIndex(idx.centroids, idx.codebooks,
-      encObs), emb, k = 5, nprobe = 8, rerank = 128)
+      obs.on(idx.encoded)), emb, k = 5, nprobe = 8, rerank = 128)
     val audit = VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.60, corpusTag = d)
-    auditWithConservation(audit, obs,
+    auditWithConservation(audit, obs.read(idx.encoded),
       Seq("n_encoded" -> LongType, "codes_ok" -> BooleanType,
         "n_codebook" -> LongType, "n_centroids" -> LongType),
-      m => Seq(obsLong(m, "n_encoded"),
-        obsLong(m, "min_w") == 16 && obsLong(m, "max_w") == 16 &&
-          obsLong(m, "min_c") >= 0 && obsLong(m, "max_c") < 64,
-        localCount(idx.codebooks), localCount(idx.centroids)),
-      () => {
-        val r = idx.encoded.agg(
-          count(lit(1)).as("n_encoded"),
-          (min(size(col("codes"))) === 16 && max(size(col("codes"))) === 16 &&
-            min(array_min(col("codes"))) >= 0 &&
-            max(array_max(col("codes"))) < 64).as("codes_ok")).head()
-        Seq(r.getLong(0), r.getBoolean(1),
-          localCount(idx.codebooks), localCount(idx.centroids))
-      })
+      m => Seq(obsLong(m, "n_encoded"), pqCodesOk(m),
+        localCount(idx.codebooks), localCount(idx.centroids)))
   }
 
   /** RESIDUAL IVFADC (r13 — FAISS IndexIVFPQ's `by_residual = true`
@@ -300,35 +261,16 @@ object VectorQueries {
     val idx = VF.buildIvfPq(emb, nlist = 16, refine = 1, m = 16, ksub = 64,
       iters = 1, residual = true)
     // conservation rides the probe's posting-list scan (r19 fusion)
-    val obs = Observation()
-    val encObs = idx.encoded.observe(obs,
-      count(lit(1)).as("n_encoded"),
-      min(size(col("codes"))).as("min_w"), max(size(col("codes"))).as("max_w"),
-      min(array_min(col("codes"))).as("min_c"),
-      max(array_max(col("codes"))).as("max_c"),
-      min(col("rnorm")).as("min_rn"))
+    val obs = Observed(pqCodeMetrics :+ min(col("rnorm")).as("min_rn"): _*)
     val probed = VF.ivfPqProbe(q, VF.IvfPqIndex(idx.centroids, idx.codebooks,
-      encObs), emb, k = 5, nprobe = 8, rerank = 128)
+      obs.on(idx.encoded)), emb, k = 5, nprobe = 8, rerank = 128)
     val audit = VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.60, corpusTag = d)
-    auditWithConservation(audit, obs,
+    auditWithConservation(audit, obs.read(idx.encoded),
       Seq("n_encoded" -> LongType, "codes_ok" -> BooleanType,
         "norms_ok" -> BooleanType, "n_codebook" -> LongType,
         "n_centroids" -> LongType),
-      m => Seq(obsLong(m, "n_encoded"),
-        obsLong(m, "min_w") == 16 && obsLong(m, "max_w") == 16 &&
-          obsLong(m, "min_c") >= 0 && obsLong(m, "max_c") < 64,
-        m("min_rn").asInstanceOf[Number].doubleValue() > 0,
-        localCount(idx.codebooks), localCount(idx.centroids)),
-      () => {
-        val r = idx.encoded.agg(
-          count(lit(1)).as("n_encoded"),
-          (min(size(col("codes"))) === 16 && max(size(col("codes"))) === 16 &&
-            min(array_min(col("codes"))) >= 0 &&
-            max(array_max(col("codes"))) < 64).as("codes_ok"),
-          (min(col("rnorm")) > 0).as("norms_ok")).head()
-        Seq(r.getLong(0), r.getBoolean(1), r.getBoolean(2),
-          localCount(idx.codebooks), localCount(idx.centroids))
-      })
+      m => Seq(obsLong(m, "n_encoded"), pqCodesOk(m), obsDouble(m, "min_rn") > 0,
+        localCount(idx.codebooks), localCount(idx.centroids)))
   }
 
   /** 8-bit scalar-quantized ANN (r13): [[graft.functions
@@ -357,61 +299,55 @@ object VectorQueries {
     // conservation rides the probe's byte scan; the d-row params
     // relation is driver-built, so n_params/params_ok fold locally
     // (r19 fusion)
-    val obs = Observation()
-    val encObs = idx.encoded.observe(obs,
-      count(lit(1)).as("n_encoded"),
+    val obs = Observed(count(lit(1)).as("n_encoded"),
       min(length(col("codes"))).as("min_w"), max(length(col("codes"))).as("max_w"),
       min(col("rnorm")).as("min_rn"))
-    val probed = VF.sqProbe(q, VF.SqIndex(idx.params, encObs), emb,
+    val probed = VF.sqProbe(q, VF.SqIndex(idx.params, obs.on(idx.encoded)), emb,
       k = 5, rerank = 64)
     val audit = VF.topKRecallAuditCached(probed, q, emb, k = 5, bound = 0.90, corpusTag = d)
-    def paramsLocal(): (Long, Boolean) = {
-      val rows = idx.params.collect()
-      (rows.length.toLong,
-        rows.forall(r => r.getDouble(2) - r.getDouble(1) >= 0))
-    }
-    auditWithConservation(audit, obs,
+    auditWithConservation(audit, obs.read(idx.encoded),
       Seq("n_encoded" -> LongType, "codes_ok" -> BooleanType,
         "n_params" -> LongType, "params_ok" -> BooleanType),
       m => {
-        val (np, pok) = paramsLocal()
+        val params = idx.params.collect()
         Seq(obsLong(m, "n_encoded"),
           obsLong(m, "min_w") == 64 && obsLong(m, "max_w") == 64 &&
-            m("min_rn").asInstanceOf[Number].doubleValue() > 0,
-          np, pok)
-      },
-      () => {
-        val r = idx.encoded.agg(
-          count(lit(1)).as("n_encoded"),
-          (min(length(col("codes"))) === 64 && max(length(col("codes"))) === 64 &&
-            min(col("rnorm")) > 0).as("codes_ok")).head()
-        val (np, pok) = paramsLocal()
-        Seq(r.getLong(0), r.getBoolean(1), np, pok)
+            obsDouble(m, "min_rn") > 0,
+          params.length.toLong,
+          params.forall(r => r.getDouble(2) - r.getDouble(1) >= 0))
       })
   }
 
+  /** The PQ code-row metrics q142, q143 and q146 observe on the
+    * encoded corpus; [[pqCodesOk]] reads them back.
+    */
+  private def pqCodeMetrics: Seq[Column] = Seq(
+    count(lit(1)).as("n_encoded"),
+    min(size(col("codes"))).as("min_w"), max(size(col("codes"))).as("max_w"),
+    min(array_min(col("codes"))).as("min_c"), max(array_max(col("codes"))).as("max_c"))
+
+  /** Every code row is exactly m = 16 wide with codes in [0, ksub = 64). */
+  private def pqCodesOk(m: Map[String, Any]): Boolean =
+    obsLong(m, "min_w") == 16 && obsLong(m, "max_w") == 16 &&
+      obsLong(m, "min_c") >= 0 && obsLong(m, "max_c") < 64
+
   /** Fused audit + conservation assembly (r19, VERDICT r18 #2): run
-    * the one-row audit EAGERLY with `obs` riding the probe's scan of
-    * the corpus-sized index relation (the COPY/nTokens Observation
-    * pattern — the conservation aggregates previously re-aggregated
-    * the checkpointed corpus in 2-4 extra AQE stages per build gate),
-    * then assemble audit ++ conservation as a one-row LocalRelation.
-    * `fromObs` derives the conservation values from the observed
-    * metrics; `fallback` replays the OLD standalone aggregates and
-    * fires only if the action ever stops reporting metrics (the
-    * getOrEmpty + fallback posture of Dedup/executeCopy) — the values
-    * are identical either way: count/min/max folds over the same rows,
-    * order-insensitive. Column names, order and types reproduce the
-    * previous `audit.crossJoin(conserve)` exactly.
+    * the one-row audit EAGERLY with an [[graft.Observed]] riding the
+    * probe's scan of the corpus-sized index relation (the conservation
+    * aggregates previously re-aggregated the checkpointed corpus in 2-4
+    * extra AQE stages per build gate), then assemble audit ++
+    * conservation as a one-row LocalRelation. `metrics` is by-name
+    * (call site: `obs.read(index relation)`), so it is read only after
+    * the audit's action; `derive` turns it into the conservation
+    * values. Column names, order and types reproduce the previous
+    * `audit.crossJoin(conserve)` exactly.
     */
   private def auditWithConservation(
-      audit: DataFrame, obs: Observation,
+      audit: DataFrame, metrics: => Map[String, Any],
       cols: Seq[(String, DataType)],
-      fromObs: Map[String, Any] => Seq[Any],
-      fallback: () => Seq[Any]): DataFrame = {
+      derive: Map[String, Any] => Seq[Any]): DataFrame = {
     val aRow = audit.head()
-    val m = org.apache.spark.sql.GraftColumnBridge.observedOrEmpty(obs)
-    val cons = if (m.nonEmpty) fromObs(m) else fallback()
+    val cons = derive(metrics)
     val schema = StructType(audit.schema.fields ++
       cols.map { case (n, t) => StructField(n, t) })
     audit.sparkSession.createDataFrame(
@@ -420,6 +356,9 @@ object VectorQueries {
 
   private def obsLong(m: Map[String, Any], k: String): Long =
     m(k).asInstanceOf[Number].longValue()
+
+  private def obsDouble(m: Map[String, Any], k: String): Double =
+    m(k).asInstanceOf[Number].doubleValue()
 
   /** Row count of a driver-built LocalRelation (codebooks/centroids/
     * params) — `collect()` on a LocalTableScan returns rows without

@@ -15,12 +15,12 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** `Observation.getOrEmpty` (non-blocking-ish: waits briefly, returns
-    * empty instead of hanging when the completed action did not report
-    * metrics) is `private[sql]` — surfaced for the iterative operators
-    * that piggyback convergence counters on checkpoint actions.
+  /** The observed metrics row, waiting briefly instead of hanging when
+    * the completed action did not report it (`Observation
+    * .getRowOrEmpty` is `private[sql]`), for [[graft.Observed]], its
+    * one caller.
     */
-  def observedOrEmpty(o: Observation): Map[String, Any] = o.getOrEmpty
+  def observedOrEmpty(o: Observation): Option[Row] = o.getRowOrEmpty
 
   /** Blocks until every listener has handled the events posted so far
     * (`listenerBus` is `private[spark]`), for a reader of listener data.

@@ -4167,6 +4167,13 @@ class DialectSpec extends SparkSpec {
     assert(r6.map(r => (Option(r.get(0)), r.getLong(1))).toSeq == Seq((None, 0L)))
     assert(rows(
       "SELECT g, count(*) AS n FROM egt GROUP BY ROLLUP (g) LIMIT 0").isEmpty)
+    // repeated output names align by position
+    assert(rows("SELECT g, g, count(*) AS n FROM egt GROUP BY ROLLUP (g)")
+      .map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2))).toSeq ==
+      Seq((None, None, 0L)))
+    assert(rows("SELECT g, count(*) AS n, count(*) AS n FROM egt GROUP BY ROLLUP (g)")
+      .map(r => (Option(r.get(0)), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((None, 0L, 0L)))
     spark.catalog.dropTempView("egt")
     spark.catalog.dropTempView("egt2")
   }

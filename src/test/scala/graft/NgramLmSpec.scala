@@ -260,6 +260,11 @@ class NgramLmSpec extends SparkSpec {
     val m = NgramLm.trainBigramLm(docs, col("ts"), maxVocab = 2, minCount = 1)
     assert(m.nTokens == 6L) // ALL tokens, vocab-capped or not
     val empty = spark.createDataFrame(Seq.empty[Tuple1[Seq[String]]]).toDF("ts")
-    assert(NgramLm.trainBigramLm(empty, col("ts")).nTokens == 0L)
+    var n = -1L
+    // the empty corpus's sum is observed as null: a value, so no
+    // fallback sum() job
+    val jobs = jobsIn { n = NgramLm.trainBigramLm(empty, col("ts")).nTokens }
+    assert(n == 0L)
+    assert(jobs == 1, s"jobs=$jobs")
   }
 }

@@ -372,11 +372,9 @@ class PlanSpec extends SparkSpec {
     // fire. With AQE OFF one action = one Spark job, so the job count is
     // the action count: 3 setup checkpoints (input pairs — computed once,
     // not once per union branch; edges; labels) + one job per doubling
-    // round. A 200-node path converges in ≤ 12 rounds (~log2(199) +
-    // slack + the zero-change confirmation) → ≤ 15 jobs; a
-    // two-actions-per-round loop would pay ≥ 3 setup + 2 × rounds
-    // ≈ 20+. The `jobs <= 17` assertion below locks the count.
-    val s2 = spark.newSession()
+    // round + the final collect. A two-actions-per-round loop would pay
+    // one more job per round.
+    val s2 = spark.newSession() // shares the SparkContext, so jobsIn sees its jobs
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     s2.conf.set("spark.graft.cc.localEdges", "0") // force the distributed loop
     val path = (0L until 199L).map(i => (i, i + 1))
@@ -385,20 +383,13 @@ class PlanSpec extends SparkSpec {
       path.toDF("doc_a", "doc_b")
     }
     graft.functions.Dedup.connectedComponents(df) // warm (JIT/codegen)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    s2.sparkContext.addSparkListener(listener)
-    try {
-      val got = graft.functions.Dedup.connectedComponents(df)
+    var got = Array.empty[(Long, Long)]
+    val jobs = jobsIn {
+      got = graft.functions.Dedup.connectedComponents(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1))
-      Thread.sleep(500) // job-start events post async to the listener bus
-      assert(got.length == 200 && got.forall(_._2 == 0L))
-      // +1 for the final collect() above
-      assert(jobs.get <= 17, s"jobs=${jobs.get} — CC rounds are paying more than one action")
-    } finally s2.sparkContext.removeSparkListener(listener)
+    }
+    assert(got.length == 200 && got.forall(_._2 == 0L))
+    assert(jobs == 16, s"jobs=$jobs — CC rounds are paying more than one action")
   }
 
   /** Runs `body` with the range-sort path forced: no child is ≤ 1 byte. */

@@ -44,7 +44,8 @@ abstract class SparkSpec extends AnyFunSuite {
     spark.sparkContext.setJobGroup(group, getClass.getSimpleName)
     try {
       body
-      Thread.sleep(500) // job-start events post async to the listener bus
+      // job-start events post async to the listener bus
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark.sparkContext)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
