@@ -1,39 +1,46 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every SparkEntry query against
-  * sys.env("SPARK_GRAFT_SF_DIR") and prints one JSON line.
+import java.io.File
+import java.lang.ProcessBuilder.Redirect
+import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeUnit}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.functions.expressions.GraftFunctions
+import graft.tools.Profile
+
+/** Benchmark main: times the gates against sys.env("SPARK_GRAFT_SF_DIR")
+  * and prints one JSON line.
+  * {{{
+  * runMain graft.Bench [spark.key=value ...] [gate substring ...]
+  * }}}
+  * The arguments are [[Profile]]'s: settings override the session's, and
+  * the substrings select the gates (every gate when none is given) for
+  * the warm-up, both timed lanes and the DuckDB baseline alike.
   *
-  * Methodology (documented in SCALE.md §bench) — BOTH shapes are
-  * measured and reported in the same JSON line so the comparison with a
-  * sequential baseline is transparent:
-  *
-  *  - `value` / `wall_runs`: wall-clock of the whole suite under
-  *    `GRAFT_BENCH_STREAMS` (default 10) concurrent query streams
-  *    draining a shared queue, TPC-DS-throughput-test style, under a
-  *    FAIR scheduler; best of `GRAFT_BENCH_RUNS` (default 8) passes,
-  *    every pass's wall listed in `wall_runs`. Concurrent streams are
-  *    the honest shape for Spark: the per-query driver floor (planning
-  *    + job launch + stage barriers, ~0.1-0.5 s at this tiny SF)
-  *    overlaps across queries exactly as on a shared production
+  * Methodology (SCALE.md §bench). Every timed run writes the gate's
+  * DataFrame to the `noop` sink ([[Profile.action]]), so every output
+  * column is computed.
+  *  - `value` / `wall_runs`: wall-clock of the selection under 10
+  *    concurrent query streams draining a shared queue, TPC-DS
+  *    throughput-test style, under a FAIR scheduler; best of 8 passes,
+  *    every pass's wall listed. The per-query driver floor (planning,
+  *    job launch, stage barriers) overlaps across queries as on a shared
   *    cluster, while the data path keeps all cores busy.
-  *  - `seq_wall_sec` / `queries`: strictly sequential passes
-  *    (GRAFT_SEQ_RUNS, default 3; extended up to GRAFT_SEQ_MAX_RUNS,
-  *    default 7, while the walls are still descending >5% — r18, so a
-  *    contended capture converges instead of reporting a mid-warmup
-  *    best), run last (fully JIT-warmed — steady
-  *    state). `seq_wall_sec` is the best pass wall (all listed in
-  *    `seq_runs`); `queries` holds per-query MEDIAN latency across the
-  *    passes, so a single microVM stall cannot masquerade as a query
-  *    regression. This is the like-for-like number against a sequential
-  *    single-process baseline; per-query latencies from concurrent
-  *    passes are queueing-inflated and are deliberately not reported.
-  *  - Warmup: two passes at the smallest SF (sf0.001) compile+JIT the
-  *    generated code; the first concurrent passes at the target SF
-  *    finish C2 compilation (pass walls visibly descend — that is why
-  *    best-of-N with all walls listed, not mean, is reported).
-  *  - Failures are NOT silently counted as latencies: a query that
-  *    throws is recorded in `failed` and excluded from `queries`.
+  *  - `seq_wall_sec` / `queries`: the sequential lane, run last, is
+  *    [[Profile.Profiler]]: per gate 5 timed runs and no untimed one, as
+  *    the concurrent passes have already run every gate 8 times.
+  *    `queries` holds each gate's median wall, `seq_wall_sec` their sum
+  *    and `seq_runs` the sum of each rep. A single stall of the box lands
+  *    on one rep of one gate and moves no median. bench_detail.json adds
+  *    the Profiler's per-layer row of every gate under `layers`.
+  *  - Warm-up: the selection twice at the sibling sf0.001 directory, so
+  *    generated code is compiled before the target SF is timed.
+  *  - A gate that throws is named in `failed` and has no latency.
   */
 object Bench {
   /** Longest-pole queries first (LPT makespan heuristic; order from the
@@ -64,347 +71,140 @@ object Bench {
     "q64_multiset_ops", "q70_correlated_subq", "q07_window_topk_group",
     "q13_set_ops", "q02_agg_pricing", "q05_anti_join")
 
+  private val Streams = 10
+  private val Passes = 8
+  private val DuckPasses = 3
+  /** Per-stage parallelism. Under 10 streams each query gets FEWER tasks
+    * than cores: the suite keeps the cores busy across queries, and
+    * small task counts keep the single-threaded DAGScheduler event loop
+    * from becoming the bottleneck. A lone query needs more to use the box.
+    */
+  private val Concurrent = Map("spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.files.minPartitionNum" -> "2")
+  private val Sequential = Map("spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.files.minPartitionNum" -> "8")
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val streams = math.max(1, sys.env.getOrElse("GRAFT_BENCH_STREAMS", "10").toInt)
-    // With concurrent streams each query needs FEWER shuffle partitions
-    // than cores: the suite keeps all cores busy across queries, while
-    // small per-query task counts keep the single-threaded DAGScheduler
-    // event loop from becoming the bottleneck (32-partition stages of
-    // ~2 ms tasks × 10 streams swamp it).
-    val partitions = sys.env.getOrElse("GRAFT_BENCH_PARTITIONS", "4").toInt
-    var builder = GraftSession.builder(s"local[$cpus]", Some(partitions))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("GRAFT_BENCH_SCAN_PARTITIONS", "2"))
+    val cli = Profile.parse(args.toSeq, Nil)
+    val names = Profile.select(cli.gates)
+    val spark = Profile.session(GraftSession.builder(s"local[${Profile.cpus}]")
+      .config(Concurrent)
       .config("spark.scheduler.mode", "FAIR")
       // AQE's default 1 MB coalesce floor collapses byte-light but
       // CPU-dense shuffles (LSH candidate joins, CC rounds, DSIR
-      // featurization) to ONE task on this box — the work serializes
-      // on a single core while 31 idle. A 64k floor keeps those stages
-      // at ~4-8 tasks (r13 A/B: q37 0.72→0.61, q112 1.01→0.84,
-      // q136 1.45→1.19, q89 1.35→1.14 s). Irrelevant at production SF,
-      // where shuffle partitions dwarf 1 MB anyway — this is tiny-SF
-      // bench sizing, the knob the SCALE.md partition-sizing note says
-      // to set per deployment.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_BENCH_MIN_PARTITION", "64k"))
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("GRAFT_CODEGEN", "true"))
+      // featurization) to ONE task at bench SF — the work serializes on
+      // one core. A 64k floor keeps those stages at ~4-8 tasks (r13 A/B:
+      // q37 0.72→0.61, q112 1.01→0.84, q136 1.45→1.19, q89 1.35→1.14 s).
+      // Production SF shuffles dwarf 1 MB anyway: this is tiny-SF sizing.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // window/SMJ buffers spill past 4096 rows by default; sf0.1
       // partitions fit comfortably in memory, so keep them on-heap
-      // (cluster-scale sizing belongs to the deployment, not the lib)
       .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("GRAFT_BENCH_CONF").foreach { conf =>
-      conf.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k, v)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.expressions.GraftFunctions.register(spark)
+      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "1048576"),
+      cli.confs)
 
-    // Parquet footers + file listings at the target SF.
-    Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
-    // JIT warmup: every query twice at the smallest SF.
-    val warmDir = sys.env.get("GRAFT_BENCH_WARMDIR").orElse {
-      Option(new java.io.File(sfDir).getParentFile)
-        .map(p => new java.io.File(p, "sf0.001"))
-        .filter(_.isDirectory).map(_.toString)
-    }
-    warmDir.foreach { wd =>
-      (1 to 2).foreach { _ =>
-        SparkEntry.queries.foreach { case (_, fn) =>
-          try fn(spark, wd).count() catch { case _: Throwable => }
-        }
-      }
-    }
+    val warmDir = Option(new File(sfDir).getParentFile).map(new File(_, "sf0.001"))
+      .filter(_.isDirectory).map(_.toString)
+    for (wd <- warmDir; _ <- 1 to 2; n <- names)
+      try Profile.action(SparkEntry.queries(n)(spark, wd)) catch { case NonFatal(_) => }
     System.gc()
 
-    val names = {
-      // GRAFT_BENCH_ONLY=sub1,sub2: restrict the suite to matching
-      // query names — for isolating one query's latency in Bench's
-      // exact session/config (vs a full-suite pass, whose GC/JIT
-      // context is part of every in-suite number)
-      val all0 = SparkEntry.queries.keys.toSeq.sorted
-      val all = sys.env.get("GRAFT_BENCH_ONLY") match {
-        case Some(subs) =>
-          val ss = subs.split(",").map(_.trim).filter(_.nonEmpty)
-          all0.filter(n => ss.exists(n.contains))
-        case None => all0
-      }
-      heavyFirst.filter(all.contains) ++ all.filterNot(heavyFirst.contains)
+    /** One session per stream, reused across passes (r12): every SqlStage
+      * registers its input as the temp view `df`, so two streams on one
+      * session race on that name. `newSession()` shares the context but
+      * isolates the temp-view catalog. A session per pass instead inflated
+      * every sequential latency ~1.5×: each live session adds a listener
+      * to the shared bus and its own relation caches.
+      */
+    val sessions = (1 to Streams).map { _ =>
+      val s = spark.newSession()
+      GraftFunctions.register(s)
+      s
     }
-    val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val failed = ConcurrentHashMap.newKeySet[String]()
+    val order = heavyFirst.filter(names.contains) ++ names.filterNot(heavyFirst.contains)
 
-    /** One session PER STREAM INDEX, created once and reused across
-      * every pass — the r12 fix for q131's recurring bench failure:
-      * every SqlStage registers the stage input as the session temp
-      * view `df` (the reference's contract), so two streams on ONE
-      * session race on that name and a pipeline's `SELECT ... FROM df`
-      * can resolve another query's relation. `spark.newSession()`
-      * shares the SparkContext but isolates the temp-view catalog —
-      * the idiomatic multi-tenant Spark shape (one session per
-      * concurrent user). Sessions are REUSED across passes, not
-      * created per pass: each live SparkSession attaches an execution
-      * listener to the shared context bus and holds its own relation
-      * caches, so a session-per-pass variant (83 sessions over a full
-      * run) uniformly inflated every sequential per-query latency
-      * ~1.5× (measured; 10 reused sessions match the old
-      * single-session walls).
-      */
-    val streamSessions = new java.util.concurrent.ConcurrentHashMap[Int, SparkSession]()
-    def sessionFor(i: Int): SparkSession =
-      streamSessions.computeIfAbsent(i, _ => {
-        val s = spark.newSession()
-        graft.functions.expressions.GraftFunctions.register(s)
-        s
-      })
-
-    /** One pass over the suite with `n` worker streams; returns
-      * (wall, per-query latency of the queries that succeeded).
-      * `newSession` does NOT inherit runtime conf changes, so the
-      * per-pass parallelism knobs are set explicitly on each stream
-      * session at pass start.
-      */
-    def runSuite(n: Int, shufflePartitions: String, scanPartitions: String):
-        (Double, Map[String, Double]) = {
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      names.foreach(queue.add)
-      val results = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    def concurrentPass(): Double = {
+      val queue = new ConcurrentLinkedQueue[String](order.asJava)
       val t0 = System.nanoTime()
-      val workers = (1 to n).map { i =>
+      val workers = sessions.zipWithIndex.map { case (sess, i) =>
         val th = new Thread(() => {
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"stream$i")
-          val sess = sessionFor(i)
-          sess.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-          sess.conf.set("spark.sql.files.minPartitionNum", scanPartitions)
-          var q = queue.poll()
-          while (q != null) {
-            val q0 = System.nanoTime()
-            try {
-              SparkEntry.queries(q)(sess, sfDir).count()
-              results.put(q, (System.nanoTime() - q0) / 1e9)
-            } catch { case scala.util.control.NonFatal(e) =>
+          Iterator.continually(queue.poll()).takeWhile(_ != null).foreach { q =>
+            try Profile.action(SparkEntry.queries(q)(sess, sfDir))
+            catch { case NonFatal(e) =>
               failed.add(q)
               System.err.println(s"[bench] FAILED $q: ${e.getClass.getSimpleName}: ${e.getMessage}")
             }
-            q = queue.poll()
           }
         }, s"bench-stream-$i")
         th.start(); th
       }
       workers.foreach(_.join())
-      import scala.jdk.CollectionConverters._
-      ((System.nanoTime() - t0) / 1e9, results.asScala.toMap)
+      val wall = (System.nanoTime() - t0) / 1e9
+      System.gc()
+      wall
     }
-    val concShuffle = sys.env.getOrElse("GRAFT_BENCH_PARTITIONS", "4")
-    val concScan = sys.env.getOrElse("GRAFT_BENCH_SCAN_PARTITIONS", "2")
+    // walls descend as C2 finishes compiling the generated code: best-of,
+    // with every wall listed so the warm-up trajectory stays visible
+    val walls = Seq.fill(Passes)(concurrentPass())
 
-    // Concurrent throughput passes: best of N (walls descend as C2
-    // finishes compiling the generated code — all walls are reported so
-    // the warmup trajectory is visible, not hidden).
-    val passes = math.max(1, sys.env.getOrElse("GRAFT_BENCH_RUNS", "8").toInt)
-    val runs = (1 to passes).map { _ =>
-      val r = runSuite(streams, concShuffle, concScan); System.gc(); r
-    }
-    val (wall, _) = runs.minBy(_._1)
-    // Median wall alongside best-of (ADVICE r7): the microVM's
-    // multi-second stalls land on whole passes, so best-of is the
-    // honest steady-state estimate — but the median exposes the
-    // pass-to-pass variance best-of hides.
-    val wallMedian = {
-      val s = runs.map(_._1).sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2 // even passes: mid-pair mean
-    }
-    // Sequential pass, fully warmed: the like-for-like wall vs a
-    // sequential baseline, and the only honest source of per-query
-    // latencies (concurrent latencies include queueing). A lone query
-    // needs MORE tasks per stage than a contended one to use the box
-    // (the concurrent defaults deliberately starve single queries), so
-    // re-raise the per-stage parallelism for this pass only.
-    val seqShuffle = sys.env.getOrElse("GRAFT_SEQ_PARTITIONS", "8")
-    val seqScan = sys.env.getOrElse("GRAFT_SEQ_SCAN_PARTITIONS", "8")
-    // GRAFT_SEQ_RUNS passes (default 3): wall = best pass (both
-    // reported), per-query latency = MEDIAN across passes — this box is
-    // a microVM with visible host steal, and a single-shot (or even
-    // best-wall-pass) latency lets one multi-second stall land on one
-    // query and read as a 4x regression (VERDICT r5 #7: q47/q48).
-    // Median-of-3 per query is the same estimator ScaleProbe uses.
-    val seqPasses = math.max(1, sys.env.getOrElse("GRAFT_SEQ_RUNS", "3").toInt)
-    // Convergence extension (r18, VERDICT r17 #2): two rounds running
-    // the artifact-of-record capture landed on a contended stretch with
-    // seq walls STILL DESCENDING at the configured pass count, so the
-    // best-pass wall read the box, not the code. If the final pass is
-    // still the best AND improved on the previous best by >5%, the JIT/
-    // page-cache steady state hasn't been reached — keep running (up to
-    // GRAFT_SEQ_MAX_RUNS, default 7) until the improvement flattens.
-    val seqMax = math.max(seqPasses,
-      sys.env.getOrElse("GRAFT_SEQ_MAX_RUNS", "7").toInt)
-    val seqRunsBuf = scala.collection.mutable.ArrayBuffer
-      .tabulate(seqPasses) { _ =>
-        val r = runSuite(1, seqShuffle, seqScan); System.gc(); r
-      }
-    def stillDescending: Boolean = {
-      val walls = seqRunsBuf.map(_._1)
-      walls.last == walls.min && walls.size >= 2 &&
-        walls.init.min > walls.last * 1.05
-    }
-    while (seqRunsBuf.size < seqMax && stillDescending) {
-      val r = runSuite(1, seqShuffle, seqScan); System.gc()
-      seqRunsBuf += r
-    }
-    val seqRuns = seqRunsBuf.toSeq
-    val seqWall = seqRuns.map(_._1).min
-    val seqRes: Map[String, Double] = names.flatMap { q =>
-      val vs = seqRuns.flatMap(_._2.get(q)).sorted
-      if (vs.isEmpty) None
-      else if (vs.size % 2 == 1) Some(q -> vs(vs.size / 2))
-      else Some(q -> (vs(vs.size / 2 - 1) + vs(vs.size / 2)) / 2)
-    }.toMap
+    val seq = sessions.head
+    // the command line's settings win here too, as on the builder
+    (Sequential ++ cli.confs.filter(c => Sequential.contains(c._1)))
+      .foreach { case (k, v) => seq.conf.set(k, v) }
+    val profiler = new Profile.Profiler(seq)
+    val result = try profiler.run(sfDir, names, warmups = 0) finally profiler.close()
+    failed.addAll(result.failed.asJava)
+    val queries = ListMap(result.rows.map(r => r.gate -> r.wallMs / 1000): _*)
+    val seqWall = queries.values.sum
+    val seqRuns = result.rows.map(_.repsMs).transpose.map(_.sum / 1000)
 
-    // Same-session DuckDB baseline (VERDICT r13 #2): the judge-facing
-    // ratio was previously assembled from different sessions' numbers
-    // on a box whose throughput swings ±30% — measure the SAME-SET
-    // DuckDB wall back-to-back with the bench (AFTER every Spark timing
-    // pass; never concurrently — SCALE.md) and embed it in the JSON
-    // line so BENCH_rN.json is self-contained. Graceful: any failure
-    // (no python3/duckdb on this host, script missing) just omits the
-    // fields. GRAFT_BENCH_DUCKDB=0 disables.
-    // (fields for the JSON line, per-query DuckDB best map) — the map
-    // feeds the per-query ratio columns (VERDICT r15 #2: ratios settle
-    // box-contention archaeology mechanically; compare ratios, never
-    // absolute walls, on this box).
-    val (duckFields: String, duckQueries: Map[String, Double]) =
-      if (sys.env.get("GRAFT_BENCH_DUCKDB").contains("0")) ("", Map.empty[String, Double])
-      else try {
-        val script = new java.io.File("tools/duckbase.py")
-        if (!script.isFile) ("", Map.empty[String, Double]) else {
-          // duckbase reads <dir>/oracle_sql.json — dump the CURRENT
-          // oracle set (the exact SQL the correctness gate replays)
-          val dir = java.nio.file.Files.createTempDirectory("graft_duckbase")
-          val (ok, out) = try {
-            Verify.writeJson(dir.resolve("oracle_sql.json"),
-              SparkEntry.oracleSql.toSeq.sortBy(_._1))
-            val passes = sys.env.getOrElse("GRAFT_BENCH_DUCKDB_PASSES", "3")
-            val pb = new ProcessBuilder("python3", script.getPath,
-              sfDir, dir.toString, passes)
-            // Redirect both streams to files so no pipe buffer can fill and
-            // block either the child (stderr) or this read (stdout) — the
-            // 900 s waitFor below is then guaranteed to fire even if the
-            // child hangs without closing its streams.
-            val outFile = dir.resolve("duckbase_out.txt").toFile
-            pb.redirectOutput(java.lang.ProcessBuilder.Redirect.to(outFile))
-            pb.redirectError(java.lang.ProcessBuilder.Redirect.DISCARD)
-            val proc = pb.start()
-            val done = proc.waitFor(900, java.util.concurrent.TimeUnit.SECONDS)
-            if (!done) proc.destroyForcibly()
-            (done && proc.exitValue == 0,
-              if (outFile.isFile)
-                new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
-              else "")
-          } finally {
-            // the inputs and output are read: nothing here outlives the run
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverseIterator
-              .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-          def field(name: String): Option[Double] =
-            (s""""$name":\\s*([0-9.]+)""").r.findFirstMatchIn(out)
-              .map(_.group(1).toDouble)
-          // per-query best map out of duckbase's {"queries": {...}} —
-          // keys are the full oracle names, matching seqRes keys
-          val perQuery: Map[String, Double] =
-            """"queries":\s*\{([^}]*)\}""".r.findFirstMatchIn(out).map { m =>
-              """"([^"]+)":\s*([0-9.eE+-]+)""".r.findAllMatchIn(m.group(1))
-                .map(q => q.group(1) -> q.group(2).toDouble).toMap
-            }.getOrElse(Map.empty)
-          (if (ok) field("wall_best") else None) match {
-            case Some(dw) if dw > 0 =>
-              val sumBest = field("sum_of_best").getOrElse(0.0)
-              (f""","duckdb_wall_best":$dw%.3f,"duckdb_sum_best":$sumBest%.3f,"duckdb_ratio":${seqWall / dw}%.3f""",
-                perQuery)
-            case _ => ("", perQuery)
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => ("", Map.empty[String, Double]) }
+    // DuckDB on the same selection, after every Spark timing pass (never
+    // concurrently): the ratio's two sides come from one session
+    val duck = duckdb(sfDir, names)
+    val duckQueries = ListMap(duck.toSeq.flatMap(_.path("queries").properties.asScala)
+      .map(e => e.getKey -> e.getValue.asDouble).sortBy(_._1): _*)
+    val duckWall = duck.map(_.path("wall_best").asDouble).filter(_ > 0)
+    val ratios = queries.flatMap { case (k, v) => duckQueries.get(k).filter(_ > 0).map(k -> v / _) }
 
-    // The driver captures only the LAST 2000 chars of stdout and parses
-    // the JSON line out of that window (round 3's full-precision,
-    // full-name line was ~2.5k chars → truncated start → parse failure,
-    // BENCH_r03.json "parsed": null). Keep the line compact: short qNN
-    // keys, 3-decimal values. Full detail goes to bench_detail.json.
-    def f3(v: Double): String = f"$v%.3f"
-    def shortKey(k: String): String = k.takeWhile(_ != '_')
-    // ALL queries ride the line (r19, VERDICT r18 #7: the 100-query
-    // window left a third of the suite with no round-over-round
-    // trail). The r13 "parsed": null was a LAST-LINE problem (sbt's
-    // [info] prefix / trailing log lines), fixed by the verbatim
-    // outputStrategy + the shutdown-hook re-print below — r18's
-    // ~3.2k-char line parsed fine, and the driver's 2000-char `tail`
-    // field is a diagnostic window, not the parse buffer. The duckdb
-    // maps below stay capped at the slowest 50 to bound the length.
-    val qTop = seqRes.toSeq.sortBy(-_._2)
-    val qs = qTop.sortBy(_._1)
-      .map { case (k, v) => "\"" + shortKey(k) + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val qOmitted = seqRes.size - qTop.size
-    // Per-query DuckDB baselines + ratios (VERDICT r15 #2): graft-median
-    // / duckdb-best per query, so a per-query wall move reads as
-    // engine-vs-engine, not box noise. The line carries the SLOWEST 50
-    // graft queries (the plan-audit set; the stdout line must stay
-    // parseable in the driver's capture window — full maps for all
-    // queries go to bench_detail.json).
-    def f2(v: Double): String = f"$v%.2f"
-    val duckLine =
-      if (duckQueries.isEmpty) ""
-      else {
-        val dTop = qTop.take(50)
-        val dq = dTop.sortBy(_._1).flatMap { case (k, _) =>
-          duckQueries.get(k).map(d => "\"" + shortKey(k) + "\":" + f3(d)) }
-          .mkString("{", ",", "}")
-        val ratios = dTop.sortBy(_._1).flatMap { case (k, v) =>
-          duckQueries.get(k).filter(_ > 0)
-            .map(d => "\"" + shortKey(k) + "\":" + f2(v / d)) }
-          .mkString("{", ",", "}")
-        s""","queries_duckdb":$dq,"ratios":$ratios"""
-      }
-    val walls = runs.map(r => f3(r._1)).mkString("[", ",", "]")
-    val failedJson = {
-      import scala.jdk.CollectionConverters._
-      failed.asScala.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    }
-    val seqWalls = seqRuns.map(r => f3(r._1)).mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${f3(wall)},"unit":"sec","queries":$qs,"queries_omitted":$qOmitted,"n_queries":${seqRes.size},"sf":"$sfDir","streams":$streams,"passes":$passes,"wall_runs":$walls,"wall_median_sec":${f3(wallMedian)},"seq_wall_sec":${f3(seqWall)},"seq_runs":$seqWalls,"sum_query_sec":${f3(seqRes.values.sum)},"warmed":${warmDir.nonEmpty}$duckFields$duckLine,"failed":$failedJson}"""
-    // Full-name, full-precision record for local diffing (includes the
-    // COMPLETE duckdb per-query map + ratios, not just the slowest set).
-    val detail = seqRes.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val duckDetail = duckQueries.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val ratioDetail = seqRes.toSeq.sortBy(_._1)
-      .flatMap { case (k, v) =>
-        duckQueries.get(k).filter(_ > 0).map(d => "\"" + k + "\":" + f3(v / d)) }
-      .mkString("{", ",", "}")
-    try {
-      val w = new java.io.PrintWriter("bench_detail.json")
-      w.println(s"""{"wall":$wall,"wall_runs":$walls,"seq_wall":$seqWall,"seq_runs":$seqWalls,"queries":$detail,"queries_duckdb":$duckDetail,"ratios":$ratioDetail,"failed":$failedJson,"streams":$streams,"passes":$passes,"sf":"$sfDir"}""")
-      w.close()
-    } catch { case scala.util.control.NonFatal(_) => }
-    // The driver line-parses the tail for this JSON, so it must reach
-    // stdout unprefixed and ideally be the LAST line (r01-r03 all
-    // recorded "parsed": null — sbt's default LoggedOutput prefixed
-    // every line with "[info] "). build.sbt now relays forked stdout
-    // verbatim (outputStrategy := StdoutOutput) and drops the
-    // "[success]" trailer (showSuccess := false); the shutdown hook
-    // re-prints the line at JVM exit so it stays last even if
-    // spark.stop() logs something.
+    // A bench runner may keep only the last 2000 chars of stdout, so the
+    // line is compact: qNN keys and 3-decimal values; the DuckDB maps
+    // carry the 50 slowest gates. bench_detail.json has everything.
+    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+    val slowest = queries.toSeq.sortBy(-_._2).take(50).map(_._1).toSet
+    def short(m: Map[String, Double]): ListMap[String, Double] =
+      ListMap(m.toSeq.map { case (k, v) => k.takeWhile(_ != '_') -> r3(v) }: _*)
+    val failedNames = failed.asScala.toSeq.sorted
+    val line = json.writeValueAsString(ListMap[String, Any](
+      "metric" -> "total", "value" -> r3(walls.min), "unit" -> "sec",
+      "queries" -> short(queries), "queries_omitted" -> 0, "n_queries" -> queries.size,
+      "sf" -> sfDir, "streams" -> Streams, "passes" -> Passes, "wall_runs" -> walls.map(r3),
+      "wall_median_sec" -> r3(Profile.median(walls)(identity)),
+      "seq_wall_sec" -> r3(seqWall), "seq_runs" -> seqRuns.map(r3),
+      "sum_query_sec" -> r3(seqWall), "warmed" -> warmDir.nonEmpty) ++
+      duckWall.fold(ListMap.empty[String, Any])(dw => ListMap(
+        "duckdb_wall_best" -> r3(dw),
+        "duckdb_sum_best" -> r3(duck.get.path("sum_of_best").asDouble),
+        "duckdb_ratio" -> r3(seqWall / dw))) ++
+      (if (duckQueries.isEmpty) ListMap.empty[String, Any] else ListMap(
+        "queries_duckdb" -> short(duckQueries.filter(e => slowest(e._1))),
+        "ratios" -> short(ratios.filter(e => slowest(e._1))))) ++
+      ListMap("failed" -> failedNames))
+    try json.writeValue(new File("bench_detail.json"), ListMap(
+      "wall" -> walls.min, "wall_runs" -> walls, "seq_wall" -> seqWall, "seq_runs" -> seqRuns,
+      "queries" -> queries, "queries_duckdb" -> duckQueries, "ratios" -> ratios.map {
+        case (k, v) => k -> r3(v) }, "failed" -> failedNames, "streams" -> Streams,
+      "passes" -> Passes, "sf" -> sfDir,
+      "layers" -> result.rows.map(r => ListMap(Profile.Header.zip(r.values): _*))))
+    catch { case NonFatal(_) => }
+    // Runners line-parse the tail for this JSON, so it must reach stdout
+    // unprefixed and be the LAST line: build.sbt relays forked
+    // stdout verbatim (outputStrategy := StdoutOutput) and drops the
+    // "[success]" trailer, and the shutdown hook re-prints the line at
+    // JVM exit so it stays last even if spark.stop() logs something.
     val rawOut = new java.io.PrintStream(
       new java.io.FileOutputStream(java.io.FileDescriptor.out), true)
     println(line)
@@ -413,5 +213,26 @@ object Bench {
     }))
     Console.out.flush()
     spark.stop()
+  }
+
+  /** `tools/duckbase.py`'s JSON for the oracle SQL of `names`, or None
+    * when it cannot run (no script, python3 or duckdb on this host).
+    */
+  private def duckdb(sfDir: String, names: Seq[String]): Option[JsonNode] = {
+    val script = new File("tools/duckbase.py")
+    if (!script.isFile) return None
+    val dir = Files.createTempDirectory("graft_duckbase")
+    try {
+      val oracle = SparkEntry.oracleSql
+      Verify.writeJson(dir.resolve("oracle_sql.json"), names.flatMap(n => oracle.get(n).map(n -> _)))
+      // output to a file, so no pipe buffer can fill and block the child
+      val out = dir.resolve("duckbase_out.txt").toFile
+      val proc = new ProcessBuilder("python3", script.getPath, sfDir, dir.toString,
+        DuckPasses.toString).redirectOutput(out).redirectError(Redirect.DISCARD).start()
+      val done = proc.waitFor(900, TimeUnit.SECONDS)
+      if (!done) proc.destroyForcibly()
+      if (done && proc.exitValue == 0) Some(json.readTree(out)) else None
+    } catch { case NonFatal(_) => None }
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Where a gate's time goes, layer by layer.
   *
@@ -29,12 +30,15 @@ import scala.jdk.CollectionConverters._
   * Usage:
   * {{{
   * runMain graft.tools.Profile <sfDir> [--reps=N] [--out=DIR]
-  *   [spark.key=value ...] <gate substring> ...
+  *   [spark.key=value ...] [gate substring ...]
   * }}}
   * The session is Verify's: `local[SPARK_GRAFT_CPUS]` (default: all
   * cores) with as many shuffle partitions; `spark.*=value` arguments
   * override any setting. Every gate whose name contains one of the
-  * substrings runs, in name order.
+  * substrings runs (every gate when none is given), in name order. A
+  * gate that throws is reported and skipped, and the exit status is
+  * nonzero. `graft.Bench` times its sequential lane with the same
+  * [[Profiler]] and takes the same settings and substrings.
   */
 object Profile {
   val Phases = Seq("analysis", "optimization", "planning")
@@ -46,14 +50,30 @@ object Profile {
                        phasesMs: Map[String, Long], jobs: Int, stages: Int, tasks: Int,
                        cpuMs: Long, runMs: Long, gcMs: Long, firstTaskMs: Long,
                        jobSpanMs: Long, shuffleReadB: Long, shuffleWriteB: Long,
-                       spillB: Long, lines: Seq[String]) {
+                       spillB: Long, lines: Seq[String], repsMs: Seq[Double] = Nil) {
     def driverGapMs: Double = wallMs - jobSpanMs
-    def cells: Seq[String] =
-      Seq(gate, f"$wallMs%.1f", f"$constructMs%.1f") ++
-        Phases.map(p => phasesMs.get(p).fold("-")(_.toString)) ++
-        Seq(jobs, stages, tasks, cpuMs, runMs, gcMs, firstTaskMs, jobSpanMs).map(_.toString) ++
-        Seq(f"$driverGapMs%.1f") ++ Seq(shuffleReadB, shuffleWriteB, spillB).map(_.toString)
+    /** One value per [[Header]] column; a phase the action did not run is `None`. */
+    def values: Seq[Any] =
+      Seq[Any](gate, wallMs, constructMs) ++ Phases.map(phasesMs.get) ++
+        Seq[Any](jobs, stages, tasks, cpuMs, runMs, gcMs, firstTaskMs, jobSpanMs, driverGapMs,
+          shuffleReadB, shuffleWriteB, spillB)
+    def cells: Seq[String] = values.map {
+      case ms: Double => f"$ms%.1f"
+      case phase: Option[_] => phase.fold("-")(_.toString)
+      case v => v.toString
+    }
   }
+
+  /** The gates' own rows, and the names of the gates that threw. */
+  final case class Result(rows: Seq[Row], failed: Seq[String])
+
+  val DefaultReps = 5
+
+  /** The timed action: every output column is computed, nothing is kept. */
+  def action(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** The element of median `key`; the upper one of an even count. */
+  def median[T](xs: Seq[T])(key: T => Double): T = xs.sortBy(key).apply(xs.size / 2)
 
   def tableLine(cells: Seq[String]): String = cells.mkString("| ", " | ", " |")
 
@@ -151,7 +171,6 @@ object Profile {
     private def gate(name: String, sfDir: String, reps: Int, warmups: Int,
                      out: Option[Path]): Row = {
       val fn = SparkEntry.queries(name)
-      def action(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       (1 to warmups).foreach(_ => action(fn(spark, sfDir)))
       var df: DataFrame = null
       val runs = (1 to reps).map { _ =>
@@ -165,7 +184,7 @@ object Profile {
         drain()
         meter.row(name, (t2 - t0) / 1e6, (t1 - t0) / 1e6)
       }
-      val row = runs.sortBy(_.wallMs).apply(runs.size / 2)
+      val row = median(runs)(_.wallMs).copy(repsMs = runs.map(_.wallMs))
       out.foreach { dir =>
         Files.createDirectories(dir)
         Files.writeString(dir.resolve(s"$name.plan.txt"),
@@ -175,18 +194,26 @@ object Profile {
       row
     }
 
-    /** Profiles every gate whose name contains one of `substrings`, in
-      * name order, printing each row as its gate completes.
+    /** Profiles the gates `names` in order, printing the table header
+      * and then each row as its gate completes. A gate that throws is
+      * reported on stderr and named in the result, and the next one runs.
       */
-    def run(sfDir: String, substrings: Seq[String], reps: Int = 5, warmups: Int = 1,
-            out: Option[Path] = None): Seq[Row] = {
-      val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => substrings.exists(n.contains))
-      require(names.nonEmpty, s"no gate name contains any of: ${substrings.mkString(" ")}")
-      names.map { n =>
-        val row = gate(n, sfDir, reps, warmups, out)
-        println(tableLine(row.cells))
-        row
+    def run(sfDir: String, names: Seq[String], reps: Int = DefaultReps, warmups: Int = 1,
+            out: Option[Path] = None): Result = {
+      require(reps > 0, s"reps must be positive, got $reps")
+      println(tableLine(Header))
+      println(tableLine(Header.map(_ => "---")))
+      val runs = names.map { n =>
+        try {
+          val row = gate(n, sfDir, reps, warmups, out)
+          println(tableLine(row.cells))
+          Right(row)
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[profile] FAILED $n: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          Left(n)
+        }
       }
+      Result(runs.collect { case Right(r) => r }, runs.collect { case Left(n) => n })
     }
 
     override def close(): Unit = {
@@ -196,31 +223,66 @@ object Profile {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val (opts, rest) = args.tail.toSeq.partition(_.startsWith("--"))
-    val (confs, gates) = rest.partition(a => a.startsWith("spark.") && a.contains("="))
-    def opt(k: String) = opts.collectFirst { case o if o.startsWith(s"--$k=") => o.drop(k.length + 3) }
-    require(opts.forall(o => o.startsWith("--reps=") || o.startsWith("--out=")),
-      s"unknown option in: ${opts.mkString(" ")} (expected --reps=N, --out=DIR)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = GraftSession.builder(s"local[$cpus]", Some(cpus.toInt))
-      .config("spark.ui.enabled", "false")
-    confs.foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
+  /** A timing main's command line: `--name=value` options, `spark.key=value`
+    * settings and gate substrings.
+    */
+  final case class Args(opts: Map[String, String], confs: Seq[(String, String)],
+                        gates: Seq[String]) {
+    def reps: Int = opts.get("reps").fold(DefaultReps) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"--reps must be a positive integer, got '$v'"))
     }
+  }
+
+  /** Parses `args`, accepting only the options named in `options`. */
+  def parse(args: Seq[String], options: Seq[String]): Args = {
+    val (opts, rest) = args.partition(_.startsWith("--"))
+    val named = opts.map { o =>
+      val (k, v) = o.drop(2).span(_ != '=')
+      require(options.contains(k) && v.nonEmpty,
+        s"unknown option $o (accepted: ${options.map(k => s"--$k=").mkString(" ")})")
+      k -> v.drop(1)
+    }.toMap
+    val (confs, gates) = rest.partition(a => a.startsWith("spark.") && a.contains("="))
+    Args(named, confs.map { kv => val Array(k, v) = kv.split("=", 2); k -> v }, gates)
+  }
+
+  /** Every gate whose name contains one of `substrings` (every gate when
+    * there are none), in name order.
+    */
+  def select(substrings: Seq[String]): Seq[String] = {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => substrings.isEmpty || substrings.exists(n.contains))
+    require(names.nonEmpty, s"no gate name contains any of: ${substrings.mkString(" ")}")
+    names
+  }
+
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
+  /** `builder`'s session with the command line's settings applied last. */
+  def session(builder: SparkSession.Builder, confs: Seq[(String, String)]): SparkSession = {
+    builder.config("spark.ui.enabled", "false")
+    confs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(spark)
-    val reps = opt("reps").fold(5)(_.toInt)
-    println(s"[profile] ${spark.conf.get("spark.master")} $sfDir reps=$reps ${confs.mkString(" ")}")
-    println(tableLine(Header))
-    println(tableLine(Header.map(_ => "---")))
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.nonEmpty,
+      "usage: Profile <sfDir> [--reps=N] [--out=DIR] [spark.key=value ...] [gate substring ...]")
+    val sfDir = args.head
+    val cli = parse(args.toSeq.tail, Seq("reps", "out"))
+    val (reps, names) = (cli.reps, select(cli.gates))
+    val spark = session(GraftSession.builder(s"local[$cpus]", Some(cpus)), cli.confs)
+    println(s"[profile] ${spark.conf.get("spark.master")} $sfDir reps=$reps " +
+      cli.confs.map { case (k, v) => s"$k=$v" }.mkString(" "))
     val profiler = new Profiler(spark)
-    try profiler.run(sfDir, gates, reps, out = opt("out").map(Paths.get(_)))
-    finally profiler.close()
+    val failed =
+      try profiler.run(sfDir, names, reps, out = cli.opts.get("out").map(Paths.get(_))).failed
+      finally profiler.close()
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }
