@@ -49,7 +49,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // DuckDB's last-statement rule.
     def runBatch(stmts: Seq[String]): DataFrame = stmts.foldLeft(df) { (out, st) =>
       if (GraftSqlParser.isCreateMacroStatement(st)) {
-        GraftSqlParser.registerMacro(spark, st)
+        DuckSession.registerMacro(spark, st)
         out
       } else SqlStage(name, st).apply(spark, df)
     }
@@ -61,33 +61,33 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // leading comments, but the regexes anchor at ^\s*)
     val code1 = stmts.headOption.getOrElse(code)
     if (GraftSqlParser.isCreateMacroStatement(code1)) {
-      GraftSqlParser.registerMacro(spark, code1)
+      DuckSession.registerMacro(spark, code1)
       return df
     }
     // DuckDB SET statements: map/acknowledge before Spark's own SET can
     // silently swallow them (TimeZone would otherwise set a meaningless
     // conf key and change nothing)
-    if (GraftSqlParser.applyDuckSet(spark, code1)) return df
+    if (DuckSession.applyDuckSet(spark, code1)) return df
     // Macro call sites expand FIRST, so a macro body carrying its own
     // DuckDB-isms still meets the full rewrite chain below; then
     // read_* table functions become session temp views (file readers
     // need the session, so they rewrite here, not in rewriteAll).
-    val code2 = GraftSqlParser.rewriteAttachedRefs(spark,
-      GraftSqlParser.rewriteReadFns(spark,
-        GraftSqlParser.expandMacros(spark, code1)))
+    val code2 = DuckSession.rewriteAttachedRefs(spark,
+      DuckSession.rewriteReadFns(spark,
+        DuckSession.expandMacros(spark, code1)))
     // COPY ... TO statement: write one file at the target path and
     // return DuckDB's `Count` relation; a (query) source recurses
     // through this stage so it keeps the full dialect layer. COPY ...
     // FROM (r12) appends the file into the named temp view / table.
     GraftSqlParser.copyTarget(code2).foreach { spec =>
-      if (spec.from) return GraftSqlParser.executeCopyFrom(spark, spec)
+      if (spec.from) return DuckSession.executeCopyFrom(spark, spec)
       val src = spec.sourceSql match {
         case Some(q) => SqlStage(name, q).apply(spark, df)
         case None =>
           val t = spec.sourceTable.get
           if (t.equalsIgnoreCase("df")) df else spark.table(t)
       }
-      return GraftSqlParser.executeCopy(spark, src, spec)
+      return DuckSession.executeCopy(spark, src, spec)
     }
     // CREATE [OR REPLACE] TEMP TABLE ... AS query (CTAS): register the
     // query as a session temp view (lazy where DuckDB materializes —
@@ -180,7 +180,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
       val affected = returning.map(_ => tagged.df.where(col(m)).drop(m))
       SqlStage.registerRebuilt(spark, t, tagged.df.where(!col(m)).drop(m))
       returning.foreach(exprs => return returningRelation(affected.get, exprs))
-      return GraftSqlParser.countRelation(spark, tagged.matched)
+      return DuckSession.countRelation(spark, tagged.matched)
     }
     GraftSqlParser.updateTarget(dmlCode).foreach { spec =>
       val cur = mutableTempTable("UPDATE", spec.table)
@@ -240,7 +240,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
       val n = snapshot.matched
       SqlStage.registerRebuilt(spark, spec.table, updated)
       returning.foreach(exprs => return returningRelation(affected.get, exprs))
-      return GraftSqlParser.countRelation(spark, n)
+      return DuckSession.countRelation(spark, n)
     }
     // TRUNCATE [TABLE] t: DuckDB removes every row and returns the
     // Count relation (probed) — the DELETE-all shape
@@ -248,52 +248,34 @@ final case class SqlStage(name: String, code: String) extends Stage {
       val cur = mutableTempTable("TRUNCATE", t)
       val n = cur.count()
       SqlStage.registerRebuilt(spark, t, cur.limit(0))
-      return GraftSqlParser.countRelation(spark, n)
+      return DuckSession.countRelation(spark, n)
     }
     // EXPORT / IMPORT DATABASE + CHECKPOINT (r14, VERDICT r13 missing
     // #5): EXPORT writes every session TABLE as one data file plus
-    // DuckDB-compatible schema.sql/load.sql; IMPORT runs those scripts
-    // back through this stage (CREATE TABLE maps onto the session
-    // temp-table route, so a DuckDB-produced directory imports too);
-    // CHECKPOINT is the no-op acknowledgment (no WAL here) returning
-    // DuckDB's empty Success relation. ATTACH (r15) mounts an
-    // EXPORT-DATABASE directory as alias-prefixed temp views —
-    // rewriteAttachedRefs (in code2 above) points later statements'
-    // alias.tbl at them; DETACH drops them. Only a .db storage file
-    // keeps the guided error.
+    // DuckDB-compatible scripts; IMPORT runs those scripts back through
+    // this stage (CREATE TABLE maps onto the session temp-table route,
+    // so a DuckDB-produced directory imports too); CHECKPOINT is the
+    // no-op acknowledgment (no WAL here) returning DuckDB's empty
+    // Success relation. ATTACH (r15) runs the same scripts into
+    // alias-prefixed temp views — rewriteAttachedRefs (in code2 above)
+    // points later statements' alias.tbl at them; DETACH drops them.
+    // Only a .db storage file keeps the guided error. DuckDB returns
+    // the LAST statement's Count relation from IMPORT: the batch rule.
     GraftSqlParser.attachTarget(code2).foreach { case (dir, alias, ifNotExists) =>
-      return GraftSqlParser.executeAttach(spark, dir, alias,
-        st => SqlStage(name, st).apply(spark, df), ifNotExists)
+      return DuckSession.executeAttach(spark, dir, alias, name, ifNotExists,
+        st => SqlStage(name, st).apply(spark, df))
     }
     GraftSqlParser.detachTarget(code2).foreach { case (alias, ifExists) =>
-      return GraftSqlParser.executeDetach(spark, alias, ifExists)
+      return DuckSession.executeDetach(spark, alias, ifExists)
     }
     GraftSqlParser.exportDatabaseTarget(code2).foreach { case (dir, fmt) =>
-      return GraftSqlParser.executeExportDatabase(spark, dir, fmt)
+      return DuckSession.executeExportDatabase(spark, dir, fmt)
     }
     GraftSqlParser.importDatabaseTarget(code2).foreach { dir =>
-      val p = java.nio.file.Paths.get(dir)
-      def readSql(f: String): String = {
-        val fp = p.resolve(f)
-        if (!java.nio.file.Files.isRegularFile(fp))
-          throw new graft.functions.expressions.DuckDialectException(
-            s"sql stage '$name': IMPORT DATABASE '$dir' — missing $f (the " +
-              "directory must come from EXPORT DATABASE)")
-        new String(java.nio.file.Files.readAllBytes(fp), "UTF-8")
-      }
-      // DuckDB's load.sql records ABSOLUTE source paths — remap onto
-      // the import directory so a moved/copied export still loads (r15;
-      // the attach route shares the helper). DuckDB returns the LAST
-      // load statement's Count relation: the batch rule.
-      return runBatch((GraftSqlParser.splitStatements(readSql("schema.sql")) ++
-        GraftSqlParser.splitStatements(readSql("load.sql"))).map { st =>
-        GraftSqlParser.remapCopySourceToDir(st
-          .replaceAll("(?is)^\\s*CREATE\\s+TABLE\\b", "CREATE TEMP TABLE")
-          .replaceAll("(?is)^\\s*CREATE\\s+VIEW\\b", "CREATE TEMP VIEW"), dir)
-      }.filter(_.trim.nonEmpty))
+      return runBatch(DuckSession.exportScript(dir, None, name)._2)
     }
     if (GraftSqlParser.isCheckpointStatement(code2))
-      return GraftSqlParser.successRelation(spark)
+      return DuckSession.successRelation(spark)
     // DROP TABLE on a session TEMP view: DuckDB's DROP TABLE drops temp
     // tables; Spark's insists on DROP VIEW for them — claim exactly the
     // temp-view case and leave real catalog tables to Spark's native
@@ -301,8 +283,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
     GraftSqlParser.dropTableTarget(code2).foreach { case (_, t) =>
       if (isTempView(t)) {
         spark.catalog.dropTempView(t)
-        GraftSqlParser.dropTableMeta(spark, t)
-        GraftSqlParser.dropSessionTable(spark, t)
+        DuckSession.dropTable(spark, t)
         return df
       } // else fall through: Spark's DROP TABLE [IF EXISTS] handles it
     }
@@ -334,14 +315,14 @@ final case class SqlStage(name: String, code: String) extends Stage {
           throw new graft.functions.expressions.DuckDialectException(
             s"sql stage '$name': ALTER TABLE ${spec.table}: column '$c' already " +
               "exists (DuckDB errors here too)")
-      val meta = GraftSqlParser.tableMeta(spark, atbl)
+      val meta = DuckSession.tableMeta(spark, atbl)
       spec match {
         case GraftSqlParser.AlterRenameColumn(t, from, to) =>
           requireCol(from); requireFree(to)
           cur.withColumnRenamed(from, to).createOrReplaceTempView(t)
           meta.foreach { mm =>
             val fl = from.toLowerCase
-            GraftSqlParser.putTableMeta(spark, t, GraftSqlParser.TableMeta(
+            DuckSession.putTableMeta(spark, t, DuckSession.TableMeta(
               mm.pk.map(k => if (k.equalsIgnoreCase(from)) to else k),
               mm.defaults.map { case (k, v) => (if (k == fl) to.toLowerCase else k) -> v },
               mm.notNull.map(k => if (k == fl) to.toLowerCase else k)))
@@ -359,8 +340,8 @@ final case class SqlStage(name: String, code: String) extends Stage {
           added.createOrReplaceTempView(t)
           // DuckDB keeps the DEFAULT for future inserts
           dOpt.foreach { d =>
-            val mm = meta.getOrElse(GraftSqlParser.TableMeta(Nil, Map.empty, Set.empty))
-            GraftSqlParser.putTableMeta(spark, t,
+            val mm = meta.getOrElse(DuckSession.TableMeta(Nil, Map.empty, Set.empty))
+            DuckSession.putTableMeta(spark, t,
               mm.copy(defaults = mm.defaults + (c.toLowerCase -> d)))
           }
         case GraftSqlParser.AlterDropColumn(t, c) =>
@@ -373,7 +354,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
               s"sql stage '$name': ALTER TABLE $t: cannot drop column '$c' — " +
                 "it is part of the PRIMARY KEY (DuckDB refuses too)")
           cur.drop(cols.find(_.equalsIgnoreCase(c)).get).createOrReplaceTempView(t)
-          meta.foreach(mm => GraftSqlParser.putTableMeta(spark, t, mm.copy(
+          meta.foreach(mm => DuckSession.putTableMeta(spark, t, mm.copy(
             defaults = mm.defaults - c.toLowerCase,
             notNull = mm.notNull - c.toLowerCase)))
         case GraftSqlParser.AlterRenameTable(t, to) =>
@@ -382,8 +363,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
               s"sql stage '$name': ALTER TABLE $t RENAME TO $to: '$to' already exists")
           cur.createOrReplaceTempView(to)
           spark.catalog.dropTempView(t)
-          GraftSqlParser.renameTableMeta(spark, t, to)
-          GraftSqlParser.renameSessionTable(spark, t, to)
+          DuckSession.renameTable(spark, t, to)
         case GraftSqlParser.AlterSetType(t, c, ty, usingOpt) =>
           requireCol(c)
           val tt = SqlStage.sparkType(ty)
@@ -402,7 +382,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // unless IF NOT EXISTS finds the name taken, then record its
     // constraints (`meta`; None drops a replaced typed table's old ones)
     def createTempTable(t: String, orReplace: Boolean, ifNotExists: Boolean,
-                        meta: Option[GraftSqlParser.TableMeta])(view: => DataFrame): DataFrame = {
+                        meta: Option[DuckSession.TableMeta])(view: => DataFrame): DataFrame = {
       val exists = spark.catalog.tableExists(t)
       if (exists && !isTempView(t))
         throw new graft.functions.expressions.DuckDialectException(
@@ -415,11 +395,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
             "— use CREATE OR REPLACE TEMP TABLE, or CREATE TEMP TABLE IF NOT EXISTS")
       if (!(ifNotExists && exists)) {
         view.createOrReplaceTempView(t)
-        meta match {
-          case Some(mm) => GraftSqlParser.putTableMeta(spark, t, mm)
-          case None => GraftSqlParser.dropTableMeta(spark, t)
-        }
-        GraftSqlParser.registerSessionTable(spark, t)
+        DuckSession.createTable(spark, t, meta)
       }
       df
     }
@@ -434,7 +410,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
     // DEFAULT, NOT NULL) later INSERTs check — DuckDB's upsert surface
     // resolves ON CONFLICT against it
     GraftSqlParser.createTableDefTarget(code2).foreach { ct =>
-      val meta = GraftSqlParser.TableMeta(
+      val meta = DuckSession.TableMeta(
         ct.pk,
         ct.cols.collect { case c if c.default.isDefined =>
           c.name.toLowerCase -> c.default.get }.toMap,
@@ -483,19 +459,19 @@ final case class SqlStage(name: String, code: String) extends Stage {
         SqlStage(name, target).apply(spark, df)
       else spark.table(target)
     GraftSqlParser.summarizeTarget(code2).foreach { target =>
-      return GraftSqlParser.summarize(describedRelation(target))
+      return DuckSession.summarize(describedRelation(target))
     }
     // DESCRIBE/SHOW statement: DuckDB's six-column schema relation
     // (pure driver-side metadata — zero jobs) over the same targets;
     // Spark's own DESCRIBE TABLE / SHOW TABLES forms never match
     // (describeTarget) and keep their native shape.
     GraftSqlParser.describeTarget(code2).foreach { target =>
-      return GraftSqlParser.describe(describedRelation(target))
+      return DuckSession.describe(describedRelation(target))
     }
     // percentage reservoir resolves here (needs the session to count
     // the base relation — r16); the spec then collapses to the exact-n
     // reservoir(n ROWS) text the pure rewrites below execute
-    val code3 = GraftSqlParser.resolvePercentReservoir(spark, code2,
+    val code3 = DuckSession.resolvePercentReservoir(code2,
       st => SqlStage(name, st).apply(spark, df))
     // star-REPLACE expands against the ACTUAL source table's schema
     // when the block reads one resolvable relation (r16); the stage
@@ -512,8 +488,8 @@ final case class SqlStage(name: String, code: String) extends Stage {
       GraftSqlParser.rewriteColumns(
         GraftSqlParser.rewriteReplace(s, dfCols, resolveRel), dfCols, resolveRel),
       grpResolve)
-    val rewritten = GraftSqlParser.rewriteSeededRandom(spark, rewriteDialect(
-      GraftSqlParser.rewritePivotStatement(spark,
+    val rewritten = DuckSession.rewriteSeededRandom(spark, rewriteDialect(
+      DuckSession.rewritePivotStatement(spark,
         GraftSqlParser.rewriteUnpivotStatement(code3), rewriteDialect)))
     graft.functions.expressions.DuckDialect.rejectSilentTraps(
       GraftSqlParser.maskQuotes(rewritten))
@@ -559,7 +535,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
           }
           // analysis is eager in spark.sql, so the views can be dropped
           // as soon as the DataFrame exists
-          val out = GraftSqlParser.withDialectHint(code)(spark.sql(spliced))
+          val out = DuckSession.withDialectHint(code)(spark.sql(spliced))
           views.foreach(spark.catalog.dropTempView(_))
           Some(out)
         }
@@ -569,7 +545,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
           scala.util.Try(spark.catalog.dropTempView(v)))
       }
     }
-    try GraftSqlParser.withDialectHint(code)(spark.sql(rewritten))
+    try DuckSession.withDialectHint(code)(spark.sql(rewritten))
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         // unresolved DuckDB function / table function → name the Spark
@@ -641,14 +617,14 @@ final case class SqlStage(name: String, code: String) extends Stage {
     }
     SqlStage.registerRebuilt(spark, t, rebuilt)
     returning.map(exprs => returningRelation(affected.get, exprs))
-      .getOrElse(GraftSqlParser.countRelation(spark, n))
+      .getOrElse(DuckSession.countRelation(spark, n))
   }
 
   /** Execute a parsed [[GraftSqlParser.InsertSpec]] against a session
     * TEMP table and return DuckDB's `Count` relation (inserted +
     * actually-updated rows — conflict-skipped rows and WHERE-false
     * updates don't count; probed). Enforces the table's declared
-    * constraints ([[GraftSqlParser.TableMeta]]): NOT NULL, PRIMARY KEY
+    * constraints ([[DuckSession.TableMeta]]): NOT NULL, PRIMARY KEY
     * uniqueness (against the table AND within the batch — DuckDB errors
     * on in-batch duplicate keys even under DO NOTHING, probed), and
     * fills unlisted columns from declared DEFAULTs (NULL otherwise).
@@ -669,7 +645,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
     def fail(msg: String): Nothing =
       throw new DuckDialectException(s"sql stage '$name': INSERT INTO $t: $msg")
     val cur = spark.table(t)
-    val meta = GraftSqlParser.tableMeta(spark, t)
+    val meta = DuckSession.tableMeta(spark, t)
     val defaults = meta.map(_.defaults).getOrElse(Map.empty[String, String])
     val pk = meta.map(_.pk).getOrElse(Nil)
     val pkLower = pk.map(_.toLowerCase).toSet
@@ -882,7 +858,7 @@ final case class SqlStage(name: String, code: String) extends Stage {
     spark.catalog.dropTempView(s"__graft_exc_$t")
     // RETURNING on a plain INSERT carries the rows as inserted (probed)
     returning.map(exprs => returningRelation(aligned, exprs))
-      .getOrElse(GraftSqlParser.countRelation(spark, nAffected))
+      .getOrElse(DuckSession.countRelation(spark, nAffected))
   }
 }
 

@@ -185,7 +185,7 @@ object ExtraQueries {
 
   def q105PivotSql(s: SparkSession, d: String): DataFrame = {
     documents(s, d).createOrReplaceTempView("documents")
-    s.sql(graft.operators.GraftSqlParser.rewritePivotStatement(s, pivotSqlText))
+    s.sql(graft.operators.DuckSession.rewritePivotStatement(s, pivotSqlText))
   }
 
   /** DuckDB's UNPIVOT STATEMENT, same both-engines treatment as q105:
@@ -545,8 +545,8 @@ object ExtraQueries {
     * step further: the whole `CREATE MACRO ...; CREATE MACRO ...;
     * SELECT ...` batch a reference user hands a `sql` stage verbatim,
     * filefilter.py:340-342). Graft registers both macros in the session
-    * registry ([[graft.operators.GraftSqlParser.registerMacro]]) and
-    * expands the call sites textually ([[graft.operators.GraftSqlParser
+    * registry ([[graft.operators.DuckSession.registerMacro]]) and
+    * expands the call sites textually ([[graft.operators.DuckSession
     * .expandMacros]]) — a scalar macro inside an aggregate AND a table
     * macro as an IN-subquery source; DuckDB executes the same batch
     * natively. The DECIMAL(18,4) cast inside the macro body keeps the
@@ -1831,8 +1831,8 @@ object ExtraQueries {
   /** ATTACH/DETACH gate (r15, VERDICT r14 missing #2): EXPORT a session
     * table, drop it, ATTACH the export directory (attach → detach →
     * re-attach exercises the alias lifecycle) and read it back
-    * alias-qualified ([[graft.operators.GraftSqlParser.executeAttach]]
-    * / [[graft.operators.GraftSqlParser.rewriteAttachedRefs]]). The
+    * alias-qualified ([[graft.operators.DuckSession.executeAttach]]
+    * / [[graft.operators.DuckSession.rewriteAttachedRefs]]). The
     * DuckDB oracle runs its own native ATTACH round-trip through a real
     * .db storage file — both engines attach, both read alias-qualified,
     * and the relations must agree. Fresh derived session, the q176

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.expressions.{DuckDialect, DuckDialectException}
-import graft.operators.{GraftSqlParser, Pipeline, SqlStage}
+import graft.operators.{DuckSession, GraftSqlParser, Pipeline, SqlStage}
 import java.nio.file.Files
 import org.apache.spark.sql.Row
 
@@ -300,10 +300,10 @@ class DialectSpec extends SparkSpec {
     assert(rows.forall(_.getInt(1) > 0))
   }
 
-  test("parser-level hint path (GraftSqlParser.withDialectHint) wraps parse failures") {
+  test("parser-level hint path (DuckSession.withDialectHint) wraps parse failures") {
     val sql = "SELECT * FROM t USING SAMPLE 10%"
     val e = intercept[DuckDialectException](
-      GraftSqlParser.withDialectHint(sql)(
+      DuckSession.withDialectHint(sql)(
         spark.sessionState.sqlParser.parsePlan(sql)))
     assert(e.getMessage.contains("TABLESAMPLE"))
     assert(e.getCause != null)
@@ -1217,8 +1217,8 @@ class DialectSpec extends SparkSpec {
       ok(GraftSqlParser.splitStatements(sql))
       ok(GraftSqlParser.isCreateMacroStatement(sql))
       if (GraftSqlParser.isCreateMacroStatement(sql))
-        ok(GraftSqlParser.registerMacro(spark, sql))
-      ok(GraftSqlParser.expandMacros(spark, sql))
+        ok(DuckSession.registerMacro(spark, sql))
+      ok(DuckSession.expandMacros(spark, sql))
       ok(GraftSqlParser.copyTarget(sql))
       ok(GraftSqlParser.ctasTarget(sql))
       ok(GraftSqlParser.insertTarget(sql))
@@ -4383,6 +4383,10 @@ class DialectSpec extends SparkSpec {
       s"SELECT '$alias.att_src' AS s, count(*) AS n FROM $alias.att_src")
       .apply(s2, s2.range(1).toDF("z")).collect().head
     assert(lit.getString(0) == s"$alias.att_src" && lit.getLong(1) == 5L)
+    // one scan rewrites only the attached (alias, table) pairs
+    val sql = "SELECT * FROM a.t1 JOIN b . t2 ON 'a.t1' = a.t2, A.T1"
+    assert(GraftSqlParser.rewriteAttachedRefs(sql, Map("a" -> Seq("t1"), "b" -> Seq("t2"))) ==
+      "SELECT * FROM __graft_att_a__t1 JOIN __graft_att_b__t2 ON 'a.t1' = a.t2, __graft_att_a__t1")
   }
 
   test("ATTACH/IMPORT consume DuckDB's own EXPORT DATABASE layout (fixture)") {
@@ -4411,6 +4415,85 @@ class DialectSpec extends SparkSpec {
       s"IMPORT DATABASE '$dir'; SELECT count(*) AS n FROM cities")
       .apply(s3, s3.range(1).toDF("z")).collect()
     assert(out2.head.getLong(0) == 3L)
+  }
+
+  /** A DuckDB 1.0.0 EXPORT DATABASE of table `t(a INTEGER, b VARCHAR)`
+    * holding (1, 'x'), (2, 'y'), plus `extra` schema.sql lines.
+    */
+  private def duckExport(extra: String): String = {
+    val dir = Files.createTempDirectory("graftduckexp").toString
+    def write(f: String, text: String): Unit =
+      Files.write(java.nio.file.Paths.get(dir, f), text.getBytes("UTF-8"))
+    write("schema.sql", s"CREATE TABLE t(a INTEGER, b VARCHAR);\n$extra\n")
+    write("load.sql", s"COPY t FROM '$dir/t.csv' (FORMAT 'csv', quote '\"', " +
+      "delimiter ',', header 1);\n")
+    write("t.csv", "a,b\n1,x\n2,y\n")
+    dir
+  }
+
+  test("IMPORT DATABASE skips a DuckDB export's CREATE INDEX, as ATTACH does") {
+    val dir = duckExport("CREATE INDEX ti ON t(a);")
+    val s2 = spark.newSession()
+    graft.functions.expressions.GraftFunctions.register(s2)
+    val rows = SqlStage("t", s"IMPORT DATABASE '$dir'; SELECT * FROM t ORDER BY a")
+      .apply(s2, s2.range(1).toDF("z")).collect()
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq == Seq((1, "x"), (2, "y")))
+    val att = SqlStage("t", s"ATTACH '$dir' AS ix; SELECT count(*) AS n FROM ix.t")
+      .apply(s2, s2.range(1).toDF("z")).collect()
+    assert(att.head.getLong(0) == 2L)
+  }
+
+  test("ATTACH refuses an export's view before it runs a statement; IMPORT loads it") {
+    val dir = duckExport("CREATE VIEW v AS SELECT (a * 10) AS a10 FROM t;")
+    val s2 = spark.newSession()
+    graft.functions.expressions.GraftFunctions.register(s2)
+    val e = intercept[DuckDialectException](
+      SqlStage("t", s"ATTACH '$dir' AS e; SELECT * FROM e.v")
+        .apply(s2, s2.range(1).toDF("z")))
+    assert(e.getMessage.contains("view 'v'") && e.getMessage.contains("IMPORT DATABASE"))
+    assert(!s2.catalog.listTables().collect().exists(_.name.startsWith("__graft_att_e__")))
+    assert(DuckSession.rewriteAttachedRefs(s2, "SELECT * FROM e.t") == "SELECT * FROM e.t")
+    val rows = SqlStage("t", s"IMPORT DATABASE '$dir'; SELECT a10 FROM v ORDER BY a10")
+      .apply(s2, s2.range(1).toDF("z")).collect()
+    assert(rows.map(_.getInt(0)).toSeq == Seq(10, 20))
+  }
+
+  test("DuckDB catalog state stays within its session") {
+    val s1 = spark.newSession()
+    graft.functions.expressions.GraftFunctions.register(s1)
+    val exp1 = Files.createTempDirectory("graftiso").toString
+    def run(s: org.apache.spark.sql.SparkSession, sql: String) =
+      SqlStage("t", sql).apply(s, s.range(1).toDF("z")).collect()
+    run(s1, "CREATE MACRO iso_m(x) AS x + 1")
+    run(s1, "SELECT setseed(0.25) AS m")
+    run(s1, "CREATE TEMP TABLE iso_pk (k INTEGER PRIMARY KEY)")
+    run(s1, "CREATE TEMP TABLE iso_ctas AS SELECT 1 AS x")
+    run(s1, s"EXPORT DATABASE '$exp1'")
+    run(s1, s"ATTACH '$exp1' AS iso_a")
+    def exported(s: org.apache.spark.sql.SparkSession): String = {
+      val dir = Files.createTempDirectory("graftiso").toString
+      run(s, s"EXPORT DATABASE '$dir'")
+      new String(Files.readAllBytes(java.nio.file.Paths.get(dir, "schema.sql")), "UTF-8")
+    }
+    // (macro, seed, constraints, exported tables, attachment) as s sees them
+    def sees(s: org.apache.spark.sql.SparkSession): Seq[Boolean] = Seq(
+      DuckSession.expandMacros(s, "SELECT iso_m(1)") != "SELECT iso_m(1)",
+      DuckSession.rewriteSeededRandom(s, "SELECT random()") != "SELECT random()",
+      DuckSession.tableMeta(s, "iso_pk").exists(_.pk == Seq("k")),
+      exported(s).contains("CREATE TABLE iso_ctas("),
+      DuckSession.rewriteAttachedRefs(s, "SELECT * FROM iso_a.iso_ctas") ==
+        "SELECT * FROM __graft_att_iso_a__iso_ctas")
+    assert(sees(s1.newSession()) == Seq.fill(5)(false))
+    assert(sees(s1) == Seq.fill(5)(true))
+  }
+
+  test("GraftSqlParser names no Spark class; one session registry under operators") {
+    val ops = new java.io.File("src/main/scala/graft/operators")
+    def text(f: java.io.File) = new String(Files.readAllBytes(f.toPath), "UTF-8")
+    assert(!text(new java.io.File(ops, "GraftSqlParser.scala")).contains("org.apache.spark"))
+    val registries = ops.listFiles().filter(_.getName.endsWith(".scala")).toSeq
+      .map(f => text(f).linesIterator.count(_.contains("WeakHashMap"))).sum
+    assert(registries == 1)
   }
 
   test("icu_collate_* family orders by locale collation (probed batteries)") {
