@@ -51,9 +51,8 @@ object Main {
       Some(l)
     } else None
 
-    val yaml = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(confPath)))
     try {
-      val res = Pipeline.run(spark, graft.model.ConfigLoader.fromYaml(yaml), in,
+      val res = Pipeline.run(spark, graft.model.ConfigLoader.fromFile(confPath), in,
         Some(out), countStages = interactive, configPath = Some(confPath))
       res.stages.foreach { r =>
         val rows = r.rows.fold("")(n => s" rows=$n")

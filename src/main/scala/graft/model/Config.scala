@@ -40,74 +40,145 @@ final case class PipelineConfig(
     reloadConfigEverySeconds: Int,
     filters: List[StageConfig])
 
+/** The one typed reader of a YAML map: every config value — top-level,
+  * per-filter and each stage's `actionConfig` — is read through it, with
+  * one rule per type. An absent or blank (`key:`) value reads as the
+  * default. Integers accept a YAML integer, an integral float (`2.0`) or
+  * a string holding one, if it fits the field's type; doubles accept any
+  * number or numeric string; booleans accept a YAML boolean or
+  * true/false/yes/no in any case; strings are the value's `toString`.
+  * Lists and maps apply the same rule to each element. Anything else
+  * throws one IllegalArgumentException naming `where`, the key, the value
+  * and the expected type.
+  */
+final class Options(where: String, val values: Map[String, Any]) {
+  private def raw(k: String): Option[Any] = values.get(k).filter(_ != null)
+
+  private def at(k: String): String = if (where == Options.Top) k else s"$where: $k"
+
+  private def fail(k: String, v: Any, what: String): Nothing =
+    throw new IllegalArgumentException(s"$where: $k = '$v' is not $what")
+
+  private def parse[T](k: String, v: Any)(implicit r: Options.Read[T]): T =
+    Option(v).flatMap(r.parse).getOrElse(fail(k, v, r.what))
+
+  /** The value at `k`, None when absent or blank. */
+  def get[T: Options.Read](k: String): Option[T] = raw(k).map(parse[T](k, _))
+
+  def apply[T: Options.Read](k: String, default: T): T = get[T](k).getOrElse(default)
+
+  def isList(k: String): Boolean = raw(k).exists(_.isInstanceOf[ju.List[_]])
+
+  def isMap(k: String): Boolean = raw(k).exists(_.isInstanceOf[ju.Map[_, _]])
+
+  private def items(k: String): Seq[(Any, Int)] = raw(k).fold(Seq.empty[(Any, Int)]) {
+    case l: ju.List[_] => l.asScala.toSeq.zipWithIndex
+    case v => fail(k, v, "a list")
+  }
+
+  /** The list at `k`; empty when absent or blank. */
+  def list[T: Options.Read](k: String): Seq[T] =
+    items(k).map { case (v, i) => parse[T](s"$k[$i]", v) }
+
+  /** The map at `k` in its YAML order; empty when absent or blank. */
+  def map[T: Options.Read](k: String): Seq[(String, T)] = raw(k).fold(Seq.empty[(String, T)]) {
+    case m: ju.Map[_, _] => m.asScala.toSeq.map { case (a, v) => s"$a" -> parse[T](s"$k.$a", v) }
+    case v => fail(k, v, "a map")
+  }
+
+  /** The map at `k` as a reader of its own; empty when absent or blank. */
+  def section(k: String): Options = Options(at(k), raw(k).orNull)
+
+  /** The list of maps at `k`, one reader each. */
+  def sections(k: String): Seq[Options] = items(k).map { case (v, i) => Options(s"${at(k)}[$i]", v) }
+}
+
+object Options {
+  /** The `where` of a config file's root map. */
+  val Top = "top level"
+
+  /** How one YAML value reads as a T; None means malformed. */
+  final case class Read[T](what: String, parse: Any => Option[T])
+
+  object Read {
+    private def decimal(v: Any): Option[BigDecimal] = v match {
+      case _: Number | _: String => scala.util.Try(BigDecimal(v.toString.trim)).toOption
+      case _ => None
+    }
+    private def whole[T](what: String, lo: Long, hi: Long)(to: BigDecimal => T): Read[T] =
+      Read(what, decimal(_).filter(d => d.isWhole && d >= lo && d <= hi).map(to))
+
+    implicit val int: Read[Int] = whole("an integer in Int range", Int.MinValue, Int.MaxValue)(_.toInt)
+    implicit val long: Read[Long] = whole("an integer in Long range", Long.MinValue, Long.MaxValue)(_.toLong)
+    implicit val double: Read[Double] = Read("a number", {
+      case n: Number => Some(n.doubleValue)
+      case s: String => s.trim.toDoubleOption
+      case _ => None
+    })
+    implicit val bool: Read[Boolean] = Read("true/false/yes/no", {
+      case b: java.lang.Boolean => Some(b.booleanValue)
+      case s: String => s.toLowerCase match {
+        case "true" | "yes" => Some(true)
+        case "false" | "no" => Some(false)
+        case _ => None
+      }
+      case _ => None
+    })
+    implicit val string: Read[String] = Read("a string", v => Some(v.toString))
+  }
+
+  /** A YAML map as a reader: null (blank) is empty, a non-map throws. */
+  def apply(where: String, v: Any): Options = v match {
+    case null => new Options(where, Map.empty)
+    case m: ju.Map[_, _] => new Options(where, m.asScala.map { case (k, x) => s"$k" -> x }.toMap)
+    case other => throw new IllegalArgumentException(s"$where: '$other' is not a map")
+  }
+
+  /** A stage's `actionConfig`, its errors named after the stage. */
+  def apply(cfg: StageConfig): Options =
+    new Options(s"${cfg.actionType} stage '${cfg.name}'", cfg.actionConfig)
+}
+
 object ConfigLoader {
   private val KnownActionTypes =
     Set("sql", "python", "rest", "pandas", "udf", "derive", "transform",
       "dedup", "decontaminate", "split", "mix", "score", "clean")
 
+  /** Read a config file as UTF-8, whatever the platform charset. */
+  def fromFile(path: String): PipelineConfig =
+    fromYaml(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+      java.nio.charset.StandardCharsets.UTF_8))
+
   def fromYaml(yaml: String): PipelineConfig = {
-    val root = Option(new Yaml().load[ju.Map[String, Any]](yaml))
-      .getOrElse(new ju.HashMap[String, Any]())
-      .asScala
-    val filters = root.get("filters") match {
-      case Some(l: ju.List[_]) =>
-        l.asScala.toList.zipWithIndex.map {
-          case (m: ju.Map[_, _], i) => stage(m.asInstanceOf[ju.Map[String, Any]].asScala.toMap, i)
-          case (other, i) => throw new IllegalArgumentException(s"filters[$i] is not a map: $other")
-        }
-      case _ => Nil
-    }
+    val root = Options(Options.Top, new Yaml().load[Any](yaml))
     PipelineConfig(
       // "" = not declared → Sources.load sniffs the delimiter, matching
       // the reference's read_csv_auto path (countries.yml declares none
       // but ships a ';' CSV)
-      inDelimiter = str(root.toMap, "inDelimiter", ""),
-      outDelimiter = str(root.toMap, "outDelimiter", ","),
-      sampleLines = num(root.toMap, "sampleLines", 0L),
-      reloadConfigEverySeconds = num(root.toMap, "reloadConfigEverySeconds",
-        num(root.toMap, "reloadConfigEvery", 0L)).toInt,
-      filters = filters)
+      inDelimiter = root("inDelimiter", ""),
+      outDelimiter = root("outDelimiter", ","),
+      sampleLines = root("sampleLines", 0L),
+      reloadConfigEverySeconds = root("reloadConfigEverySeconds", root("reloadConfigEvery", 0)),
+      filters = root.sections("filters").zipWithIndex.map { case (m, i) => stage(m, i) }.toList)
   }
 
-  private def stage(m: Map[String, Any], i: Int): StageConfig = {
-    val action = Option(m.getOrElse("actionType", null)).map(_.toString)
+  private def stage(m: Options, i: Int): StageConfig = {
+    val action = m.get[String]("actionType")
       .getOrElse(throw new IllegalArgumentException(s"filters[$i]: missing actionType"))
     // Fail fast on unknown formats/actions — reference O4 semantics.
     if (!KnownActionTypes.contains(action))
       throw new IllegalArgumentException(
         s"filters[$i]: unsupported actionType '$action' (known: ${KnownActionTypes.toSeq.sorted.mkString(", ")})")
-    val ac: Map[String, Any] = m.get("actionConfig") match {
-      case Some(a: ju.Map[_, _]) => a.asInstanceOf[ju.Map[String, Any]].asScala.toMap
-      case _ => Map.empty
-    }
-    // code may live top-level (reference behavior) or under actionConfig.
-    val code = m.get("code").flatMap(Option(_))
-      .orElse(ac.get("code").flatMap(Option(_))).map(_.toString)
+    val ac = m.section("actionConfig")
     StageConfig(
-      name = str(m, "name", s"filter$i"),
+      name = m("name", s"filter$i"),
       actionType = action,
-      disabled = bool(m, "disabled"),
-      filterThreads = num(m, "filterThreads", 1L).toInt,
-      chunkSize = num(m, "chunkSize", 10000L).toInt,
-      code = code,
-      actionConfig = ac,
-      showSampleOnFinish = bool(m, "showSampleOnFinish"))
+      disabled = m("disabled", false),
+      filterThreads = m("filterThreads", 1),
+      chunkSize = m("chunkSize", 10000),
+      // code may live top-level (reference behavior) or under actionConfig.
+      code = m.get[String]("code").orElse(ac.get[String]("code")),
+      actionConfig = ac.values,
+      showSampleOnFinish = m("showSampleOnFinish", false))
   }
-
-  // snakeyaml yields Some(null) for "key:" with a blank value — every
-  // accessor must treat that as absent, not NPE
-  private def str(m: Map[String, Any], k: String, dflt: String): String =
-    m.get(k).flatMap(Option(_)).map(_.toString).getOrElse(dflt)
-  private def num(m: Map[String, Any], k: String, dflt: Long): Long =
-    m.get(k).flatMap(Option(_)) match {
-      case Some(n: Number) => n.longValue()
-      case Some(s: String) if s.nonEmpty && s.forall(_.isDigit) => s.toLong
-      case _ => dflt
-    }
-  private def bool(m: Map[String, Any], k: String): Boolean =
-    m.get(k).flatMap(Option(_)) match {
-      case Some(b: java.lang.Boolean) => b
-      case Some(s: String) => s.equalsIgnoreCase("true")
-      case _ => false
-    }
 }

@@ -1239,14 +1239,23 @@ object DuckSession {
           "storage files; EXPORT DATABASE the source first, or read the data " +
           "files directly (read_parquet/read_csv_auto, Sources loaders)")
     val (tables, stmts) = exportScript(dir, Some(alias), stage)
-    stmts.foreach(run)
     // attached relations are NOT session tables: DuckDB's EXPORT
     // DATABASE walks only the current database, so a later EXPORT here
     // must not re-export the attachment (and DETACH, not DROP, owns
     // their lifecycle)
     val views = tables.map(attachViewName(alias, _)).toSet
-    update(spark)(st => st.copy(meta = st.meta -- views,
-      tables = st.tables.filterNot(views), attached = st.attached.updated(alias, tables)))
+    def unregister(st: State): State =
+      st.copy(meta = st.meta -- views, tables = st.tables.filterNot(views))
+    try stmts.foreach(run)
+    catch {
+      // a half-failed ATTACH (say, a COPY naming a missing file) leaves
+      // none of the views it already made behind
+      case scala.util.control.NonFatal(e) =>
+        views.foreach(spark.catalog.dropTempView)
+        update(spark)(unregister)
+        throw e
+    }
+    update(spark)(st => unregister(st).copy(attached = st.attached.updated(alias, tables)))
     successRelation(spark)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.model.StageConfig
+import graft.model.{Options, StageConfig}
 import java.net.{URI, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
@@ -151,7 +151,7 @@ object RestStage {
                                     urlencode: Boolean): Option[String] = {
     var ok = true
     val out = Placeholder.replaceAllIn(template, m => {
-      row.get(m.group(1)).flatMap(Option(_)) match {
+      row.get(m.group(1)).filter(_ != null) match {
         case Some(v) =>
           val s = v.toString
           java.util.regex.Matcher.quoteReplacement(
@@ -214,9 +214,7 @@ object RestStage {
         System.currentTimeMillis() - lastReload >= cfg.reloadEverySeconds * 1000L) {
         lastReload = System.currentTimeMillis()
         try {
-          val yaml = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(cfg.configPath.get)), StandardCharsets.UTF_8)
-          graft.model.ConfigLoader.fromYaml(yaml).filters
+          graft.model.ConfigLoader.fromFile(cfg.configPath.get).filters
             .find(_.name == stageName).map(f => math.max(1, f.filterThreads))
             .filter(_ != threads)
             .foreach { nt =>
@@ -351,60 +349,41 @@ object RestStage {
   def fromConfig(spark: SparkSession, cfg: StageConfig,
                  reloadEverySeconds: Int = 0,
                  configPath: Option[String] = None): RestStage = {
-    val ac = cfg.actionConfig
-    def smap(k: String): Map[String, String] = ac.get(k) match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Any]].asScala.toMap.map { case (a, b) => a -> String.valueOf(b) }
-      case _ => Map.empty
-    }
-    def slist(k: String): Set[String] = ac.get(k) match {
-      case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSet
-      case _ => Set.empty
-    }
-    // null-safe option read: YAML "key:" with a blank value yields
-    // Some(null), which must fall back to the default, not NPE
-    def sopt(k: String): Option[String] =
-      ac.get(k).flatMap(Option(_)).map(_.toString)
-    def sint(k: String, dflt: Long): Long =
-      sopt(k).filter(_.nonEmpty).map(_.toLong).getOrElse(dflt)
-    def sbool(k: String): Boolean =
-      sopt(k).exists(v => v.equalsIgnoreCase("true") || v.equalsIgnoreCase("yes"))
+    val o = Options(cfg)
     // queryParams in the reference is one templated string
     // "lat={lat}&lon={lon}" (fullExample.yml:63); we also accept the
     // map form {lat: "{lat}"} — both fill from the row.
-    val qp: Map[String, String] = ac.get("queryParams") match {
-      case Some(s: String) =>
-        s.split("&").filter(_.contains("=")).map { kv =>
+    val qp: Map[String, String] =
+      if (o.isMap("queryParams")) o.map[String]("queryParams").toMap
+      else o.get[String]("queryParams").fold(Map.empty[String, String])(
+        _.split("&").filter(_.contains("=")).map { kv =>
           val Array(k, v) = kv.split("=", 2); k -> v
-        }.toMap
-      case _ => smap("queryParams")
-    }
+        }.toMap)
     // urlencodeParams in the reference is a single boolean applying to
     // every param (filters.py:38); the list form names specific keys.
-    val urlenc: Set[String] = ac.get("urlencodeParams") match {
-      case Some(b: java.lang.Boolean) => if (b) qp.keySet else Set.empty
-      case Some(s: String) if s.equalsIgnoreCase("true") => qp.keySet
-      case _ => slist("urlencodeParams")
-    }
+    val urlenc: Set[String] =
+      if (o.isList("urlencodeParams")) o.list[String]("urlencodeParams").toSet
+      else if (o("urlencodeParams", false)) qp.keySet
+      else Set.empty
     // reference joins host and path with '/' (filters.py:52
     // url = f"{host}/{path}"), so configs write path without a leading
     // slash (countries.yml:13) — normalize to our host+path concat
-    val rawPath = sopt("path").getOrElse("")
+    val rawPath = o("path", "")
     val rc = RestConfig(
-      host = RestStage.overrideHost(sopt("host").getOrElse(
+      host = RestStage.overrideHost(o.get[String]("host").getOrElse(
         throw new IllegalArgumentException(s"${cfg.name}: rest stage needs host"))),
       path = if (rawPath.isEmpty || rawPath.startsWith("/")) rawPath else "/" + rawPath,
-      method = sopt("method").getOrElse("GET"),
+      method = o("method", "GET"),
       queryParams = qp,
-      postBody = smap("postBody"),
+      postBody = o.map[String]("postBody").toMap,
       urlencodeParams = urlenc,
-      newField = sopt("newField").getOrElse("response"),
+      newField = o("newField", "response"),
       filterThreads = cfg.filterThreads,
-      timeoutMillis = sint("timeoutMillis", 30000L),
-      maxRetries = sint("maxRetries", 0L).toInt,
-      retryBackoffMillis = sint("retryBackoffMillis", 200L),
-      logRequests = sbool("logHttpRequests"),
-      logResponses = sbool("logHttpResponses"),
+      timeoutMillis = o("timeoutMillis", 30000L),
+      maxRetries = o("maxRetries", 0),
+      retryBackoffMillis = o("retryBackoffMillis", 200L),
+      logRequests = o("logHttpRequests", false),
+      logResponses = o("logHttpResponses", false),
       reloadEverySeconds = reloadEverySeconds,
       configPath = configPath)
     RestStage(cfg.name, rc, RestCounters(spark, cfg.name))

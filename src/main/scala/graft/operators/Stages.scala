@@ -1,11 +1,10 @@
 package graft.operators
 
-import graft.model.StageConfig
+import graft.model.{Options, StageConfig}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
-import scala.jdk.CollectionConverters._
 
 /** A pipeline stage: DataFrame => DataFrame, the Spark re-expression of
   * the reference's filter list (SURVEY.md §7 design stance). Stages stay
@@ -990,28 +989,13 @@ object DeriveStage {
     * }}}
     */
   def fromConfig(cfg: StageConfig): DeriveStage = {
-    val ac = cfg.actionConfig
-    val cols = ac.get("columns") match {
-      case Some(l: java.util.List[_]) =>
-        l.asScala.toSeq.map {
-          case m: java.util.Map[_, _] =>
-            val mm = m.asInstanceOf[java.util.Map[String, Any]].asScala
-            (mm("name").toString, mm("expr").toString)
-          case other => throw new IllegalArgumentException(s"bad column spec: $other")
-        }
-      case _ => Nil
-    }
-    val drops = ac.get("drop") match {
-      case Some(l: java.util.List[_]) => l.asScala.toSeq.map(_.toString)
-      case _ => Nil
-    }
-    val renames = ac.get("rename") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Any]].asScala.toSeq.map { case (k, v) => (k, v.toString) }
-      case _ => Nil
-    }
-    DeriveStage(cfg.name, cols, ac.get("filter").flatMap(Option(_)).map(_.toString),
-      drops, renames)
+    val o = Options(cfg)
+    val cols = o.sections("columns").map(c => (c.get[String]("name"), c.get[String]("expr")) match {
+      case (Some(n), Some(e)) => (n, e)
+      case _ => throw new IllegalArgumentException(s"bad column spec: ${c.values}")
+    })
+    DeriveStage(cfg.name, cols, o.get[String]("filter"), o.list[String]("drop"),
+      o.map[String]("rename"))
   }
 }
 
@@ -1186,24 +1170,16 @@ final case class DedupStage(name: String, method: String, idCol: String,
 
 object DedupStage {
   def fromConfig(cfg: StageConfig): DedupStage = {
-    val ac = cfg.actionConfig
-    def s(k: String, d: String) = ac.get(k).flatMap(Option(_)).map(_.toString).getOrElse(d)
-    def n(k: String, d: Int) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.intValue(); case Some(x) => x.toString.toInt; case None => d
-    }
-    def dbl(k: String, d: Double) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.doubleValue(); case Some(x) => x.toString.toDouble; case None => d
-    }
-    DedupStage(cfg.name, s("method", "minhash"), s("id", "doc_id"), s("text", "text"),
-      dbl("threshold", 0.6), n("k", 3), n("numHashes", 32), n("bands", 8),
-      n("width", 20), s("vec", "embedding"),
+    val o = Options(cfg)
+    DedupStage(cfg.name, o("method", "minhash"), o("id", "doc_id"), o("text", "text"),
+      o("threshold", 0.6), o("k", 3), o("numHashes", 32), o("bands", 8),
+      o("width", 20), o("vec", "embedding"),
       // bits omitted in YAML → auto-sized from the corpus (bits ≈ log2 n)
-      n("bits", graft.functions.VectorFunctions.Auto), n("tables", 16),
-      n("maxDf", 4).toLong,
-      ac.get("hashKeys").flatMap(Option(_)).exists(_.toString.toBoolean),
-      n("clusters", graft.functions.VectorFunctions.Auto),
-      ac.get("score").flatMap(Option(_)).map(_.toString).filter(_.nonEmpty),
-      n("maxClusterSize", 4096))
+      o("bits", graft.functions.VectorFunctions.Auto), o("tables", 16),
+      o("maxDf", 4L), o("hashKeys", false),
+      o("clusters", graft.functions.VectorFunctions.Auto),
+      o.get[String]("score").filter(_.nonEmpty),
+      o("maxClusterSize", 4096))
   }
 }
 
@@ -1272,28 +1248,17 @@ final case class DecontaminateStage(name: String, method: String,
 
 object DecontaminateStage {
   def fromConfig(cfg: StageConfig): DecontaminateStage = {
-    val ac = cfg.actionConfig
-    def s(k: String, d: String) = ac.get(k).flatMap(Option(_)).map(_.toString).getOrElse(d)
-    def n(k: String, d: Int) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.intValue(); case Some(x) => x.toString.toInt; case None => d
-    }
-    def dbl(k: String, d: Double) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.doubleValue(); case Some(x) => x.toString.toDouble; case None => d
-    }
-    // expectedItems is the one knob documented against 10⁹-row
-    // benchmarks — routing it through the Int helper would silently cap
-    // it at 2³¹-1 (ADVICE r6)
-    def lng(k: String, d: Long) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.longValue(); case Some(x) => x.toString.toLong; case None => d
-    }
-    val path = ac.get("benchmark").flatMap(Option(_)).map(_.toString).getOrElse(
+    val o = Options(cfg)
+    val path = o.get[String]("benchmark").getOrElse(
       throw new IllegalArgumentException(
         s"decontaminate stage '${cfg.name}': actionConfig.benchmark (path) required"))
-    val text = s("text", "text")
-    DecontaminateStage(cfg.name, s("method", "bloom"), path,
-      s("id", "doc_id"), text, s("benchText", text),
-      dbl("threshold", 0.8), n("k", 3), n("numHashes", 32), n("bands", 8),
-      lng("expectedItems", 1L << 20), dbl("fpp", 0.01))
+    val text = o("text", "text")
+    DecontaminateStage(cfg.name, o("method", "bloom"), path,
+      o("id", "doc_id"), text, o("benchText", text),
+      o("threshold", 0.8), o("k", 3), o("numHashes", 32), o("bands", 8),
+      // expectedItems is the one knob documented against 10⁹-row
+      // benchmarks — a Long, never capped at 2³¹-1 (ADVICE r6)
+      o("expectedItems", 1L << 20), o("fpp", 0.01))
   }
 }
 
@@ -1313,17 +1278,11 @@ final case class SplitStage(name: String, idCol: String, outCol: String,
 
 object SplitStage {
   def fromConfig(cfg: StageConfig): SplitStage = {
-    val ac = cfg.actionConfig
-    val weights = ac.get("weights") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Any]].asScala.toSeq
-          .map { case (k, v) => (k, v.toString.toInt) }
-      case _ => throw new IllegalArgumentException(
-        s"split stage '${cfg.name}': actionConfig.weights {label: sixteenths} required")
-    }
-    SplitStage(cfg.name,
-      ac.get("id").flatMap(Option(_)).map(_.toString).getOrElse("doc_id"),
-      ac.get("column").flatMap(Option(_)).map(_.toString).getOrElse("split"), weights)
+    val o = Options(cfg)
+    val weights = o.map[Int]("weights")
+    if (weights.isEmpty) throw new IllegalArgumentException(
+      s"split stage '${cfg.name}': actionConfig.weights {label: sixteenths} required")
+    SplitStage(cfg.name, o("id", "doc_id"), o("column", "split"), weights)
   }
 }
 
@@ -1390,28 +1349,16 @@ final case class MixStage(name: String, method: String, idCol: String,
 
 object MixStage {
   def fromConfig(cfg: StageConfig): MixStage = {
-    val ac = cfg.actionConfig
-    def s(k: String, d: String) = ac.get(k).flatMap(Option(_)).map(_.toString).getOrElse(d)
-    val budgets = ac.get("budgets") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Any]].asScala.toMap
-          .map { case (k, v) => (k, v.toString.toLong) }
-      case _ => Map.empty[String, Long]
-    }
-    val method = s("method", "budget")
+    val o = Options(cfg)
+    val budgets = o.map[Long]("budgets").toMap
+    val method = o("method", "budget")
     if (method == "budget" && budgets.isEmpty)
       throw new IllegalArgumentException(
         s"mix stage '${cfg.name}': actionConfig.budgets {stratum: tokens} required")
-    MixStage(cfg.name, method, s("id", "doc_id"), s("stratum", "lang"),
-      s("tokens", "size(split(text, ' '))"), budgets,
-      s("seqLen", "512").toLong,
-      s("shards", s("fanout", "16")).toInt,
-      s("alpha", "0.5").toDouble,
-      s("fraction", "0.5").toDouble,
-      s("score", ""),
-      s("target", ""),
-      s("text", "text"),
-      s("buckets", "8192").toInt)
+    MixStage(cfg.name, method, o("id", "doc_id"), o("stratum", "lang"),
+      o("tokens", "size(split(text, ' '))"), budgets, o("seqLen", 512L),
+      o("shards", o("fanout", 16)), o("alpha", 0.5), o("fraction", 0.5),
+      o("score", ""), o("target", ""), o("text", "text"), o("buckets", 8192))
   }
 }
 
@@ -1500,19 +1447,11 @@ final case class CleanStage(name: String, method: String, textCol: String,
 
 object CleanStage {
   def fromConfig(cfg: StageConfig): CleanStage = {
-    val ac = cfg.actionConfig
-    def s(k: String, d: String) = ac.get(k).flatMap(Option(_)).map(_.toString).getOrElse(d)
-    def n(k: String, d: Int) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.intValue(); case Some(x) => x.toString.toInt; case None => d
-    }
-    def dbl(k: String, d: Double) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.doubleValue(); case Some(x) => x.toString.toDouble; case None => d
-    }
-    CleanStage(cfg.name, s("method", "gopher"), s("text", "text"),
-      n("minWords", 50), n("maxWords", 100000), n("minStopTypes", 2),
-      n("minLineWords", 5), n("minLines", 3),
-      ac.get("flags").flatMap(Option(_)).exists(_.toString.toBoolean),
-      dbl("minRatio", 0.25), dbl("maxRatio", 1.2))
+    val o = Options(cfg)
+    CleanStage(cfg.name, o("method", "gopher"), o("text", "text"),
+      o("minWords", 50), o("maxWords", 100000), o("minStopTypes", 2),
+      o("minLineWords", 5), o("minLines", 3), o("flags", false),
+      o("minRatio", 0.25), o("maxRatio", 1.2))
   }
 }
 
@@ -1609,14 +1548,10 @@ final case class ScoreStage(name: String, idCol: String,
 
 object ScoreStage {
   def fromConfig(cfg: StageConfig): ScoreStage = {
-    val ac = cfg.actionConfig
-    def s(k: String, d: String) = ac.get(k).flatMap(Option(_)).map(_.toString).getOrElse(d)
-    def n(k: String, d: Int) = ac.get(k).flatMap(Option(_)) match {
-      case Some(x: Number) => x.intValue(); case Some(x) => x.toString.toInt; case None => d
-    }
-    ScoreStage(cfg.name, s("id", "doc_id"), s("text", "text"),
-      s("method", "frequency"), n("order", 2), n("maxVocab", 65536),
-      n("minCount", 2), s("label", "label"), s("smoothing", "jm"))
+    val o = Options(cfg)
+    ScoreStage(cfg.name, o("id", "doc_id"), o("text", "text"),
+      o("method", "frequency"), o("order", 2), o("maxVocab", 65536),
+      o("minCount", 2), o("label", "label"), o("smoothing", "jm"))
   }
 }
 

@@ -336,22 +336,30 @@ object ExtraQueries {
     * within ±5% of them. The oracle computes the same exact counts with
     * literal TRUE flags — the driver's cell-exact compare then fails the
     * gate iff Spark's approx_count_distinct drifts out of the bound.
+    *
+    * The exact counts and the sketches are two aggregates joined on the
+    * flag: in one `agg`, the two distinct counts plan an `Expand` whose
+    * per-(flag, key) groups would each carry both 2^14-register sketch
+    * buffers.
     */
-  def q69ApproxDistinct(s: SparkSession, d: String): DataFrame =
-    lineitem(s, d)
-      .groupBy(col("l_returnflag"))
+  def q69ApproxDistinct(s: SparkSession, d: String): DataFrame = {
+    val li = lineitem(s, d)
+    val exact = li.groupBy(col("l_returnflag"))
       .agg(countDistinct(col("l_orderkey")).as("exact_orders"),
-           countDistinct(col("l_partkey")).as("exact_parts"),
-           // rsd=0.01 so the ±5% assertion is a ~5σ bound, not ~1σ as
-           // with the 0.05 default (which fails ~1/3 of the time)
-           approx_count_distinct(col("l_orderkey"), 0.01).as("ao"),
+           countDistinct(col("l_partkey")).as("exact_parts"))
+    // rsd=0.01 so the ±5% assertion is a ~5σ bound, not ~1σ as with the
+    // 0.05 default (which fails ~1/3 of the time)
+    val sketches = li.groupBy(col("l_returnflag"))
+      .agg(approx_count_distinct(col("l_orderkey"), 0.01).as("ao"),
            approx_count_distinct(col("l_partkey"), 0.01).as("ap"))
+    exact.join(sketches, "l_returnflag")
       .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
         (abs(col("ao") - col("exact_orders")).cast("double") / col("exact_orders") <= 0.05)
           .as("orders_within_5pct"),
         (abs(col("ap") - col("exact_parts")).cast("double") / col("exact_parts") <= 0.05)
           .as("parts_within_5pct"))
       .orderBy(col("l_returnflag"))
+  }
 
   /** Correlated scalar subquery: orders above their own customer's mean
     * (decimal-exact mean so the threshold is engine-independent).

@@ -4458,6 +4458,25 @@ class DialectSpec extends SparkSpec {
     assert(rows.map(_.getInt(0)).toSeq == Seq(10, 20))
   }
 
+  test("a half-failed ATTACH drops the views it made; a later EXPORT names neither") {
+    val dir = Files.createTempDirectory("grafthalf").toString
+    def write(f: String, text: String): Unit =
+      Files.write(java.nio.file.Paths.get(dir, f), text.getBytes("UTF-8"))
+    write("schema.sql", "CREATE TABLE a(x INTEGER);\nCREATE TABLE b(y INTEGER);\n")
+    write("load.sql", Seq("a", "b").map(t =>
+      s"COPY $t FROM '$dir/$t.csv' (FORMAT 'csv', header 1);\n").mkString)
+    write("a.csv", "x\n1\n") // b.csv is missing
+    val s2 = spark.newSession()
+    graft.functions.expressions.GraftFunctions.register(s2)
+    def run(sql: String) = SqlStage("t", sql).apply(s2, s2.range(1).toDF("z")).collect()
+    intercept[Exception](run(s"ATTACH '$dir' AS h"))
+    assert(!s2.catalog.listTables().collect().exists(_.name.startsWith("__graft_att_")))
+    val out = Files.createTempDirectory("grafthalfexp").toString
+    run(s"CREATE TEMP TABLE half_kept AS SELECT 1 AS k; EXPORT DATABASE '$out'")
+    val schema = new String(Files.readAllBytes(java.nio.file.Paths.get(out, "schema.sql")), "UTF-8")
+    assert(schema.contains("half_kept") && !schema.contains("__graft_att_"), schema)
+  }
+
   test("DuckDB catalog state stays within its session") {
     val s1 = spark.newSession()
     graft.functions.expressions.GraftFunctions.register(s1)

@@ -463,6 +463,20 @@ class PipelineSpec extends SparkSpec {
     assert(Pipeline.runYaml(spark, yaml, in).output.count() == 2)
   }
 
+  test("a lines dedup with maxDf: 3000000000 keeps its documents; disabled: \"yes\" skips a stage") {
+    val docs = s"$sf/documents.parquet"
+    val yaml =
+      """
+        |filters:
+        |  - {name: bad, actionType: sql, disabled: "yes", code: "SELECT oops FROM df"}
+        |  - name: line_dedup
+        |    actionType: dedup
+        |    actionConfig: {method: lines, id: doc_id, text: text, maxDf: 3000000000}
+        |""".stripMargin
+    val n = spark.read.parquet(docs).count()
+    assert(n > 0 && Pipeline.runYaml(spark, yaml, docs).output.count() == n)
+  }
+
   test("transform stage dispatches to registered whole-frame fn (O15 done properly)") {
     TransformRegistry.register("double_id", df => df.withColumn("id2", col("id") * 2))
     val in = tmpCsv("t.csv", "id", Seq("1", "2", "3"))
@@ -498,36 +512,55 @@ class PipelineSpec extends SparkSpec {
     assert(out.columns.toSeq == Seq("a"))
   }
 
-  test("graft.Main in its own JVM rewrites a sql stage's dialect once: backslash regexes match DuckDB") {
-    // A child JVM is the only way to get the session Main builds for
-    // itself; in-process, GraftSession.getOrCreate returns TestSpark.
-    // The test JVM's --add-opens flags are build.sbt's list; the JVM
-    // reports each as one `--add-opens=<module/package>=ALL-UNNAMED`.
+  /** Run `graft.Main in yml out` in a child JVM with `jvmFlags` — the
+    * only way to get the session Main builds for itself; in-process,
+    * GraftSession.getOrCreate returns TestSpark — and read the output
+    * rows back. The test JVM's --add-opens flags are build.sbt's list;
+    * the JVM reports each as one `--add-opens=<module/package>=ALL-UNNAMED`.
+    */
+  private def runMainJvm(in: String, yaml: String, jvmFlags: Seq[String] = Nil): Seq[String] = {
     val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.toArray.map(_.toString).toSeq
       .filter(_.startsWith("--add-opens="))
     assert(opens.nonEmpty)
-    val in = tmpCsv("regex.csv", "s", Seq("ab12cd", "xy7"))
     val dir = Files.createTempDirectory("graft-main").toFile
-    val yml = new java.io.File(dir, "regex.yml")
-    Files.writeString(yml.toPath,
-      """filters:
-        |  - name: rx
-        |    actionType: sql
-        |    code: |
-        |      SELECT s, regexp_replace(s, '\d+', 'X') AS r, regexp_matches(s, '\d') AS m FROM df
-        |""".stripMargin)
+    val yml = new java.io.File(dir, "main.yml")
+    Files.writeString(yml.toPath, yaml)
     val out = new java.io.File(dir, "out").toString
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++ Seq(
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++ jvmFlags ++ Seq(
       "-Dspark.master=local[2]", "-Dspark.ui.enabled=false",
       "-cp", sys.props("java.class.path"), "graft.Main", in, yml.toString, out)
     val log = new java.io.File(dir, "main.log")
     val exit = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
       .redirectOutput(log).start().waitFor()
     assert(exit == 0, Files.readString(log.toPath).takeRight(4000))
-    val rows = spark.read.option("header", "true").csv(out).collect()
+    spark.read.option("header", "true").csv(out).collect()
       .map(_.mkString(",")).sorted.toSeq
+  }
+
+  test("graft.Main in its own JVM rewrites a sql stage's dialect once: backslash regexes match DuckDB") {
+    val in = tmpCsv("regex.csv", "s", Seq("ab12cd", "xy7"))
+    val rows = runMainJvm(in,
+      """filters:
+        |  - name: rx
+        |    actionType: sql
+        |    code: |
+        |      SELECT s, regexp_replace(s, '\d+', 'X') AS r, regexp_matches(s, '\d') AS m FROM df
+        |""".stripMargin)
     assert(rows == Seq("ab12cd,abXcd,true", "xy7,xyX,true"))
+  }
+
+  test("graft.Main reads its YAML as UTF-8 under an ASCII platform charset: 'España' matches") {
+    // a JVM started with LANG unset has an ASCII default charset
+    val in = Files.createTempDirectory("graft-es").resolve("es.csv")
+    Files.writeString(in, "c\nEspaña\nFrance\n")
+    val rows = runMainJvm(in.toString,
+      """filters:
+        |  - name: es
+        |    actionType: sql
+        |    code: "SELECT c FROM df WHERE c = 'España'"
+        |""".stripMargin, Seq("-Dfile.encoding=US-ASCII"))
+    assert(rows == Seq("España"))
   }
 
   test("per-stage checkpoints write parquet and overwrite on re-run (fixes reference re-run duplication)") {
