@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.expressions.DuckDialectException
 import scala.util.matching.Regex
 
 object GraftSqlParser {
@@ -9,26 +10,40 @@ object GraftSqlParser {
     * outer join, ASOF JOIN → validity-interval join, EXCLUDE → EXCEPT,
     * struct_pack named args, DISTINCT ON → QUALIFY (which the next
     * rewrite then lowers), QUALIFY → ranked subquery, USING SAMPLE →
-    * TABLESAMPLE. Each pass runs once, as one left-to-right scan
-    * ([[rewriteEach]]); the call-head renames run last but one, after
-    * [[rewriteDotCall]], so the names a dot-call emits (`x.log()` →
-    * `log(x)`) are renamed too. `resolve` (relation → columns,
-    * session-backed where the caller has one) feeds the grouping-alias
-    * shadowing check only.
+    * TABLESAMPLE. The statement is lexed once ([[rewriteRawLiterals]],
+    * which also masks it) into one [[EditBuffer]], and every pass is one
+    * left-to-right scan that splices into that buffer in place; the
+    * call-head renames run last but one, after [[rewriteDotCall]], so the
+    * names a dot-call emits (`x.log()` → `log(x)`) are renamed too.
+    * `resolve` (relation → columns, session-backed where the caller has
+    * one) feeds the grouping-alias shadowing check only.
     */
   def rewriteAll(sql: String,
-      resolve: String => Option[Seq[String]] = _ => None): String =
-    rewriteGroupingAliases(resolve = resolve, sql = rewriteRenames(
-    rewriteDotCall(rewriteMixedIntervalFrame(rewriteFrameExclude(rewriteNamedWindows(rewriteFormatFn(rewritePrintfFn(rewriteIgnoreNulls(rewriteAggOrderBy(rewriteSample(rewriteQuantified(rewriteQualify(
-      rewriteDistinctOn(rewriteStructPack(rewriteStructInsert(
-        rewriteExclude(rewriteAsof(rewritePositional(rewriteSubscript(rewriteSlice(
-          rewriteGlob(rewriteSimilarTo(rewriteDecimalDivLiterals(rewriteIntDiv(rewritePow(rewriteCaret(rewriteFilterOver(rewriteJsonOps(rewriteJsonExtractFns(rewriteIntegralCastRound(rewriteBlobType(
-            rewriteListLiteral(rewriteStructLiteral(rewriteComprehension(
-              rewriteFromFirst(rewriteRawLiterals(sql)))))))))))))))))))))))))))))))))))))
+      resolve: String => Option[Seq[String]] = _ => None): String = {
+    val (text, mask) = lex(sql, firstPass = true)
+    val b = new EditBuffer(text, mask)
+    chain.foreach(_(b))
+    groupingAliases(resolve)(b)
+    b.toString
+  }
 
-  /** What a pass does with one match of its scan (see [[rewriteEach]]). */
+  private lazy val chain: Seq[EditBuffer => Unit] = Seq(fromFirst, comprehension,
+    structLiteral, listLiteral, blobType, integralCastRound, jsonExtractFns, jsonOps,
+    filterOver, caret, pow, intDiv, decimalDivLiterals, similarTo, glob, slice,
+    subscript, positional, asof, exclude, structInsert, structPack, distinctOn,
+    qualify, quantified, sample, aggOrderBy, ignoreNulls, printfFn, formatFn,
+    namedWindows, frameExclude, mixedIntervalFrame, dotCall, renames)
+
+  /** `pass` run on a buffer of its own: the entry point of a single pass. */
+  private def edited(sql: String)(pass: EditBuffer => Unit): String = {
+    val b = new EditBuffer(sql, maskQuotes(sql))
+    pass(b)
+    b.toString
+  }
+
+  /** What a pass does with one match of its scan (see [[EditBuffer.each]]). */
   private sealed trait Step
-  /** Replace text[start, end) with `text`. */
+  /** Replace text[start, end) with `text`; the scan resumes at `start`. */
   private final case class Splice(start: Int, end: Int, text: String) extends Step
   /** Leave the match; the scan goes on after it. */
   private case object Skip extends Step
@@ -37,61 +52,153 @@ object GraftSqlParser {
   /** End the pass with the text as it stands. */
   private case object Stop extends Step
 
-  /** The scan loop of every pass whose replacements may need rewriting
-    * again (the others are one sweep of disjoint splices, see
-    * [[applySplices]]). It masks `sql` once ([[maskQuotes]]) and walks
-    * `re`'s matches over the mask left to right; `f` gets each match with the current text and mask and
-    * answers with a [[Step]]. A [[Splice]] is applied to the text and
-    * patched into the mask in place — sound because a match starts
-    * outside any literal or comment and every replacement is
-    * quote-balanced — and the scan RESUMES AT THE SPLICE'S START, so a
-    * replacement that is itself an operand is scanned again: `**` and
-    * `^` fold left-associatively, a `.fn()` chain's inner call becomes
-    * the next call's base, and a rewritten construct's nested ones are
-    * rewritten in turn. Text before the resume point is never rescanned,
-    * and the loop's stack depth does not grow with the number of
-    * occurrences.
+  /** One statement under rewrite: its text and its quote mask
+    * ([[maskQuotes]]) in one gap buffer. A splice moves the gap to the
+    * edit and patches both arrays there, masking only the replacement —
+    * sound because a match starts outside any literal, identifier or
+    * comment and every replacement is quote-balanced. A scan's splices
+    * land at or near its resume point, so the gap mostly moves forward
+    * and a pass costs O(n + replaced text), not a copy per splice.
+    * `text` and `mask` are live views; `java.util.regex.Matcher` reads
+    * them as `CharSequence`s.
     */
-  private def rewriteEach(sql: String, re: Regex)(
-      f: (Regex.Match, String, String) => Step): String = {
-    var text = sql
-    var masked = maskQuotes(sql)
-    val mt = re.pattern.matcher(masked)
-    var from = 0
-    while (from <= masked.length && mt.find(from)) {
-      val m = new Regex.Match(masked, mt, Nil).force
-      f(m, text, masked) match {
-        case Splice(s, e, t) =>
-          text = spliced(text, s, e, t)
-          masked = spliced(masked, s, e, maskQuotes(t))
-          mt.reset(masked)
-          from = s
-        case Skip => from = if (m.end > m.start) m.end else m.end + 1
-        case SkipTo(at) => from = at
-        case Stop => return text
+  private final class EditBuffer(init: String, initMask: String) {
+    private var txt = new Array[Char](init.length + 64)
+    private var msk = new Array[Char](txt.length)
+    init.getChars(0, init.length, txt, 0)
+    initMask.getChars(0, initMask.length, msk, 0)
+    private var gs = init.length // the gap is [gs, ge)
+    private var ge = txt.length
+
+    def length: Int = txt.length - (ge - gs)
+    val text: CharSequence = new View(false)
+    val mask: CharSequence = new View(true)
+    override def toString: String = text.toString
+
+    private final class View(masked: Boolean) extends CharSequence {
+      def length: Int = EditBuffer.this.length
+      def charAt(i: Int): Char = {
+        if (i < 0 || i >= length)
+          throw new StringIndexOutOfBoundsException(s"index $i, length $length")
+        (if (masked) msk else txt)(if (i < gs) i else i + ge - gs)
+      }
+      def subSequence(s: Int, e: Int): String = {
+        if (s < 0 || e > length || s > e)
+          throw new StringIndexOutOfBoundsException(s"begin $s, end $e, length $length")
+        val a = if (masked) msk else txt
+        if (e <= gs) new String(a, s, e - s)
+        else if (s >= gs) new String(a, s + ge - gs, e - s)
+        else new java.lang.StringBuilder(e - s).append(a, s, gs - s)
+          .append(a, ge, e - gs).toString
+      }
+      override def toString: String = subSequence(0, length)
+    }
+
+    /** Replace [start, end) with `rep`, in the text and in the mask. */
+    def splice(start: Int, end: Int, rep: String): Unit = {
+      if (start < 0 || end > length || start > end)
+        throw new StringIndexOutOfBoundsException(s"begin $start, end $end, length $length")
+      moveGap(start)
+      ge += end - start
+      if (ge - gs < rep.length) grow(rep.length)
+      val repMask = maskQuotes(rep)
+      rep.getChars(0, rep.length, txt, gs)
+      repMask.getChars(0, rep.length, msk, gs)
+      gs += rep.length
+    }
+
+    private def moveGap(p: Int): Unit =
+      if (p < gs) {
+        val k = gs - p
+        System.arraycopy(txt, p, txt, ge - k, k); System.arraycopy(msk, p, msk, ge - k, k)
+        gs = p; ge -= k
+      } else if (p > gs) {
+        val k = p - gs
+        System.arraycopy(txt, ge, txt, gs, k); System.arraycopy(msk, ge, msk, gs, k)
+        gs = p; ge += k
+      }
+
+    private def grow(need: Int): Unit = {
+      val cap = math.max(txt.length * 2, length + need + 64)
+      val tail = txt.length - ge
+      def moved(a: Array[Char]): Array[Char] = {
+        val n = new Array[Char](cap)
+        System.arraycopy(a, 0, n, 0, gs); System.arraycopy(a, ge, n, cap - tail, tail)
+        n
+      }
+      txt = moved(txt); msk = moved(msk); ge = cap - tail
+    }
+
+    /** The scan loop of every pass: walks `re`'s matches over the mask
+      * left to right; `f` gets each match with the live text and mask
+      * and answers with a [[Step]]. After a [[Splice]] the scan RESUMES
+      * AT THE SPLICE'S START, so a replacement that is itself an operand
+      * is scanned again: `**` and `^` fold left-associatively, a `.fn()`
+      * chain's inner call becomes the next call's base, and a rewritten
+      * construct's nested ones are rewritten in turn. Text before the
+      * resume point is never rescanned. `f` may also splice the buffer
+      * itself (only after the match, or before returning a [[SkipTo]]
+      * past its own edits).
+      */
+    def each(re: Regex)(f: (Regex.Match, CharSequence, CharSequence) => Step): Unit = {
+      val mt = re.pattern.matcher(mask)
+      var from = 0
+      while (from <= length && mt.find(from)) {
+        val m = new Regex.Match(mask, mt, Nil).force
+        f(m, text, mask) match {
+          case Splice(s, e, t) => splice(s, e, t); from = s
+          case Skip => from = if (m.end > m.start) m.end else m.end + 1
+          case SkipTo(at) => from = at
+          case Stop => return
+        }
       }
     }
-    text
+
+    /** One sweep of `re`: each match `f` answers with text replaces it,
+      * and the sweep goes on after the replacement (never rescanned).
+      */
+    def sweep(re: Regex)(f: Regex.Match => Option[String]): Unit =
+      each(re) { (m, _, _) =>
+        f(m) match {
+          case Some(t) => splice(m.start, m.end, t); SkipTo(m.start + t.length)
+          case None => Skip
+        }
+      }
   }
 
-  /** Apply disjoint (start, end, text) replacements, all indexed into
-    * `sql`, in one copy. Insertions at one position land in reverse
-    * list order, as applying the list right to left would place them.
-    */
-  private def applySplices(sql: String, spans: Seq[(Int, Int, String)]): String =
-    if (spans.isEmpty) sql
-    else {
-      val sb = new java.lang.StringBuilder(sql.length + 64)
-      var last = 0
-      spans.zipWithIndex.sortBy { case ((s, _, _), k) => (s, -k) }.foreach {
-        case ((s, e, t), _) => sb.append(sql, last, s).append(t); last = e
-      }
-      sb.append(sql, last, sql.length).toString
-    }
+  /** String methods over the buffer's views (and any CharSequence). */
+  private implicit final class Chars(private val s: CharSequence) extends AnyVal {
+    def substring(b: Int): String = s.subSequence(b, s.length).toString
+    def substring(b: Int, e: Int): String = s.subSequence(b, e).toString
+    def regionMatches(ignoreCase: Boolean, at: Int, o: String, oAt: Int, n: Int): Boolean =
+      at >= 0 && oAt >= 0 && at + n <= s.length && oAt + n <= o.length &&
+        (0 until n).forall { k =>
+          val (a, c) = (s.charAt(at + k), o.charAt(oAt + k))
+          a == c || ignoreCase && (a.toUpper == c.toUpper || a.toLower == c.toLower)
+        }
+  }
 
-  private def spliced(s: String, start: Int, end: Int, mid: String): String =
-    new java.lang.StringBuilder(s.length - (end - start) + mid.length)
-      .append(s, 0, start).append(mid).append(s, end, s.length).toString
+  /** An identifier character: a letter, a digit or `_`, plus any of
+    * `extra` (`$` for DuckDB names, `.` for a qualified chain).
+    */
+  private def isIdent(c: Char, extra: String = ""): Boolean =
+    c.isLetterOrDigit || c == '_' || extra.indexOf(c) >= 0
+
+  /** Start of the identifier run that ends at `last` (inclusive; `last`
+    * + 1 when no identifier character ends there).
+    */
+  private def identStart(s: CharSequence, last: Int, extra: String = ""): Int = {
+    var k = last
+    while (k >= 0 && isIdent(s.charAt(k), extra)) k -= 1
+    k + 1
+  }
+
+  /** End (exclusive) of the identifier run that starts at `first`. */
+  private def identEnd(s: CharSequence, first: Int, extra: String = ""): Int = {
+    var k = first
+    while (k < s.length && isIdent(s.charAt(k), extra)) k += 1
+    k
+  }
 
   /** DuckDB single-quoted string literals are RAW — no backslash
     * escapes (`'\d'` is backslash-d) — while Spark's parser unescapes
@@ -104,47 +211,81 @@ object GraftSqlParser {
     * raw original — rewrites that move literal text verbatim stay
     * correct; only one (GLOB) interprets backslashes inside literal
     * content, where glob patterns don't carry them in practice.
-    * Comments and quote-doubling (`''`) are tracked like maskQuotes.
+    *
+    * A double-quoted `"…"` is an IDENTIFIER in DuckDB (`""` escapes a
+    * quote) but a string literal in Spark's default dialect, so it is
+    * emitted as the backquoted identifier it means: `"first name"` →
+    * `` `first name` ``, inner backquotes doubled. Same state machine as
+    * [[maskQuotes]] ([[lex]]).
     */
-  def rewriteRawLiterals(sql: String): String = {
-    if (sql.indexOf('\\') < 0) return sql
-    val sb = new java.lang.StringBuilder(sql.length + 16)
+  def rewriteRawLiterals(sql: String): String = lex(sql, firstPass = true)._1
+
+  /** Replace the contents of single-quoted literals and of quoted
+    * identifiers (`"…"`, `` `…` ``) with '_' and SQL comments (`--` to
+    * end-of-line, `/* */`) with spaces, in place (positions preserved;
+    * the quotes themselves and newlines kept). Comment MARKERS are
+    * blanked too, so a ';' — or any dialect marker — inside a comment
+    * or a quoted token is invisible to every masked-text rewrite, and
+    * [[splitStatements]] can't split a batch mid-comment (r9 review).
+    */
+  private[graft] def maskQuotes(s: String): String = lex(s, firstPass = false)._2
+
+  /** The one quote/comment state machine behind [[maskQuotes]] and
+    * [[rewriteRawLiterals]]: the first pass's output of `s` (with
+    * `firstPass`; null without) and the mask, which indexes that output.
+    * Quotes and comments shadow each other the way the parser sees them:
+    * `--` inside a literal is text, `'` inside a comment or a quoted
+    * identifier is not a quote.
+    */
+  private def lex(s: String, firstPass: Boolean): (String, String) = {
+    // the first pass at most doubles a char (a backslash, an inner backquote)
+    val cap = if (firstPass) 2 * s.length else s.length
+    val text = if (firstPass) new Array[Char](cap) else null
+    val mask = new Array[Char](cap)
+    var n = 0
+    def out(c: Char, mc: Char): Unit = { if (firstPass) text(n) = c; mask(n) = mc; n += 1 }
     var i = 0
-    var inQ = false
+    var quote = '\u0000' // the open quote: ' " or `; 0 outside
     var inLine = false
     var inBlock = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val next = if (i + 1 < sql.length) sql.charAt(i + 1) else '\u0000'
-      if (inQ) {
-        if (c == '\\') { sb.append("\\\\"); i += 1 }
-        else if (c == '\'' && next == '\'') { sb.append("''"); i += 2 }
-        else {
-          if (c == '\'') inQ = false
-          sb.append(c); i += 1
-        }
+    while (i < s.length) {
+      val c = s.charAt(i)
+      val next = if (i + 1 < s.length) s.charAt(i + 1) else '\u0000'
+      if (quote != '\u0000') {
+        if (c == quote && next == quote) { // a doubled quote stays inside
+          if (firstPass && c == '"') out('"', '_')
+          else { out(c, '_'); out(c, '_') }
+          i += 1
+        } else if (c == quote) {
+          val q = if (c == '"' && firstPass) '`' else c
+          out(q, q)
+          quote = '\u0000'
+        } else if (firstPass && (c == '\\' && quote == '\'' || c == '`' && quote == '"')) {
+          out(c, '_'); out(c, '_')
+        } else out(c, '_')
       } else if (inLine) {
-        if (c == '\n' || c == '\r') inLine = false
-        sb.append(c); i += 1
+        if (c == '\n' || c == '\r') { inLine = false; out(c, c) } else out(c, ' ')
       } else if (inBlock) {
-        if (c == '*' && next == '/') { sb.append("*/"); inBlock = false; i += 2 }
-        else { sb.append(c); i += 1 }
-      } else if (c == '-' && next == '-') { sb.append("--"); inLine = true; i += 2 }
-      else if (c == '/' && next == '*') { sb.append("/*"); inBlock = true; i += 2 }
-      else {
-        if (c == '\'') inQ = true
-        sb.append(c); i += 1
-      }
+        if (c == '*' && next == '/') { out('*', ' '); out('/', ' '); i += 1; inBlock = false }
+        else out(c, if (c == '\n' || c == '\r') c else ' ')
+      } else if (c == '\'' || c == '"' || c == '`') {
+        quote = c
+        val q = if (c == '"' && firstPass) '`' else c
+        out(q, q)
+      } else if (c == '-' && next == '-' || c == '/' && next == '*') {
+        out(c, ' '); out(next, ' '); i += 1
+        if (c == '-') inLine = true else inBlock = true
+      } else out(c, c)
+      i += 1
     }
-    sb.toString
+    (if (firstPass) new String(text, 0, n) else null, new String(mask, 0, n))
   }
 
   private val FrameExcludeRe =
     raw"(?is)\s*EXCLUDE\s+(CURRENT\s+ROW|NO\s+OTHERS|GROUP|TIES)\s*\)".r
 
   private def frameExcludeFail(why: String): Nothing =
-    throw new graft.functions.expressions.DuckDialectException(
-      s"window frame EXCLUDE couldn't be auto-rewritten ($why) — EXCLUDE " +
+    throw new DuckDialectException(s"window frame EXCLUDE couldn't be auto-rewritten ($why) — EXCLUDE " +
         "CURRENT ROW is translated for sum/count/avg over an inline OVER " +
         "(the subtraction identity: full-frame aggregate minus the current " +
         "row's contribution), EXCLUDE GROUP/TIES for RANGE frames and " +
@@ -185,14 +326,15 @@ object GraftSqlParser {
     * identifiers/qualified names/numbers/function calls/parenthesized
     * expressions — anything else keeps the guided error.
     */
-  def rewriteQuantified(sql: String): String =
-    rewriteEach(sql, QuantOpRe) { (m, sql, masked) =>
-      if (matchesAt(SubqueryHeadRe, masked, m.end)) quantified(m, sql, masked) else Skip
+  def rewriteQuantified(sql: String): String = edited(sql)(quantified)
+  private def quantified(b: EditBuffer): Unit =
+    b.each(QuantOpRe) { (m, sql, masked) =>
+      if (matchesAt(SubqueryHeadRe, masked, m.end)) quantifiedOp(m, sql, masked) else Skip
     }
 
   private val SubqueryHeadRe = raw"(?is)\s*(SELECT|WITH|FROM)\b".r
 
-  private def quantified(m: Regex.Match, sql: String, masked: String): Step = {
+  private def quantifiedOp(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     // subquery extent: balance from the open paren at m.end - 1
     val i = closeOf(masked, m.end).getOrElse(return Stop)
     val subq = sql.substring(m.end, i - 1).trim
@@ -200,19 +342,12 @@ object GraftSqlParser {
     var ls = m.start - 1
     while (ls >= 0 && masked.charAt(ls).isWhitespace) ls -= 1
     if (ls < 0) return Stop
-    def identStart(k0: Int): Int = {
-      var k = k0
-      while (k >= 0 && (masked.charAt(k).isLetterOrDigit ||
-        masked.charAt(k) == '_' || masked.charAt(k) == '.')) k -= 1
-      k + 1
-    }
     val leftStart: Int =
       if (masked.charAt(ls) == ')')
         // include a function-name chain, if any
-        identStart(openOf(masked, ls).getOrElse(return Stop) - 1)
-      else if (masked.charAt(ls).isLetterOrDigit || masked.charAt(ls) == '_') {
-        identStart(ls)
-      } else return Stop // unsupported operand shape → guided error stays
+        identStart(masked, openOf(masked, ls).getOrElse(return Stop) - 1, ".")
+      else if (isIdent(masked.charAt(ls))) identStart(masked, ls, ".")
+      else return Stop // unsupported operand shape → guided error stays
     // The backward scan claims ONE term; if the char before it is an
     // expression-continuing operator (`a || b > ALL …`, `a + b > ALL …`)
     // the true left operand is the whole compound and claiming just `b`
@@ -312,11 +447,13 @@ object GraftSqlParser {
     * whether the whole clause parsed. None when there is no clause or a
     * definition's parens don't balance.
     */
-  private def windowClause(sql: String, masked: String)
+  private def windowClause(sql: CharSequence, masked: CharSequence)
       : Option[(Int, Int, Seq[(String, String)], Boolean)] = {
     val wm = raw"(?i)\bWINDOW\s+".r.findAllMatchIn(masked).find { m =>
       // the SELECT-level WINDOW clause, not a function named window
-      !raw"(?i)(OVER|AS)\s*$$".r.findFirstIn(masked.substring(0, m.start)).isDefined
+      val p = wsBefore(masked, m.start)
+      !(masked.regionMatches(true, p - 2, "AS", 0, 2) ||
+        masked.regionMatches(true, p - 4, "OVER", 0, 4))
     }.getOrElse(return None)
     val DefHead = raw"(?is)^([A-Za-z_]\w*)\s+AS\s*\(".r
     val defs = Seq.newBuilder[(String, String)]
@@ -339,52 +476,42 @@ object GraftSqlParser {
     Some((wm.start, clauseEnd, defs.result(), complete))
   }
 
-  def rewriteNamedWindows(sql: String): String = {
-    // one round per SELECT-level WINDOW clause whose EXCLUDE-bearing
-    // definitions get inlined (the clause disappears when all were)
-    var cur = sql
-    var more = true
-    while (more) {
+  def rewriteNamedWindows(sql: String): String = edited(sql)(namedWindows)
+
+  // one round per SELECT-level WINDOW clause whose EXCLUDE-bearing
+  // definitions get inlined (the clause disappears when all were)
+  private def namedWindows(b: EditBuffer): Unit =
+    do {
       // named-window EXTENSION references: inline `OVER ( name ext )`
       // for every definition of the SELECT-level WINDOW clause
-      windowClause(cur, maskQuotes(cur)).foreach(_._3.foreach { case (n, s) =>
+      windowClause(b.text, b.mask).foreach(_._3.foreach { case (n, s) =>
         val extRe =
           (raw"(?is)\bOVER\s*\(\s*" + java.util.regex.Pattern.quote(n) +
             raw"\s+([^()]*[^()\s])\s*\)").r
-        cur = rewriteEach(cur, extRe) { (em, sql, _) =>
+        b.each(extRe) { (em, sql, _) =>
           Splice(em.start, em.end, s"OVER ( $s ${sql.substring(em.start(1), em.end(1))} )")
         }
       })
-      inlineExcludeWindows(cur) match {
-        case Some(out) => cur = out
-        case None => more = false
-      }
-    }
-    cur
-  }
+    } while (inlineExcludeWindows(b))
 
-  /** The WINDOW clause's EXCLUDE-bearing definitions inlined into their
-    * `OVER name` uses; None when there are none. */
-  private def inlineExcludeWindows(sql: String): Option[String] = {
-    val masked = maskQuotes(sql)
+  /** Inline the WINDOW clause's EXCLUDE-bearing definitions into their
+    * `OVER name` uses; false when there are none. */
+  private def inlineExcludeWindows(b: EditBuffer): Boolean = {
     if (raw"(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES)\b".r
-        .findFirstIn(masked).isEmpty) return None
-    val (clauseStart, clauseEnd, defs, _) = windowClause(sql, masked)
-      .filter(_._4).getOrElse(return None) // malformed — leave for Spark's parser
+        .findFirstIn(b.mask).isEmpty) return false
+    val (clauseStart, clauseEnd, defs, _) = windowClause(b.text, b.mask)
+      .filter(_._4).getOrElse(return false) // malformed — leave for Spark's parser
     val (inlined, kept) = defs.partition(d =>
       raw"(?i)\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b".r
         .findFirstIn(maskQuotes(d._2)).isDefined)
-    if (inlined.isEmpty) return None
-    val newClause =
+    if (inlined.isEmpty) return false
+    b.splice(clauseStart, clauseEnd,
       if (kept.isEmpty) ""
-      else " WINDOW " + kept.map { case (n, s) => s"$n AS ($s)" }.mkString(", ") + " "
-    var out = sql.substring(0, clauseStart) + newClause + sql.substring(clauseEnd)
+      else " WINDOW " + kept.map { case (n, s) => s"$n AS ($s)" }.mkString(", ") + " ")
     inlined.foreach { case (n, s) =>
-      out = raw"(?i)\bOVER\s+${java.util.regex.Pattern.quote(n)}\b".r
-        .replaceAllIn(out,
-          java.util.regex.Matcher.quoteReplacement(s"OVER ( $s )"))
+      b.sweep(raw"(?i)\bOVER\s+${java.util.regex.Pattern.quote(n)}\b".r)(_ => Some(s"OVER ( $s )"))
     }
-    Some(out)
+    true
   }
 
   private val MixedIntervalFrameRe =
@@ -403,30 +530,29 @@ object GraftSqlParser {
     * Spark-typable. A pair mixing the two interval CLASSES (month +
     * hour) is unrepresentable as one Spark bound type and stays loud.
     */
-  def rewriteMixedIntervalFrame(sql: String): String = {
-    val masked = maskQuotes(sql)
+  def rewriteMixedIntervalFrame(sql: String): String = edited(sql)(mixedIntervalFrame)
+
+  private def mixedIntervalFrame(b: EditBuffer): Unit = {
     val daySecs = Map("DAY" -> 86400L, "HOUR" -> 3600L, "MINUTE" -> 60L, "SECOND" -> 1L)
     val ymMonths = Map("YEAR" -> 12L, "MONTH" -> 1L)
-    applySplices(sql, MixedIntervalFrameRe.findAllMatchIn(masked).flatMap { m =>
+    b.sweep(MixedIntervalFrameRe) { m =>
       val (n1, u1, d1) = (m.group(1).toLong, m.group(2).toUpperCase, m.group(3).toUpperCase)
       val (n2, u2, d2) = (m.group(4).toLong, m.group(5).toUpperCase, m.group(6).toUpperCase)
-      val repl: Option[String] =
-        if (u1 == u2) None
-        else if (daySecs.contains(u1) && daySecs.contains(u2))
-          Some(s"RANGE BETWEEN INTERVAL '${n1 * daySecs(u1)}' SECOND $d1 " +
-            s"AND INTERVAL '${n2 * daySecs(u2)}' SECOND $d2")
-        else if (ymMonths.contains(u1) && ymMonths.contains(u2))
-          Some(s"RANGE BETWEEN INTERVAL '${n1 * ymMonths(u1)}' MONTH $d1 " +
-            s"AND INTERVAL '${n2 * ymMonths(u2)}' MONTH $d2")
-        else None // class mix — no single Spark bound type; stays loud
-      repl.map(r => (m.start, m.end, r))
-    }.toSeq)
+      if (u1 == u2) None
+      else if (daySecs.contains(u1) && daySecs.contains(u2))
+        Some(s"RANGE BETWEEN INTERVAL '${n1 * daySecs(u1)}' SECOND $d1 " +
+          s"AND INTERVAL '${n2 * daySecs(u2)}' SECOND $d2")
+      else if (ymMonths.contains(u1) && ymMonths.contains(u2))
+        Some(s"RANGE BETWEEN INTERVAL '${n1 * ymMonths(u1)}' MONTH $d1 " +
+          s"AND INTERVAL '${n2 * ymMonths(u2)}' MONTH $d2")
+      else None // class mix — no single Spark bound type; stays loud
+    }
   }
 
-  def rewriteFrameExclude(sql: String): String =
-    rewriteEach(sql, FrameExcludeRe)(frameExclude)
+  def rewriteFrameExclude(sql: String): String = edited(sql)(frameExclude)
+  private def frameExclude(b: EditBuffer): Unit = b.each(FrameExcludeRe)(frameExcludeAt)
 
-  private def frameExclude(m: Regex.Match, sql: String, masked: String): Step = {
+  private def frameExcludeAt(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     val mode = m.group(1).toUpperCase.replaceAll(raw"\s+", " ")
     val dropped = Splice(m.start, m.end, ")")
     if (mode == "NO OTHERS") // the default, in both engines
@@ -452,12 +578,10 @@ object GraftSqlParser {
     val args = sql.substring(argsOpen + 1, argsClose).trim
     var k = argsOpen - 1
     while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-    if (k < 0 || !(masked.charAt(k).isLetterOrDigit || masked.charAt(k) == '_'))
+    if (k < 0 || !isIdent(masked.charAt(k)))
       frameExcludeFail("no aggregate name before the argument list")
-    var b = k
-    while (b >= 0 && (masked.charAt(b).isLetterOrDigit || masked.charAt(b) == '_')) b -= 1
-    val fn = sql.substring(b + 1, k + 1).toLowerCase
-    val fnStart = b + 1
+    val fnStart = identStart(masked, k)
+    val fn = sql.substring(fnStart, k + 1).toLowerCase
     // frame analysis: can it contain the current row / the peer group?
     val specMasked = maskQuotes(spec)
     val frameM = raw"(?is)\b(ROWS|RANGE|GROUPS)\s+(?:BETWEEN\s+(.*?)\s+AND\s+(.*)|(.*))$$".r
@@ -573,10 +697,11 @@ object GraftSqlParser {
   /** Every [[Renames]] head in one pass. A rename never creates a
     * match for another, so one sweep over the mask suffices.
     */
-  def rewriteRenames(sql: String): String =
-    applySplices(sql, RenameRe.findAllMatchIn(maskQuotes(sql)).map { m =>
-      (m.start, m.end, Renames((1 to 3).map(m.group).find(_ != null).get.toLowerCase))
-    }.toSeq)
+  def rewriteRenames(sql: String): String = edited(sql)(renames)
+  private def renames(b: EditBuffer): Unit =
+    b.sweep(RenameRe) { m =>
+      Some(Renames((1 to 3).map(m.group).find(_ != null).get.toLowerCase))
+    }
 
   private val DotCallRe = raw"\.\s*([A-Za-z_]\w*)\s*\(".r
 
@@ -591,8 +716,9 @@ object GraftSqlParser {
     * ambiguity and our dialect surface has no qualified function calls
     * (macros register bare names); documented edge.
     */
-  def rewriteDotCall(sql: String): String =
-    rewriteEach(sql, DotCallRe) { (m, sql, masked) =>
+  def rewriteDotCall(sql: String): String = edited(sql)(dotCall)
+  private def dotCall(b: EditBuffer): Unit =
+    b.each(DotCallRe) { (m, sql, masked) =>
       // the base is whatever primary chain ends at the dot (a qualified
       // name x.y.fn() claims its whole chain), the call runs to its
       // matching close paren
@@ -616,10 +742,10 @@ object GraftSqlParser {
     * a non-window position is left alone (Spark fails loudly there,
     * same as DuckDB outside window functions).
     */
-  def rewriteIgnoreNulls(sql: String): String =
-    rewriteEach(sql, IgnoreNullsInsideRe) { (m, sql, masked) =>
-      var a = m.end // just past the ')'
-      while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
+  def rewriteIgnoreNulls(sql: String): String = edited(sql)(ignoreNulls)
+  private def ignoreNulls(b: EditBuffer): Unit =
+    b.each(IgnoreNullsInsideRe) { (m, sql, masked) =>
+      val a = wsAfter(masked, m.end) // just past the ')'
       if (a < masked.length && masked.charAt(a).isLetter &&
         wordStartingAt(masked, a).equalsIgnoreCase("OVER")) {
         val modifier = sql.substring(m.start(1), m.end(1)).toUpperCase + " NULLS"
@@ -631,8 +757,7 @@ object GraftSqlParser {
   private val FormatFnRe = raw"(?i)(?<![\w.])format\s*\(".r
 
   private def formatFail(why: String): Nothing =
-    throw new graft.functions.expressions.DuckDialectException(
-      s"format() couldn't be auto-rewritten ($why) — claimed: a LITERAL " +
+    throw new DuckDialectException(s"format() couldn't be auto-rewritten ($why) — claimed: a LITERAL " +
         "format string with {} / {n} placeholders, with or without a " +
         "fmt spec ({:.2f}, {:>8}, {:,d}, …); dynamic width/precision " +
         "({:{}}) and computed format strings are not translated — " +
@@ -652,9 +777,10 @@ object GraftSqlParser {
     * cast ('1e+16' vs '1.0E16'). Dynamic `{:{}}` width and computed
     * format strings still fail with guidance to printf.
     */
-  def rewriteFormatFn(sql: String): String = rewriteEach(sql, FormatFnRe)(formatCall)
+  def rewriteFormatFn(sql: String): String = edited(sql)(formatFn)
+  private def formatFn(b: EditBuffer): Unit = b.each(FormatFnRe)(formatCall)
 
-  private def formatCall(m: Regex.Match, sql: String, masked: String): Step = {
+  private def formatCall(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     val close = closeOf(masked, m.end).getOrElse(return Stop)
     val inner = sql.substring(m.end, close - 1)
     val innerMasked = masked.substring(m.end, close - 1)
@@ -710,8 +836,7 @@ object GraftSqlParser {
   private val PrintfFnRe = raw"(?i)(?<![\w.])printf\s*\(".r
 
   private def printfFail(why: String): Nothing =
-    throw new graft.functions.expressions.DuckDialectException(
-      s"printf() couldn't be auto-rewritten ($why) — claimed: a LITERAL " +
+    throw new DuckDialectException(s"printf() couldn't be auto-rewritten ($why) — claimed: a LITERAL " +
         "format string with %-specs (flags - + space 0 # ',', width, " +
         ".precision, n$ positionals, %% escapes; conversions " +
         "d i u x X o b c s f F e E g G; dynamic '*' width/precision " +
@@ -737,9 +862,10 @@ object GraftSqlParser {
     * raises DuckDB's own "cannot switch from manual to automatic
     * argument indexing".
     */
-  def rewritePrintfFn(sql: String): String = rewriteEach(sql, PrintfFnRe)(printfCall)
+  def rewritePrintfFn(sql: String): String = edited(sql)(printfFn)
+  private def printfFn(b: EditBuffer): Unit = b.each(PrintfFnRe)(printfCall)
 
-  private def printfCall(m: Regex.Match, sql: String, masked: String): Step = {
+  private def printfCall(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     val close = closeOf(masked, m.end).getOrElse(return Stop)
     val inner = sql.substring(m.end, close - 1)
     val innerMasked = masked.substring(m.end, close - 1)
@@ -883,8 +1009,7 @@ object GraftSqlParser {
     raw"(?i)(?<![\w.])(string_agg|group_concat|array_agg|list|first|last)\s*\(".r
 
   private def aggOrderByFail(fn: String, why: String): Nothing =
-    throw new graft.functions.expressions.DuckDialectException(
-      s"inline ORDER BY inside $fn() couldn't be auto-rewritten ($why) — " +
+    throw new DuckDialectException(s"inline ORDER BY inside $fn() couldn't be auto-rewritten ($why) — " +
         "claimed: string_agg/group_concat([DISTINCT] x[, sep] ORDER BY keys) " +
         "→ listagg WITHIN GROUP; array_agg/list(x ORDER BY keys) → " +
         "sorted-struct transform; first/last(x ORDER BY keys) → min_by/" +
@@ -906,21 +1031,22 @@ object GraftSqlParser {
     * Ties are engine order in BOTH engines (hash aggregation) — gates
     * must order by total keys, same as any oracle.
     */
-  def rewriteAggOrderBy(sql: String): String =
-    rewriteEach(sql, AggOrderByFnRe) { (m, sql, masked) =>
+  def rewriteAggOrderBy(sql: String): String = edited(sql)(aggOrderBy)
+  private def aggOrderBy(b: EditBuffer): Unit =
+    b.each(AggOrderByFnRe) { (m, sql, masked) =>
       closeOf(masked, m.end).map { close =>
         // depth-0 ORDER BY inside the call arguments
         val at = depth0IndexWhere(masked, m.end, close - 1) { k =>
           wordAt(masked, k) == "ORDER" && matchesAt(OrderByRe, masked, k)
         }
-        if (at < 0) Skip else aggOrderBy(m, close, at - m.end, sql, masked)
+        if (at < 0) Skip else aggOrderByCall(m, close, at - m.end, sql, masked)
       }.getOrElse(Skip)
     }
 
   private val OrderByRe = raw"(?is)ORDER\s+BY\b".r
 
-  private def aggOrderBy(m: Regex.Match, close: Int, obAt: Int,
-      sql: String, masked: String): Step = {
+  private def aggOrderByCall(m: Regex.Match, close: Int, obAt: Int,
+      sql: CharSequence, masked: CharSequence): Step = {
     val fn = sql.substring(m.start(1), m.end(1)).toLowerCase
     val inner = sql.substring(m.end, close - 1)
     // Window (OVER) use is a TERMINAL disposition, not a parity
@@ -928,8 +1054,7 @@ object GraftSqlParser {
     // ORDER BY is not implemented for window functions!", probed
     // r17 for first/last/string_agg/array_agg with and without a
     // window-spec ORDER BY) — both engines refuse loudly.
-    var a = close
-    while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
+    val a = wsAfter(masked, close)
     if (a < masked.length && masked.charAt(a).isLetter &&
       wordStartingAt(masked, a).equalsIgnoreCase("OVER"))
       aggOrderByFail(fn, "window (OVER) use — DuckDB rejects this too " +
@@ -942,7 +1067,7 @@ object GraftSqlParser {
       distinct = true; argsPart = argsPart.substring(dm.end)
     }
     // per-key (expr, desc, nullsFirst) with DuckDB's NULLS LAST default
-    val keys = splitTopLevel(orderPart, maskQuotes(orderPart)).map { it0 =>
+    val keys = splitTop(orderPart).map { it0 =>
       var e = it0.trim; var desc = false; var nullsFirst = false
       raw"(?is)\s+NULLS\s+(FIRST|LAST)\s*$$".r.findFirstMatchIn(e).foreach { nm =>
         nullsFirst = nm.group(1).equalsIgnoreCase("FIRST")
@@ -971,7 +1096,7 @@ object GraftSqlParser {
         s"named_struct($fields, '__v', ($value)))" +
         s", (l, r) -> CASE $cmp ELSE 0 END), s -> $v)"
     }
-    val args = splitTopLevel(argsPart, maskQuotes(argsPart))
+    val args = splitTop(argsPart)
     val nArgs = args.size
     val replacement = fn match {
       case "string_agg" | "group_concat" =>
@@ -1041,9 +1166,11 @@ object GraftSqlParser {
     * runs before this in a sql stage; skipping here keeps the rewrite
     * an identity on that text in any call order).
     */
-  def rewriteStructLiteral(sql: String): String = {
-    val hasReadFn = ReadFnRe.findFirstIn(maskQuotes(sql)).isDefined
-    rewriteEach(sql, BraceRe) { (m, sql, masked) =>
+  def rewriteStructLiteral(sql: String): String = edited(sql)(structLiteral)
+
+  private def structLiteral(b: EditBuffer): Unit = {
+    val hasReadFn = ReadFnRe.findFirstIn(b.mask).isDefined
+    b.each(BraceRe) { (m, sql, masked) =>
       val i = m.start
       val inReadFn = hasReadFn && ReadFnRe.findAllMatchIn(masked)
         .exists(mm => mm.start < i && closeOf(masked, mm.end).exists(_ > i))
@@ -1059,14 +1186,14 @@ object GraftSqlParser {
   /** The struct or MAP literal whose braces sit at `i` and `j`; an
     * unclaimed group is skipped whole.
     */
-  private def braceLiteral(i: Int, j: Int, sql: String, masked: String): Step = {
+  private def braceLiteral(i: Int, j: Int, sql: CharSequence, masked: CharSequence): Step = {
     val p = wsBefore(masked, i)
     val isMap = p >= 3 && masked.regionMatches(true, p - 3, "MAP", 0, 3)
     // a standalone MAP word (not an identifier merely ENDING in
     // "map", e.g. `heatmap {…}` — that shape stays a guided error)
     val isMapWord = isMap && (p == 3 || {
       val ch = masked.charAt(p - 4)
-      !ch.isLetterOrDigit && ch != '_' && ch != '.' && ch != '"' && ch != '`'
+      !isIdent(ch, ".\"`")
     })
     val bodyRaw = sql.substring(i + 1, j)
     val bodyMasked = masked.substring(i + 1, j)
@@ -1092,8 +1219,7 @@ object GraftSqlParser {
       mapExprOpt.foreach { mapExpr =>
         val wordStart = p - 3
         // immediate index subscript (no top-level slice colon)?
-        var q = j + 1
-        while (q < masked.length && masked.charAt(q).isWhitespace) q += 1
+        val q = wsAfter(masked, j + 1)
         val sub: Option[Int] =
           if (q < masked.length && masked.charAt(q) == '[')
             closeOf(masked, q + 1, '[', ']').map(_ - 1).filter { close =>
@@ -1115,7 +1241,7 @@ object GraftSqlParser {
   }
 
   /** Is the ':' at `k` half of a `::` cast? */
-  private def castColon(masked: String, k: Int): Boolean =
+  private def castColon(masked: CharSequence, k: Int): Boolean =
     (k + 1 < masked.length && masked.charAt(k + 1) == ':') ||
       (k > 0 && masked.charAt(k - 1) == ':')
 
@@ -1126,7 +1252,7 @@ object GraftSqlParser {
     * error. Keys are arbitrary expressions (DuckDB allows `MAP {1:
     * 'x'}`), so no quoting is imposed here.
     */
-  private def splitMapPairs(raw: String, masked: String): Option[Seq[(String, String)]] = {
+  private def splitMapPairs(raw: String, masked: CharSequence): Option[Seq[(String, String)]] = {
     val pairs = topLevelSpans(masked, "()[]{}").map { case (s, e) =>
       val c = depth0IndexWhere(masked, s, e, "()[]{}") { k =>
         masked.charAt(k) == ':' && !castColon(masked, k)
@@ -1152,8 +1278,9 @@ object GraftSqlParser {
     * becomes `array()`; nested lists are reached when the scan resumes
     * inside the replacement.
     */
-  def rewriteListLiteral(sql: String): String =
-    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+  def rewriteListLiteral(sql: String): String = edited(sql)(listLiteral)
+  private def listLiteral(b: EditBuffer): Unit =
+    b.each(BracketRe) { (m, sql, masked) =>
       val i = m.start
       // literal position?
       val p = wsBefore(masked, i)
@@ -1161,13 +1288,10 @@ object GraftSqlParser {
         if (p == 0) true
         else {
           val c = masked.charAt(p - 1)
-          if (c == ')' || c == ']' || c == '\'' || c == '`' || c == '.') false
-          else if (c.isLetterOrDigit || c == '_' || c == '$') {
-            var w = p - 1
-            while (w > 0 && { val x = masked.charAt(w - 1)
-              x.isLetterOrDigit || x == '_' || x == '$' }) w -= 1
-            PreLiteralKeywords.contains(masked.substring(w, p).toUpperCase)
-          } else true // operator / '(' / ',' / etc.
+          if (")]'`\".".indexOf(c) >= 0) false
+          else if (isIdent(c, "$"))
+            PreLiteralKeywords.contains(masked.substring(identStart(masked, p - 1, "$"), p).toUpperCase)
+          else true // operator / '(' / ',' / etc.
         }
       if (!literalPos) Skip
       else closeOf(masked, i + 1, '[', ']').map(_ - 1).filter { j =>
@@ -1186,7 +1310,7 @@ object GraftSqlParser {
     * adjacent postfix call-parens, subscripts and dot-chains. None when
     * nothing parseable starts there.
     */
-  private def primaryEnd(masked: String, from: Int): Option[Int] = {
+  private def primaryEnd(masked: CharSequence, from: Int): Option[Int] = {
     var i = from
     def ws(): Unit = while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
     ws()
@@ -1194,12 +1318,7 @@ object GraftSqlParser {
       i += 1; ws()
     }
     if (i >= masked.length) return None
-    def wordEnd(b: Int): Int = {
-      var k = b
-      while (k < masked.length && { val c = masked.charAt(k)
-        c.isLetterOrDigit || c == '_' || c == '$' }) k += 1
-      k
-    }
+    def wordEnd(b: Int): Int = identEnd(masked, b, "$")
     val c = masked.charAt(i)
     if (c == '(') i = closeOf(masked, i + 1).getOrElse(return None)
     else if (c == '\'') {
@@ -1212,7 +1331,7 @@ object GraftSqlParser {
       while (b < masked.length && masked.charAt(b) != '`') b += 1
       if (b >= masked.length) return None
       i = b + 1
-    } else if (c.isLetterOrDigit || c == '_' || c == '$') {
+    } else if (isIdent(c, "$")) {
       i = wordEnd(i)
       // decimal / scientific tail of a number literal
       if (i < masked.length && masked.charAt(i) == '.' &&
@@ -1241,12 +1360,15 @@ object GraftSqlParser {
     Some(i)
   }
 
+  private val UnaryAfter = Set("SELECT", "WHEN", "THEN", "ELSE", "CASE", "AND", "OR",
+    "NOT", "IN", "ON", "BY", "WHERE", "HAVING", "RETURN", "BETWEEN", "LIMIT", "OFFSET", "AS")
+
   /** Start of the primary ENDING at `pos` (exclusive), unary +/- sign
     * included when the sign sits in unary position (start of text, or
     * after an operator / '(' / ',' / a clause keyword). Builds on
     * [[sliceBaseStart]]'s backwards primary scan.
     */
-  private def primaryStartWithSign(masked: String, pos: Int): Option[Int] = {
+  private def primaryStartWithSign(masked: CharSequence, pos: Int): Option[Int] = {
     val j = sliceBaseStart(masked, pos).getOrElse(return None)
     val k = wsBefore(masked, j)
     if (k > 0 && (masked.charAt(k - 1) == '-' || masked.charAt(k - 1) == '+')) {
@@ -1256,15 +1378,8 @@ object GraftSqlParser {
         "(,*/%+-<>=|&".contains(prev) || {
           // a word before the sign: unary iff it is a KEYWORD, not an
           // identifier (SELECT -2 vs a - 2)
-          prev.isLetterOrDigit && {
-            var w = p - 1
-            while (w > 0 && { val x = masked.charAt(w - 1)
-              x.isLetterOrDigit || x == '_' }) w -= 1
-            Set("SELECT", "WHEN", "THEN", "ELSE", "CASE", "AND", "OR",
-              "NOT", "IN", "ON", "BY", "WHERE", "HAVING", "RETURN",
-              "BETWEEN", "LIMIT", "OFFSET", "AS")
-              .contains(masked.substring(w, p).toUpperCase)
-          }
+          prev.isLetterOrDigit &&
+            UnaryAfter.contains(masked.substring(identStart(masked, p - 1), p).toUpperCase)
         }
       }
       if (unary) return Some(k - 1)
@@ -1333,17 +1448,18 @@ object GraftSqlParser {
     * is also valid alias syntax, so a textual rewrite there could
     * corrupt a projection).
     */
-  def rewriteBlobType(sql: String): String = {
-    val masked = maskQuotes(sql)
+  def rewriteBlobType(sql: String): String = edited(sql)(blobType)
+
+  private val ColonTypeRe = raw"(?i)::\s*(BLOB|BYTEA|VARBINARY|VARCHAR|BPCHAR)\b(?!\s*\()".r
+
+  private def blobType(b: EditBuffer): Unit = {
     // `::TYPE` spellings: BLOB family → BINARY, VARCHAR family → STRING
     // (r15; the parameterized VARCHAR(n) form is Spark's own and stays)
-    val re = raw"(?i)::\s*(BLOB|BYTEA|VARBINARY|VARCHAR|BPCHAR)\b(?!\s*\()".r
-    rewriteCastTypeNames(applySplices(sql, re.findAllMatchIn(masked).map { m =>
-      (m.start, m.end, m.group(1).toUpperCase match {
-        case "VARCHAR" | "BPCHAR" => "::STRING"
-        case _ => "::BINARY"
-      })
-    }.toSeq))
+    b.sweep(ColonTypeRe)(m => Some(m.group(1).toUpperCase match {
+      case "VARCHAR" | "BPCHAR" => "::STRING"
+      case _ => "::BINARY"
+    }))
+    castTypeNames(b)
   }
 
   /** `CAST(expr AS <ducktype>)` with a DuckDB-only type name (r15):
@@ -1352,10 +1468,8 @@ object GraftSqlParser {
     * like `SELECT x AS text` (the documents schema!) are never touched.
     * Only single-word names [[duckTypeToSpark]] maps DIFFERENTLY
     * rewrite; anything else (including Spark-native names) passes
-    * through untouched. Replacement spans of distinct casts are
-    * disjoint (an inner cast closes before an outer cast's type token),
-    * so collecting on the original offsets and applying right-to-left
-    * is exact.
+    * through untouched. An inner cast closes before an outer cast's
+    * type token, so each cast's splice lands after the casts it holds.
     */
   /** Type names Spark's parser rejects (or reads differently) that
     * [[duckTypeToSpark]] maps — ONLY these rewrite inside casts, so
@@ -1373,7 +1487,7 @@ object GraftSqlParser {
   /** Index of the last depth-0 `AS` word in masked[from, until) that
     * has a character after it — a CAST body's type separator — or -1.
     */
-  private def lastTopLevelAs(masked: String, from: Int, until: Int): Int = {
+  private def lastTopLevelAs(masked: CharSequence, from: Int, until: Int): Int = {
     var asAt = -1
     depth0IndexWhere(masked, from, until, "()[]") { i =>
       if (i + 2 < until && wordAt(masked, i) == "AS") asAt = i
@@ -1382,11 +1496,8 @@ object GraftSqlParser {
     asAt
   }
 
-  private def rewriteCastTypeNames(sql: String): String = {
-    val masked = maskQuotes(sql)
-    // (typeStart, closeParen, replacement)
-    val repls = Seq.newBuilder[(Int, Int, String)]
-    CastRe.findAllMatchIn(masked).foreach { m =>
+  private def castTypeNames(b: EditBuffer): Unit =
+    b.each(CastRe) { (m, sql, masked) =>
       closeOf(masked, m.end).foreach { close =>
         val asAt = lastTopLevelAs(masked, m.end, close - 1)
         if (asAt >= 0) {
@@ -1394,16 +1505,14 @@ object GraftSqlParser {
           val typeText = sql.substring(typeStart, close - 1).trim
           if (duckOnlyCastTypes.contains(typeText.toUpperCase)) {
             val mapped = try Some(duckTypeToSpark(typeText))
-            catch { case _: graft.functions.expressions.DuckDialectException => None }
-            mapped.filter(!_.equalsIgnoreCase(typeText)).foreach { t =>
-              repls += ((typeStart, close - 1, " " + t))
-            }
+            catch { case _: DuckDialectException => None }
+            mapped.filter(!_.equalsIgnoreCase(typeText))
+              .foreach(t => b.splice(typeStart, close - 1, " " + t))
           }
         }
       }
+      Skip
     }
-    applySplices(sql, repls.result())
-  }
 
   /** Integral-cast target type names (Spark's and DuckDB's spellings —
     * the DuckDB-only ones rewrite to Spark names separately, but this
@@ -1420,80 +1529,79 @@ object GraftSqlParser {
     * type is integral in `duck_iround(...)` — a RuntimeReplaceable
     * that is IDENTITY except on Double/Float/Decimal sources, so
     * integral-source casts (the overwhelmingly common case) are
-    * untouched at the plan level. Pure insertions (never replacements),
-    * applied right-to-left, so NESTED casts wrap correctly.
+    * untouched at the plan level. Pure insertions (never replacements):
+    * the `) ` lands after the cast's own match and the scan goes on
+    * inside the wrapped source, so NESTED casts wrap correctly.
     */
-  def rewriteIntegralCastRound(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val inserts = Seq.newBuilder[(Int, String)]
-    CastRe.findAllMatchIn(masked).foreach { m =>
-      closeOf(masked, m.end).foreach { close =>
+  def rewriteIntegralCastRound(sql: String): String = edited(sql)(integralCastRound)
+
+  private def integralCastRound(b: EditBuffer): Unit = {
+    b.each(CastRe) { (m, sql, masked) =>
+      closeOf(masked, m.end).flatMap { close =>
         val asAt = lastTopLevelAs(masked, m.end, close - 1)
-        if (asAt >= 0) {
-          val typeText = sql.substring(asAt + 2, close - 1).trim
-          // idempotency: an expr that is ALREADY exactly one
-          // duck_iround(...) call (a prior pass's wrap) skips
-          val exprMasked = masked.substring(m.end, asAt)
-          val alreadyWrapped =
-            raw"(?is)^\s*duck_iround\s*\(".r.findFirstMatchIn(exprMasked) match {
-              case Some(wm) =>
-                closeOf(exprMasked, wm.end)
-                  .exists(e => exprMasked.substring(e).trim.isEmpty)
-              case None => false
-            }
-          if (integralCastTypes.contains(typeText.toUpperCase) && !alreadyWrapped) {
-            inserts += ((m.end, "duck_iround("))
-            inserts += ((asAt, ") "))
+        val typeText = if (asAt < 0) "" else sql.substring(asAt + 2, close - 1).trim
+        // idempotency: an expr that is ALREADY exactly one
+        // duck_iround(...) call (a prior pass's wrap) skips
+        lazy val exprMasked = masked.substring(m.end, asAt)
+        lazy val alreadyWrapped =
+          raw"(?is)^\s*duck_iround\s*\(".r.findFirstMatchIn(exprMasked) match {
+            case Some(wm) =>
+              closeOf(exprMasked, wm.end)
+                .exists(e => exprMasked.substring(e).trim.isEmpty)
+            case None => false
           }
-        }
-      }
+        if (asAt >= 0 && integralCastTypes.contains(typeText.toUpperCase) && !alreadyWrapped) {
+          b.splice(asAt, asAt, ") ")
+          Some(Splice(m.end, m.end, "duck_iround("))
+        } else None
+      }.getOrElse(Skip)
     }
-    rewriteIntegralDoubleColon(
-      applySplices(sql, inserts.result().map { case (p, t) => (p, p, t) }))
+    integralDoubleColon(b)
   }
 
   /** The `expr::BIGINT` spelling of the same rounding divergence: wrap
-    * the `::`-cast OPERAND (an identifier chain, numeric literal, or a
-    * balanced paren/bracket group with an optional function-name head)
-    * in duck_iround. String-literal operands skip (string sources stay
-    * on Spark's native cast — see [[rewriteIntegralCastRound]]), as do
-    * chained casts (`x::INT::BIGINT`, where a textual operand scan
-    * would claim the inner type token).
+    * the `::`-cast OPERAND (the primary [[sliceBaseStart]] claims: an
+    * identifier chain, backquoted parts included, a numeric literal, or
+    * a balanced paren/bracket group with an optional function-name head;
+    * a `CASE … END` from its CASE) in duck_iround. String-literal
+    * operands skip (string sources stay on Spark's native cast — see
+    * [[rewriteIntegralCastRound]]), as do chained casts
+    * (`x::INT::BIGINT`, where a textual operand scan would claim the
+    * inner type token).
     */
-  private def rewriteIntegralDoubleColon(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val re = (raw"(?i)::\s*(" + integralCastTypes.mkString("|") + raw")\b").r
-    val inserts = Seq.newBuilder[(Int, String)]
-    re.findAllMatchIn(masked).foreach { m =>
-      var e = m.start - 1
-      while (e >= 0 && masked.charAt(e).isWhitespace) e -= 1
-      if (e >= 0 && masked.charAt(e) != '\'' && masked.charAt(e) != '"') {
-        def identStart(k0: Int): Int = {
-          var k = k0
-          while (k >= 0 && (masked.charAt(k).isLetterOrDigit ||
-            masked.charAt(k) == '_' || masked.charAt(k) == '.')) k -= 1
-          k + 1
-        }
-        val start: Int =
-          if (masked.charAt(e) == ')' || masked.charAt(e) == ']') {
-            val closer = masked.charAt(e)
-            val opener = if (closer == ')') '(' else '['
-            openOf(masked, e, opener, closer).map(k => identStart(k - 1)).getOrElse(-1)
-          } else if (masked.charAt(e).isLetterOrDigit || masked.charAt(e) == '_')
-            identStart(e)
-          else -1
-        // skip chained casts (`x::INT::BIGINT` backscan would claim the
-        // inner type token) and already-wrapped operands (idempotency)
-        val alreadyWrapped = start >= 0 &&
-          masked.regionMatches(true, start, "duck_iround", 0, 11)
-        if (start >= 0 && !alreadyWrapped &&
-          !(start >= 1 && masked.charAt(start - 1) == ':')) {
-          inserts += ((start, "duck_iround("))
-          inserts += ((m.start, ")"))
-        }
-      }
+  private lazy val IntegralColonRe =
+    (raw"(?i)::\s*(" + integralCastTypes.mkString("|") + raw")\b").r
+
+  private def integralDoubleColon(b: EditBuffer): Unit =
+    b.each(IntegralColonRe) { (m, _, masked) =>
+      val e = wsBefore(masked, m.start)
+      val w = identStart(masked, e - 1)
+      val start =
+        if (e == 0 || masked.charAt(e - 1) == '\'') -1
+        else if (masked.substring(w, e).equalsIgnoreCase("END")) caseOf(masked, w)
+        else sliceBaseStart(masked, e).getOrElse(-1)
+      // skip chained casts (`x::INT::BIGINT` backscan would claim the
+      // inner type token) and already-wrapped operands (idempotency)
+      if (start >= 0 && !masked.regionMatches(true, start, "duck_iround", 0, 11) &&
+        !(start >= 1 && masked.charAt(start - 1) == ':')) {
+        val end = m.end
+        b.splice(m.start, m.start, ")")
+        b.splice(start, start, "duck_iround(")
+        SkipTo(end + 13)
+      } else Skip
     }
-    applySplices(sql, inserts.result().map { case (p, t) => (p, p, t) })
+
+  private val CaseEndRe = raw"(?i)\b(CASE|END)\b".r
+
+  /** Start of the CASE that the END at `end` closes; -1 when none does. */
+  private def caseOf(masked: CharSequence, end: Int): Int = {
+    val words = CaseEndRe.findAllMatchIn(masked.subSequence(0, end)).toArray
+    var (k, depth) = (words.length - 1, 0)
+    while (k >= 0 && (depth > 0 || words(k).group(1).equalsIgnoreCase("END"))) {
+      depth += (if (words(k).group(1).equalsIgnoreCase("END")) 1 else -1)
+      k -= 1
+    }
+    if (k < 0) -1 else words(k).start
   }
 
   private val JsonExtractFnRe =
@@ -1509,10 +1617,10 @@ object GraftSqlParser {
     * an integer (array index), and a LITERAL LIST of paths (a list of
     * per-path extractions). Non-literal paths stay unresolved (loud).
     */
-  def rewriteJsonExtractFns(sql: String): String =
-    rewriteEach(sql, JsonExtractFnRe)(jsonExtract)
+  def rewriteJsonExtractFns(sql: String): String = edited(sql)(jsonExtractFns)
+  private def jsonExtractFns(b: EditBuffer): Unit = b.each(JsonExtractFnRe)(jsonExtract)
 
-  private def jsonExtract(m: Regex.Match, sql: String, masked: String): Step = {
+  private def jsonExtract(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     val close = closeOf(masked, m.end).getOrElse(return Stop)
     val argsRaw = sql.substring(m.end, close - 1)
     val args = splitReadArgs(argsRaw, masked.substring(m.end, close - 1))
@@ -1560,8 +1668,7 @@ object GraftSqlParser {
       else raw"(?is)^array\s*\((.*)\)$$".r.findFirstMatchIn(pathArg).map(_.group(1))
     val replOpt: Option[String] = listInner match {
       case Some(inner) =>
-        val parts = splitReadArgs(inner, maskQuotes(inner))
-        val all = parts.map(pathSteps)
+        val all = splitReadArgs(inner, maskQuotes(inner)).map(pathSteps)
         if (all.exists(_.isEmpty) || all.isEmpty) None
         else Some(all.flatten.map(chain).mkString("array(", ", ", ")"))
       case None => pathSteps(pathArg).map(chain)
@@ -1569,14 +1676,49 @@ object GraftSqlParser {
     replOpt.map(Splice(m.start, close, _)).getOrElse(Stop)
   }
 
-  def rewriteJsonOps(sql: String): String = rewriteEach(sql, ArrowRe)(jsonChain)
+  def rewriteJsonOps(sql: String): String = edited(sql)(jsonOps)
+
+  /** The arrow scan. It keeps the stack of `(` still open at the scan
+    * point, so a chain's lambda check reads its enclosing paren from
+    * there instead of walking back to it.
+    */
+  private def jsonOps(b: EditBuffer): Unit = {
+    var opens = new Array[Int](16)
+    var depth = 0 // opens(0 until depth): the `(` still open at `at`
+    var at = 0
+    b.each(ArrowRe) { (m, sql, masked) =>
+      while (at < m.start) {
+        val c = masked.charAt(at)
+        if (c == '(') {
+          if (depth == opens.length) opens = java.util.Arrays.copyOf(opens, 2 * depth)
+          opens(depth) = at; depth += 1
+        } else if (c == ')' && depth > 0) depth -= 1
+        at += 1
+      }
+      jsonChain(m, sql, masked, if (depth == 0) -1 else opens(depth - 1)) match {
+        // the replacement balances its parens, and the arrows its base
+        // holds were scanned already (a lambda's stay lambdas): go on after it
+        case Splice(s, e, t) =>
+          b.splice(s, e, t)
+          while (depth > 0 && opens(depth - 1) >= s) depth -= 1
+          at = s + t.length
+          SkipTo(at)
+        case step => step
+      }
+    }
+  }
 
   private val ArrowRe = raw"->>?".r
+  private val DigitsRe = raw"\d+".r
+  private val WordRe = raw"\w+".r
 
-  private def jsonChain(m: Regex.Match, sql: String, masked: String): Step = {
+  /** One arrow chain; `open` is the innermost `(` still open at the
+    * first arrow (-1 at the top level).
+    */
+  private def jsonChain(m: Regex.Match, sql: CharSequence, masked: CharSequence,
+      open: Int): Step = {
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
-        s"a ->> JSON chain couldn't be rewritten ($why) — use " +
+      throw new DuckDialectException(s"a ->> JSON chain couldn't be rewritten ($why) — use " +
           "get_json_object(col, '$.path') directly (Spark's JSON path form)")
     val first = m.start
     // base primary ends just before the first arrow
@@ -1587,13 +1729,12 @@ object GraftSqlParser {
     var ops = List.empty[(String, Int, Int)] // (op, argStart, argEnd)
     var chaining = true
     while (chaining) {
-      val op = if (masked.startsWith("->>", pos)) "->>" else "->"
+      val op = if (masked.regionMatches(false, pos, "->>", 0, 3)) "->>" else "->"
       val argStart = pos + op.length
       primaryEnd(masked, argStart) match {
         case Some(ae) =>
           ops :+= ((op, argStart, ae))
-          var k = ae
-          while (k < masked.length && masked.charAt(k).isWhitespace) k += 1
+          val k = wsAfter(masked, ae)
           if (k < masked.length - 1 && masked.charAt(k) == '-' &&
             masked.charAt(k + 1) == '>') pos = k
           else chaining = false
@@ -1609,28 +1750,25 @@ object GraftSqlParser {
     // chains rewrite only then — a lambda body is an expression)
     val argsLiteral = ops.forall { case (_, s0, e0) =>
       val raw0 = sql.substring(s0, e0).trim
-      raw0.matches("\\d+") ||
+      DigitsRe.matches(raw0) ||
         (raw0.length >= 2 && raw0.head == '\'' && raw0.last == '\'')
     }
     // is the word ending just before '(' at index `paren` a known HOF?
     def hofOwns(paren: Int): Boolean = {
-      var k = paren - 1
-      while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-      val e0 = k + 1
-      while (k >= 0 && (masked.charAt(k).isLetterOrDigit || masked.charAt(k) == '_')) k -= 1
-      k + 1 < e0 && lambdaHofs.contains(masked.substring(k + 1, e0).toLowerCase)
+      val e0 = wsBefore(masked, paren)
+      val w0 = identStart(masked, e0 - 1)
+      w0 < e0 && lambdaHofs.contains(masked.substring(w0, e0).toLowerCase)
     }
     // lambda position: base starts an argument of a HOF call —
-    // `transform(l, x -> 'a')` is a constant-valued lambda, not JSON
+    // `transform(l, x -> 'a')` is a constant-valued lambda, not JSON.
+    // The base is one balanced primary, so the paren open at a comma
+    // before it is the one open at the arrow.
     lazy val lambdaContext = bs.exists { b0 =>
-      var k = b0 - 1
-      while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
+      val k = wsBefore(masked, b0) - 1
       if (k < 0) false
       else masked.charAt(k) match {
         case '(' => hofOwns(k)
-        case ',' =>
-          val open = enclosingOpen(masked, k)
-          open >= 0 && hofOwns(open)
+        case ',' => open >= 0 && hofOwns(open)
         case _ => false
       }
     }
@@ -1638,10 +1776,10 @@ object GraftSqlParser {
       val base = bs.getOrElse(fail("the left operand couldn't be claimed"))
       val path = ops.map { case (_, s0, e0) =>
         val raw0 = sql.substring(s0, e0).trim
-        if (raw0.matches("\\d+")) s"[$raw0]"
+        if (DigitsRe.matches(raw0)) s"[$raw0]"
         else if (raw0.length >= 2 && raw0.head == '\'' && raw0.last == '\'') {
           val key = raw0.substring(1, raw0.length - 1)
-          if (!key.matches("\\w+"))
+          if (!WordRe.matches(key))
             fail(s"key '$key' isn't a plain word — Spark JSON paths " +
               "can't quote arbitrary keys")
           s".$key"
@@ -1704,22 +1842,21 @@ object GraftSqlParser {
     * ADVICE: previously any bare GLOB token was claimed and a
     * non-literal pattern failed valid identifier SQL).
     */
-  def rewriteGlob(sql: String): String =
-    rewriteEach(sql, GlobRe) { (m, sql, masked) =>
+  def rewriteGlob(sql: String): String = edited(sql)(glob)
+  private def glob(b: EditBuffer): Unit =
+    b.each(GlobRe) { (m, sql, masked) =>
       // only claim GLOB when a string literal follows: `glob` is NOT a
       // reserved word in Spark, so `SELECT glob FROM files` must keep
       // parsing as an identifier (ADVICE r10)
-      var j = m.end
-      while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-      if (j < masked.length && masked.charAt(j) == '\'') glob(m, sql, masked) else Skip
+      val j = wsAfter(masked, m.end)
+      if (j < masked.length && masked.charAt(j) == '\'') globAt(m, sql, masked) else Skip
     }
 
   private val GlobRe = raw"(?i)\b(NOT\s+)?GLOB\b".r
 
-  private def glob(m: Regex.Match, sql: String, masked: String): Step = {
+  private def globAt(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
-        s"a GLOB couldn't be rewritten ($why) — convert the glob to a regex " +
+      throw new DuckDialectException(s"a GLOB couldn't be rewritten ($why) — convert the glob to a regex " +
           "and use RLIKE '^...$' (star → .*, ? → ., [...] classes verbatim)")
     val lpos = wsBefore(masked, m.start)
     val ls = primaryStartWithSign(masked, lpos).getOrElse(fail("left operand unclaimed"))
@@ -1746,14 +1883,14 @@ object GraftSqlParser {
     * patterns get their backslashes doubled (Spark's string literals
     * unescape `\x`, DuckDB's don't); computed patterns pass through.
     */
-  def rewriteSimilarTo(sql: String): String = rewriteEach(sql, SimilarToRe)(similarTo)
+  def rewriteSimilarTo(sql: String): String = edited(sql)(similarTo)
+  private def similarTo(b: EditBuffer): Unit = b.each(SimilarToRe)(similarToAt)
 
   private val SimilarToRe = raw"(?i)\b(NOT\s+)?SIMILAR\s+TO\b".r
 
-  private def similarTo(m: Regex.Match, sql: String, masked: String): Step = {
+  private def similarToAt(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
-        s"a SIMILAR TO couldn't be rewritten ($why) — use " +
+      throw new DuckDialectException(s"a SIMILAR TO couldn't be rewritten ($why) — use " +
           "regexp_full_match(expr, pattern) directly")
     val lpos = wsBefore(masked, m.start)
     val ls = primaryStartWithSign(masked, lpos).getOrElse(fail("left operand unclaimed"))
@@ -1777,7 +1914,8 @@ object GraftSqlParser {
     * with the sign attached. An occurrence whose operands can't be claimed
     * raises a guided error rather than mangling the statement.
     */
-  def rewritePow(sql: String): String = rewritePower(sql, PowRe,
+  def rewritePow(sql: String): String = edited(sql)(pow)
+  private def pow(b: EditBuffer): Unit = power(b, PowRe,
     "a ** exponent operand couldn't be claimed — write power(a, b) directly " +
       "(Spark's ^ is bitwise XOR, not exponent)")
 
@@ -1788,7 +1926,8 @@ object GraftSqlParser {
     * — identical to `**`, so the rewrite mirrors [[rewritePow]].
     * DuckDB's `xor(a, b)` function covers the bitwise meaning.
     */
-  def rewriteCaret(sql: String): String = rewritePower(sql, CaretRe,
+  def rewriteCaret(sql: String): String = edited(sql)(caret)
+  private def caret(b: EditBuffer): Unit = power(b, CaretRe,
     "a ^ exponent operand couldn't be claimed — write power(a, b) " +
       "(DuckDB's ^ is exponent; for bitwise XOR use xor(a, b))")
 
@@ -1798,10 +1937,10 @@ object GraftSqlParser {
   /** `l op r` → `power(l, r)` for each `op`, operands single primaries
     * with the sign attached; an unclaimable operand raises `failMsg`.
     */
-  private def rewritePower(sql: String, op: Regex, failMsg: String): String =
-    rewriteEach(sql, op) { (m, sql, masked) =>
+  private def power(b: EditBuffer, op: Regex, failMsg: String): Unit =
+    b.each(op) { (m, sql, masked) =>
       def fail(): Nothing =
-        throw new graft.functions.expressions.DuckDialectException(failMsg)
+        throw new DuckDialectException(failMsg)
       val lpos = wsBefore(masked, m.start)
       val ls = primaryStartWithSign(masked, lpos).getOrElse(fail())
       val re = primaryEnd(masked, m.end).getOrElse(fail())
@@ -1819,18 +1958,17 @@ object GraftSqlParser {
     * Spark supports it. Multi-argument aggregates keep a guided error
     * (the CASE wrap covers one argument).
     */
-  def rewriteFilterOver(sql: String): String =
-    rewriteEach(sql, FilterOverRe) { (m, sql, masked) =>
-      val open = masked.indexOf('(', m.start)
+  def rewriteFilterOver(sql: String): String = edited(sql)(filterOver)
+  private def filterOver(b: EditBuffer): Unit =
+    b.each(FilterOverRe) { (m, sql, masked) =>
+      val open = m.start + m.matched.indexOf('(')
       closeOf(masked, open + 1).map(_ - 1).filter { filterClose =>
-        var j = filterClose + 1
-        while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
+        val j = wsAfter(masked, filterClose + 1)
         j < masked.length && masked.charAt(j).isLetter &&
           wordStartingAt(masked, j).equalsIgnoreCase("OVER")
       }.map { filterClose =>
         def fail(why: String): Nothing =
-          throw new graft.functions.expressions.DuckDialectException(
-            s"FILTER over a window function couldn't be rewritten ($why) — " +
+          throw new DuckDialectException(s"FILTER over a window function couldn't be rewritten ($why) — " +
               "inline the predicate: agg(CASE WHEN pred THEN expr END) OVER (...)")
         val pred = sql.substring(open + 1, filterClose)
           .replaceAll(raw"(?is)^\s*WHERE\b", "").trim
@@ -1875,26 +2013,31 @@ object GraftSqlParser {
     * decimal column) keeps Spark's decimal result — CAST an operand
     * for exact DuckDB parity there.
     */
-  def rewriteDecimalDivLiterals(sql: String): String = {
-    if (sql.indexOf('/') < 0) return sql
-    val masked = maskQuotes(sql)
-    val leftRe = raw"(?<![\w.$$])(\d+\.\d+)(?![\w.]|[eE][+-]?\d)\s*/(?![/*])".r
-    val rightRe = raw"/(?![/*])\s*(\d+\.\d+)(?![\w.]|[eE][+-]?\d)".r
-    val spans = (leftRe.findAllMatchIn(masked).map(m => (m.start(1), m.end(1))) ++
-      rightRe.findAllMatchIn(masked)
-        .filter { m =>
-          val p = m.start(1) - 1
-          p < 0 || { val c = masked.charAt(p)
-            !(c.isLetterOrDigit || c == '_' || c == '.' || c == '$') }
-        }
-        .map(m => (m.start(1), m.end(1)))).toSeq.distinct
-    applySplices(sql, spans.map { case (s, e) => (s, e, s"CAST(${sql.substring(s, e)} AS DOUBLE)") })
+  def rewriteDecimalDivLiterals(sql: String): String = edited(sql)(decimalDivLiterals)
+
+  private val DecimalLitRe = raw"(?<![\w.$$])\d+\.\d+(?![\w.]|[eE][+-]?\d)".r
+
+  /** Each decimal literal with a `/` right before it, or right after
+    * it when no second `/` or a `*` follows that one, wrapped in a
+    * DOUBLE cast. */
+  private def decimalDivLiterals(b: EditBuffer): Unit = {
+    val masked = b.mask
+    b.sweep(DecimalLitRe) { m =>
+      val a = wsAfter(masked, m.end)
+      val divAfter = a < masked.length && masked.charAt(a) == '/' &&
+        !(a + 1 < masked.length && "/*".indexOf(masked.charAt(a + 1)) >= 0)
+      val p = wsBefore(masked, m.start) - 1
+      if (divAfter || p >= 0 && masked.charAt(p) == '/')
+        Some(s"CAST(${b.text.substring(m.start, m.end)} AS DOUBLE)")
+      else None
+    }
   }
 
   private val IntDivRe = raw"//".r
 
-  def rewriteIntDiv(sql: String): String = rewriteEach(sql, IntDivRe) { (m, sql, masked) =>
-    def fail(): Nothing = throw new graft.functions.expressions.DuckDialectException(
+  def rewriteIntDiv(sql: String): String = edited(sql)(intDiv)
+  private def intDiv(b: EditBuffer): Unit = b.each(IntDivRe) { (m, sql, masked) =>
+    def fail(): Nothing = throw new DuckDialectException(
       "a // division operand couldn't be claimed — write a div b (integer " +
         "truncating division) or floor(a / b) directly")
     val lpos = wsBefore(masked, m.start)
@@ -1929,8 +2072,9 @@ object GraftSqlParser {
     * claim the outer bracket). Plain list literals `[1, 2]`, indexing
     * `l[i]` and slices `l[a:b]` never match — no top-level FOR.
     */
-  def rewriteComprehension(sql: String): String =
-    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+  def rewriteComprehension(sql: String): String = edited(sql)(comprehension)
+  private def comprehension(b: EditBuffer): Unit =
+    b.each(BracketRe) { (m, sql, masked) =>
       val i = m.start
       (for {
         close <- closeOf(masked, i + 1, '[', ']')
@@ -1941,8 +2085,7 @@ object GraftSqlParser {
         val exprRaw = sql.substring(i + 1, forAt).trim
         val inM = raw"(?is)^\s*([A-Za-z_]\w*)\s+IN\b".r
           .findFirstMatchIn(masked.substring(forAt + 3, j)).getOrElse(
-            throw new graft.functions.expressions.DuckDialectException(
-              "list comprehension couldn't be parsed — expected " +
+            throw new DuckDialectException("list comprehension couldn't be parsed — expected " +
                 "[expr FOR var IN list [IF cond]]"))
         val v = inM.group(1)
         val restStart = forAt + 3 + inM.end
@@ -1966,19 +2109,22 @@ object GraftSqlParser {
     * to the next depth-0 clause keyword. Purely textual — joins,
     * sampling and every later rewrite see ordinary SQL.
     */
-  def rewriteFromFirst(sql: String): String = {
-    val masked = maskQuotes(sql)
-    val head = raw"(?is)^\s*FROM\s".r.findFirstMatchIn(masked).getOrElse(return sql)
+  def rewriteFromFirst(sql: String): String = edited(sql)(fromFirst)
+
+  private def fromFirst(b: EditBuffer): Unit = {
+    val (sql, masked) = (b.text, b.mask)
+    val head = raw"(?is)^\s*FROM\s".r.findFirstMatchIn(masked).getOrElse(return)
     // depth-0 SELECT ends the table expression (if present)
     val selPos = depth0Find(masked, raw"(?i)\bSELECT\b".r, 0, masked.length)
-      .getOrElse(return "SELECT * " + sql.substring(head.start))
+      .getOrElse(return b.splice(0, head.start, "SELECT * "))
     val tableExpr = sql.substring(head.end - 1, selPos).trim
     val listStart = selPos + "SELECT".length
     // select list ends at the first depth-0 clause keyword
     val cut = depth0Find(masked, ClauseKwRe, listStart, masked.length).getOrElse(masked.length)
     val selectList = sql.substring(listStart, cut).trim
     val tail = sql.substring(cut).trim
-    s"SELECT $selectList FROM $tableExpr" + (if (tail.nonEmpty) s" $tail" else "")
+    b.splice(0, b.length,
+      s"SELECT $selectList FROM $tableExpr" + (if (tail.nonEmpty) s" $tail" else ""))
   }
 
 
@@ -1996,8 +2142,9 @@ object GraftSqlParser {
     * top-level colon (`l[i]`, `m['k']`), casts (`x::INT`) and brackets
     * whose base the scan cannot claim are left alone (→ guided error).
     */
-  def rewriteSlice(sql: String): String =
-    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+  def rewriteSlice(sql: String): String = edited(sql)(slice)
+  private def slice(b: EditBuffer): Unit =
+    b.each(BracketRe) { (m, sql, masked) =>
       val i = m.start
       (for {
         (colon, close) <- sliceSpan(masked, i)
@@ -2025,8 +2172,9 @@ object GraftSqlParser {
     * `x::INT[3]` keep their bare-identifier base when preceded by
     * `AS`/`::` (DuckDB array-type syntax, not a subscript).
     */
-  def rewriteSubscript(sql: String): String =
-    rewriteEach(sql, BracketRe) { (m, sql, masked) =>
+  def rewriteSubscript(sql: String): String = edited(sql)(subscript)
+  private def subscript(b: EditBuffer): Unit =
+    b.each(BracketRe) { (m, sql, masked) =>
       val i = m.start
       (for {
         close <- subscriptClose(masked, i) if sliceSpan(masked, i).isEmpty // a colon → slice
@@ -2041,14 +2189,21 @@ object GraftSqlParser {
     }
 
   /** `i` moved back over the whitespace that precedes it. */
-  private def wsBefore(s: String, i: Int): Int = {
+  private def wsBefore(s: CharSequence, i: Int): Int = {
     var p = i
     while (p > 0 && s.charAt(p - 1).isWhitespace) p -= 1
     p
   }
 
+  /** `i` moved forward over the whitespace that starts there. */
+  private def wsAfter(s: CharSequence, i: Int): Int = {
+    var p = i
+    while (p < s.length && s.charAt(p).isWhitespace) p += 1
+    p
+  }
+
   /** Matching `]` of a bracket opened at `open` (no colon requirement). */
-  private def subscriptClose(masked: String, open: Int): Option[Int] = {
+  private def subscriptClose(masked: CharSequence, open: Int): Option[Int] = {
     var i = open + 1
     var db = 0
     var dp = 0
@@ -2072,7 +2227,7 @@ object GraftSqlParser {
     * counts; two slice colons — DuckDB's step form — stay unsupported
     * → guided error).
     */
-  private def sliceSpan(masked: String, open: Int): Option[(Int, Int)] = {
+  private def sliceSpan(masked: CharSequence, open: Int): Option[(Int, Int)] = {
     var i = open + 1
     var db = 0
     var dp = 0
@@ -2098,21 +2253,22 @@ object GraftSqlParser {
     None
   }
 
+  private val NotABase = Set("ARRAY", "MAP", "END", "NULL", "TRUE", "FALSE", "THEN",
+    "ELSE", "WHEN", "AND", "OR", "NOT", "IN", "SELECT", "WHERE", "FROM", "ON", "BY")
+
   /** Start of the primary-expression chain ending right before the `[`
     * at `brPos`; None when no sliceable base precedes (list literal,
     * keyword, clause start).
     */
-  private def sliceBaseStart(masked: String, brPos: Int): Option[Int] = {
+  private def sliceBaseStart(masked: CharSequence, brPos: Int): Option[Int] = {
     var j = brPos
     var any = false
     var bareIdentOnly = false
     var scanning = true
     while (scanning && j > 0) {
       val c = masked.charAt(j - 1)
-      if (c.isLetterOrDigit || c == '_' || c == '$') {
-        var b = j - 1
-        while (b > 0 && { val x = masked.charAt(b - 1)
-          x.isLetterOrDigit || x == '_' || x == '$' }) b -= 1
+      if (isIdent(c, "$")) {
+        val b = identStart(masked, j - 1, "$")
         bareIdentOnly = !any
         j = b; any = true
         if (b > 0 && masked.charAt(b - 1) == '.') j = b - 1 else scanning = false
@@ -2136,18 +2292,13 @@ object GraftSqlParser {
         // LITERAL, which has no Spark rewrite: leave it unclaimed so
         // the guided construct hint fires instead of a raw parse error
         // on the mangled literal (review r9)
-        if (c == ']' && (b < 0 || { val p = masked.charAt(b)
-          !(p.isLetterOrDigit || p == '_' || p == '$' || p == '`' ||
-            p == ')' || p == ']' || p == '\'') })) return None
+        if (c == ']' && (b < 0 || !isIdent(masked.charAt(b), "$`)]'"))) return None
         bareIdentOnly = false
         j = b + 1; any = true // keep scanning: fn name / chain before the group
       } else scanning = false
     }
     if (!any) None
-    else if (bareIdentOnly && Set("ARRAY", "MAP", "END", "NULL", "TRUE",
-        "FALSE", "THEN", "ELSE", "WHEN", "AND", "OR", "NOT", "IN",
-        "SELECT", "WHERE", "FROM", "ON", "BY")
-        .contains(wordStartingAt(masked, j))) None
+    else if (bareIdentOnly && NotABase.contains(wordStartingAt(masked, j))) None
     else Some(j)
   }
 
@@ -2159,10 +2310,9 @@ object GraftSqlParser {
     * (A `)` inside a quoted column name within the EXCLUDE list remains
     * unsupported — document as a dialect edge.)
     */
-  def rewriteExclude(sql: String): String =
-    applySplices(sql, ExcludeRe.findAllMatchIn(maskQuotes(sql)).map { m =>
-      (m.start, m.end, s"* EXCEPT (${sql.substring(m.start(1), m.end(1))})")
-    }.toSeq)
+  def rewriteExclude(sql: String): String = edited(sql)(exclude)
+  private def exclude(b: EditBuffer): Unit =
+    b.sweep(ExcludeRe)(m => Some(s"* EXCEPT (${b.text.substring(m.start(1), m.end(1))})"))
 
   private val QualifyRe = raw"(?i)\bQUALIFY\b".r
 
@@ -2187,9 +2337,10 @@ object GraftSqlParser {
     * input), and a predicate referencing columns the SELECT list drops
     * fails analysis as unresolved.
     */
-  def rewriteQualify(sql: String): String =
-    rewriteEach(sql, QualifyRe) { (m, sql, masked) =>
-      if (isQualifyClause(masked, m.start, m.end)) qualify(sql, masked, m.start, m.end)
+  def rewriteQualify(sql: String): String = edited(sql)(qualify)
+  private def qualify(b: EditBuffer): Unit =
+    b.each(QualifyRe) { (m, sql, masked) =>
+      if (isQualifyClause(masked, m.start, m.end)) qualifyAt(sql, masked, m.start, m.end)
       else Skip
     }
 
@@ -2197,7 +2348,7 @@ object GraftSqlParser {
     * SELECT/comma/operator, or followed by an operator/comma/close)
     * is a column named "qualify", not the clause.
     */
-  private def isQualifyClause(masked: String, start: Int, end: Int): Boolean = {
+  private def isQualifyClause(masked: CharSequence, start: Int, end: Int): Boolean = {
     val opChars = ",(.=<>+-*/|&".toSet
     val prevIdx = (start - 1 to 0 by -1).find(i => !masked.charAt(i).isWhitespace)
     val prevOk = prevIdx match {
@@ -2216,20 +2367,13 @@ object GraftSqlParser {
     prevOk && nextOk
   }
 
-  private def wordEndingAt(s: String, last: Int): String = {
-    if (!s.charAt(last).isLetter) return ""
-    var b = last
-    while (b > 0 && (s.charAt(b - 1).isLetterOrDigit || s.charAt(b - 1) == '_')) b -= 1
-    s.substring(b, last + 1).toUpperCase
-  }
+  private def wordEndingAt(s: CharSequence, last: Int): String =
+    if (!s.charAt(last).isLetter) "" else s.substring(identStart(s, last), last + 1).toUpperCase
 
-  private[operators] def wordStartingAt(s: String, first: Int): String = {
-    var e = first
-    while (e < s.length && (s.charAt(e).isLetterOrDigit || s.charAt(e) == '_')) e += 1
-    s.substring(first, e).toUpperCase
-  }
+  private[operators] def wordStartingAt(s: CharSequence, first: Int): String =
+    s.substring(first, identEnd(s, first)).toUpperCase
 
-  private def qualify(sql: String, masked: String, qStart: Int, qEnd: Int): Step = {
+  private def qualifyAt(sql: CharSequence, masked: CharSequence, qStart: Int, qEnd: Int): Step = {
     val blockStart = enclosingOpen(masked, qStart) + 1
     // predicate runs to the next same-depth clause terminator / ')'
     val predEnd = clauseEnd(masked, qEnd)(Set("ORDER", "LIMIT", "OFFSET", "WINDOW",
@@ -2237,8 +2381,7 @@ object GraftSqlParser {
     val pred = sql.substring(qEnd, predEnd).trim
     val head = sql.substring(blockStart, qStart).trim
     if (pred.isEmpty)
-      throw new graft.functions.expressions.DuckDialectException(
-        "QUALIFY with an empty predicate")
+      throw new DuckDialectException("QUALIFY with an empty predicate")
     val maskedPred = masked.substring(qEnd, predEnd)
     val hasWindow = raw"(?i)\bOVER\b".r.findFirstIn(maskedPred).isDefined
     val replacement =
@@ -2246,14 +2389,14 @@ object GraftSqlParser {
       else {
         if (raw"(?is)^\s*SELECT\s+DISTINCT\b".r
             .findFirstIn(masked.substring(blockStart, qStart)).isDefined)
-          throw new graft.functions.expressions.DuckDialectException(
+          throw new DuckDialectException(
             "QUALIFY with an inline window over SELECT DISTINCT has no mechanical " +
               "rewrite (the window must run before DISTINCT) — compute the window " +
               "column in a subquery, filter, then SELECT DISTINCT outside")
         // inject the predicate as a column before the block's own FROM
         val fromPos = depth0IndexWhere(masked, blockStart, qStart)(wordAt(masked, _) == "FROM")
         if (fromPos < 0)
-          throw new graft.functions.expressions.DuckDialectException(
+          throw new DuckDialectException(
             "QUALIFY: could not locate the block's FROM clause for the window rewrite")
         val head2 = sql.substring(blockStart, fromPos) +
           s", ( $pred ) AS __graft_qualify " + sql.substring(fromPos, qStart)
@@ -2314,12 +2457,15 @@ object GraftSqlParser {
     * simply keep Spark's loud GROUPING_COLUMN_MISMATCH).
     */
   def rewriteGroupingAliases(sql: String,
-      resolve: String => Option[Seq[String]] = _ => None): String = {
+      resolve: String => Option[Seq[String]] = _ => None): String =
+    edited(sql)(groupingAliases(resolve))
+
+  private def groupingAliases(resolve: String => Option[Seq[String]])(b: EditBuffer): Unit = {
     // the rewrite cap stops pathological alias cycles (`SELECT b AS a,
     // a AS b ... ROLLUP (a)` would ping-pong forever); real queries
     // settle in 1-2
     var rewrites = 0
-    rewriteEach(sql, GroupingConstructRe) { (m, sql, masked) =>
+    b.each(GroupingConstructRe) { (m, sql, masked) =>
       if (rewrites > 8) Stop
       else groupingConstruct(sql, masked, m, resolve) match {
         case Some(splice) => rewrites += 1; splice
@@ -2335,7 +2481,7 @@ object GraftSqlParser {
     * replacements splice into the raw text by position.
     */
   private def groupingConstruct(
-      sql: String, masked: String,
+      sql: CharSequence, masked: CharSequence,
       m: Regex.Match,
       resolve: String => Option[Seq[String]]): Option[Splice] = {
     // balanced construct span
@@ -2379,7 +2525,7 @@ object GraftSqlParser {
         else Some(a.toLowerCase -> e)
       }
     val aliasMapAll: Map[String, String] =
-      splitTopLevel(selText, maskQuotes(selText)).flatMap(_.trim match {
+      splitTop(selText).flatMap(_.trim match {
         case aliasRe(e, a) => Some(a.toLowerCase -> e)
         case it => implicitAlias(it)
       }).toMap
@@ -2401,56 +2547,31 @@ object GraftSqlParser {
     // are Binder errors, and `t.p` is a column path) — so qualified
     // refs, function calls, and aliases inside larger expressions are
     // never substituted; they stay loud on both engines.
-    val spanRaw = sql.substring(open + 1, close - 1)
-    val spanMasked = masked.substring(open + 1, close - 1)
     val replaced = scala.collection.mutable.Set[String]()
-    val identRe = raw"(?i)\b([A-Za-z_]\w*)\b".r
-    def nextNonSpace(s: String, from: Int): Char = {
-      var p = from
-      while (p < s.length && s.charAt(p).isWhitespace) p += 1
-      if (p < s.length) s.charAt(p) else ' '
-    }
-    def prevNonSpace(s: String, from: Int): Char = {
-      var p = from - 1
-      while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
-      if (p >= 0) s.charAt(p) else ' '
-    }
-    val sb = new StringBuilder
-    var last = 0
-    for (mm <- identRe.findAllMatchIn(spanMasked)) {
-      val l = prevNonSpace(spanMasked, mm.start)
-      val r = nextNonSpace(spanMasked, mm.end)
-      val bareItem = (l == ' ' || l == '(' || l == ',') &&
-        (r == ' ' || r == ')' || r == ',')
-      aliasMap.get(mm.group(1).toLowerCase) match {
-        case Some(e) if bareItem =>
+    val newSpan = edited(sql.substring(open + 1, close - 1)) { b =>
+      val span = b.mask
+      b.sweep(raw"(?i)\b([A-Za-z_]\w*)\b".r) { mm =>
+        val (p, q) = (wsBefore(span, mm.start) - 1, wsAfter(span, mm.end))
+        val bareItem = (p < 0 || span.charAt(p) == '(' || span.charAt(p) == ',') &&
+          (q == span.length || span.charAt(q) == ')' || span.charAt(q) == ',')
+        aliasMap.get(mm.group(1).toLowerCase).filter(_ => bareItem).map { e =>
           replaced += mm.group(1).toLowerCase
-          sb.append(spanRaw.substring(last, mm.start)).append(e)
-          last = mm.end
-        case _ =>
+          e
+        }
       }
     }
     if (replaced.isEmpty) return None
-    sb.append(spanRaw.substring(last))
-    val newSpan = sb.toString
     // grouping()/grouping_id() args over the replaced aliases — block
     // scope: the enclosing SELECT to the end of its balanced region
     val blockEnd = clauseEnd(masked, close)(_ => false)
     val grRe = raw"(?i)\b(grouping|grouping_id)\s*\(([^()]*)\)".r
-    def fixGrouping(raw0: String): String = {
-      val msk = maskQuotes(raw0)
-      val b = new StringBuilder
-      var p = 0
-      for (gm <- grRe.findAllMatchIn(msk)) {
-        val rawArgs = raw0.substring(gm.start(2), gm.end(2))
-        val args = rawArgs.split(",").map(_.trim).map { a =>
+    def fixGrouping(raw0: String): String = edited(raw0) { b =>
+      b.sweep(grRe) { gm =>
+        val args = b.text.substring(gm.start(2), gm.end(2)).split(",").map(_.trim).map { a =>
           if (replaced.contains(a.toLowerCase)) aliasMap(a.toLowerCase) else a
         }.mkString(", ")
-        b.append(raw0.substring(p, gm.start(2))).append(args)
-        p = gm.end(2)
+        Some(b.text.substring(gm.start, gm.start(2)) + args + b.text.substring(gm.end(2), gm.end))
       }
-      b.append(raw0.substring(p))
-      b.toString
     }
     val mid0 = sql.substring(selPos, open + 1) + newSpan + sql.substring(close - 1, close)
     val tail0 = sql.substring(close, blockEnd)
@@ -2531,7 +2652,7 @@ object GraftSqlParser {
     val groupingExprs: Seq[String] = setItems.flatMap { it =>
       if (it.startsWith("(") && it.endsWith(")")) {
         val inner = it.substring(1, it.length - 1)
-        splitTopLevel(inner, maskQuotes(inner)).map(_.trim).filter(_.nonEmpty)
+        splitTop(inner).map(_.trim).filter(_.nonEmpty)
       } else if (it.nonEmpty) Seq(it) else Nil
     }.distinct
     // clause spans
@@ -2562,48 +2683,23 @@ object GraftSqlParser {
     // replace-all of one expression's occurrences
     def replAll(frag: String, find: String, repl: String): String = {
       val chunks = find.trim.split(raw"\s+").map(java.util.regex.Pattern.quote)
-      val lead = if (find.trim.head.isLetterOrDigit || find.trim.head == '_') raw"\b" else ""
-      val trail = if (find.trim.last.isLetterOrDigit || find.trim.last == '_') raw"\b" else ""
+      val lead = if (isIdent(find.trim.head)) raw"\b" else ""
+      val trail = if (isIdent(find.trim.last)) raw"\b" else ""
       val p = ("(?i)" + lead + chunks.mkString(raw"\s*") + trail).r
-      val msk = maskQuotes(frag)
-      val sb = new StringBuilder
-      var last = 0
-      for (mm <- p.findAllMatchIn(msk)) {
-        sb.append(frag.substring(last, mm.start)).append(repl)
-        last = mm.end
-      }
-      sb.append(frag.substring(last))
-      sb.toString
+      edited(frag)(_.sweep(p)(_ => Some(repl)))
     }
     // grouping()/grouping_id() → all-aggregated constants (Spark types:
     // grouping = TINYINT, grouping_id = BIGINT)
-    def substGroupingFns(frag0: String): String = {
-      var frag = frag0
-      var guard = 0
-      var done = false
-      while (!done && guard < 64) {
-        guard += 1
-        val msk = maskQuotes(frag)
-        raw"(?i)\b(grouping|grouping_id)\s*\(".r.findFirstMatchIn(msk) match {
-          case Some(gm) =>
-            closeOf(msk, gm.end) match {
-              case Some(e) =>
-                val nArgs = {
-                  val a = frag.substring(gm.end, e - 1).trim
-                  if (a.isEmpty) groupingExprs.size
-                  else splitTopLevel(a, maskQuotes(a)).size
-                }
-                val const =
-                  if (gm.group(1).equalsIgnoreCase("grouping")) "CAST(1 AS TINYINT)"
-                  else s"CAST(${(1L << nArgs) - 1} AS BIGINT)"
-                frag = frag.substring(0, gm.start) + const + frag.substring(e)
-              case None => done = true
-            }
-          case None => done = true
-        }
-      }
-      frag
-    }
+    def substGroupingFns(frag: String): String =
+      edited(frag)(_.each(raw"(?i)\b(grouping|grouping_id)\s*\(".r) { (gm, text, msk) =>
+        closeOf(msk, gm.end).map { e =>
+          val a = text.substring(gm.end, e - 1).trim
+          val nArgs = if (a.isEmpty) groupingExprs.size else splitTop(a).size
+          Splice(gm.start, e,
+            if (gm.group(1).equalsIgnoreCase("grouping")) "CAST(1 AS TINYINT)"
+            else s"CAST(${(1L << nArgs) - 1} AS BIGINT)")
+        }.getOrElse(Stop)
+      })
     val spec = EmptyGroupingSpec(
       probeSql = s"SELECT 1 AS __p FROM $fromWhere LIMIT 1",
       groupingExprs = groupingExprs,
@@ -2637,7 +2733,7 @@ object GraftSqlParser {
     * each definition's parentheses, in definition order. Empty for any
     * other statement shape.
     */
-  private def cteBodySpans(masked: String): Seq[(Int, Int)] = {
+  private def cteBodySpans(masked: CharSequence): Seq[(Int, Int)] = {
     val wm = raw"(?is)^\s*WITH\s+".r.findFirstMatchIn(masked)
       .getOrElse(return Nil)
     if (raw"(?is)^\s*WITH\s+RECURSIVE\b".r.findFirstIn(masked).isDefined)
@@ -2651,8 +2747,7 @@ object GraftSqlParser {
       defRe.findFirstMatchIn(masked.substring(p)).foreach { dm =>
         closeOf(masked, p + dm.end).foreach { close =>
           out += ((p + dm.end, close - 1))
-          var q = close
-          while (q < masked.length && masked.charAt(q).isWhitespace) q += 1
+          val q = wsAfter(masked, close)
           if (q < masked.length && masked.charAt(q) == ',') { p = q + 1; more = true }
         }
       }
@@ -2681,49 +2776,44 @@ object GraftSqlParser {
         emptyGroupingSetsSpec(sql.substring(bs, be)).map(spec => (bs, be, spec))
       })
 
-  def rewriteDistinctOn(sql: String): String = rewriteEach(sql, DistinctOnRe)(distinctOn)
+  def rewriteDistinctOn(sql: String): String = edited(sql)(distinctOn)
+  private def distinctOn(b: EditBuffer): Unit = b.each(DistinctOnRe)(distinctOnAt)
 
-  private def distinctOn(m: Regex.Match, sql: String, masked: String): Step = {
+  private def distinctOnAt(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     val keysOpen = m.end - 1
     // unbalanced — let the parser report it
     val keysClose = closeOf(masked, m.end).getOrElse(return Stop) - 1
     val keys = sql.substring(keysOpen + 1, keysClose).trim
     if (keys.isEmpty)
-      throw new graft.functions.expressions.DuckDialectException(
-        "DISTINCT ON with an empty key list")
+      throw new DuckDialectException("DISTINCT ON with an empty key list")
     // scan this block for its top-level ORDER BY; stop at the
     // enclosing ')' or a same-depth set operation
     val setOps = Set("UNION", "INTERSECT", "EXCEPT", "MINUS")
     val hit = clauseEnd(masked, keysClose + 1)(w => w == "ORDER" || setOps(w))
     val hitWord = if (hit < masked.length) wordAt(masked, hit) else ""
     if (setOps(hitWord))
-      throw new graft.functions.expressions.DuckDialectException(
-        "DISTINCT ON combined with a set operation has no mechanical " +
+      throw new DuckDialectException("DISTINCT ON combined with a set operation has no mechanical " +
           "rewrite (the ORDER BY orders the combined result, not the " +
           "DISTINCT ON pick) — wrap the DISTINCT ON SELECT in a subquery " +
           "with its own ORDER BY")
     if (hitWord != "ORDER")
-      throw new graft.functions.expressions.DuckDialectException(
-        "DISTINCT ON without ORDER BY picks an arbitrary row per key — " +
+      throw new DuckDialectException("DISTINCT ON without ORDER BY picks an arbitrary row per key — " +
           "not reproducible on a distributed engine. Add ORDER BY <keys>, " +
           "<tiebreak> to pin which row survives")
     val orderPos = hit
     // ORDER BY list extent: to the next same-depth LIMIT/OFFSET, the
     // enclosing ')', or end of text
     val byM = raw"(?is)\AORDER\s+BY\b".r.findFirstMatchIn(masked.substring(orderPos))
-      .getOrElse(throw new graft.functions.expressions.DuckDialectException(
-        "DISTINCT ON: malformed ORDER BY clause"))
+      .getOrElse(throw new DuckDialectException("DISTINCT ON: malformed ORDER BY clause"))
     val listStart = orderPos + byM.end
     val listEnd = clauseEnd(masked, listStart)(w => w == "LIMIT" || w == "OFFSET")
     val orderList = sql.substring(listStart, listEnd).trim
     if (orderList.isEmpty)
-      throw new graft.functions.expressions.DuckDialectException(
-        "DISTINCT ON: empty ORDER BY list")
+      throw new DuckDialectException("DISTINCT ON: empty ORDER BY list")
     val ordinal = raw"(?is)^\d+(\s+(ASC|DESC))?(\s+NULLS\s+(FIRST|LAST))?$$".r
-    if (splitTopLevel(orderList, maskQuotes(orderList))
+    if (splitTop(orderList)
         .exists(item => ordinal.findFirstIn(item.trim).isDefined))
-      throw new graft.functions.expressions.DuckDialectException(
-        "DISTINCT ON with ordinal ORDER BY items (ORDER BY 1) isn't " +
+      throw new DuckDialectException("DISTINCT ON with ordinal ORDER BY items (ORDER BY 1) isn't " +
           "rewritable — inside the generated OVER clause an integer is a " +
           "constant, not a column position. Name the columns")
     val qualify = s" QUALIFY row_number() OVER (PARTITION BY $keys " +
@@ -2745,14 +2835,14 @@ object GraftSqlParser {
         if (fromPos2 < 0) Map.empty
         else {
           val selText = sql.substring(keysClose + 1, fromPos2)
-          splitTopLevel(selText, maskQuotes(selText)).flatMap(_.trim match {
+          splitTop(selText).flatMap(_.trim match {
             case aliasRe(e, a) => Some(canon(e) -> a)
             case _ => None
           }).toMap
         }
       val itemRe =
         raw"(?is)^(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?$$".r
-      splitTopLevel(orderList, maskQuotes(orderList)).map { item =>
+      splitTop(orderList).map { item =>
         item.trim match {
           case itemRe(core, dir, nulls) =>
             aliasMap.get(canon(core)).map(_ +
@@ -2775,8 +2865,8 @@ object GraftSqlParser {
     * the literal-masked copy), so `:=` anywhere else still raises the
     * guided named-argument error instead of being silently mangled.
     */
-  def rewriteStructPack(sql: String): String =
-    rewriteNamedArgs(sql, StructPackRe, "named_struct(")
+  def rewriteStructPack(sql: String): String = edited(sql)(structPack)
+  private def structPack(b: EditBuffer): Unit = namedArgs(b, StructPackRe, "named_struct(")
 
   private val StructInsertRe = raw"(?i)\bstruct_insert\s*\(".r
 
@@ -2786,8 +2876,9 @@ object GraftSqlParser {
     * hood — appends/overwrites fields on the struct, probed
     * `{'a': 1, 'b': 2}`).
     */
-  def rewriteStructInsert(sql: String): String =
-    rewriteNamedArgs(sql, StructInsertRe, "graft_struct_insert(")
+  def rewriteStructInsert(sql: String): String = edited(sql)(structInsert)
+  private def structInsert(b: EditBuffer): Unit =
+    namedArgs(b, StructInsertRe, "graft_struct_insert(")
 
   private val NamedArgRe = raw"(?s)([A-Za-z_][A-Za-z_0-9]*)\s*:=".r
 
@@ -2795,8 +2886,8 @@ object GraftSqlParser {
     * at the call's own top level (a nested call keeps its own, rewritten
     * when the scan reaches it) turned into `'ident',`.
     */
-  private def rewriteNamedArgs(sql: String, re: Regex, head: String): String =
-    rewriteEach(sql, re) { (m, sql, masked) =>
+  private def namedArgs(b: EditBuffer, re: Regex, head: String): Unit =
+    b.each(re) { (m, _, masked) =>
       closeOf(masked, m.end).map { close =>
         val inner = masked.substring(m.end, close - 1)
         val hits = NamedArgRe.findAllMatchIn(inner).map(am => (am.start, am)).toMap
@@ -2805,8 +2896,9 @@ object GraftSqlParser {
           hits.get(k).foreach(am => args += ((k, am.end, s"'${am.group(1)}',")))
           false
         }
-        Splice(m.start, close - 1,
-          head + applySplices(sql.substring(m.end, close - 1), args.result()))
+        // right to left, so each offset still holds
+        args.result().reverse.foreach { case (s, e, t) => b.splice(m.end + s, m.end + e, t) }
+        Splice(m.start, m.end, head)
       }.getOrElse(Stop) // unbalanced — leave for the parser to report
     }
 
@@ -2873,8 +2965,7 @@ object GraftSqlParser {
       subDepth(i) = stack.count(identity)
       maskedHead.charAt(i) match {
         case '(' =>
-          var r = i + 1
-          while (r < maskedHead.length && maskedHead.charAt(r).isWhitespace) r += 1
+          val r = wsAfter(maskedHead, i + 1)
           stack.push(maskedHead.regionMatches(true, r, "SELECT", 0, 6))
         case ')' => if (stack.nonEmpty) stack.pop()
         case _ =>
@@ -2904,8 +2995,7 @@ object GraftSqlParser {
     val agg = SampleAggFnRe.findAllMatchIn(selList).exists(m => subDepth(m.start) == 0) ||
       raw"(?i)\bOVER\b".r.findAllMatchIn(selList).exists(m => subDepth(m.start) == 0)
     if (grouped || distinct || agg)
-      throw new graft.functions.expressions.DuckDialectException(
-        "USING SAMPLE under aggregation/DISTINCT/GROUP BY samples the base " +
+      throw new DuckDialectException("USING SAMPLE under aggregation/DISTINCT/GROUP BY samples the base " +
           "rows BEFORE aggregating in DuckDB, which this block-wrap rewrite " +
           "cannot express — move the sample into a FROM subquery: SELECT " +
           "... FROM (SELECT * FROM t WHERE ... USING SAMPLE <spec>) GROUP BY ...")
@@ -2937,7 +3027,7 @@ object GraftSqlParser {
   /** First depth-0 occurrence of `re` in masked[from, until) — paren
     * depth measured relative to `from` (a block's own parens balance).
     */
-  private[operators] def depth0Find(masked: String, re: Regex,
+  private[operators] def depth0Find(masked: CharSequence, re: Regex,
                          from: Int, until: Int): Option[Int] = {
     val hits = re.findAllMatchIn(masked.substring(from, until)).map(_.start + from).toSet
     if (hits.isEmpty) None
@@ -2956,14 +3046,14 @@ object GraftSqlParser {
     * the FROM-subquery spelling. The derived alias keeps qualified refs
     * (`t.col`) resolving after the relation is wrapped.
     */
-  private def sampleSplit(sql: String, masked: String, blockStart: Int,
+  private def sampleSplit(sql: CharSequence, masked: CharSequence, blockStart: Int,
                           sampleStart: Int): Option[(Int, Int, String, String)] = {
     val fromIdx = depth0Find(masked, raw"(?i)\bFROM\b".r, blockStart, sampleStart)
       .getOrElse(return None)
     val whereIdx = depth0Find(masked, raw"(?i)\bWHERE\b".r, fromIdx + 4, sampleStart)
       .getOrElse(return None)
     val multi = depth0Find(masked, raw",|(?i)\bJOIN\b".r, fromIdx + 4, whereIdx).isDefined
-    if (multi) throw new graft.functions.expressions.DuckDialectException(
+    if (multi) throw new DuckDialectException(
       "USING SAMPLE (exact-n form) after a WHERE over a multi-relation FROM — " +
         "DuckDB draws the sample from the pre-filter join result, which this " +
         "rewrite can't attach to a join; move the sample into a FROM subquery: " +
@@ -2984,20 +3074,23 @@ object GraftSqlParser {
     Some((fromIdx + 4, whereIdx, fromPart, alias))
   }
 
-  def rewriteSample(sql: String): String = {
-    val fnForm = rewriteEach(sql, FnSampleRe) { (fm, sql, _) =>
+  def rewriteSample(sql: String): String = edited(sql)(sample)
+
+  private def sample(b: EditBuffer): Unit = {
+    b.each(FnSampleRe) { (fm, _, _) =>
       val seed = Option(fm.group(4)).map(s => s", $s").getOrElse("")
       Splice(fm.start, fm.end, s"USING SAMPLE ${fm.group(2)}${fm.group(3)} (${fm.group(1)}$seed)")
     }
     // size-first reservoir spelling → function form, then one rewriter
-    val rsvForm = rewriteEach(fnForm, RsvSizeRe) { (rm, sql, _) =>
+    b.each(RsvSizeRe) { (rm, _, _) =>
       val rep = Option(rm.group(2)).map(s => s" REPEATABLE ($s)").getOrElse("")
       Splice(rm.start, rm.end, s"USING SAMPLE reservoir(${rm.group(1)} ROWS)$rep")
     }
-    rewriteEach(rewriteEach(rsvForm, RsvFnRe)(reservoirSample), SampleRe)(tableSample)
+    b.each(RsvFnRe)(reservoirSample)
+    b.each(SampleRe)(tableSample)
   }
 
-  private def reservoirSample(rm: Regex.Match, sql: String, masked: String): Step = {
+  private def reservoirSample(rm: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     val n = rm.group(1)
     // unseeded reservoir is random in DuckDB; graft is deterministic
     // either way (documented) — a fixed default seed keeps repeated
@@ -3029,7 +3122,7 @@ object GraftSqlParser {
       s"xxhash64(struct(*), $seed) AS $h FROM ( $head ) ORDER BY $h LIMIT $n)")
   }
 
-  private def tableSample(m: Regex.Match, sql: String, masked: String): Step = {
+  private def tableSample(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     // percentage methods are claimable, seeded or not (r14: the
     // seed rides through as Spark's REPEATABLE clause); anything
     // else parenthesized ('reservoir(...)') → not rewritten
@@ -3123,12 +3216,12 @@ object GraftSqlParser {
     * naming the fix rather than silently misparsing (bare Spark would
     * read `t ASOF JOIN u` as table t aliased "ASOF" + inner join).
     */
-  def rewriteAsof(sql: String): String = rewriteEach(sql, AsofRe)(asof)
+  def rewriteAsof(sql: String): String = edited(sql)(asof)
+  private def asof(b: EditBuffer): Unit = b.each(AsofRe)(asofAt)
 
-  private def asof(m: Regex.Match, sql: String, masked: String): Step = {
+  private def asofAt(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
-        s"ASOF JOIN couldn't be auto-rewritten ($why) — use " +
+      throw new DuckDialectException(s"ASOF JOIN couldn't be auto-rewritten ($why) — use " +
           "graft.queries.CoreQueries.asOfJoin, or rewrite by hand as a " +
           "windowed validity-interval join (lead/lag of the timestamp " +
           "over the equality keys, then an equi-join bounded by it)")
@@ -3144,8 +3237,7 @@ object GraftSqlParser {
     if (isSubquery)
       i = closeOf(masked, i + 1).getOrElse(fail("unbalanced parens in the right-side subquery"))
     else {
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit ||
-        masked.charAt(i) == '_' || masked.charAt(i) == '.')) i += 1
+      i = identEnd(masked, i, ".")
       if (i == relStart) fail("unrecognized right-side relation")
     }
     val relText = sql.substring(relStart, i)
@@ -3306,11 +3398,14 @@ object GraftSqlParser {
   /** Split `s` on depth-0 commas (`pairs` groups skipped; `s` must
     * already be quote-masked-aligned with the raw text it indexes into).
     */
-  private[operators] def splitTopLevel(raw: String, masked: String, pairs: String = "()"): Seq[String] =
+  private[operators] def splitTopLevel(raw: String, masked: CharSequence, pairs: String = "()"): Seq[String] =
     topLevelSpans(masked, pairs).map { case (s, e) => raw.substring(s, e) }
 
+  /** [[splitTopLevel]] of a fragment that masks itself. */
+  private[operators] def splitTop(raw: String): Seq[String] = splitTopLevel(raw, maskQuotes(raw))
+
   /** The [start, end) spans between `masked`'s depth-0 commas. */
-  private def topLevelSpans(masked: String, pairs: String): Seq[(Int, Int)] = {
+  private def topLevelSpans(masked: CharSequence, pairs: String): Seq[(Int, Int)] = {
     val out = Seq.newBuilder[(Int, Int)]
     var last = 0
     depth0IndexWhere(masked, 0, masked.length, pairs) { k =>
@@ -3333,8 +3428,7 @@ object GraftSqlParser {
     val masked = maskQuotes(sql)
     val m = UnpivotStmtRe.findFirstMatchIn(masked).getOrElse(return sql)
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
-        s"UNPIVOT statement couldn't be auto-rewritten ($why) — use Spark's " +
+      throw new DuckDialectException(s"UNPIVOT statement couldn't be auto-rewritten ($why) — use Spark's " +
           "unpivot clause: SELECT * FROM t UNPIVOT (v FOR n IN (c1, c2)), " +
           "or stack(): SELECT stack(2, 'c1', c1, 'c2', c2) AS (n, v) FROM t")
     var i = m.end - 1
@@ -3344,8 +3438,7 @@ object GraftSqlParser {
     if (i < masked.length && masked.charAt(i) == '(')
       i = closeOf(masked, i + 1).getOrElse(fail("unbalanced parens in the relation"))
     else {
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit ||
-        masked.charAt(i) == '.' || masked.charAt(i) == '_')) i += 1
+      i = identEnd(masked, i, ".")
       if (i == relStart) fail("missing relation")
     }
     val relIsSub = masked.charAt(relStart) == '('
@@ -3367,14 +3460,14 @@ object GraftSqlParser {
       if (!wordStartingAt(masked, i).equalsIgnoreCase("NAME")) fail("INTO without NAME")
       i += 4; skipWs()
       val n0 = i
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) i += 1
+      i = identEnd(masked, i)
       if (i == n0) fail("NAME without an identifier")
       nameCol = sql.substring(n0, i)
       skipWs()
       if (!wordStartingAt(masked, i).equalsIgnoreCase("VALUE")) fail("NAME without VALUE")
       i += 5; skipWs()
       val v0 = i
-      while (i < masked.length && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) i += 1
+      i = identEnd(masked, i)
       if (i == v0) fail("VALUE without an identifier")
       valCol = sql.substring(v0, i)
       skipWs()
@@ -3405,12 +3498,12 @@ object GraftSqlParser {
     * this is a dialect-compat/verification path; at scale express the
     * pairing through real join keys.
     */
-  def rewritePositional(sql: String): String = rewriteEach(sql, PositionalRe)(positional)
+  def rewritePositional(sql: String): String = edited(sql)(positional)
+  private def positional(b: EditBuffer): Unit = b.each(PositionalRe)(positionalAt)
 
-  private def positional(m: Regex.Match, sql: String, masked: String): Step = {
+  private def positionalAt(m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
-        s"POSITIONAL JOIN couldn't be auto-rewritten ($why) — a distributed " +
+      throw new DuckDialectException(s"POSITIONAL JOIN couldn't be auto-rewritten ($why) — a distributed " +
           "scan has no deterministic row order, so each side must be a " +
           "subquery with an explicit ORDER BY: FROM (SELECT ... ORDER BY k1) a " +
           "POSITIONAL JOIN (SELECT ... ORDER BY k2) b; or add row_number() " +
@@ -3421,12 +3514,10 @@ object GraftSqlParser {
     skipWsBack()
     if (i < 0) fail("no left-side relation")
     var leftAlias: String = null
-    if (masked.charAt(i) != ')' &&
-      (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_')) {
+    if (isIdent(masked.charAt(i))) {
       // backward identifier scan (wordEndingAt rejects trailing digits —
       // it targets keywords — but `t1` is a fine alias)
-      var b = i
-      while (b >= 0 && (masked.charAt(b).isLetterOrDigit || masked.charAt(b) == '_')) b -= 1
+      val b = identStart(masked, i) - 1
       val w = sql.substring(b + 1, i + 1)
       if (w.isEmpty || !((w.head.isLetter || w.head == '_')) ||
         w.equalsIgnoreCase("AS")) fail("unrecognized left side")
@@ -3434,8 +3525,7 @@ object GraftSqlParser {
       i = b
       skipWsBack()
       // optional AS before the alias
-      if (i >= 0 && (masked.charAt(i).isLetterOrDigit || masked.charAt(i) == '_') &&
-        wordEndingAt(masked, i).equalsIgnoreCase("AS")) {
+      if (i >= 0 && isIdent(masked.charAt(i)) && wordEndingAt(masked, i).equalsIgnoreCase("AS")) {
         i -= 2; skipWsBack()
       }
     }
@@ -3478,8 +3568,7 @@ object GraftSqlParser {
         false
       }
       if (obPos < 0) fail(s"the $side side has no top-level ORDER BY")
-      var p = obPos + 5
-      while (p < inner.length && inner.charAt(p).isWhitespace) p += 1
+      var p = wsAfter(inner, obPos + 5)
       if (!wordStartingAt(inner, p).equalsIgnoreCase("BY")) fail(s"the $side side has no top-level ORDER BY")
       p += 2
       // keys run to a depth-0 LIMIT/OFFSET or the subquery end
@@ -3533,7 +3622,7 @@ object GraftSqlParser {
     * preceding token: a comma, a dot, or the SELECT/DISTINCT/ALL
     * keyword means star.
     */
-  private def starQualifiers(masked: String, sql: String, blockStart: Int,
+  private def starQualifiers(masked: CharSequence, sql: CharSequence, blockStart: Int,
                              fromPos: Int): Seq[Option[String]] = {
     val out = Seq.newBuilder[Option[String]]
     depth0IndexWhere(masked, blockStart, fromPos) { k =>
@@ -3544,11 +3633,8 @@ object GraftSqlParser {
           val pc = masked.charAt(x)
           if (pc == ',') out += None
           else if (pc == '.') {
-            var b = x - 1
-            while (b >= blockStart && (masked.charAt(b).isLetterOrDigit ||
-              masked.charAt(b) == '_')) b -= 1
-            out += Some(sql.substring(b + 1, x))
-          } else if ((pc.isLetterOrDigit || pc == '_') &&
+            out += Some(sql.substring(math.max(identStart(masked, x - 1), blockStart), x))
+          } else if (isIdent(pc) &&
             Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, x)))
             out += None
         }
@@ -3587,10 +3673,10 @@ object GraftSqlParser {
     */
   def rewriteColumns(sql: String, cols: Seq[String],
       resolve: String => Option[Seq[String]] = _ => None): String =
-    rewriteEach(sql, ColumnsRe)(columnsItem(cols, resolve))
+    edited(sql)(_.each(ColumnsRe)(columnsItem(cols, resolve)))
 
   private def columnsItem(cols: Seq[String], resolve: String => Option[Seq[String]])(
-      m: Regex.Match, sql: String, masked: String): Step = {
+      m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     // unbalanced — let the parser report it
     val i = closeOf(masked, m.end).getOrElse(return Stop)
     val argRaw = sql.substring(m.end, i - 1).trim
@@ -3604,8 +3690,7 @@ object GraftSqlParser {
       case None => return Stop // unsupported arg form → guided error
     }
     if (matched.isEmpty)
-      throw new graft.functions.expressions.DuckDialectException(
-        s"COLUMNS($argRaw) matches no column of [${srcCols.mkString(", ")}]")
+      throw new DuckDialectException(s"COLUMNS($argRaw) matches no column of [${srcCols.mkString(", ")}]")
     val (itemStart, itemEnd) = itemSpanContaining(masked, m.start) match {
       case Some(s) if raw"(?i)\bSELECT\b".r
           .findFirstMatchIn(masked.substring(s._1, m.start)).isDefined =>
@@ -3632,13 +3717,10 @@ object GraftSqlParser {
               .flatMap(o => closeOf(masked, o.end)
                 .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
             if (occs.exists(_._3 != argRaw))
-              throw new graft.functions.expressions.DuckDialectException(
-                "two COLUMNS(...) with different patterns in one predicate " +
+              throw new DuckDialectException("two COLUMNS(...) with different patterns in one predicate " +
                   "have no sound expansion — DuckDB zips IDENTICAL expansions only")
-            val clause = sql.substring(ws, we)
             val expansion = matched.map { c =>
-              "(" + applySplices(clause,
-                occs.map { case (s, e, _) => (s - ws, e - ws, s"`$c`") }).trim + ")"
+              "(" + columnsNamed(sql.substring(ws, we), ws, occs, c).trim + ")"
             }.mkString(" AND ")
             return Splice(ws, we, " " + expansion + " ")
         }
@@ -3649,8 +3731,7 @@ object GraftSqlParser {
       .flatMap(o => closeOf(masked, o.end)
         .map(e => (o.start, e, sql.substring(o.end, e - 1).trim)))
     if (occs.exists(_._3 != argRaw))
-      throw new graft.functions.expressions.DuckDialectException(
-        "two COLUMNS(...) with different patterns in one select-list item " +
+      throw new DuckDialectException("two COLUMNS(...) with different patterns in one select-list item " +
           "have no sound expansion — DuckDB zips IDENTICAL expansions only")
     // optional top-level trailing alias — DuckDB applies it to
     // EVERY expansion. Forms: `AS ident`, `AS "quoted"`/`` `q` ``,
@@ -3685,7 +3766,7 @@ object GraftSqlParser {
           val prevEnd = a.end(1) - 1
           val prevOk = {
             val c = itemMasked.charAt(prevEnd)
-            if (c.isLetterOrDigit || c == '_') {
+            if (isIdent(c)) {
               val pw = wordEndingAt(itemMasked, prevEnd)
               !Set("AND", "OR", "NOT", "IN", "IS", "LIKE", "ILIKE",
                 "RLIKE", "DIV", "MOD", "BETWEEN", "THEN", "WHEN",
@@ -3713,8 +3794,7 @@ object GraftSqlParser {
     })
     val exprSql = sql.substring(itemStart, itemStart + exprLen)
     val expansion = matched.map { c =>
-      val rep = applySplices(exprSql,
-        occs.map { case (s, e, _) => (s - itemStart, e - itemStart, s"`$c`") }).trim
+      val rep = columnsNamed(exprSql, itemStart, occs, c).trim
       alias match {
         case Some(a) => s"$rep AS `$a`"
         case None if rep == s"`$c`" => rep // bare form keeps the name
@@ -3726,10 +3806,18 @@ object GraftSqlParser {
     Splice(itemStart, itemEnd, " " + expansion + " ")
   }
 
+  /** `frag` (which starts at `from`) with each COLUMNS occurrence in
+    * `occs` (start, end, pattern) replaced by the column `c`. */
+  private def columnsNamed(frag: String, from: Int, occs: Seq[(Int, Int, String)],
+      c: String): String =
+    edited(frag)(b => occs.reverseIterator.foreach { case (s, e, _) =>
+      b.splice(s - from, e - from, s"`$c`")
+    })
+
   /** Index just past the `close` matching the `open` that `afterOpen`
     * follows; None when unbalanced. Only the one bracket pair counts.
     */
-  private[operators] def closeOf(masked: String, afterOpen: Int,
+  private[operators] def closeOf(masked: CharSequence, afterOpen: Int,
       open: Char = '(', close: Char = ')'): Option[Int] = {
     var i = afterOpen
     var d = 1
@@ -3744,7 +3832,7 @@ object GraftSqlParser {
   /** Index of the `open` matching the `close` at `closeAt` (the
     * backward twin of [[closeOf]]); None when unbalanced.
     */
-  private def openOf(masked: String, closeAt: Int,
+  private def openOf(masked: CharSequence, closeAt: Int,
       open: Char = '(', close: Char = ')'): Option[Int] = {
     var i = closeAt - 1
     var d = 1
@@ -3761,7 +3849,7 @@ object GraftSqlParser {
     * level; so `enclosingOpen(masked, pos) + 1` is where `pos`'s block
     * starts.
     */
-  private[operators] def enclosingOpen(masked: String, pos: Int): Int = {
+  private[operators] def enclosingOpen(masked: CharSequence, pos: Int): Int = {
     var i = pos - 1
     while (i >= 0 && masked.charAt(i) != '(')
       i = if (masked.charAt(i) == ')') openOf(masked, i).getOrElse(0) - 1 else i - 1
@@ -3774,7 +3862,7 @@ object GraftSqlParser {
     * opener); an unbalanced opener, or a closer that opens no group
     * here (once `p` has seen it), ends the search.
     */
-  private def depth0IndexWhere(masked: String, from: Int = 0, until: Int = -1,
+  private def depth0IndexWhere(masked: CharSequence, from: Int = 0, until: Int = -1,
       pairs: String = "()")(p: Int => Boolean): Int = {
     val end = if (until < 0) masked.length else until
     var i = from
@@ -3791,7 +3879,7 @@ object GraftSqlParser {
     * enclosing group or of the first word in `stop`, whichever comes
     * first; `until` (default: the end) when neither occurs.
     */
-  private[operators] def clauseEnd(masked: String, from: Int, until: Int = -1)(
+  private[operators] def clauseEnd(masked: CharSequence, from: Int, until: Int = -1)(
       stop: String => Boolean): Int = {
     val end = if (until < 0) masked.length else until
     val i = depth0IndexWhere(masked, from, end) { k =>
@@ -3803,16 +3891,16 @@ object GraftSqlParser {
   /** The upper-cased word starting at `i` when a word starts there
     * (a letter not preceded by an identifier character), else "".
     */
-  private def wordAt(masked: String, i: Int): String =
+  private def wordAt(masked: CharSequence, i: Int): String =
     if (masked.charAt(i).isLetter &&
-      (i == 0 || !(masked.charAt(i - 1).isLetterOrDigit || masked.charAt(i - 1) == '_')))
+      (i == 0 || !isIdent(masked.charAt(i - 1))))
       wordStartingAt(masked, i)
     else ""
 
   /** Does `re` match `s` starting exactly at `at` (lookbehinds see the
     * text before `at`)?
     */
-  private def matchesAt(re: Regex, s: String, at: Int): Boolean =
+  private def matchesAt(re: Regex, s: CharSequence, at: Int): Boolean =
     re.pattern.matcher(s).region(at, s.length).useTransparentBounds(true).lookingAt()
 
   /** Column set matched by a COLUMNS(...) argument; None when the form
@@ -3833,7 +3921,7 @@ object GraftSqlParser {
           (e.head == '\'' || e.head == '"') && e.last == e.head)) return None
       val names = elems.map(e => e.substring(1, e.length - 1))
       names.find(n => !cols.contains(n)).foreach { missing =>
-        throw new graft.functions.expressions.DuckDialectException(
+        throw new DuckDialectException(
           s"COLUMNS list names '$missing', not a column of [${cols.mkString(", ")}]")
       }
       return Some(names)
@@ -3901,8 +3989,7 @@ object GraftSqlParser {
         toks += Str(sb.toString)
       } else if (c.isLetter || c == '_') {
         val j0 = i
-        while (i < body.length &&
-          (body.charAt(i).isLetterOrDigit || body.charAt(i) == '_')) i += 1
+        i = identEnd(body, i)
         toks += Word(body.substring(j0, i))
       } else if (c.isDigit) {
         val j0 = i
@@ -4233,7 +4320,7 @@ object GraftSqlParser {
   /** The [start, end) span of the WHERE clause body containing position
     * `p` (innermost WHERE wins); None when `p` is in no WHERE clause.
     */
-  private def whereSpanContaining(masked: String, p: Int): Option[(Int, Int)] = {
+  private def whereSpanContaining(masked: CharSequence, p: Int): Option[(Int, Int)] = {
     val WhereRe = raw"(?i)\bWHERE\b".r
     val enders = Set("GROUP", "ORDER", "HAVING", "LIMIT", "QUALIFY",
       "WINDOW", "UNION", "INTERSECT", "EXCEPT")
@@ -4250,7 +4337,7 @@ object GraftSqlParser {
     * `p` sits in no select list (WHERE handled separately; ON/... →
     * guided error).
     */
-  private def itemSpanContaining(masked: String, p: Int): Option[(Int, Int)] = {
+  private def itemSpanContaining(masked: CharSequence, p: Int): Option[(Int, Int)] = {
     val SelectRe = raw"(?i)\bSELECT\b".r
     var best: Option[(Int, Int)] = None
     for (sm <- SelectRe.findAllMatchIn(masked) if sm.end <= p) {
@@ -4271,46 +4358,6 @@ object GraftSqlParser {
         best = Some((itemStart, masked.length))
     }
     best
-  }
-
-  /** Replace the contents of single-quoted literals with '_' and SQL
-    * comments (`--` to end-of-line, `/* */`) with spaces, in place
-    * (positions preserved; '' escapes and newlines kept). Comment
-    * MARKERS are blanked too, so a ';' — or any dialect marker — inside
-    * a comment is invisible to every masked-text rewrite, and
-    * [[splitStatements]] can't split a batch mid-comment (r9 review).
-    * One state machine so quotes and comments shadow each other the way
-    * the parser sees them: `--` inside a literal is text, `'` inside a
-    * comment is not a quote.
-    */
-  private[graft] def maskQuotes(s: String): String = {
-    val a = s.toCharArray
-    var i = 0
-    var inQ = false
-    var inLine = false
-    var inBlock = false
-    while (i < a.length) {
-      val c = a(i)
-      if (inQ) {
-        if (c == '\'') {
-          if (i + 1 < a.length && a(i + 1) == '\'') { a(i) = '_'; a(i + 1) = '_'; i += 1 }
-          else inQ = false
-        } else a(i) = '_'
-      } else if (inLine) {
-        if (c == '\n' || c == '\r') inLine = false else a(i) = ' '
-      } else if (inBlock) {
-        if (c == '*' && i + 1 < a.length && a(i + 1) == '/') {
-          a(i) = ' '; a(i + 1) = ' '; i += 1; inBlock = false
-        } else if (c != '\n' && c != '\r') a(i) = ' '
-      } else if (c == '\'') inQ = true
-      else if (c == '-' && i + 1 < a.length && a(i + 1) == '-') {
-        a(i) = ' '; a(i + 1) = ' '; i += 1; inLine = true
-      } else if (c == '/' && i + 1 < a.length && a(i + 1) == '*') {
-        a(i) = ' '; a(i + 1) = ' '; i += 1; inBlock = true
-      }
-      i += 1
-    }
-    new String(a)
   }
 
   private val StarReplaceRe =
@@ -4338,7 +4385,7 @@ object GraftSqlParser {
     * `SELECT * REPLACE (…) FROM lineitem` previously refused because
     * the replaced name wasn't a stage-input column).
     */
-  private def blockFromRelation(sql: String, masked: String, pos: Int): Option[String] = {
+  private def blockFromRelation(sql: CharSequence, masked: CharSequence, pos: Int): Option[String] = {
     val blockEnd = clauseEnd(masked, pos)(_ => false)
     val fromAt = depth0IndexWhere(masked, pos, blockEnd)(wordAt(masked, _) == "FROM")
     if (fromAt < 0) return None
@@ -4362,7 +4409,7 @@ object GraftSqlParser {
   /** [[blockFromRelation]]'s (name, explicit alias) twin — the
     * qualified-star paths need the alias to match the qualifier.
     */
-  private def blockFromRelationParts(sql: String, masked: String,
+  private def blockFromRelationParts(sql: CharSequence, masked: CharSequence,
       pos: Int): Option[(String, Option[String])] =
     blockFromRelation(sql, masked, pos).map { name =>
       // re-extract the alias from the same single-relation from-part
@@ -4379,7 +4426,7 @@ object GraftSqlParser {
 
   def rewriteReplace(sql: String, cols: Seq[String],
       resolve: String => Option[Seq[String]] = _ => None): String =
-    rewriteEach(sql, StarReplaceRe) { (m, sql, masked) =>
+    edited(sql)(_.each(StarReplaceRe) { (m, sql, masked) =>
       // `replace(...)` is also the string function and `*` is also
       // multiplication (`a * replace(b, 'x', 'y')`), so a match only
       // counts when the star sits in select-item position: start of
@@ -4391,10 +4438,10 @@ object GraftSqlParser {
           Set("SELECT", "DISTINCT", "ALL").contains(wordEndingAt(masked, j)) })
         starReplace(cols, resolve)(m, sql, masked)
       else Skip
-    }
+    })
 
   private def starReplace(cols: Seq[String], resolve: String => Option[Seq[String]])(
-      m: Regex.Match, sql: String, masked: String): Step = {
+      m: Regex.Match, sql: CharSequence, masked: CharSequence): Step = {
     // qualified star (t.* REPLACE): claimable when the block reads a
     // single resolvable relation whose name/alias matches the
     // qualifier (r16 — DuckDB supports the form; single-relation
@@ -4406,8 +4453,7 @@ object GraftSqlParser {
         .map { j =>
           val w = wordEndingAt(masked, j - 1)
           if (w.isEmpty)
-            throw new graft.functions.expressions.DuckDialectException(
-              "qualified-star REPLACE: could not read the qualifier — " +
+            throw new DuckDialectException("qualified-star REPLACE: could not read the qualifier — " +
                 "list the columns explicitly")
           (w, j - w.length)
         }
@@ -4426,8 +4472,7 @@ object GraftSqlParser {
           al.exists(_.equalsIgnoreCase(q))
       }
       if (!matches || (resolved.isEmpty && !q.equalsIgnoreCase("df")))
-        throw new graft.functions.expressions.DuckDialectException(
-          s"qualified-star REPLACE ($q.* REPLACE (...)) expands only when " +
+        throw new DuckDialectException(s"qualified-star REPLACE ($q.* REPLACE (...)) expands only when " +
             "the block reads a single resolvable relation named/aliased " +
             s"like the qualifier — list the columns explicitly")
     }
@@ -4441,13 +4486,11 @@ object GraftSqlParser {
               val name = name0.stripPrefix("`").stripSuffix("`")
                 .stripPrefix("\"").stripSuffix("\"").toLowerCase
               if (!byLower.contains(name))
-                throw new graft.functions.expressions.DuckDialectException(
-                  s"* REPLACE targets `$name`, not a column of " +
+                throw new DuckDialectException(s"* REPLACE targets `$name`, not a column of " +
                     s"[${srcCols.mkString(", ")}]")
               name -> expr.trim
             case other =>
-              throw new graft.functions.expressions.DuckDialectException(
-                s"* REPLACE item `$other` — each item must be `expr AS column`")
+              throw new DuckDialectException(s"* REPLACE item `$other` — each item must be `expr AS column`")
           }
         }.toMap
     val excluded: Set[String] = Option(m.group(1)) match {
@@ -4466,8 +4509,7 @@ object GraftSqlParser {
         }
       }.mkString(", ")
     if (expansion.isEmpty)
-      throw new graft.functions.expressions.DuckDialectException(
-        "* EXCLUDE ... REPLACE excluded every column of the stage schema")
+      throw new DuckDialectException("* EXCLUDE ... REPLACE excluded every column of the stage schema")
     // a matched qualifier is consumed with the star (the expansion's
     // bare names resolve in the single-relation block)
     val expStart = qual.map(_._2).getOrElse(m.start)
@@ -4525,7 +4567,7 @@ object GraftSqlParser {
     CreateMacroHeadRe.findFirstMatchIn(sql).isDefined
 
   private def macroFail(why: String): Nothing =
-    throw new graft.functions.expressions.DuckDialectException(
+    throw new DuckDialectException(
       s"CREATE MACRO couldn't be parsed ($why) — supported: CREATE [OR REPLACE] " +
         "[TEMP] MACRO name(p1, p2, n := default) AS <expr> | AS TABLE <query> " +
         "inside graft sql stages (registered per session, expanded textually " +
@@ -4580,35 +4622,30 @@ object GraftSqlParser {
     */
   def expandMacros(sql: String, macros: Map[String, DuckMacro]): String = {
     val CallRe = raw"(?i)(?<![\w.`])([A-Za-z_]\w*)\s*\(".r
-    var cur = sql
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      if (rounds > 10)
-        throw new graft.functions.expressions.DuckDialectException(
-          "macro expansion exceeded depth 10 — recursive macro? DuckDB macros " +
-            "cannot recurse; unroll the recursion or use an iterative operator")
-      changed = false
-      val masked = maskQuotes(cur)
-      val sb = new StringBuilder
-      var pos = 0
-      CallRe.findAllMatchIn(masked).foreach { mm =>
-        if (mm.start >= pos) macros.get(mm.group(1).toLowerCase).foreach { mac =>
-          closeOf(masked, mm.end).foreach { close =>
-            val argsRaw = cur.substring(mm.end, close - 1)
-            val argsMasked = masked.substring(mm.end, close - 1)
-            sb.append(cur.substring(pos, mm.start))
-              .append(expandOneMacro(mac, argsRaw, argsMasked))
-            pos = close
-            changed = true
-          }
+    edited(sql) { b =>
+      var rounds = 0
+      var changed = true
+      while (changed) {
+        if (rounds > 10)
+          throw new DuckDialectException(
+            "macro expansion exceeded depth 10 — recursive macro? DuckDB macros " +
+              "cannot recurse; unroll the recursion or use an iterative operator")
+        changed = false
+        // one sweep per round: an expansion is scanned on the next round
+        b.each(CallRe) { (mm, cur, masked) =>
+          macros.get(mm.group(1).toLowerCase).flatMap { mac =>
+            closeOf(masked, mm.end).map { close =>
+              val exp = expandOneMacro(mac, cur.substring(mm.end, close - 1),
+                masked.substring(mm.end, close - 1))
+              b.splice(mm.start, close, exp)
+              changed = true
+              SkipTo(mm.start + exp.length)
+            }
+          }.getOrElse(Skip)
         }
+        rounds += 1
       }
-      sb.append(cur.substring(pos))
-      cur = sb.toString
-      rounds += 1
     }
-    cur
   }
 
   /** One call site: bind arguments to parameters (positional args fill
@@ -4619,8 +4656,7 @@ object GraftSqlParser {
     */
   private def expandOneMacro(mac: DuckMacro, argsRaw: String, argsMasked: String): String = {
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
-        s"macro ${mac.name}(${mac.params.mkString(", ")}): $why")
+      throw new DuckDialectException(s"macro ${mac.name}(${mac.params.mkString(", ")}): $why")
     val args =
       if (argsRaw.trim.isEmpty) Nil
       else {
@@ -4649,25 +4685,14 @@ object GraftSqlParser {
       bound(pname) = nm.group(2).trim
     }
     mac.defaults.foreach { case (p, d) => if (!bound.contains(p)) bound(p) = d }
-    val body = mac.body
-    val bodyMasked = maskQuotes(body)
     val IdentRe = raw"(?i)(?<![\w.`])([A-Za-z_]\w*)\b".r
-    val sb = new StringBuilder
-    var pos = 0
-    IdentRe.findAllMatchIn(bodyMasked).foreach { im =>
-      bound.get(im.group(1).toLowerCase).foreach { arg =>
-        // an identifier followed by '(' is a function CALL named like the
-        // param — DuckDB params don't shadow function names; leave it
-        var j = im.end
-        while (j < bodyMasked.length && bodyMasked.charAt(j).isWhitespace) j += 1
-        if (j >= bodyMasked.length || bodyMasked.charAt(j) != '(') {
-          sb.append(body.substring(pos, im.start)).append("(").append(arg).append(")")
-          pos = im.end
-        }
-      }
-    }
-    sb.append(body.substring(pos))
-    "(" + sb.toString + ")"
+    "(" + edited(mac.body)(b => b.sweep(IdentRe) { im =>
+      // an identifier followed by '(' is a function CALL named like the
+      // param — DuckDB params don't shadow function names; leave it
+      val j = wsAfter(b.mask, im.end)
+      bound.get(im.group(1).toLowerCase)
+        .filter(_ => j >= b.length || b.mask.charAt(j) != '(').map(arg => s"($arg)")
+    }) + ")"
   }
 
   // ── DuckDB file I/O through sql stages (r9): read_* + COPY ──
@@ -4679,7 +4704,7 @@ object GraftSqlParser {
     * (the `columns={'a':'T','b':'U'}` struct literal carries commas
     * that [[splitTopLevel]]'s paren-only depth would split on).
     */
-  private[operators] def splitReadArgs(raw: String, masked: String): Seq[String] =
+  private[operators] def splitReadArgs(raw: String, masked: CharSequence): Seq[String] =
     splitTopLevel(raw, masked, "(){}[]").map(_.trim).filter(_.nonEmpty)
 
   /** Map a DuckDB column type name (read_csv `columns={'a':'INTEGER'}`,
@@ -4706,8 +4731,7 @@ object GraftSqlParser {
     case "BLOB" | "BYTEA" | "BINARY" => "BINARY"
     case d if d.startsWith("DECIMAL") || d.startsWith("NUMERIC") =>
       d.replace("NUMERIC", "DECIMAL")
-    case other => throw new graft.functions.expressions.DuckDialectException(
-      s"DuckDB type '$other' has no Spark mapping " +
+    case other => throw new DuckDialectException(s"DuckDB type '$other' has no Spark mapping " +
         "- use VARCHAR/INTEGER/BIGINT/DOUBLE/FLOAT/BOOLEAN/DATE/TIMESTAMP/DECIMAL(p,s)")
   }
 
@@ -4739,7 +4763,7 @@ object GraftSqlParser {
     val masked = maskQuotes(sql)
     val m = CopyHeadRe.findFirstMatchIn(masked).getOrElse(return None)
     def fail(why: String): Nothing =
-      throw new graft.functions.expressions.DuckDialectException(
+      throw new DuckDialectException(
         s"COPY statement couldn't be executed ($why) — supported: COPY (query) TO " +
           "'path' (FORMAT CSV|PARQUET|JSON, HEADER, DELIMITER 'c'), COPY table " +
           "TO 'path' (...), and COPY table FROM 'path' (...)")
@@ -4846,8 +4870,7 @@ object GraftSqlParser {
     if (i < 0) return (sql, None)
     val proj = sql.substring(i + "RETURNING".length).replaceAll(";\\s*$", "").trim
     if (proj.isEmpty)
-      throw new graft.functions.expressions.DuckDialectException(
-        "RETURNING needs a projection list (columns, expressions, or *)")
+      throw new DuckDialectException("RETURNING needs a projection list (columns, expressions, or *)")
     (sql.substring(0, i), Some(proj))
   }
 
@@ -4885,26 +4908,23 @@ object GraftSqlParser {
       else Some(rest.substring(fromAt + "FROM".length,
         if (whereAt >= 0) whereAt else rest.length).trim).filter(_.nonEmpty)
     if (fromAt >= 0 && fromPart.isEmpty)
-      throw new graft.functions.expressions.DuckDialectException(
-        "UPDATE ... FROM: empty FROM list")
+      throw new DuckDialectException("UPDATE ... FROM: empty FROM list")
     val wherePart =
       if (whereAt < 0) None
       else Some(rest.substring(whereAt + "WHERE".length).trim)
-    val assigns = splitTopLevel(setPart, maskQuotes(setPart)).map { a =>
+    val assigns = splitTop(setPart).map { a =>
       val am = maskQuotes(a)
       val eq = am.indexOf('=')
       if (eq < 0)
-        throw new graft.functions.expressions.DuckDialectException(
-          s"UPDATE $table: malformed assignment '${a.trim}' — need col = expr")
+        throw new DuckDialectException(s"UPDATE $table: malformed assignment '${a.trim}' — need col = expr")
       val col = a.substring(0, eq).trim
       if (!col.matches("[A-Za-z_]\\w*"))
-        throw new graft.functions.expressions.DuckDialectException(
+        throw new DuckDialectException(
           s"UPDATE $table: assignment target '$col' must be a simple column name")
       (col, a.substring(eq + 1).trim)
     }
     if (assigns.map(_._1.toLowerCase).distinct.length != assigns.length)
-      throw new graft.functions.expressions.DuckDialectException(
-        s"UPDATE $table: a column is assigned twice (DuckDB errors here too)")
+      throw new DuckDialectException(s"UPDATE $table: a column is assigned twice (DuckDB errors here too)")
     Some(UpdateSpec(table, assigns, wherePart.filter(_.nonEmpty), fromPart))
   }
 
@@ -5046,13 +5066,11 @@ object GraftSqlParser {
         case None => "csv"
         case Some(o) =>
           val fm = raw"(?i)^FORMAT\s+'?(\w+)'?$$".r.findFirstMatchIn(o).getOrElse(
-            throw new graft.functions.expressions.DuckDialectException(
-              s"EXPORT DATABASE options '$o' — supported: (FORMAT CSV|PARQUET)"))
+            throw new DuckDialectException(s"EXPORT DATABASE options '$o' — supported: (FORMAT CSV|PARQUET)"))
           fm.group(1).toLowerCase
       }
       if (fmt != "csv" && fmt != "parquet")
-        throw new graft.functions.expressions.DuckDialectException(
-          s"EXPORT DATABASE FORMAT $fmt — supported: CSV, PARQUET")
+        throw new DuckDialectException(s"EXPORT DATABASE FORMAT $fmt — supported: CSV, PARQUET")
       (m.group(1), fmt)
     }
 
@@ -5116,12 +5134,12 @@ object GraftSqlParser {
       names.toSeq.distinct.map(java.util.regex.Pattern.quote).mkString("|")
     val re = ("(?i)(?<![\\w.`])(" + alt(attached.keys) + ")\\s*\\.\\s*(" +
       alt(attached.values.flatten) + ")(?![\\w.`])").r
-    rewriteEach(sql, re) { (m, _, _) =>
+    edited(sql)(_.each(re) { (m, _, _) =>
       val alias = m.group(1).toLowerCase
       if (attached(alias).contains(m.group(2).toLowerCase))
         Splice(m.start, m.end, attachViewName(alias, m.group(2)))
       else Skip
-    }
+    })
   }
 
   /** After `SELECT setseed(x)`, zero-arg `random()`/`rand()` calls
@@ -5132,23 +5150,14 @@ object GraftSqlParser {
     */
   def rewriteSeededRandom(sql: String, seed: Double): String = {
     val re = raw"(?i)\b(random|rand)\s*\(\s*\)".r
-    val masked = maskQuotes(sql)
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(masked).foreach { m =>
-      out ++= sql.substring(last, m.start)
-      out ++= s"rand(${java.lang.Double.doubleToLongBits(seed)}L)"
-      last = m.end
-    }
-    if (last == 0) sql else { out ++= sql.substring(last); out.toString }
+    edited(sql)(_.sweep(re)(_ => Some(s"rand(${java.lang.Double.doubleToLongBits(seed)}L)")))
   }
 
   private val CreateDefHeadRe =
     raw"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([A-Za-z_]\w*)\s*\(".r
 
   private def createDefFail(why: String): Nothing =
-    throw new graft.functions.expressions.DuckDialectException(
-      s"CREATE TEMP TABLE (column definitions) couldn't be parsed ($why) — " +
+    throw new DuckDialectException(s"CREATE TEMP TABLE (column definitions) couldn't be parsed ($why) — " +
         "supported: CREATE [OR REPLACE] TEMP TABLE [IF NOT EXISTS] name " +
         "(col TYPE [PRIMARY KEY] [NOT NULL] [DEFAULT expr], ..., " +
         "[PRIMARY KEY (a, b)]); UNIQUE/CHECK/FOREIGN KEY constraints are " +
@@ -5256,8 +5265,7 @@ object GraftSqlParser {
     raw"(?is)^\s*INSERT\s+(OR\s+REPLACE\s+|OR\s+IGNORE\s+)?INTO\s+([A-Za-z_]\w*)\s+(BY\s+NAME\s+)?(.*)$$".r
 
   private def insertFail(table: String, why: String): Nothing =
-    throw new graft.functions.expressions.DuckDialectException(
-      s"INSERT INTO $table: $why — supported: INSERT [OR REPLACE | OR IGNORE] " +
+    throw new DuckDialectException(s"INSERT INTO $table: $why — supported: INSERT [OR REPLACE | OR IGNORE] " +
         "INTO t [BY NAME] [(c1, c2)] <query> [ON CONFLICT [(keys)] DO NOTHING " +
         "| DO UPDATE SET c = expr, ... [WHERE pred]] (excluded.c reads the " +
         "incoming row)")
@@ -5336,7 +5344,7 @@ object GraftSqlParser {
           if (c == '(') { d2 += 1; j += 1 }
           else if (c == ')') { d2 -= 1; j += 1 }
           else if (d2 == 0 && c.isLetter &&
-            (j == 0 || (!setMasked0.charAt(j - 1).isLetterOrDigit && setMasked0.charAt(j - 1) != '_')) &&
+            (j == 0 || !isIdent(setMasked0.charAt(j - 1))) &&
             wordStartingAt(setMasked0, j) == "WHERE") whereAt = j
           else j += 1
         }
@@ -5344,7 +5352,7 @@ object GraftSqlParser {
           if (whereAt < 0) (setPart0, None)
           else (setPart0.substring(0, whereAt),
             Some(setPart0.substring(whereAt + "WHERE".length).trim))
-        val assigns = splitTopLevel(setPart, maskQuotes(setPart)).map { a =>
+        val assigns = splitTop(setPart).map { a =>
           val am = maskQuotes(a)
           val eq = am.indexOf('=')
           if (eq < 0) insertFail(table, s"malformed assignment '${a.trim}'")
@@ -5366,19 +5374,11 @@ object GraftSqlParser {
     * strings containing the words stay untouched.
     */
   def rewriteUpsertRefs(expr: String, table: String): String = {
-    val masked = maskQuotes(expr)
     val re = raw"(?i)(?<![\w.])(excluded|${java.util.regex.Pattern.quote(table)})\s*\.\s*([A-Za-z_]\w*)".r
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(masked).foreach { m =>
-      sb.append(expr.substring(last, m.start))
-      val qual = expr.substring(m.start(1), m.end(1))
-      val c = expr.substring(m.start(2), m.end(2))
-      sb.append(if (qual.equalsIgnoreCase("excluded")) s"__exc_$c" else c)
-      last = m.end
-    }
-    sb.append(expr.substring(last))
-    sb.toString
+    edited(expr)(b => b.sweep(re) { m =>
+      val c = b.text.substring(m.start(2), m.end(2))
+      Some(if (m.group(1).equalsIgnoreCase("excluded")) s"__exc_$c" else c)
+    })
   }
 
   /** Split multi-statement sql-stage code on top-level (quote-masked)

@@ -3,6 +3,7 @@ package graft.operators
 import graft.model.{ConfigLoader, PipelineConfig, StageConfig}
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The engine: YAML config → compiled stages → one lazy Catalyst plan,
   * folded left from the source DataFrame (reference pipeline invariant:
@@ -51,7 +52,14 @@ object Pipeline {
 
   /** Run a full pipeline: load → stages → sink. `countStages` reproduces
     * the reference's per-stage count(*)+sample (O10/O11) — an action per
-    * stage, so off by default at scale.
+    * stage, so off by default at scale. A stage that is counted or
+    * sampled (and not checkpointed) is materialized once, with its count
+    * observed in that same job, so the count, the sample, the next stage
+    * and the sink read its rows instead of re-running its lineage (a
+    * rest stage's requests included), as the reference reads filter{i}.
+    * That materialization is a `localCheckpoint`: its blocks live on the
+    * executors only, so losing an executor fails the job rather than
+    * recomputing the stage; `checkpointDir` writes durable parquet.
     */
   def run(spark: SparkSession, cfg: PipelineConfig, inputPath: String,
           outputPath: Option[String], countStages: Boolean = false,
@@ -69,7 +77,15 @@ object Pipeline {
         df.write.mode("overwrite").parquet(s"$dir/stage=$i")
         df = spark.read.parquet(s"$dir/stage=$i")
       }
-      val rows = if (countStages) Some(df.count()) else None
+      val rows =
+        if (checkpointDir.isEmpty && countStages) {
+          val n = graft.Observed(count(lit(1)).as("n"))
+          df = n.on(df).localCheckpoint()
+          Some(n.read(df)("n").asInstanceOf[Long])
+        } else {
+          if (checkpointDir.isEmpty && sc.showSampleOnFinish) df = df.localCheckpoint()
+          if (countStages) Some(df.count()) else None
+        }
       if (sc.showSampleOnFinish) df.show(5, truncate = false)
       reports += StageReport(sc.name, sc.actionType, rows)
     }

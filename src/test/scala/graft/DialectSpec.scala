@@ -3410,19 +3410,26 @@ class DialectSpec extends SparkSpec {
 
   test("rewrite passes are loops: thousands of occurrences neither overflow nor rescan") {
     // one statement of 4000 copies per unit, rewritten on a thread with
-    // the JVM-default 1 MB stack whatever the runner's -Xss; each copy
-    // must come out rewritten exactly once
-    val units = Seq(
-      "s.trim()" -> "trim(", "c ** 2" -> "power(", "c ^ 2" -> "power(",
-      "c // 2" -> "graft_ddiv(", "j->>'k'" -> "get_json_object(",
-      "format('{} x', c)" -> "graft_fmt_spec(", "log(c)" -> "duck_log(",
-      "{'k': c}" -> "named_struct(", "datediff('day', d, e)" -> "graft_date_diff(")
+    // the JVM-default 1 MB stack whatever the runner's -Xss, must be the
+    // unit's own rewrite 4000 times: every unit kind of the rewriter's
+    // scaling table (with the head its rewrite writes), plus one whose
+    // second splice starts before the first one's resume point
+    val units = Seq("c" -> "c", "log(c)" -> "duck_log(",
+      "regexp_replace(s, 'a', 'b')" -> "duck_regexp_replace(",
+      "format('{} x', c)" -> "graft_fmt_spec(", "{'k': c}" -> "named_struct(",
+      "datediff('day', d, e)" -> "graft_date_diff(", "j->>'k'" -> "get_json_object(",
+      "c ^ 2" -> "power(", "c // 2" -> "graft_ddiv(", "c ** 2" -> "power(",
+      "[c, 1]" -> "array(", "c::INTEGER" -> "duck_iround(", "s.trim()" -> "trim(",
+      "j -> 'k'" -> "variant_get(", "(c ** 2) ** 3" -> "power((power(")
     val n = 4000
     @volatile var failure: Throwable = null
     val body: Runnable = () =>
       try units.foreach { case (unit, head) =>
+        val item = GraftSqlParser.rewriteAll(s"SELECT $unit FROM t")
+          .stripPrefix("SELECT ").stripSuffix(" FROM t")
+        assert(item.contains(head), s"unit $unit: $item")
         val out = GraftSqlParser.rewriteAll(Seq.fill(n)(unit).mkString("SELECT ", ", ", " FROM t"))
-        assert(out.sliding(head.length).count(_ == head) == n, s"unit $unit")
+        assert(out == Seq.fill(n)(item).mkString("SELECT ", ", ", " FROM t"), s"unit $unit")
       } catch { case e: Throwable => failure = e }
     val t = new Thread(null, body, "rewrite-wide", 1L << 20)
     t.start()
@@ -3432,6 +3439,34 @@ class DialectSpec extends SparkSpec {
       case e: org.scalatest.exceptions.TestFailedException => throw e
       case e => fail(s"rewriteAll threw $e", e)
     }
+  }
+
+  test("a double-quoted identifier is one token: no quote, comment or ';' inside it changes state") {
+    import GraftSqlParser._
+    assert(rewriteAll("""SELECT "it's" AS x, 2 ** 3 AS y FROM t""") ==
+      "SELECT `it's` AS x, power(2, 3) AS y FROM t")
+    assert(rewriteAll("""SELECT "it's", regexp_replace(s, '\d', 'X') FROM t""") ==
+      """SELECT `it's`, duck_regexp_replace(s, '\\d', 'X') FROM t""")
+    assert(rewriteAll("""SELECT "a--b", 7 // 2 FROM t""") == "SELECT `a--b`, graft_ddiv(7, 2) FROM t")
+    assert(splitStatements("SELECT 1 AS \"a;b\" FROM t") == Seq("SELECT 1 AS \"a;b\" FROM t"))
+    assert(rewriteAll("""SELECT "x**y" FROM t""") == "SELECT `x**y` FROM t")
+  }
+
+  test("a double-quoted identifier reaches Spark as the column it names") {
+    import spark.implicits._
+    // DuckDB reads "id" as the column; Spark's default dialect would read
+    // it as the string 'id'
+    assert(spark.sql(GraftSqlParser.rewriteAll("""SELECT "id" AS x FROM range(2)"""))
+      .collect().map(_.getLong(0)).toSeq == Seq(0L, 1L))
+    val df = Seq(("Ann", 1, 2)).toDF("first name", "it's", "a`b")
+    val out = SqlStage("q", """SELECT "first name" AS n, "it's" + 1 AS a, "a`b" AS b, "a""b" IS NULL AS c FROM (SELECT *, NULL AS `a"b` FROM df)""")
+      .apply(spark, df).collect().head
+    assert(out.toSeq == Seq("Ann", 2, 2, true))
+    // a quoted or CASE operand of an integral `::` cast rounds as DuckDB does
+    val cast = SqlStage("q", """SELECT "v"::INTEGER AS a, "t"."v"::INTEGER AS b,
+      CASE WHEN v > 0 THEN v END::INTEGER AS c FROM (SELECT 2.5 AS v) t""")
+      .apply(spark, df).collect().head
+    assert(cast.toSeq == Seq(3, 3, 3))
   }
 
   test("UPDATE ... FROM and RETURNING execute with DuckDB semantics (r13)") {

@@ -563,6 +563,19 @@ class PipelineSpec extends SparkSpec {
     assert(rows == Seq("España"))
   }
 
+  test("graft.Main reads a double-quoted column whose CSV header has a space") {
+    val in = Files.createTempDirectory("graft-dq").resolve("people.csv")
+    Files.writeString(in, "first name\nAnn\nBo\n")
+    val rows = runMainJvm(in.toString,
+      """filters:
+        |  - name: dq
+        |    actionType: sql
+        |    code: |
+        |      SELECT "first name" AS n FROM df
+        |""".stripMargin)
+    assert(rows == Seq("Ann", "Bo"))
+  }
+
   test("per-stage checkpoints write parquet and overwrite on re-run (fixes reference re-run duplication)") {
     val in = tmpCsv("ck.csv", "id", (1 to 10).map(_.toString))
     val ckDir = Files.createTempDirectory("graft-ck").toString

@@ -476,11 +476,12 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
          |    code: chaos_kill_first_attempt
          |""".stripMargin
     val cfg = graft.model.ConfigLoader.fromYaml(yaml)
-    // fused run (no checkpoints): rest + chaos share a task, so the
+    // fused run (no checkpoints, no counts — a counted stage is
+    // materialized on its own): rest + chaos share a task, so the
     // retry re-executes the HTTP calls — output rows must stay exact
-    val fused = Pipeline.run(spark, cfg, f.getAbsolutePath, None, countStages = true)
-    assert(fused.stages.map(_.rows) == Seq(Some(11L), Some(11L)))
-    assert(fused.output.select("id").collect().map(_.get(0).toString).distinct.length == 11)
+    val fused = Pipeline.run(spark, cfg, f.getAbsolutePath, None)
+    val ids = fused.output.select("id").collect().map(_.get(0).toString)
+    assert(ids.length == 11 && ids.distinct.length == 11)
     // checkpointed run: each stage materializes to parquet; the chaos
     // stage's WRITE job loses a task attempt mid-commit — the parquet
     // commit protocol must discard the failed attempt's files (no
@@ -493,6 +494,59 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
     assert(back.count() == 11)
     assert(back.select("id").collect().map(_.get(0).toString).distinct.length == 11)
     assert(back.columns.contains("response"))
+  }
+
+  test("countStages and showSampleOnFinish send each request once: later stages read the materialized rows") {
+    // each count (and the sample's own job) used to re-run the whole
+    // lineage, the rest stage included
+    val served = new AtomicInteger(0)
+    server.createContext("/counted/", (ex: HttpExchange) => {
+      served.incrementAndGet()
+      respond(ex, s"""{"key":"${ex.getRequestURI.getPath.stripPrefix("/counted/")}"}""")
+    })
+    val dir = java.nio.file.Files.createTempDirectory("graft-counted").toFile
+    val f = new java.io.File(dir, "keys.csv")
+    val w = new java.io.PrintWriter(f)
+    w.println("id,key")
+    (0 until 5).foreach(i => w.println(s"$i,k$i"))
+    w.close()
+    def cfg(sample: Boolean) = graft.model.ConfigLoader.fromYaml(
+      s"""
+         |filters:
+         |  - name: lookup
+         |    actionType: rest
+         |    showSampleOnFinish: $sample
+         |    actionConfig:
+         |      host: "http://localhost:$port"
+         |      path: "/counted/{key}"
+         |  - name: keep
+         |    actionType: sql
+         |    code: SELECT id, key, response FROM df
+         |  - name: again
+         |    actionType: sql
+         |    code: SELECT * FROM df WHERE id >= 0
+         |""".stripMargin)
+    def out(name: String) = Some(new java.io.File(dir, name).getPath)
+    var res: Pipeline.RunResult = null
+    val jobs = jobsIn {
+      res = Pipeline.run(spark, cfg(sample = false), f.getAbsolutePath, out("out"), countStages = true)
+    }
+    assert(served.get == 5, s"stub served ${served.get} requests for 5 keys")
+    assert(res.stages.map(_.rows) == Seq(Some(5L), Some(5L), Some(5L)))
+    // one materializing job per counted stage, then the sink (9 jobs and
+    // 20 requests when each count re-ran the lineage)
+    assert(jobs <= 6, s"$jobs jobs")
+    // the default path (no counts, no samples) runs as one fused plan
+    val quiet = jobsIn {
+      Pipeline.run(spark, cfg(sample = false), f.getAbsolutePath, out("out2"))
+    }
+    assert(served.get == 10 && quiet <= 3, s"${served.get} requests, $quiet jobs")
+    // a sampled stage: the sample, the next stages and the sink read its rows
+    val sampled = Pipeline.run(spark, cfg(sample = true), f.getAbsolutePath, out("out3"))
+    assert(sampled.stages.map(_.rows) == Seq(None, None, None))
+    assert(sampled.output.collect().map(_.getAs[Any]("key").toString).sorted.toSeq ==
+      (0 until 5).map(i => s"k$i"))
+    assert(served.get == 15, s"stub served ${served.get - 10} requests for 5 sampled keys")
   }
 
   test("status counters stay exact with 16 pool threads sharing one task's accumulators") {
