@@ -6,7 +6,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 import java.util.concurrent.{CompletableFuture, LinkedBlockingQueue, RejectedExecutionException,
-  ScheduledThreadPoolExecutor, ThreadFactory, ThreadPoolExecutor, TimeUnit}
+  ScheduledThreadPoolExecutor, Semaphore, ThreadFactory, ThreadPoolExecutor, TimeUnit}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -23,8 +23,19 @@ import scala.util.control.NonFatal
   *  - `filterThreads` bounds the requests in flight per partition;
   *  - a retry's backoff does not hold a request slot: the row waits on a
   *    timer and re-enters the pool when its attempt is due;
-  *  - rows leave in input order through a window of `filterThreads × 4`
-  *    pending rows, so memory stays flat on huge partitions.
+  *  - the window admits at most `filterThreads × 4` unanswered rows
+  *    (queued, in flight or backing off), as the reference stalls its
+  *    producer only on rows still waiting for a worker
+  *    (filefilter.py:179-181): a row that has its answer gives its place
+  *    back, so the slots keep sending the rows behind a head that backs
+  *    off;
+  *  - rows leave in input order: answered rows wait behind the head.
+  *    That buffer does not grow with the partition: it holds the rows
+  *    the slots answer while the head has none, and the head's answer
+  *    is due within its own deadline: `(maxRetries + 1) × timeoutMillis`,
+  *    plus its backoffs `retryBackoffMillis × (1 + … + maxRetries)`,
+  *    plus, before each attempt, the queue of at most
+  *    `filterThreads × 4` unanswered rows.
   *
   * Behavior parity (SURVEY §2c):
   *  - `{col}` templates substituted into path/queryParams/postBody from
@@ -199,9 +210,14 @@ object RestStage {
       new LinkedBlockingQueue[Runnable](), daemons("worker"))
     // waits out retry backoffs, so a backing-off row holds no slot
     val scheduler = new ScheduledThreadPoolExecutor(1, daemons("retry"))
-    // pending rows in input order (at most threads×4); the head leaves
-    // only once read, so close() reaches every future a reader awaits
+    // rows in input order, answered or not; the head leaves only once
+    // read, so close() reaches every future a reader awaits
     val window = new LinkedBlockingQueue[CompletableFuture[Option[Row]]]()
+    // one permit per row answered since the task thread last counted
+    val answered = new Semaphore(0)
+    // rows in the window without an answer (at most threads×4); task
+    // thread only
+    var unanswered = 0
     var lastReload = System.currentTimeMillis()
 
     /** On every refill of the window: re-read the YAML and apply a
@@ -314,12 +330,17 @@ object RestStage {
       }
     }
 
+    // Spark's input iterator is not thread-safe: only the task thread
+    // refills
     def refill(): Unit = {
       maybeReload()
-      while (window.size < threads * 4 && rows.hasNext) {
+      unanswered -= answered.drainPermits()
+      while (unanswered < threads * 4 && rows.hasNext) {
         val row = rows.next()
         val fut = new CompletableFuture[Option[Row]]()
+        fut.whenComplete((_, _) => answered.release())
         window.add(fut)
+        unanswered += 1
         onPool(fut) {
           val rowMap = fieldNames.zipWithIndex.map { case (f, i) => f -> row.get(i) }.toMap
           prepare(rowMap) match {
@@ -334,8 +355,10 @@ object RestStage {
       private var ready: Option[Row] = None
       override def hasNext: Boolean = {
         while (ready.isEmpty && { refill(); !window.isEmpty }) {
-          ready = window.peek().get()
-          window.poll()
+          val head = window.peek()
+          if (head.isDone) { ready = head.get(); window.poll() }
+          // any row's answer frees a place: wake, refill, look again
+          else { answered.acquire(); unanswered -= 1 }
         }
         if (ready.isEmpty) close()
         ready.isDefined

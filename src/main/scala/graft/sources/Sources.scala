@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -9,15 +10,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** Load a tabular file by extension. CSV/TSV/TXT get header + schema
-    * inference with the configured delimiter (Database.py:77-78); parquet
-    * is native (Database.py:79-80); `s3://` becomes `s3a://` and is read
-    * through the Hadoop S3A connector with the default credential chain —
-    * the Spark analog of the reference's httpfs + CREDENTIAL_CHAIN secret
-    * (Database.py:72-75). Unknown extensions fail fast (Database.py:81-82).
-    * `sampleLines > 0` limits rows exactly once at the source (the
-    * reference leaks its LIMIT into later cursors — SURVEY §2 O5).
-    */
   /** `TAB`/`tab` mean a tab character (reference loaders.py:10-13,
     * "use TAB or tab por tabs" in the example YAML comments).
     */
@@ -51,24 +43,33 @@ object Sources {
       header.split(java.util.regex.Pattern.quote(d), -1).length)
   }
 
+  /** Load a tabular file by extension. CSV/TSV/TXT get header + schema
+    * inference with the configured delimiter (Database.py:77-78); parquet
+    * is native (Database.py:79-80); `s3://` becomes `s3a://` and is read
+    * through the Hadoop S3A connector with the default credential chain —
+    * the Spark analog of the reference's httpfs + CREDENTIAL_CHAIN secret
+    * (Database.py:72-75). Unknown extensions fail fast (Database.py:81-82).
+    * `sampleLines > 0` limits rows exactly once at the source (the
+    * reference leaks its LIMIT into later cursors — SURVEY §2 O5).
+    * Every format reads through [[Memo.read]]: a load of an input whose
+    * snapshot, reader options and session conf are unchanged reuses the
+    * inferred schema and runs no job.
+    */
   def load(spark: SparkSession, path: String, inDelimiter: String = ",",
            sampleLines: Long = 0L): DataFrame = {
     val p = if (path.startsWith("s3://")) "s3a://" + path.stripPrefix("s3://") else path
     val lower = p.toLowerCase
     val df =
-      if (lower.endsWith(".parquet")) spark.read.parquet(p)
+      if (lower.endsWith(".parquet")) Memo.read(spark, p, "parquet")
       else if (lower.endsWith(".csv") || lower.endsWith(".txt") || lower.endsWith(".tsv")) {
         val eff = if (inDelimiter.isEmpty) sniffDelimiter(spark, p) else inDelimiter
         val delim = if (lower.endsWith(".tsv") && eff == ",") "\t"
                     else normDelim(eff)
-        spark.read
-          .option("header", "true")
-          .option("inferSchema", "true")
-          .option("delimiter", delim)
-          .csv(p)
+        Memo.read(spark, p, "csv",
+          Map("header" -> "true", "inferSchema" -> "true", "delimiter" -> delim))
       } else if (lower.endsWith(".jsonl") || lower.endsWith(".json"))
         loadJsonl(spark, p)
-      else if (lower.endsWith(".orc")) spark.read.orc(p)
+      else if (lower.endsWith(".orc")) Memo.read(spark, p, "orc")
       else
         throw new IllegalArgumentException(
           s"Unsupported file format: $path (supported: .csv .txt .tsv .parquet .orc .jsonl .json)")
@@ -83,14 +84,13 @@ object Sources {
     * files (gzip members excepted: .gz is stream-compressed and
     * per-file parallel only — prefer zstd/uncompressed at scale).
     * Supply `schema` in production: without it Spark runs a full
-    * inference pass over the data (twice the I/O) and a drifting field
-    * silently widens the type.
+    * inference pass over the data (twice the I/O) the first time a
+    * snapshot is read ([[Memo.read]]), and a drifting field silently
+    * widens the type.
     */
   def loadJsonl(spark: SparkSession, path: String,
-                schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read
-    schema.fold(r)(s => r.schema(s)).json(path)
-  }
+                schema: Option[StructType] = None): DataFrame =
+    schema.fold(Memo.read(spark, path, "json"))(spark.read.schema(_).json(path))
 
   /** JSONL sink; `compression` ∈ none/gzip/bzip2/deflate. */
   def writeJsonl(df: DataFrame, path: String,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{VectorFunctions => VF}
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
 /** [[Memo]]: relations, fingerprints and persisted artifacts re-key
@@ -35,6 +36,32 @@ class MemoSpec extends SparkSpec {
     // an unchanged snapshot still memoizes: the same instance comes back
     assert(Memo.relation(spark, path) eq second)
     assert(Tables.t(spark, dir, "things") eq second)
+  }
+
+  test("the schema memo keys on the session's conf: binaryAsString in a new session") {
+    val path = s"${tmpDir("memo_conf")}/d.parquet"
+    val copy = s"""import duckdb; duckdb.connect().execute("COPY (SELECT 'hi'::BLOB AS b) TO '$path'")"""
+    assert(scala.sys.process.Process(Seq("python3", "-c", copy)).! == 0)
+    assert(Memo.relation(spark, path).schema.simpleString == "struct<b:binary>")
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert(s2.read.parquet(path).schema.simpleString == "struct<b:string>")
+    val served = Memo.relation(s2, path)
+    assert(served.schema.simpleString == "struct<b:string>", "schema inferred under another conf")
+    assert(served.head().getString(0) == "hi")
+  }
+
+  test("a file rewritten in place below a partition directory re-keys the directory") {
+    val dir = java.nio.file.Paths.get(tmpDir("memo_nested"), "t.csv")
+    val f = dir.resolve("k=1").resolve("a.csv")
+    java.nio.file.Files.createDirectories(f.getParent)
+    java.nio.file.Files.writeString(f, "id,name\n1,ana\n")
+    val before = Memo.snapshot(dir.toString)
+    assert(Sources.load(spark, dir.toString).columns.toSeq == Seq("id", "name", "k"))
+    // an in-place write changes the file, not the entries of k=1
+    java.nio.file.Files.writeString(f, "id,name,lang\n1,ana,es\n")
+    assert(Memo.snapshot(dir.toString) != before)
+    assert(Sources.load(spark, dir.toString).columns.toSeq == Seq("id", "name", "lang", "k"))
   }
 
   test("exact-reference artifacts rebuild when only a non-leading vector component changes") {

@@ -200,6 +200,27 @@ class RestStageSpec extends SparkSpec with BeforeAndAfterAll {
     assert(ctr.s50x.value == 1 && ctr.s20x.value == 4)
   }
 
+  test("a backing-off head does not stall the slot: the rows behind it are sent first") {
+    // one slot, a window of 4: answered rows give their place back, so
+    // B…H go out while A waits out its 300 ms backoff
+    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    server.createContext("/stall/", (ex: HttpExchange) => {
+      val key = ex.getRequestURI.getPath.stripPrefix("/stall/")
+      seen.add(key)
+      if (key == "A" && seen.asScala.count(_ == "A") == 1) {
+        ex.sendResponseHeaders(503, -1); ex.close()
+      } else respond(ex, s"""{"key":"$key"}""")
+    })
+    val keys = Seq("A", "B", "C", "D", "E", "F", "G", "H")
+    val ctr = RestCounters(spark, "stall")
+    val out = RestStage("stall", RestConfig(
+      host = s"http://localhost:$port", path = "/stall/{k}", filterThreads = 1,
+      maxRetries = 1, retryBackoffMillis = 300L), ctr)(spark, keys.toDF("k").coalesce(1)).collect()
+    assert(seen.asScala.toSeq == keys :+ "A")
+    assert(out.map(_.getString(0)).toSeq == keys)
+    assert(ctr.s50x.value == 1 && ctr.s20x.value == 8)
+  }
+
   test("filterThreads bounds the requests in flight per partition") {
     maxInFlight.set(0)
     val df = (1 to 24).map(i => (i, "x")).toDF("id", "v").coalesce(1)

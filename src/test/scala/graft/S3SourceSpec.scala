@@ -47,6 +47,17 @@ class S3SourceSpec extends SparkSpec {
     assert(df.filter(df("id") === 2).head().getString(1) == "luis")
   }
 
+  test("an s3a:// CSV's schema is memoized by its snapshot: a new header reads as new columns") {
+    val local = localCsv(Seq("1,ana", "2,luis"))
+    val s3 = s"s3a://graft-test-bucket$local"
+    assert(Sources.load(spark, s3).columns.toSeq == Seq("id", "name"))
+    assert(jobsIn(Sources.load(spark, s3)) == 0)
+    Files.writeString(java.nio.file.Paths.get(local), "id,name,lang\n1,ana,es\n2,luis,pt\n")
+    val df = Sources.load(spark, s3)
+    assert(df.columns.toSeq == Seq("id", "name", "lang"))
+    assert(df.filter(df("id") === 2).head().getString(2) == "pt")
+  }
+
   test("sampleLines applies exactly once on an s3 source (O5)") {
     val local = localCsv((1 to 50).map(i => s"$i,n$i"))
     val df = Sources.load(spark, s"s3://graft-test-bucket$local", sampleLines = 7L)

@@ -1,8 +1,10 @@
 package graft
 
 import graft.sources.Sources
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 
 /** JSONL + parquet sink coverage: lossless roundtrips, schema-first
   * reads, partitioned writes whose downstream scans actually prune
@@ -42,6 +44,41 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.load(spark, path).count() > 0)
     val e = intercept[IllegalArgumentException](Sources.load(spark, "x.avro"))
     assert(e.getMessage.contains("Unsupported"))
+  }
+
+  private def write(path: String, text: String): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)
+
+  test("a warm load of an unchanged CSV reuses its schema: zero jobs, the same rows") {
+    val path = tmp("memo_csv") + ".csv"
+    write(path, "id,name\n1,ana\n2,luis\n")
+    var first: DataFrame = null
+    assert(jobsIn { first = Sources.load(spark, path) } >= 1)
+    val rows = first.collect().toSeq
+    var second: DataFrame = null
+    assert(jobsIn { second = Sources.load(spark, path) } == 0)
+    assert(second.schema == first.schema)
+    assert(second.collect().toSeq == rows)
+  }
+
+  test("a rewritten CSV, another delimiter or another session conf infers the schema again") {
+    val path = tmp("memo_csv_rw") + ".csv"
+    write(path, "id,name\n1,ana\n2,luis\n")
+    assert(Sources.load(spark, path).schema("id").dataType == IntegerType)
+    write(path, "id,name,lang\n1,ana,es\n2,luis,pt\n")
+    assert(Sources.load(spark, path).columns.toSeq == Seq("id", "name", "lang"))
+    write(path, "id,name,lang\nx1,ana,es\nx2,luis,pt\n")
+    assert(Sources.load(spark, path).schema("id").dataType == StringType)
+    assert(Sources.load(spark, path, inDelimiter = ";").columns.toSeq == Seq("id,name,lang"))
+    assert(Sources.load(spark, path).columns.toSeq == Seq("id", "name", "lang"))
+
+    val ts = tmp("memo_csv_ts") + ".csv"
+    write(ts, "id,at\n1,2024-01-02 03:04:05\n")
+    assert(Sources.load(spark, ts).schema("at").dataType == TimestampType)
+    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    try assert(Sources.load(spark, ts).schema("at").dataType == TimestampNTZType)
+    finally spark.conf.unset("spark.sql.timestampType")
+    assert(Sources.load(spark, ts).schema("at").dataType == TimestampType)
   }
 
   test("orc sink → source round-trips with partitioning") {
